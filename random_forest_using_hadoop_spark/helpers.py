@@ -171,6 +171,11 @@ def dist_row_number(
     slice assignment (an evicted block recomputes through the same
     lineage, hence the same boundaries). Released via the engine-wide
     release_caches() hook.
+
+    Returns ``(ranked, total)``: the ranked frame and ``|df|``, already
+    summed driver-side from the per-slice counts, so callers that need
+    the row count (e.g. the bitmap encoder's vocabulary size) do not
+    pay a second full count() job over the same frame.
     """
     part = (
         df.repartitionByRange(n_parts, *order_cols)
@@ -205,12 +210,7 @@ def dist_row_number(
     # their entry instead of waiting for the engine-wide
     # release_caches() boundary
     ranked._rn_pin = part
-    # total row count, already summed driver-side from the ≤ n_parts
-    # per-slice counts — callers that need |df| (e.g. the bitmap
-    # encoder's vocabulary size) read it here instead of paying a
-    # second full count() job over the same frame
-    ranked._rn_total = acc
-    return ranked
+    return ranked, acc
 
 
 def ntile_from_rn(rn_col: str, n: int, k: int) -> Column:

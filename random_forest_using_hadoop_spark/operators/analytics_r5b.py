@@ -1762,10 +1762,12 @@ def q_ml_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("lang") == "en").cast("int").alias("pos"),
         "doc_id",
     )
-    n_tot = d.count()
-    ranked = dist_row_number(
+    ranked, n_tot = dist_row_number(
         d, [F.col("score").desc(), F.col("doc_id")], out="rn"
-    ).select("pos", ntile_from_rn("rn", n_tot, 10).alias("decile"))
+    )
+    ranked = ranked.select(
+        "pos", ntile_from_rn("rn", n_tot, 10).alias("decile")
+    )
     dd = ranked.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("pos").cast("bigint").alias("n_pos"),

@@ -75,6 +75,9 @@ _MH_BANDS = 8
 # (docs × exact per-row width, from metadata) stays under this; above
 # it the verify joins switch to shuffle-hash (see _exact_jaccard_pairs).
 _ENC_BCAST_LIMIT = 64 << 20
+# Fixed bytes per broadcast row in those estimates, before any bitmap
+# words: 28 B of prefix data plus the per-row overhead.
+_BCAST_ROW_BYTES = 48
 
 
 def _minhash_band_candidates(
@@ -334,10 +337,9 @@ def _bitmap_encode(d: DataFrame, set_col: str) -> tuple[DataFrame, int]:
 
     vocab = d.select(F.explode(set_col).alias("s")).distinct()
     # "s" is distinct, hence a total order — dist_row_number's contract
-    ranked = dist_row_number(vocab, [F.col("s")], out="_rn")
-    # |vocab| comes free with the rank's per-slice counts (_rn_total) —
-    # the r15 shape paid a SECOND full explode+distinct+count job here
-    n_vocab = ranked._rn_total
+    # |vocab| comes free with the rank's per-slice counts — no second
+    # explode+distinct+count job
+    ranked, n_vocab = dist_row_number(vocab, [F.col("s")], out="_rn")
     n_words = (n_vocab + 63) // 64
     sid = ranked.select("s", (F.col("_rn") - 1).cast("int").alias("sid"))
     tok = d.select("doc_id", F.explode(set_col).alias("s")).join(
@@ -439,7 +441,7 @@ def _exact_jaccard_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
     # ids instead; correct, but the semi-join forced the 4.4M-row band
     # join to materialize behind a count barrier and tripled the
     # sf0.1 bench — metadata beats measurement here.
-    est_bytes = n_docs * (n_words * 8 + 48)
+    est_bytes = n_docs * (n_words * 8 + _BCAST_ROW_BYTES)
     if est_bytes <= _ENC_BCAST_LIMIT:
         ea, eb = F.broadcast(enc.alias("ea")), F.broadcast(enc.alias("eb"))
     else:
@@ -876,7 +878,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no sort, memory bounded by a partition. The count materializes
     # the cached prefix frame, which both join sides need anyway.
     n_prefix = prefix.count()
-    if n_prefix * 48 <= _ENC_BCAST_LIMIT:
+    if n_prefix * _BCAST_ROW_BYTES <= _ENC_BCAST_LIMIT:
         a, b = F.broadcast(a), b
     else:
         a = a.hint("SHUFFLE_HASH")
@@ -928,7 +930,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # same metadata-decided join strategy as the minhash verify: under
     # the cap broadcast the bounded bitmap table, over it shuffle-hash
-    est_bytes = bg.count() * (n_words * 8 + 48)  # bg cached above
+    # bg cached above
+    est_bytes = bg.count() * (n_words * 8 + _BCAST_ROW_BYTES)
     if est_bytes <= _ENC_BCAST_LIMIT:
         ea, eb = F.broadcast(enc.alias("ea")), F.broadcast(enc.alias("eb"))
     else:
@@ -1419,7 +1422,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, el: acc + el,
     )
     jac = inter / (F.col("ea.n") + F.col("eb.n") - inter).cast("double")
-    est_bytes = d.count() * (n_words * 8 + 48)  # d cached above
+    # d cached above
+    est_bytes = d.count() * (n_words * 8 + _BCAST_ROW_BYTES)
     if est_bytes <= _ENC_BCAST_LIMIT:
         ea, eb = F.broadcast(enc.alias("ea")), F.broadcast(enc.alias("eb"))
     else:

@@ -30,16 +30,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from random_forest_using_hadoop_spark.helpers import local_rows
-
+from random_forest_using_hadoop_spark import delta_log
 from random_forest_using_hadoop_spark.delta_format import (
     dv_inline_descriptor,
     dv_on_disk_descriptors,
     dv_read,
 )
-from random_forest_using_hadoop_spark.operators.scans import (
+from random_forest_using_hadoop_spark.delta_log import (
     _delta_commit,
+    _delta_latest_live_files,
+    _delta_live_files,
+    _delta_max_version,
+)
+from random_forest_using_hadoop_spark.helpers import local_rows
+from random_forest_using_hadoop_spark.operators.scans import (
     _delta_list_files,
+    _delta_stage_history,
     _norm_file_uri,
     _tmp,
 )
@@ -128,8 +134,10 @@ def q_src_delta_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     physical.repartition(2).write.mode("overwrite").parquet(data_dir)
     adds = sorted(_delta_list_files(data_dir))
-    lines = [
-        json.dumps(
+    delta_log.commit(
+        log_dir,
+        0,
+        [
             {
                 "metaData": {
                     "id": "cmap-fixture",
@@ -139,43 +147,16 @@ def q_src_delta_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "configuration": {"delta.columnMapping.mode": "name"},
                 }
             }
-        )
-    ] + [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in adds
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+        ]
+        + [{"add": {"path": f"data/{p}", "dataChange": True}} for p in adds],
+    )
 
     # --- reader: latest metaData wins (schema evolution rule), then a
     # plain distributed scan with physical→logical aliases
-    meta_schema = T.StructType(
-        [
-            T.StructField(
-                "metaData",
-                T.StructType(
-                    [
-                        T.StructField("schemaString", T.StringType()),
-                        T.StructField(
-                            "configuration",
-                            T.MapType(T.StringType(), T.StringType()),
-                        ),
-                    ]
-                ),
-            )
-        ]
-    )
     metas = (
-        spark.read.schema(meta_schema)
-        .json(os.path.join(log_dir, "*.json"))
-        .withColumn(
-            "u",
-            F.regexp_extract(F.input_file_name(), r"(\d+)\.json", 1).cast(
-                "int"
-            ),
-        )
+        delta_log.read_log(spark, log_dir)
         .filter(F.col("metaData.schemaString").isNotNull())
-        .orderBy(F.col("u").desc())
+        .orderBy(F.col("version").desc())
         .select("metaData.schemaString", "metaData.configuration")
         .take(1)  # driver-side: ONE schema row, not data
     )
@@ -238,90 +219,35 @@ def _stage_stats_table(spark: SparkSession, o: DataFrame, root: str) -> None:
         )
         .collect()  # ≤8 rows: file-level metadata for the commit json
     )
-    lines = [json.dumps({"commitInfo": {"operation": "WRITE"}})]
-    for r in sorted(file_stats, key=lambda r: r["fname"]):
-        stats = {
-            "numRecords": r["num"],
-            "minValues": {"o_orderkey": r["lo"]},
-            "maxValues": {"o_orderkey": r["hi"]},
-            "nullCount": {"o_orderkey": 0},
-        }
-        lines.append(
-            json.dumps(
-                {
-                    "add": {
-                        "path": f"data/{r['fname']}",
-                        "dataChange": True,
-                        "stats": json.dumps(stats),
-                    }
+    delta_log.commit(
+        log_dir,
+        0,
+        [{"commitInfo": {"operation": "WRITE"}}]
+        + [
+            {
+                "add": {
+                    "path": f"data/{r['fname']}",
+                    "dataChange": True,
+                    "stats": json.dumps(
+                        {
+                            "numRecords": r["num"],
+                            "minValues": {"o_orderkey": r["lo"]},
+                            "maxValues": {"o_orderkey": r["hi"]},
+                            "nullCount": {"o_orderkey": 0},
+                        }
+                    ),
                 }
-            )
-        )
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+            }
+            for r in sorted(file_stats, key=lambda r: r["fname"])
+        ],
+    )
 
 
 def _stats_surviving_files(
     spark: SparkSession, log_dir: str, lo: int, hi: int
 ) -> list[str]:
-    """File names whose [min, max] o_orderkey interval overlaps
-    [lo, hi], decided from the LOG's add.stats alone — a Catalyst
-    filter over metadata rows; no parquet footer is opened. Returns the
-    bounded surviving list (collect ∝ selected files, the same
-    scheduler-class metadata as src_delta_partition_prune)."""
-    add_schema = T.StructType(
-        [
-            T.StructField(
-                "add",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("stats", T.StringType()),
-                    ]
-                ),
-            )
-        ]
-    )
-    stats_schema = T.StructType(
-        [
-            T.StructField("numRecords", T.LongType()),
-            T.StructField(
-                "minValues",
-                T.StructType([T.StructField("o_orderkey", T.LongType())]),
-            ),
-            T.StructField(
-                "maxValues",
-                T.StructType([T.StructField("o_orderkey", T.LongType())]),
-            ),
-        ]
-    )
-    rows = (
-        spark.read.schema(add_schema)
-        .json(os.path.join(log_dir, "*.json"))
-        .filter(F.col("add.path").isNotNull())
-        .select(
-            F.col("add.path").alias("path"),
-            F.from_json(F.col("add.stats"), stats_schema).alias("s"),
-        )
-        # interval-overlap skip rule: keep unless max < lo or min > hi.
-        # A file with NO stats — OR stats that omit this column's
-        # bounds — must be kept: real writers collect stats on only
-        # the first N columns, so a null bound means "unknown", and
-        # the tri-valued comparison would otherwise evaluate the whole
-        # predicate to NULL and silently drop a live file
-        .filter(
-            F.col("s").isNull()
-            | F.col("s.minValues.o_orderkey").isNull()
-            | F.col("s.maxValues.o_orderkey").isNull()
-            | ~(
-                (F.col("s.maxValues.o_orderkey") < F.lit(lo))
-                | (F.col("s.minValues.o_orderkey") > F.lit(hi))
-            )
-        )
-        .select("path")
-        .collect()
-    )
-    return sorted(r["path"] for r in rows)
+    """[[_stats_surviving_files_for]] on o_orderkey."""
+    return _stats_surviving_files_for(spark, log_dir, "o_orderkey", lo, hi)
 
 
 @register("src_delta_stats_skipping", oracle=_SKIP_ORACLE)
@@ -445,14 +371,14 @@ def q_src_delta_deletion_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append"
     ).parquet(data_dir)
     (odd_file,) = _delta_list_files(data_dir) - {even_file}
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-                for p in sorted([even_file, odd_file])
-            )
-            + "\n"
-        )
+    delta_log.commit(
+        log_dir,
+        0,
+        [
+            {"add": {"path": f"data/{p}", "dataChange": True}}
+            for p in sorted([even_file, odd_file])
+        ],
+    )
     # v1: DELETE o_orderkey % 10 == 0 → ON-DISK DV on the evens file,
     # under a random-style 2-char prefix (uuid pinned for determinism)
     (dv_even,) = dv_on_disk_descriptors(
@@ -461,74 +387,23 @@ def q_src_delta_deletion_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix="ab",
         uuid_hex="7d1ce21bd04e4d1a8f29a3c56e00d012",
     )
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "add": {
-                        "path": f"data/{even_file}",
-                        "dataChange": True,
-                        "deletionVector": dv_even,
-                    }
-                }
-            )
-            + "\n"
-        )
+    dv_add = {"path": f"data/{even_file}", "dataChange": True}
+    delta_log.commit(
+        log_dir, 1, [{"add": {**dv_add, "deletionVector": dv_even}}]
+    )
     # v2: DELETE o_orderkey % 10 == 5 → INLINE DV on the odds file
     dv_odd = dv_inline_descriptor(_dv_positions(odd_file, 5))
-    with open(os.path.join(log_dir, f"{2:020d}.json"), "w") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "add": {
-                        "path": f"data/{odd_file}",
-                        "dataChange": True,
-                        "deletionVector": dv_odd,
-                    }
-                }
-            )
-            + "\n"
-        )
+    dv_add = {"path": f"data/{odd_file}", "dataChange": True}
+    delta_log.commit(
+        log_dir, 2, [{"add": {**dv_add, "deletionVector": dv_odd}}]
+    )
 
     # --- reader: latest add per path carries the authoritative DV
-    add_schema = T.StructType(
-        [
-            T.StructField(
-                "add",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField(
-                            "deletionVector",
-                            T.StructType(
-                                [
-                                    T.StructField("storageType", T.StringType()),
-                                    T.StructField(
-                                        "pathOrInlineDv", T.StringType()
-                                    ),
-                                    T.StructField("offset", T.LongType()),
-                                    T.StructField("sizeInBytes", T.IntegerType()),
-                                    T.StructField("cardinality", T.LongType()),
-                                ]
-                            ),
-                        ),
-                    ]
-                ),
-            )
-        ]
-    )
     latest = (
-        spark.read.schema(add_schema)
-        .json(os.path.join(log_dir, "*.json"))
-        .withColumn(
-            "u",
-            F.regexp_extract(F.input_file_name(), r"(\d+)\.json", 1).cast(
-                "int"
-            ),
-        )
+        delta_log.read_log(spark, log_dir)
         .filter(F.col("add.path").isNotNull())
         .groupBy(F.col("add.path").alias("path"))
-        .agg(F.max_by("add.deletionVector", "u").alias("dv"))
+        .agg(F.max_by("add.deletionVector", "version").alias("dv"))
         .collect()  # bounded: one row per live file (snapshot state)
     )
     del_rows = []
@@ -652,40 +527,30 @@ def _stage_cdf_history(spark: SparkSession, o: DataFrame, root: str) -> None:
     v0_files, v1_files, v1_cdc = got["v0"], got["v1"], got["v1c"]
     v2_files, v2_cdc = got["v2"], got["v2c"]
 
+    def _acts(kind: str, paths: list[str], data_change: bool) -> list[dict]:
+        return [{kind: {"path": p, "dataChange": data_change}} for p in paths]
+
     # v0: INSERT evens (no cdc action — feed derives from the add)
-    lines = [
-        json.dumps({"add": {"path": p, "dataChange": True}})
-        for p in v0_files
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-
+    delta_log.commit(log_dir, 0, _acts("add", v0_files, True))
     # v1: UPDATE — +1.00 on %10 keys; rewrite file + cdc pre/postimage
-    lines = (
-        [json.dumps({"cdc": {"path": p, "dataChange": False}}) for p in v1_cdc]
-        + [json.dumps({"add": {"path": p, "dataChange": True}}) for p in v1_files]
-        + [json.dumps({"remove": {"path": p, "dataChange": True}}) for p in v0_files]
+    delta_log.commit(
+        log_dir,
+        1,
+        _acts("cdc", v1_cdc, False)
+        + _acts("add", v1_files, True)
+        + _acts("remove", v0_files, True),
     )
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-
     # v2: DELETE %20 keys — rewrite file + cdc delete rows
-    lines = (
-        [json.dumps({"cdc": {"path": p, "dataChange": False}}) for p in v2_cdc]
-        + [json.dumps({"add": {"path": p, "dataChange": True}}) for p in v2_files]
-        + [json.dumps({"remove": {"path": p, "dataChange": True}}) for p in v1_files]
+    delta_log.commit(
+        log_dir,
+        2,
+        _acts("cdc", v2_cdc, False)
+        + _acts("add", v2_files, True)
+        + _acts("remove", v1_files, True),
     )
-    with open(os.path.join(log_dir, f"{2:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-
     # v3: FULL-TABLE DELETE — remove-only, NO cdc action (a whole-file
     # delete writes no change files; the removed files are the feed)
-    lines = [
-        json.dumps({"remove": {"path": p, "dataChange": True}})
-        for p in v2_files
-    ]
-    with open(os.path.join(log_dir, f"{3:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    delta_log.commit(log_dir, 3, _acts("remove", v2_files, True))
 
 
 @register("src_delta_cdf", oracle=_CDF_ORACLE)
@@ -716,7 +581,7 @@ def q_src_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND rows in dataChange removes are deletes — a reader that derives
     only the insert half silently loses every full-file delete.
 
-    Reader plan: the log is bounded driver metadata (one collect);
+    Reader plan: the log is bounded driver metadata (one replay);
     cdc files and insert-derived add files are then read in ONE
     distributed scan each, rows tagged to versions via input_file_name
     against a broadcast (file → version) map, one grouped agg — jobs
@@ -733,62 +598,17 @@ def q_src_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = os.path.join(root, "_delta_log")
     _stage_cdf_history(spark, o, root)
 
-    # --- reader ---------------------------------------------------------
-    act_schema = T.StructType(
-        [
-            T.StructField(
-                "add",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("dataChange", T.BooleanType()),
-                    ]
-                ),
-            ),
-            T.StructField(
-                "remove",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("dataChange", T.BooleanType()),
-                    ]
-                ),
-            ),
-            T.StructField(
-                "cdc", T.StructType([T.StructField("path", T.StringType())])
-            ),
-        ]
-    )
-    acts = (
-        spark.read.schema(act_schema)
-        .json(os.path.join(log_dir, "*.json"))
-        .withColumn(
-            "u",
-            F.regexp_extract(F.input_file_name(), r"(\d+)\.json", 1).cast(
-                "int"
-            ),
-        )
-        .select("u", "add", "remove", "cdc")
-        .collect()  # bounded: action metadata, ∝ files per history
-    )
+    # --- reader: the log is bounded driver metadata, one replay
     cdc_by_v: dict[int, list[str]] = {}
     add_by_v: dict[int, list[str]] = {}
     rm_by_v: dict[int, list[str]] = {}
-    for r in acts:
-        if r["cdc"] is not None and r["cdc"]["path"] is not None:
-            cdc_by_v.setdefault(r["u"], []).append(r["cdc"]["path"])
-        if (
-            r["add"] is not None
-            and r["add"]["path"] is not None
-            and r["add"]["dataChange"]
-        ):
-            add_by_v.setdefault(r["u"], []).append(r["add"]["path"])
-        if (
-            r["remove"] is not None
-            and r["remove"]["path"] is not None
-            and r["remove"]["dataChange"]
-        ):
-            rm_by_v.setdefault(r["u"], []).append(r["remove"]["path"])
+    for v, act in delta_log.read_actions(log_dir):
+        if "cdc" in act:
+            cdc_by_v.setdefault(v, []).append(act["cdc"]["path"])
+        elif "add" in act and act["add"].get("dataChange"):
+            add_by_v.setdefault(v, []).append(act["add"]["path"])
+        elif "remove" in act and act["remove"].get("dataChange"):
+            rm_by_v.setdefault(v, []).append(act["remove"]["path"])
     # spec rule: a commit WITH cdc actions feeds from them exclusively;
     # only cdc-less commits derive their feed from dataChange actions —
     # rows in added files are inserts, rows in removed files are
@@ -932,23 +752,17 @@ def q_sink_delta_replacewhere(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.repartition(1).write.mode("overwrite").partitionBy(
         "o_orderpriority"
     ).parquet(data_dir)
+    def _add(p: str, v: str) -> dict:
+        return {
+            "add": {
+                "path": p,
+                "partitionValues": {"o_orderpriority": v},
+                "dataChange": True,
+            }
+        }
+
     base_adds = _partition_adds()
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                json.dumps(
-                    {
-                        "add": {
-                            "path": p,
-                            "partitionValues": {"o_orderpriority": v},
-                            "dataChange": True,
-                        }
-                    }
-                )
-                for p, v in base_adds
-            )
-            + "\n"
-        )
+    delta_log.commit(log_dir, 0, [_add(p, v) for p, v in base_adds])
 
     # REPLACE WHERE o_orderpriority = '1-URGENT': writer-side predicate
     # validation, then one atomic remove+add commit
@@ -969,38 +783,15 @@ def q_sink_delta_replacewhere(spark: SparkSession, sf_dir: str) -> DataFrame:
         (p, v) for p, v in after if v == "1-URGENT" and p not in base_set
     ]
     old_urgent = [(p, v) for p, v in base_adds if v == "1-URGENT"]
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                [
-                    json.dumps(
-                        {
-                            "add": {
-                                "path": p,
-                                "partitionValues": {"o_orderpriority": v},
-                                "dataChange": True,
-                            }
-                        }
-                    )
-                    for p, v in new_urgent
-                ]
-                + [
-                    json.dumps(
-                        {"remove": {"path": p, "dataChange": True}}
-                    )
-                    for p, _ in old_urgent
-                ]
-            )
-            + "\n"
-        )
+    delta_log.commit(
+        log_dir,
+        1,
+        [_add(p, v) for p, v in new_urgent]
+        + [{"remove": {"path": p, "dataChange": True}} for p, _ in old_urgent],
+    )
 
     # --- reader: latest snapshot via log replay, partition col from
     # partitionValues (never from the data files)
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_live_files,
-        _delta_max_version,
-    )
-
     max_v = _delta_max_version(log_dir)
     # match on the table-root-relative PATH, never the basename: one
     # partitioned write job reuses the same part-file name in every
@@ -1055,20 +846,11 @@ def _delta_txn_version(log_dir: str, app_id: str) -> int:
     and skips versions it has already committed. Driver-side scan of
     the bounded JSON tail (checkpoints carry txn state forward for long
     histories, same replay rule)."""
-    import json
-
     best = -1
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line).get("txn")
-                if act is not None and act.get("appId") == app_id:
-                    best = max(best, int(act["version"]))
+    for _, act in delta_log.read_actions(log_dir):
+        txn = act.get("txn")
+        if txn is not None and txn.get("appId") == app_id:
+            best = max(best, int(txn["version"]))
     return best
 
 
@@ -1108,39 +890,25 @@ def q_sink_delta_txn_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(log_dir, exist_ok=True)
     app_id = "stream-app-1"
 
-    def _append_commit(df: DataFrame, version: int, txn_version: int) -> None:
-        """One writer commit: data files + txn action, atomic via the
-        single commit json."""
+    def _write_batch(df: DataFrame, txn_version: int) -> bool:
+        """The idempotence guard every restart runs: commit data files +
+        txn action (atomic via the single commit json) only if this txn
+        version is not already in the log. Returns True if written."""
+        if txn_version <= _delta_txn_version(log_dir, app_id):
+            return False  # already committed — crash was AFTER the PUT
         before = _delta_list_files(data_dir)
         df.coalesce(1).write.mode("append").parquet(data_dir)
         adds = _delta_list_files(data_dir) - before
-        lines = [
-            json.dumps(
-                {
-                    "txn": {
-                        "appId": app_id,
-                        "version": txn_version,
-                        "lastUpdated": 0,
-                    }
-                }
-            )
-        ] + [
-            json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-            for p in sorted(adds)
-        ]
-        with open(os.path.join(log_dir, f"{version:020d}.json"), "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-
-    def _write_batch(df: DataFrame, txn_version: int) -> bool:
-        """The idempotence guard every restart runs: commit only if this
-        txn version is not already in the log. Returns True if written."""
-        if txn_version <= _delta_txn_version(log_dir, app_id):
-            return False  # already committed — crash was AFTER the PUT
-        from random_forest_using_hadoop_spark.operators.scans import (
-            _delta_max_version,
+        txn = {"appId": app_id, "version": txn_version, "lastUpdated": 0}
+        delta_log.commit(
+            log_dir,
+            _delta_max_version(log_dir) + 1,
+            [{"txn": txn}]
+            + [
+                {"add": {"path": f"data/{p}", "dataChange": True}}
+                for p in sorted(adds)
+            ],
         )
-
-        _append_commit(df, _delta_max_version(log_dir) + 1, txn_version)
         return True
 
     # commit 0: base table (not part of the stream — no txn action)
@@ -1148,14 +916,7 @@ def q_sink_delta_txn_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(data_dir)
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-                for p in sorted(_delta_list_files(data_dir) - before)
-            )
-            + "\n"
-        )
+    _delta_commit(log_dir, 0, _delta_list_files(data_dir) - before, set())
     b1 = o.filter(F.col("o_orderkey") % 4 == 1)
     b2 = o.filter(F.col("o_orderkey") % 4 == 3)
     assert _write_batch(b1, 1) is True
@@ -1163,11 +924,6 @@ def q_sink_delta_txn_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert _write_batch(b2, 2) is True
 
     # reader: latest snapshot, every order exactly once
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_live_files,
-        _delta_max_version,
-    )
-
     max_v = _delta_max_version(log_dir)
     live = [
         os.path.join(root, r["path"])
@@ -1203,22 +959,17 @@ GROUP BY s.snapshot
 """
 
 
-def _delta_commit_time(log_dir: str, fname: str) -> float:
+def _delta_commit_time(log_dir: str, version: int) -> float:
     """One commit's timestamp (epoch seconds) per the spec's precedence:
     `commitInfo.inCommitTimestamp` (epoch millis, monotonic — the
     inCommitTimestamp feature exists exactly because file mtimes break
     under log re-upload or clock skew) when the commit carries it, else
     the log file's modification time."""
-    path = os.path.join(log_dir, fname)
-    with open(path) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            info = json.loads(line).get("commitInfo")
-            if info is not None and "inCommitTimestamp" in info:
-                return info["inCommitTimestamp"] / 1000.0
-    return os.path.getmtime(path)
+    for _, act in delta_log.read_actions(log_dir, [version]):
+        info = act.get("commitInfo")
+        if info is not None and "inCommitTimestamp" in info:
+            return info["inCommitTimestamp"] / 1000.0
+    return os.path.getmtime(delta_log.commit_path(log_dir, version))
 
 
 def _delta_resolve_timestamp(log_dir: str, ts: float) -> int:
@@ -1229,11 +980,9 @@ def _delta_resolve_timestamp(log_dir: str, ts: float) -> int:
     — there is no table state to read before it. One driver-side pass
     over the bounded log tail."""
     best = -1
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        if _delta_commit_time(log_dir, f) <= ts:
-            best = max(best, int(f.split(".", 1)[0]))
+    for v in delta_log.list_versions(log_dir):
+        if _delta_commit_time(log_dir, v) <= ts:
+            best = v
     if best < 0:
         raise ValueError(
             f"no commit at or before timestamp {ts} — table did not exist"
@@ -1280,17 +1029,14 @@ def q_src_delta_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v, pred in enumerate(slices):
         before = _delta_list_files(data_dir)
         o.filter(pred).coalesce(1).write.mode("append").parquet(data_dir)
-        _delta_commit(log_dir, v, _delta_list_files(data_dir) - before, set())
-        commit_path = os.path.join(log_dir, f"{v:020d}.json")
+        commit_path = _delta_commit(
+            log_dir, v, _delta_list_files(data_dir) - before, set()
+        )
         t = base_epoch + 100 * v  # pinned commit times, 100 s apart
         os.utime(commit_path, (t, t))
 
     v_mid = _delta_resolve_timestamp(log_dir, base_epoch + 150)  # → v1
     v_latest = _delta_resolve_timestamp(log_dir, base_epoch + 10_000)  # → v2
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_live_files,
-    )
-
     labels = local_rows(spark, 
         [(v_mid, "asof_mid"), (v_latest, "asof_latest")],
         "version int, snapshot string",
@@ -1370,11 +1116,6 @@ def q_src_delta_checkpoint_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_latest_live_files,
-        _delta_stage_history,
-    )
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1433,8 +1174,7 @@ def q_src_delta_checkpoint_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             log_dir, "00000000000000000002.checkpoint.80a083e8-7026.parquet"
         ),
     )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        fh.write(json.dumps({"version": 2}))
+    delta_log.write_last_checkpoint(log_dir, {"version": 2})
     # v3: DELETE the odd slice (remove-only, dataChange true)
     _delta_commit(log_dir, 3, set(), v1_adds)
 
@@ -1533,10 +1273,6 @@ def q_src_delta_timestamp_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data path is a single distributed parquet scan over the live
     files with the usual pushdown; nothing collects.
     """
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_latest_live_files,
-    )
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1574,8 +1310,10 @@ def q_src_delta_timestamp_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
             "metadata": {},
         },
     ]
-    lines = [
-        json.dumps(
+    delta_log.commit(
+        log_dir,
+        0,
+        [
             {
                 "protocol": {
                     "minReaderVersion": 3,
@@ -1583,9 +1321,7 @@ def q_src_delta_timestamp_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "readerFeatures": ["timestampNtz"],
                     "writerFeatures": ["timestampNtz"],
                 }
-            }
-        ),
-        json.dumps(
+            },
             {
                 "metaData": {
                     "id": "ntz-fixture",
@@ -1594,44 +1330,26 @@ def q_src_delta_timestamp_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
                         {"type": "struct", "fields": schema_fields}
                     ),
                 }
-            }
-        ),
-    ] + [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in sorted(evens | decoy)
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+            },
+        ]
+        + [
+            {"add": {"path": f"data/{p}", "dataChange": True}}
+            for p in sorted(evens | decoy)
+        ],
+    )
     # v1: tombstone the decoy, append the odd slice
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(data_dir)
     odds = _delta_list_files(data_dir) - evens - decoy
-    lines = [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in sorted(odds)
-    ] + [
-        json.dumps({"remove": {"path": f"data/{p}", "dataChange": True}})
-        for p in sorted(decoy)
-    ]
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    _delta_commit(log_dir, 1, odds, decoy)
 
     # --- reader: protocol gate (must ACCEPT timestampNtz) + live-set
     # replay, then a scan under the LOG's declared schema
     live = _delta_latest_live_files(spark, root)
-    meta = None
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    m = json.loads(line).get("metaData")
-                    if m is not None:
-                        meta = m  # later commits supersede
-    declared = json.loads(meta["schemaString"])
+    declared = json.loads(
+        delta_log.snapshot(log_dir).metadata["schemaString"]
+    )
     spark_schema = T.StructType(
         [
             T.StructField(
@@ -1737,22 +1455,23 @@ def q_src_delta_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.floor("o_totalprice").cast("int").alias("qty")
     ).coalesce(1).write.mode("append").parquet(data_dir)
     evens = _delta_list_files(data_dir)
-    lines = [
-        json.dumps(
-            {
-                "metaData": {
-                    "id": "tw-fixture",
-                    "format": {"provider": "parquet"},
-                    "schemaString": _schema_str("integer", False),
-                }
+
+    def _meta(qty_type: str, changes: bool) -> dict:
+        return {
+            "metaData": {
+                "id": "tw-fixture",
+                "format": {"provider": "parquet"},
+                "schemaString": _schema_str(qty_type, changes),
             }
-        )
-    ] + [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in sorted(evens)
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+        }
+
+    def _adds(names: set[str]) -> list[dict]:
+        return [
+            {"add": {"path": f"data/{p}", "dataChange": True}}
+            for p in sorted(names)
+        ]
+
+    delta_log.commit(log_dir, 0, [_meta("integer", False)] + _adds(evens))
     # v1: widen to LONG + append odds whose qty exceeds int32
     o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey",
@@ -1761,52 +1480,24 @@ def q_src_delta_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long").alias("qty"),
     ).coalesce(1).write.mode("append").parquet(data_dir)
     odds = _delta_list_files(data_dir) - evens
-    lines = [
-        json.dumps(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": ["typeWidening"],
-                    "writerFeatures": ["typeWidening"],
-                }
-            }
-        ),
-        json.dumps(
-            {
-                "metaData": {
-                    "id": "tw-fixture",
-                    "format": {"provider": "parquet"},
-                    "schemaString": _schema_str("long", True),
-                }
-            }
-        ),
-    ] + [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in sorted(odds)
-    ]
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    protocol = {
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": ["typeWidening"],
+        "writerFeatures": ["typeWidening"],
+    }
+    delta_log.commit(
+        log_dir,
+        1,
+        [{"protocol": protocol}, _meta("long", True)] + _adds(odds),
+    )
 
     # --- reader: gate (must accept typeWidening) + live set + ONE scan
     # under the latest declared schema
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_latest_live_files,
-    )
-
     live = _delta_latest_live_files(spark, root)
-    latest_meta = None
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    m = json.loads(line).get("metaData")
-                    if m is not None:
-                        latest_meta = m
-    declared = json.loads(latest_meta["schemaString"])
+    declared = json.loads(
+        delta_log.snapshot(log_dir).metadata["schemaString"]
+    )
     qty_field = next(
         fld for fld in declared["fields"] if fld["name"] == "qty"
     )
@@ -1865,9 +1556,6 @@ def q_src_delta_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     per path (the 100 TB reason the type exists).
     """
     from random_forest_using_hadoop_spark.helpers import dsum
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_latest_live_files,
-    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
@@ -1926,8 +1614,10 @@ def q_src_delta_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         }
     )
-    lines = [
-        json.dumps(
+    delta_log.commit(
+        log_dir,
+        0,
+        [
             {
                 "protocol": {
                     "minReaderVersion": 3,
@@ -1935,48 +1625,28 @@ def q_src_delta_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "readerFeatures": ["variantType-preview"],
                     "writerFeatures": ["variantType-preview"],
                 }
-            }
-        ),
-        json.dumps(
+            },
             {
                 "metaData": {
                     "id": "variant-fixture",
                     "format": {"provider": "parquet"},
                     "schemaString": schema_string,
                 }
-            }
-        ),
-    ] + [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in sorted(evens | odds | decoy)
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                json.dumps(
-                    {"remove": {"path": f"data/{p}", "dataChange": True}}
-                )
-                for p in sorted(decoy)
-            )
-            + "\n"
-        )
+            },
+        ]
+        + [
+            {"add": {"path": f"data/{p}", "dataChange": True}}
+            for p in sorted(evens | odds | decoy)
+        ],
+    )
+    _delta_commit(log_dir, 1, set(), decoy)
 
     # --- reader: gate must ACCEPT variantType-preview; the declared
     # schema confirms the variant column; one scan + typed shredding
     live = _delta_latest_live_files(spark, root)
-    declared = None
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    m = json.loads(line).get("metaData")
-                    if m is not None:
-                        declared = json.loads(m["schemaString"])
+    declared = json.loads(
+        delta_log.snapshot(log_dir).metadata["schemaString"]
+    )
     assert (
         next(
             fld for fld in declared["fields"] if fld["name"] == "payload"
@@ -2020,11 +1690,6 @@ def _delta_vacuum(
     parallel on a real object store. `now_s` is a parameter, not a
     clock read, so staging stays deterministic.
     """
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_live_files,
-        _delta_max_version,
-    )
-
     data_dir = os.path.join(root, "data")
     log_dir = os.path.join(root, "_delta_log")
     max_v = _delta_max_version(log_dir)
@@ -2037,19 +1702,13 @@ def _delta_vacuum(
     # tombstone timestamps from the remove actions (driver-side scan of
     # the bounded log tail)
     removed_at: dict[str, float] = {}
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                rm = json.loads(line).get("remove")
-                if rm is not None:
-                    name = os.path.basename(rm["path"])
-                    ts = rm.get("deletionTimestamp")
-                    removed_at[name] = (ts / 1000.0) if ts is not None else 0.0
+    for _, act in delta_log.read_actions(log_dir):
+        rm = act.get("remove")
+        if rm is not None:
+            ts = rm.get("deletionTimestamp")
+            removed_at[os.path.basename(rm["path"])] = (
+                ts / 1000.0 if ts is not None else 0.0
+            )
     deleted = []
     for f in sorted(os.listdir(data_dir)):
         if not f.endswith(".parquet") or f in live:
@@ -2101,29 +1760,16 @@ def q_sink_delta_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     `tests/test_delta_protocol.py::test_vacuum_respects_retention_and_liveness`
     pins the file-level mechanics.
     """
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_live_files,
-        _delta_max_version,
-        _delta_stage_history,
-    )
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     root = _tmp(sf_dir, "delta_vacuum")
     log_dir = os.path.join(root, "_delta_log")
-    v0_adds, v1_adds, v2_adds = _delta_stage_history(spark, o, root)
-    # restamp v2's compaction removes with a deletionTimestamp 1 h
-    # before the fixed `now` (staging detail: the shared helper does
-    # not stamp one; vacuum treats missing as ancient)
+    # v2's compaction removes carry a deletionTimestamp 1 h before the
+    # fixed `now` (vacuum treats a missing one as ancient)
     now_s = 1_700_000_000.0
-    _delta_commit(
-        log_dir,
-        2,
-        v2_adds,
-        v0_adds,
-        data_change=False,
-        remove_ts_ms=int((now_s - 3600) * 1000),
+    v0_adds, v1_adds, v2_adds = _delta_stage_history(
+        spark, o, root, remove_ts_ms=int((now_s - 3600) * 1000)
     )
     kept = _delta_vacuum(spark, root, retention_s=7 * 86400, now_s=now_s)
     assert kept == [], "retention window must protect young tombstones"
@@ -2176,17 +1822,10 @@ def _delta_clustering_columns(log_dir: str) -> list[str]:
     commits supersede; a `removed: true` tombstone un-clusters the
     table. Driver-side over the bounded JSON tail."""
     latest: dict | None = None
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line).get("domainMetadata")
-                if act is not None and act.get("domain") == "delta.clustering":
-                    latest = act
+    for _, act in delta_log.read_actions(log_dir):
+        dm = act.get("domainMetadata")
+        if dm is not None and dm.get("domain") == "delta.clustering":
+            latest = dm
     if latest is None or latest.get("removed"):
         return []
     cfg = json.loads(latest.get("configuration") or "{}")
@@ -2200,19 +1839,6 @@ def _stats_surviving_files_for(
     column: file names whose [min, max] interval on `column` overlaps
     [lo, hi], decided from the log's add.stats alone. Files without
     stats are conservatively kept (stats are optional per spec)."""
-    add_schema = T.StructType(
-        [
-            T.StructField(
-                "add",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("stats", T.StringType()),
-                    ]
-                ),
-            )
-        ]
-    )
     stats_schema = T.StructType(
         [
             T.StructField("numRecords", T.LongType()),
@@ -2227,16 +1853,18 @@ def _stats_surviving_files_for(
         ]
     )
     rows = (
-        spark.read.schema(add_schema)
-        .json(os.path.join(log_dir, "*.json"))
+        delta_log.read_log(spark, log_dir)
         .filter(F.col("add.path").isNotNull())
         .select(
             F.col("add.path").alias("path"),
             F.from_json(F.col("add.stats"), stats_schema).alias("s"),
         )
-        # keep when stats are absent OR this column's bounds are —
-        # a null bound means "unknown" (writers stat only the first N
-        # columns); the raw tri-valued predicate would drop the file
+        # interval-overlap skip rule: keep unless max < lo or min > hi.
+        # A file with NO stats — OR stats that omit this column's
+        # bounds — must be kept: real writers collect stats on only
+        # the first N columns, so a null bound means "unknown", and
+        # the tri-valued comparison would otherwise evaluate the whole
+        # predicate to NULL and silently drop a live file
         .filter(
             F.col("s").isNull()
             | F.col(f"s.minValues.{column}").isNull()
@@ -2283,28 +1911,24 @@ def _stage_clustered_table(
         )
         .collect()  # ≤8 rows: file-level metadata for the commit json
     )
-    lines = [
-        json.dumps({"commitInfo": {"operation": "CLUSTER BY"}}),
-        json.dumps(
-            {
-                "protocol": {
-                    "minReaderVersion": 1,
-                    "minWriterVersion": 7,
-                    "writerFeatures": ["domainMetadata", "clusteredTable"],
-                }
+    actions = [
+        {"commitInfo": {"operation": "CLUSTER BY"}},
+        {
+            "protocol": {
+                "minReaderVersion": 1,
+                "minWriterVersion": 7,
+                "writerFeatures": ["domainMetadata", "clusteredTable"],
             }
-        ),
-        json.dumps(
-            {
-                "domainMetadata": {
-                    "domain": "delta.clustering",
-                    "configuration": json.dumps(
-                        {"clusteringColumns": [["o_custkey"]]}
-                    ),
-                    "removed": False,
-                }
+        },
+        {
+            "domainMetadata": {
+                "domain": "delta.clustering",
+                "configuration": json.dumps(
+                    {"clusteringColumns": [["o_custkey"]]}
+                ),
+                "removed": False,
             }
-        ),
+        },
     ]
     for r in sorted(file_stats, key=lambda r: r["fname"]):
         stats = {
@@ -2313,19 +1937,16 @@ def _stage_clustered_table(
             "maxValues": {"o_custkey": r["hi"]},
             "nullCount": {"o_custkey": 0},
         }
-        lines.append(
-            json.dumps(
-                {
-                    "add": {
-                        "path": f"data/{r['fname']}",
-                        "dataChange": True,
-                        "stats": json.dumps(stats),
-                    }
+        actions.append(
+            {
+                "add": {
+                    "path": f"data/{r['fname']}",
+                    "dataChange": True,
+                    "stats": json.dumps(stats),
                 }
-            )
+            }
         )
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    delta_log.commit(log_dir, 0, actions)
 
 
 @register("src_delta_liquid_clustering", oracle=_LIQ_ORACLE)
@@ -2463,77 +2084,56 @@ def q_src_delta_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
             pf = pq.ParquetFile(p)
             lo = pf.metadata.row_group(0).column(0).statistics.min
             stats.append((lo, f"data/{sub}/{f}", pf.metadata.num_rows))
-        lines = []
+        actions = []
         if version == 1:
-            lines.append(
-                json.dumps(
-                    {
-                        "protocol": {
-                            "minReaderVersion": 1,
-                            "minWriterVersion": 7,
-                            "writerFeatures": [
-                                "rowTracking",
-                                "domainMetadata",
-                            ],
-                        }
-                    }
-                )
-            )
-        lines.append(json.dumps({"commitInfo": {"operation": "WRITE"}}))
-        # files ordered by their orderkey range: baseRowId assigned
-        # cumulatively in range order — the writer's commit-time rule
-        for _, rel, n in sorted(stats):
-            lines.append(
-                json.dumps(
-                    {
-                        "add": {
-                            "path": rel,
-                            "dataChange": True,
-                            "baseRowId": next_row_id,
-                            "defaultRowCommitVersion": version,
-                        }
-                    }
-                )
-            )
-            next_row_id += n
-        lines.append(
-            json.dumps(
+            actions.append(
                 {
-                    "domainMetadata": {
-                        "domain": "delta.rowTracking",
-                        "configuration": json.dumps(
-                            {"rowIdHighWaterMark": next_row_id - 1}
-                        ),
-                        "removed": False,
+                    "protocol": {
+                        "minReaderVersion": 1,
+                        "minWriterVersion": 7,
+                        "writerFeatures": ["rowTracking", "domainMetadata"],
                     }
                 }
             )
+        actions.append({"commitInfo": {"operation": "WRITE"}})
+        # files ordered by their orderkey range: baseRowId assigned
+        # cumulatively in range order — the writer's commit-time rule
+        for _, rel, n in sorted(stats):
+            actions.append(
+                {
+                    "add": {
+                        "path": rel,
+                        "dataChange": True,
+                        "baseRowId": next_row_id,
+                        "defaultRowCommitVersion": version,
+                    }
+                }
+            )
+            next_row_id += n
+        actions.append(
+            {
+                "domainMetadata": {
+                    "domain": "delta.rowTracking",
+                    "configuration": json.dumps(
+                        {"rowIdHighWaterMark": next_row_id - 1}
+                    ),
+                    "removed": False,
+                }
+            }
         )
-        with open(
-            os.path.join(log_dir, f"{version - 1:020d}.json"), "w"
-        ) as fh:
-            fh.write("\n".join(lines) + "\n")
+        delta_log.commit(log_dir, version - 1, actions)
 
     # --- reader: (path → baseRowId, version) from the log, id derived
     # inside the scan
-    adds = []
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line).get("add")
-                if act is not None:
-                    adds.append(
-                        (
-                            os.path.join(root, act["path"]),
-                            act["baseRowId"],
-                            act["defaultRowCommitVersion"],
-                        )
-                    )
+    adds = [
+        (
+            os.path.join(root, act["add"]["path"]),
+            act["add"]["baseRowId"],
+            act["add"]["defaultRowCommitVersion"],
+        )
+        for _, act in delta_log.read_actions(log_dir)
+        if "add" in act
+    ]
     if not adds:
         return local_rows(spark, 
             [],
@@ -2572,39 +2172,6 @@ WHERE o_orderpriority <> '1-URGENT'
   AND NOT (o_orderpriority = '4-NOT SPECIFIED' AND o_orderkey % 2 = 1)
 GROUP BY o_orderpriority
 """
-
-
-def _delta_log_segment(log_dir: str) -> list[str]:
-    """The MINIMAL commit-file list reconstructing the latest snapshot
-    (delta-io PROTOCOL.md §Log Compaction Files): prefer the
-    `<start>.<end>.compacted.json` with the highest end ≤ latest whose
-    start is 0 (or continues from another usable range — this reader
-    handles the common single-range case), then the tail commits
-    end+1..latest. Without a compaction file, every commit json.
-    Driver-side, one directory listing."""
-    import re as _re
-
-    commits, compacted = {}, []
-    for f in os.listdir(log_dir):
-        m = _re.fullmatch(r"(\d+)\.json", f)
-        if m:
-            commits[int(m.group(1))] = f
-            continue
-        m = _re.fullmatch(r"(\d+)\.(\d+)\.compacted\.json", f)
-        if m:
-            compacted.append((int(m.group(1)), int(m.group(2)), f))
-    if not commits:
-        raise FileNotFoundError(f"no commit json in {log_dir}")
-    latest = max(commits)
-    usable = [
-        (s, e, f) for s, e, f in compacted if s == 0 and e <= latest
-    ]
-    if not usable:
-        return [commits[v] for v in sorted(commits)]
-    _, end, cf = max(usable, key=lambda t: t[1])
-    return [cf] + [
-        commits[v] for v in sorted(commits) if v > end
-    ]
 
 
 @register("src_delta_log_compaction", oracle=_LOGCOMPACT_ORACLE)
@@ -2662,10 +2229,6 @@ def q_src_delta_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s1, s2 = _files("s1"), _files("s2")
 
-    def _commit(v: int, lines: list[dict]) -> None:
-        with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as fh:
-            fh.write("\n".join(json.dumps(x) for x in lines) + "\n")
-
     def _add(rel: str, pv: str) -> dict:
         return {
             "add": {
@@ -2678,16 +2241,17 @@ def q_src_delta_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _rm(rel: str) -> dict:
         return {"remove": {"path": rel, "dataChange": True}}
 
-    _commit(0, [{"commitInfo": {"operation": "WRITE"}}]
-            + [_add(r, v) for r, v in s1])
-    _commit(1, [{"commitInfo": {"operation": "WRITE"}}]
-            + [_add(r, v) for r, v in s2])
-    _commit(
+    write = {"commitInfo": {"operation": "WRITE"}}
+    delta_log.commit(log_dir, 0, [write] + [_add(r, v) for r, v in s1])
+    delta_log.commit(log_dir, 1, [write] + [_add(r, v) for r, v in s2])
+    delta_log.commit(
+        log_dir,
         2,
         [{"commitInfo": {"operation": "DELETE"}}]
         + [_rm(r) for r, v in s1 + s2 if v == "1-URGENT"],
     )
-    _commit(
+    delta_log.commit(
+        log_dir,
         3,
         [{"commitInfo": {"operation": "DELETE"}}]
         + [_rm(r) for r, v in s1 if v == "5-LOW"],
@@ -2699,32 +2263,24 @@ def q_src_delta_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = [{"commitInfo": {"operation": "COMPACTION"}}]
     comp += [_add(r, v) for r, v in s1 + s2 if r not in dropped]
     comp += [_rm(r) for r in sorted(dropped)]
-    with open(
-        os.path.join(log_dir, f"{0:020d}.{3:020d}.compacted.json"), "w"
-    ) as fh:
-        fh.write("\n".join(json.dumps(x) for x in comp) + "\n")
-    _commit(
+    delta_log.commit_compacted(log_dir, 0, 3, comp)
+    delta_log.commit(
+        log_dir,
         4,
         [{"commitInfo": {"operation": "DELETE"}}]
         + [_rm(r) for r, v in s2 if v == "4-NOT SPECIFIED"],
     )
 
     # --- reader: minimal segment (compacted + tail), then replay
-    segment = _delta_log_segment(log_dir)
     global _LAST_LOG_SEGMENT
-    _LAST_LOG_SEGMENT = list(segment)
+    _LAST_LOG_SEGMENT = delta_log.log_segment(log_dir)
     live: dict[str, str] = {}
-    for f in segment:
-        for line in open(os.path.join(log_dir, f)):
-            line = line.strip()
-            if not line:
-                continue
-            act = json.loads(line)
-            if "add" in act:
-                a = act["add"]
-                live[a["path"]] = a["partitionValues"]["o_orderpriority"]
-            elif "remove" in act:
-                live.pop(act["remove"]["path"], None)
+    for act in delta_log.read_segment(log_dir):
+        if "add" in act:
+            a = act["add"]
+            live[a["path"]] = a["partitionValues"]["o_orderpriority"]
+        elif "remove" in act:
+            live.pop(act["remove"]["path"], None)
     if not live:
         return local_rows(spark, 
             [], "o_orderpriority string, n_rows long, total_cents long"

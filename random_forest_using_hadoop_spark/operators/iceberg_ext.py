@@ -42,6 +42,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from random_forest_using_hadoop_spark import delta_log
 from random_forest_using_hadoop_spark.iceberg_format import ocf_read, ocf_write
 from random_forest_using_hadoop_spark.operators.scans import (
     _norm_file_uri,
@@ -4174,31 +4175,31 @@ def q_src_lake_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     pfiles = _pfiles(root, "data")  # (abs path, priority)
 
     # --- Delta log over the shared files
-    lines0 = [json.dumps({"commitInfo": {"operation": "WRITE"}})]
-    for p, v in pfiles:
-        rel = os.path.relpath(p, root)
-        lines0.append(
-            json.dumps(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": {"o_orderpriority": v},
-                        "dataChange": True,
-                    }
+    delta_log.commit(
+        log_dir,
+        0,
+        [{"commitInfo": {"operation": "WRITE"}}]
+        + [
+            {
+                "add": {
+                    "path": os.path.relpath(p, root),
+                    "partitionValues": {"o_orderpriority": v},
+                    "dataChange": True,
                 }
-            )
-        )
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines0) + "\n")
-    lines1 = [json.dumps({"commitInfo": {"operation": "DELETE"}})]
-    for p, v in pfiles:
-        if v == "1-URGENT":
-            rel = os.path.relpath(p, root)
-            lines1.append(
-                json.dumps({"remove": {"path": rel, "dataChange": True}})
-            )
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines1) + "\n")
+            }
+            for p, v in pfiles
+        ],
+    )
+    delta_log.commit(
+        log_dir,
+        1,
+        [{"commitInfo": {"operation": "DELETE"}}]
+        + [
+            {"remove": {"path": os.path.relpath(p, root), "dataChange": True}}
+            for p, v in pfiles
+            if v == "1-URGENT"
+        ],
+    )
 
     # --- Iceberg metadata over the SAME files
     m1 = _write_manifest(
@@ -4300,27 +4301,10 @@ def q_src_lake_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
         fh.write("1")
 
     # --- read through BOTH format chains
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_check_protocol,
-    )
-
-    _delta_check_protocol(log_dir)
-    live: dict[str, str] = {}
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        for line in open(os.path.join(log_dir, f)):
-            line = line.strip()
-            if not line:
-                continue
-            act = json.loads(line)
-            if "add" in act:
-                a = act["add"]
-                live[a["path"]] = a["partitionValues"]["o_orderpriority"]
-            elif "remove" in act:
-                live.pop(act["remove"]["path"], None)
+    delta_log._delta_check_protocol(log_dir)
     delta_files = [
-        (os.path.join(root, rel), v, 0) for rel, v in sorted(live.items())
+        (os.path.join(root, rel), add["partitionValues"]["o_orderpriority"], 0)
+        for rel, add in sorted(delta_log.snapshot(log_dir).live.items())
     ]
     ice_files = _iceberg_live_files(
         _iceberg_snapshot(_iceberg_table_meta(root))

@@ -29,6 +29,12 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark.delta_log import (
+    _delta_commit,
+    _delta_latest_live_files,
+    _delta_live_files,
+)
 from random_forest_using_hadoop_spark.helpers import local_rows
 
 from random_forest_using_hadoop_spark.delta_format import (
@@ -58,6 +64,7 @@ from random_forest_using_hadoop_spark.operators.iceberg_ext import (
 )
 from random_forest_using_hadoop_spark.operators.scans import (
     _delta_list_files,
+    _delta_stage_history,
     _norm_file_uri,
     _tmp,
 )
@@ -917,8 +924,10 @@ def q_sink_delta_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()  # ≤4 rows: commit-payload metadata
     )
-    lines = [
-        json.dumps(
+    delta_log.commit(
+        log_dir,
+        0,
+        [
             {
                 "add": {
                     "path": os.path.relpath(r["fp"], root),
@@ -932,11 +941,9 @@ def q_sink_delta_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                 }
             }
-        )
-        for r in sorted(file_stats, key=lambda r: r["fp"])
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+            for r in sorted(file_stats, key=lambda r: r["fp"])
+        ],
+    )
 
     # --- the MERGE source: (key, op, new_price)
     bound = _MERGE_KEY_BOUND
@@ -1044,16 +1051,16 @@ def q_sink_delta_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         for sink, fut in futs:
             sink += fut.result()
-    lines = (
-        [json.dumps({"cdc": {"path": p, "dataChange": False}})
-         for p in cdc_files]
-        + [json.dumps({"add": {"path": p, "dataChange": True}})
-           for p in new_files]
-        + [json.dumps({"remove": {"path": p, "dataChange": True}})
-           for p in sorted(touched)]
+    delta_log.commit(
+        log_dir,
+        1,
+        [{"cdc": {"path": p, "dataChange": False}} for p in cdc_files]
+        + [{"add": {"path": p, "dataChange": True}} for p in new_files]
+        + [
+            {"remove": {"path": p, "dataChange": True}}
+            for p in sorted(touched)
+        ],
     )
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
 
     # --- read back: v1 feed FROM cdc files alone + final snapshot
     feed = (
@@ -1079,7 +1086,7 @@ def q_sink_delta_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n", F.lit(0).cast("bigint")).alias("n_rows"),
         F.coalesce("cents", F.lit(0).cast("bigint")).alias("total_cents"),
     )
-    live = _dv_snapshot(log_dir)  # adds-minus-removes replay (no DVs here)
+    live = delta_log.snapshot(log_dir).live  # adds-minus-removes replay
     final = spark.read.parquet(
         *sorted(os.path.join(root, p) for p in live)
     ).agg(
@@ -1620,13 +1627,6 @@ def q_sink_delta_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the byte-identical data dir, the exact live-set flip, and v2
     still being readable.
     """
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_commit,
-        _delta_latest_live_files,
-        _delta_live_files,
-        _delta_stage_history,
-    )
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1704,19 +1704,11 @@ def q_sink_delta_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     point (gated: the clone's data dir holds ONLY its own append —
     tests/test_delta_protocol.py::test_shallow_clone_copies_no_data).
     """
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_latest_live_files,
-    )
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     src_root = _tmp(sf_dir, "delta_clone_src")
     clone_root = _tmp(sf_dir, "delta_clone")
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_stage_history,
-    )
-
     _delta_stage_history(spark, o, src_root)
     shutil.rmtree(clone_root, ignore_errors=True)
     clone_log = os.path.join(clone_root, "_delta_log")
@@ -1726,37 +1718,31 @@ def q_sink_delta_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clone v0: absolute-path adds of the source's live files — pure
     # metadata, O(live files), zero data bytes
     src_live = _delta_latest_live_files(spark, src_root)
-    lines = [json.dumps({"commitInfo": {"operation": "CLONE"}})] + [
-        json.dumps(
+    delta_log.commit(
+        clone_log,
+        0,
+        [{"commitInfo": {"operation": "CLONE"}}]
+        + [
             {
                 "add": {
                     "path": os.path.join(src_root, "data", f),
                     "dataChange": True,
                 }
             }
-        )
-        for f in sorted(src_live)
-    ]
-    with open(os.path.join(clone_log, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+            for f in sorted(src_live)
+        ],
+    )
 
     # clone v1: its OWN append — lands under the CLONE's directory
     o.filter(F.col("o_orderkey") % 2 == 1).withColumn(
         "o_totalprice", F.col("o_totalprice") + F.lit(9.0)
     ).coalesce(1).write.mode("append").parquet(clone_data)
-    with open(os.path.join(clone_log, f"{1:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-                for p in sorted(_delta_list_files(clone_data))
-            )
-            + "\n"
-        )
+    _delta_commit(clone_log, 1, _delta_list_files(clone_data), set())
 
     def _read(root: str, section: str) -> DataFrame:
         # resolve each live add per the spec: absolute paths verbatim,
         # relative paths against the table root
-        live = _dv_snapshot(os.path.join(root, "_delta_log"))
+        live = delta_log.snapshot(os.path.join(root, "_delta_log")).live
         paths = sorted(
             p if os.path.isabs(p) else os.path.join(root, p) for p in live
         )
@@ -1935,35 +1921,6 @@ GROUP BY o_orderkey % 2
 """
 
 
-def _dv_snapshot(log_dir: str) -> dict[str, dict | None]:
-    """Replay the Delta log driver-side: live data files → their
-    CURRENT DeletionVectorDescriptor (or None). Within a version,
-    removes apply before adds, so the DV-rewrite commit shape
-    (remove(path, old DV) + add(path, new DV)) resolves to the new
-    descriptor. Bounded by live-file count — snapshot state."""
-    live: dict[str, dict | None] = {}
-    for fname in sorted(os.listdir(log_dir)):
-        if not fname.endswith(".json"):
-            continue
-        adds: dict[str, dict | None] = {}
-        removes: set[str] = set()
-        with open(os.path.join(log_dir, fname)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                act = json.loads(line)
-                if "add" in act:
-                    adds[act["add"]["path"]] = act["add"].get(
-                        "deletionVector"
-                    )
-                elif "remove" in act:
-                    removes.add(act["remove"]["path"])
-        for p in removes:
-            live.pop(p, None)
-        live.update(adds)
-    return live
-
-
 def _delta_delete_to_dv(
     spark: SparkSession, root: str, predicate
 ) -> int:
@@ -1994,23 +1951,23 @@ def _delta_delete_to_dv(
     from random_forest_using_hadoop_spark import delta_format as _dfmt
 
     log_dir = os.path.join(root, "_delta_log")
-    live = _dv_snapshot(log_dir)
+    snap = delta_log.snapshot(log_dir)
     # per-file current-DV descriptor map: O(files) metadata, shipped to
     # the matched rows via a broadcast equi-join on the file path
     desc_map = local_rows(spark, 
         [
             (
                 os.path.join(root, p),
-                json.dumps(dv)
-                if dv is not None and dv.get("storageType")
+                json.dumps(add["deletionVector"])
+                if (add.get("deletionVector") or {}).get("storageType")
                 else None,
             )
-            for p, dv in sorted(live.items())
+            for p, add in sorted(snap.live.items())
         ],
         "_fp string, _dv string",
     )
     matched = (
-        spark.read.parquet(*sorted(os.path.join(root, p) for p in live))
+        spark.read.parquet(*sorted(os.path.join(root, p) for p in snap.live))
         .select(
             "o_orderkey",
             _norm_file_uri(F.input_file_name()).alias("_fp"),
@@ -2062,35 +2019,15 @@ def _delta_delete_to_dv(
         )),
     )
     if not descs:
-        return max(
-            int(f.split(".")[0])
-            for f in os.listdir(log_dir)
-            if f.endswith(".json")
-        )
-    version = 1 + max(
-        int(f.split(".")[0])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json")
-    )
-    lines = [json.dumps({"commitInfo": {"operation": "DELETE"}})]
+        return snap.version
+    actions = [{"commitInfo": {"operation": "DELETE"}}]
     for rel, desc in descs:
-        lines.append(
-            json.dumps({"remove": {"path": rel, "dataChange": True}})
+        actions.append({"remove": {"path": rel, "dataChange": True}})
+        actions.append(
+            {"add": {"path": rel, "dataChange": True, "deletionVector": desc}}
         )
-        lines.append(
-            json.dumps(
-                {
-                    "add": {
-                        "path": rel,
-                        "dataChange": True,
-                        "deletionVector": desc,
-                    }
-                }
-            )
-        )
-    with open(os.path.join(log_dir, f"{version:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    return version
+    delta_log.commit(log_dir, snap.version + 1, actions)
+    return snap.version + 1
 
 
 @register("sink_delta_delete_dv", oracle=_DV_DELETE_ORACLE)
@@ -2137,22 +2074,16 @@ def q_sink_delta_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
                     os.path.join(data_dir, f"par{d[4:]}-{f}"),
                 )
     shutil.rmtree(scratch, ignore_errors=True)
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-                for p in sorted(_delta_list_files(data_dir))
-            )
-            + "\n"
-        )
+    _delta_commit(log_dir, 0, _delta_list_files(data_dir), set())
 
     _delta_delete_to_dv(spark, root, F.col("o_orderkey") % 10 == 7)
     _delta_delete_to_dv(spark, root, F.col("o_orderkey") % 10 == 4)
 
     # read back through the descriptor decode + anti-join contract
-    live = _dv_snapshot(log_dir)
+    live = delta_log.snapshot(log_dir).live
     del_rows = []
-    for rel, dv in live.items():
+    for rel, add in live.items():
+        dv = add.get("deletionVector")
         if dv is not None and dv.get("storageType"):
             fp = os.path.join(root, rel)
             for pos in dv_read(dv, root):

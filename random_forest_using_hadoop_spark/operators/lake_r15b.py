@@ -32,10 +32,13 @@ from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _write_manifest,
     _write_manifest_list,
 )
-from random_forest_using_hadoop_spark.operators.scans import (
+from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark.delta_log import (
     _delta_latest_live_files,
-    _delta_list_files,
     _delta_live_files,
+)
+from random_forest_using_hadoop_spark.operators.scans import (
+    _delta_list_files,
     _tmp,
 )
 from random_forest_using_hadoop_spark.registry import register
@@ -376,63 +379,50 @@ def q_src_delta_in_commit_timestamp(
         before = _delta_list_files(data_dir)
         o.filter(pred).coalesce(1).write.mode("append").parquet(data_dir)
         adds = _delta_list_files(data_dir) - before
-        lines = [
-            json.dumps(
+        actions = [
+            {
+                "commitInfo": {
+                    "operation": "WRITE",
+                    "inCommitTimestamp": base_ict_ms + 200_000 * v,
+                }
+            }
+        ]
+        if v == 0:
+            actions.append(
                 {
-                    "commitInfo": {
-                        "operation": "WRITE",
-                        "inCommitTimestamp": base_ict_ms + 200_000 * v,
+                    "protocol": {
+                        "minReaderVersion": 1,
+                        "minWriterVersion": 7,
+                        "writerFeatures": ["inCommitTimestamp"],
                     }
                 }
             )
-        ]
-        if v == 0:
-            lines.append(
-                json.dumps(
-                    {
-                        "protocol": {
-                            "minReaderVersion": 1,
-                            "minWriterVersion": 7,
-                            "writerFeatures": ["inCommitTimestamp"],
-                        }
+            actions.append(
+                {
+                    "metaData": {
+                        "id": "delta-ict-fixture",
+                        "format": {"provider": "parquet"},
+                        "configuration": {
+                            "delta.enableInCommitTimestamps": "true"
+                        },
                     }
-                )
+                }
             )
-            lines.append(
-                json.dumps(
-                    {
-                        "metaData": {
-                            "id": "delta-ict-fixture",
-                            "format": {"provider": "parquet"},
-                            "configuration": {
-                                "delta.enableInCommitTimestamps": "true"
-                            },
-                        }
-                    }
-                )
-            )
-        lines += [
-            json.dumps(
-                {"add": {"path": f"data/{p}", "dataChange": True}}
-            )
+        actions += [
+            {"add": {"path": f"data/{p}", "dataChange": True}}
             for p in sorted(adds)
         ]
-        commit_path = os.path.join(log_dir, f"{v:020d}.json")
-        with open(commit_path, "w") as fh:
-            fh.write("\n".join(lines) + "\n")
+        commit_path = delta_log.commit(log_dir, v, actions)
         # adversarial mtimes: REVERSED order, v0 newest
         t = mtime_epoch + 100 * (len(slices) - 1 - v)
         os.utime(commit_path, (t, t))
 
     # gate: ICT monotonicity (spec invariant)
-    icts = []
-    for v in range(len(slices)):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                info = json.loads(line).get("commitInfo")
-                if info and "inCommitTimestamp" in info:
-                    icts.append(info["inCommitTimestamp"])
-                    break
+    icts = [
+        act["commitInfo"]["inCommitTimestamp"]
+        for _, act in delta_log.read_actions(log_dir)
+        if "inCommitTimestamp" in act.get("commitInfo", {})
+    ]
     if icts != sorted(icts) or len(set(icts)) != len(icts):
         raise ValueError(f"inCommitTimestamps not strictly monotonic: {icts}")
 
@@ -448,11 +438,14 @@ def q_src_delta_in_commit_timestamp(
         )
 
     # gate: mtime-only resolution must DISAGREE (the fixture bites)
-    mtime_best = -1
-    for f in sorted(os.listdir(log_dir)):
-        if f.endswith(".json") and f.split(".", 1)[0].isdigit():
-            if os.path.getmtime(os.path.join(log_dir, f)) <= ts_mid:
-                mtime_best = max(mtime_best, int(f.split(".", 1)[0]))
+    mtime_best = max(
+        (
+            v
+            for v in delta_log.list_versions(log_dir)
+            if os.path.getmtime(delta_log.commit_path(log_dir, v)) <= ts_mid
+        ),
+        default=-1,
+    )
     if mtime_best == v_mid:
         raise ValueError(
             "adversarial mtimes did not bite — fixture lost its point"
@@ -515,18 +508,7 @@ def _delta_schema_string(fields: list[tuple[str, str]]) -> str:
 def _delta_latest_schema(log_dir: str) -> list[tuple[str, str]]:
     """Latest metaData action's schema as [(name, type)] — one bounded
     log-tail read (real tables serve this from the checkpoint)."""
-    latest = None
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                md = json.loads(line).get("metaData")
-                if md is not None and "schemaString" in md:
-                    latest = md["schemaString"]
+    latest = delta_log.snapshot(log_dir).metadata.get("schemaString")
     if latest is None:
         raise ValueError("table has no metaData action — not a Delta table")
     return [
@@ -572,28 +554,27 @@ def delta_append_merge_schema(
     before = _delta_list_files(data_dir)
     batch.write.mode("append").parquet(data_dir)
     adds = _delta_list_files(data_dir) - before
-    lines = [json.dumps({"commitInfo": {"operation": "WRITE"}})]
+    actions = [{"commitInfo": {"operation": "WRITE"}}]
     if new_cols:
-        lines.append(
-            json.dumps(
-                {
-                    "metaData": {
-                        "id": "delta-evo-fixture",
-                        "format": {"provider": "parquet"},
-                        "schemaString": _delta_schema_string(merged),
-                        "partitionColumns": [],
-                        "configuration": {},
-                    }
-                }
-            )
-        )
-    lines += [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
+        actions.append(_delta_evo_meta(merged))
+    actions += [
+        {"add": {"path": f"data/{p}", "dataChange": True}}
         for p in sorted(adds)
     ]
-    with open(os.path.join(log_dir, f"{version:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    delta_log.commit(log_dir, version, actions)
     return bool(new_cols)
+
+
+def _delta_evo_meta(fields: list[tuple[str, str]]) -> dict:
+    return {
+        "metaData": {
+            "id": "delta-evo-fixture",
+            "format": {"provider": "parquet"},
+            "schemaString": _delta_schema_string(fields),
+            "partitionColumns": [],
+            "configuration": {},
+        }
+    }
 
 
 _DELTA_EVO_ORACLE = """
@@ -649,28 +630,20 @@ def q_sink_delta_schema_evolution(
     )
     gen1.coalesce(1).write.mode("append").parquet(data_dir)
     v0_adds = _delta_list_files(data_dir)
-    lines = [
-        json.dumps({"commitInfo": {"operation": "WRITE"}}),
-        json.dumps(
-            {
-                "metaData": {
-                    "id": "delta-evo-fixture",
-                    "format": {"provider": "parquet"},
-                    "schemaString": _delta_schema_string(
-                        [("o_orderkey", "bigint"),
-                         ("o_totalprice", "double")]
-                    ),
-                    "partitionColumns": [],
-                    "configuration": {},
-                }
-            }
-        ),
-    ] + [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in sorted(v0_adds)
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    delta_log.commit(
+        log_dir,
+        0,
+        [
+            {"commitInfo": {"operation": "WRITE"}},
+            _delta_evo_meta(
+                [("o_orderkey", "bigint"), ("o_totalprice", "double")]
+            ),
+        ]
+        + [
+            {"add": {"path": f"data/{p}", "dataChange": True}}
+            for p in sorted(v0_adds)
+        ],
+    )
 
     # v1: generation 2 WITH the new column → schema change must ride it
     gen2a = o.filter(
@@ -687,9 +660,9 @@ def q_sink_delta_schema_evolution(
     changed = delta_append_merge_schema(gen2b.coalesce(1), root, 2)
     if changed:
         raise ValueError("schema-stable append re-stamped metaData")
-    with open(os.path.join(log_dir, f"{2:020d}.json")) as fh:
-        if any("metaData" in json.loads(ln) for ln in fh if ln.strip()):
-            raise ValueError("v2 commit carries a spurious metaData action")
+    v2_actions = delta_log.read_actions(log_dir, [2])
+    if any("metaData" in act for _, act in v2_actions):
+        raise ValueError("v2 commit carries a spurious metaData action")
 
     # read-back under the latest resolved schema — nulls fill gen 1
     from pyspark.sql import types as T
@@ -962,19 +935,9 @@ def delta_rename_column(root: str, old: str, new: str) -> None:
     a 100 TB table is one metadata JSON write. Renaming a missing
     column or colliding with an existing logical name is refused."""
     log_dir = os.path.join(root, "_delta_log")
-    latest = None
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                md = json.loads(line).get("metaData")
-                if md is not None and "schemaString" in md:
-                    latest = md
-    if latest is None:
+    snap = delta_log.snapshot(log_dir)
+    latest = snap.metadata
+    if "schemaString" not in latest:
         raise ValueError("not a Delta table (no metaData action)")
     if latest.get("configuration", {}).get(
         "delta.columnMapping.mode"
@@ -994,19 +957,11 @@ def delta_rename_column(root: str, old: str, new: str) -> None:
             f["name"] = new
     new_md = dict(latest)
     new_md["schemaString"] = json.dumps(schema)
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_max_version,
+    delta_log.commit(
+        log_dir,
+        snap.version + 1,
+        [{"commitInfo": {"operation": "RENAME COLUMN"}}, {"metaData": new_md}],
     )
-
-    v = _delta_max_version(log_dir) + 1
-    lines = [
-        json.dumps(
-            {"commitInfo": {"operation": "RENAME COLUMN"}}
-        ),
-        json.dumps({"metaData": new_md}),
-    ]
-    with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
 
 
 _CM_RENAME_ORACLE = """
@@ -1063,8 +1018,10 @@ def q_sink_delta_column_mapping_rename(
     )
     physical.repartition(2).write.mode("overwrite").parquet(data_dir)
     adds = sorted(_delta_list_files(data_dir))
-    lines = [
-        json.dumps(
+    delta_log.commit(
+        log_dir,
+        0,
+        [
             {
                 "metaData": {
                     "id": "cmap-rename-fixture",
@@ -1077,13 +1034,9 @@ def q_sink_delta_column_mapping_rename(
                     },
                 }
             }
-        )
-    ] + [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": True}})
-        for p in adds
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+        ]
+        + [{"add": {"path": f"data/{p}", "dataChange": True}} for p in adds],
+    )
 
     def _inventory() -> dict[str, tuple[int, float]]:
         return {
@@ -1100,8 +1053,7 @@ def q_sink_delta_column_mapping_rename(
         raise ValueError("RENAME COLUMN touched data files")
 
     # gate: rename commit is metadata-only, ids/physical names stable
-    with open(os.path.join(log_dir, f"{1:020d}.json")) as fh:
-        acts = [json.loads(ln) for ln in fh if ln.strip()]
+    acts = [act for _, act in delta_log.read_actions(log_dir, [1])]
     if any("add" in a or "remove" in a for a in acts):
         raise ValueError("rename commit carries file actions")
     new_schema = json.loads(

@@ -35,6 +35,7 @@ from random_forest_using_hadoop_spark.operators.hudi import (
     _hudi_snapshot_files,
     _hudi_stage,
 )
+from random_forest_using_hadoop_spark import delta_log
 from random_forest_using_hadoop_spark.operators.scans import _tmp
 from random_forest_using_hadoop_spark.registry import register
 from random_forest_using_hadoop_spark.sources import load_table
@@ -981,12 +982,9 @@ def delta_identity_append(spark: SparkSession, root: str, batch) -> int:
     unique key order, so the assignment is deterministic AND each
     executor writes its own rows. Returns the committed version."""
     from random_forest_using_hadoop_spark.helpers import dist_row_number
-    from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _delta_snapshot_actions,
-    )
 
     log_dir = os.path.join(root, "_delta_log")
-    _, meta, version = _delta_snapshot_actions(log_dir)
+    version, _, meta, _ = delta_log.snapshot(log_dir)
     schema = json.loads(meta["schemaString"])
     id_col, id_md = _identity_meta(schema["fields"])
     if id_col in batch.columns:
@@ -998,11 +996,10 @@ def delta_identity_append(spark: SparkSession, root: str, batch) -> int:
     step = int(id_md["delta.identity.step"])
     hwm = id_md.get("delta.identity.highWaterMark")
     base = start if hwm is None else int(hwm) + step
-    ranked = dist_row_number(batch, [F.col("o_orderkey")], out="_rn")
+    ranked, n = dist_row_number(batch, [F.col("o_orderkey")], out="_rn")
     stamped = ranked.withColumn(
         id_col, (F.lit(base) + F.lit(step) * (F.col("_rn") - 1)).cast("long")
     ).drop("_rn")
-    n = stamped.count()
     new_hwm = base + step * (n - 1)
 
     new_version = version + 1
@@ -1019,16 +1016,19 @@ def delta_identity_append(spark: SparkSession, root: str, batch) -> int:
             f["metadata"] = id_md
     meta = dict(meta)
     meta["schemaString"] = json.dumps(schema)
-    lines = [
-        json.dumps({"commitInfo": {"operation": "WRITE"}}),
-        json.dumps({"metaData": meta}),
-    ] + [
-        json.dumps({"add": {"path": f"data/{sub}/{f}", "dataChange": True}})
-        for f in sorted(os.listdir(out_dir))
-        if f.endswith(".parquet")
-    ]
-    with open(os.path.join(log_dir, f"{new_version:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    delta_log.commit(
+        log_dir,
+        new_version,
+        [
+            {"commitInfo": {"operation": "WRITE"}},
+            {"metaData": meta},
+        ]
+        + [
+            {"add": {"path": f"data/{sub}/{f}", "dataChange": True}}
+            for f in sorted(os.listdir(out_dir))
+            if f.endswith(".parquet")
+        ],
+    )
     return new_version
 
 
@@ -1058,11 +1058,6 @@ def q_sink_delta_identity_column(
     JSON plus one metaData action — identical cost shape to a plain
     append.
     """.format(start=_ID_START, step=_ID_STEP)
-    from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _delta_snapshot_actions,
-        _live_paths,
-    )
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -1123,13 +1118,12 @@ def q_sink_delta_identity_column(
             }
         },
     ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    delta_log.commit(log_dir, 0, actions)
 
     evens = o.filter(F.col("o_orderkey") % 2 == 0)
     odds = o.filter(F.col("o_orderkey") % 2 == 1)
     v1 = delta_identity_append(spark, root, evens)
-    _, meta1, _ = _delta_snapshot_actions(log_dir)
+    meta1 = delta_log.snapshot(log_dir).metadata
     hwm1 = _identity_meta(json.loads(meta1["schemaString"])["fields"])[1][
         "delta.identity.highWaterMark"
     ]
@@ -1143,7 +1137,7 @@ def q_sink_delta_identity_column(
         )
     except DeltaIdentityRejected:
         rejected = True
-    _, meta2, version = _delta_snapshot_actions(log_dir)
+    version, _, meta2, live = delta_log.snapshot(log_dir)
     hwm2 = _identity_meta(json.loads(meta2["schemaString"])["fields"])[1][
         "delta.identity.highWaterMark"
     ]
@@ -1153,13 +1147,7 @@ def q_sink_delta_identity_column(
             f"versions=({v1}, {v2}, {version})"
         )
 
-    live = sorted(
-        p
-        for fname in os.listdir(log_dir)
-        if fname.endswith(".json")
-        for p in _live_paths(os.path.join(log_dir, fname))
-    )
-    t = spark.read.parquet(*(os.path.join(root, p) for p in live))
+    t = spark.read.parquet(*(os.path.join(root, p) for p in sorted(live)))
     stats = t.agg(
         F.min("row_id").alias("lo"),
         F.max("row_id").alias("hi"),
@@ -1259,10 +1247,12 @@ def q_sink_lake_uniform_append(
     os.makedirs(log_dir)
     os.makedirs(meta_dir)
 
-    def _delta_commit(version: int, files: list[tuple[str, str]]) -> None:
-        lines = [json.dumps({"commitInfo": {"operation": "WRITE"}})]
-        lines += [
-            json.dumps(
+    def _delta_append(version: int, files: list[tuple[str, str]]) -> None:
+        delta_log.commit(
+            log_dir,
+            version,
+            [{"commitInfo": {"operation": "WRITE"}}]
+            + [
                 {
                     "add": {
                         "path": os.path.relpath(p, root),
@@ -1270,13 +1260,9 @@ def q_sink_lake_uniform_append(
                         "dataChange": True,
                     }
                 }
-            )
-            for p, v in files
-        ]
-        with open(
-            os.path.join(log_dir, f"{version:020d}.json"), "w"
-        ) as fh:
-            fh.write("\n".join(lines) + "\n")
+                for p, v in files
+            ],
+        )
 
     def _iceberg_meta(snaps) -> dict:
         m = _iceberg_meta_json(root, snaps)
@@ -1288,7 +1274,7 @@ def q_sink_lake_uniform_append(
         "overwrite"
     ).partitionBy("o_orderpriority").parquet(os.path.join(data_dir, "c0"))
     base_files = _pfiles(root, "data/c0")
-    _delta_commit(0, base_files)
+    _delta_append(0, base_files)
     m1 = _write_manifest(
         meta_dir,
         "m1-uw.avro",
@@ -1306,7 +1292,7 @@ def q_sink_lake_uniform_append(
         "overwrite"
     ).partitionBy("o_orderpriority").parquet(os.path.join(data_dir, "c1"))
     new_files = _pfiles(root, "data/c1")
-    _delta_commit(1, new_files)
+    _delta_append(1, new_files)
     m2 = _write_manifest(
         meta_dir,
         "m2-uw.avro",
@@ -1323,22 +1309,9 @@ def q_sink_lake_uniform_append(
         fh.write("2")
 
     # --- read back through both chains
-    delta_live: dict[str, str] = {}
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        for line in open(os.path.join(log_dir, f)):
-            if line.strip():
-                act = json.loads(line)
-                if "add" in act:
-                    delta_live[act["add"]["path"]] = act["add"][
-                        "partitionValues"
-                    ]["o_orderpriority"]
-                elif "remove" in act:
-                    delta_live.pop(act["remove"]["path"], None)
     delta_files = [
-        (os.path.join(root, rel), v, 0)
-        for rel, v in sorted(delta_live.items())
+        (os.path.join(root, rel), add["partitionValues"]["o_orderpriority"], 0)
+        for rel, add in sorted(delta_log.snapshot(log_dir).live.items())
     ]
     ice_files = _iceberg_live_files(
         _iceberg_snapshot(_iceberg_table_meta(root))

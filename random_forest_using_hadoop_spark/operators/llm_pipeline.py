@@ -1026,7 +1026,9 @@ def q_pipe_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed = d.withColumn(
             "_k", F.md5(F.concat(F.lit(f"{e}:"), F.col("doc_id").cast("string")))
         )
-        r = dist_row_number(keyed, [F.col("_k"), F.col("doc_id")], out="rn")
+        r, _ = dist_row_number(
+            keyed, [F.col("_k"), F.col("doc_id")], out="rn"
+        )
         return r.select(
             F.lit(e).alias("epoch"),
             "doc_id",

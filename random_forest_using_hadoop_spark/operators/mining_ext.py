@@ -488,7 +488,7 @@ def q_agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tot = base.count()
 
     def quintile(src: DataFrame, order_cols, out: str) -> DataFrame:
-        ranked = dist_row_number(src, order_cols, out="_rn")
+        ranked, _ = dist_row_number(src, order_cols, out="_rn")
         return ranked.select(
             "o_custkey", ntile_from_rn("_rn", n_tot, 5).alias(out)
         )

@@ -15,6 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark.delta_log import (
+    _delta_commit,
+    _delta_live_files,
+    _delta_max_version,
+)
 from random_forest_using_hadoop_spark.helpers import local_rows
 from random_forest_using_hadoop_spark.helpers import dsum, o_dsum
 from random_forest_using_hadoop_spark.registry import register
@@ -1047,57 +1053,19 @@ def _delta_list_files(data_dir: str) -> set[str]:
     return {f for f in os.listdir(data_dir) if f.endswith(".parquet")}
 
 
-def _delta_commit(
-    log_dir: str,
-    version: int,
-    adds: set[str],
-    removes: set[str],
-    data_change: bool = True,
-    remove_ts_ms: int | None = None,
-) -> None:
-    """Write one Delta-protocol commit: zero-padded `<version>.json`,
-    JSON-lines actions with table-root-relative paths. `data_change`
-    MUST be False for rearrangement-only commits (compaction/optimize)
-    — it is the protocol's signal that lets streaming consumers skip
-    re-emitted rows (stream_delta_commits grades exactly that).
-    `remove_ts_ms` stamps each remove action's `deletionTimestamp`
-    (epoch millis) — the field VACUUM's retention window is measured
-    against."""
-    import json
-
-    lines = [json.dumps({"commitInfo": {"operation": "WRITE"}})]
-    lines += [
-        json.dumps({"add": {"path": f"data/{p}", "dataChange": data_change}})
-        for p in sorted(adds)
-    ]
-    rm_extra = (
-        {} if remove_ts_ms is None else {"deletionTimestamp": remove_ts_ms}
-    )
-    lines += [
-        json.dumps(
-            {
-                "remove": {
-                    "path": f"data/{p}",
-                    "dataChange": data_change,
-                    **rm_extra,
-                }
-            }
-        )
-        for p in sorted(removes)
-    ]
-    with open(os.path.join(log_dir, f"{version:020d}.json"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-
-
 def _delta_stage_history(
-    spark: SparkSession, o: DataFrame, root: str
+    spark: SparkSession,
+    o: DataFrame,
+    root: str,
+    remove_ts_ms: int | None = None,
 ) -> tuple[set[str], set[str], set[str]]:
     """Stage the shared three-commit Delta history under `root` (wiped
     first): v0 = even-orderkey base (2 files), v1 = odd-slice append,
     v2 = COMPACTION of v0's files into one (content-identical rewrite,
     `dataChange: false` per spec — an empty base slice on adversarial
-    micro corpora commits metadata only). Returns the per-commit add
-    sets; shared by src_delta_log / src_delta_checkpoint /
+    micro corpora commits metadata only; `remove_ts_ms` stamps its
+    removes' deletionTimestamp). Returns the per-commit add sets;
+    shared by src_delta_log / src_delta_checkpoint /
     stream_delta_commits so protocol fixes land in ONE place."""
     import shutil
 
@@ -1157,327 +1125,15 @@ def _delta_stage_history(
         if f2 is not None:
             f2.result()
             v2_adds = _move_in(v2_stage)
-        _delta_commit(log_dir, 2, v2_adds, v0_adds, data_change=False)
+        _delta_commit(
+            log_dir,
+            2,
+            v2_adds,
+            v0_adds,
+            data_change=False,
+            remove_ts_ms=remove_ts_ms,
+        )
     return v0_adds, v1_adds, v2_adds
-
-
-def _delta_max_version(log_dir: str) -> int:
-    """Latest commit version in a `_delta_log/` directory, derived from
-    the zero-padded `<version>.json` file names — ONE driver-side
-    metadata listing (the log dir is bounded: real tables roll history
-    into checkpoints, so the JSON tail stays short). Raises on an empty
-    log: a Delta table without commit 0 is not a table."""
-    versions = [
-        int(f.split(".", 1)[0])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and f.split(".", 1)[0].isdigit()
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no commit json in {log_dir}")
-    return max(versions)
-
-
-_DELTA_ACTION_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "add", T.StructType([T.StructField("path", T.StringType())])
-        ),
-        T.StructField(
-            "remove", T.StructType([T.StructField("path", T.StringType())])
-        ),
-    ]
-)
-
-
-# Reader features this engine's Delta layer actually implements —
-# checked against the log's `protocol` action (delta-io PROTOCOL.md
-# §Protocol Evolution): a table whose protocol demands an unimplemented
-# reader feature MUST be refused, not half-read (silently ignoring e.g.
-# deletion vectors would return deleted rows as live data).
-_DELTA_READER_FEATURES = {
-    "deletionVectors",
-    "columnMapping",
-    "changeDataFeed",
-    "v2Checkpoint",
-    "timestampNtz",
-    "typeWidening",
-    "variantType-preview",
-    "variantType",
-}
-_DELTA_MAX_READER_VERSION = 3
-
-
-def _delta_check_protocol(log_dir: str) -> None:
-    """Enforce the spec's forward-compatibility rule: scan the log's
-    `protocol` actions (driver-side — the JSON tail is bounded metadata,
-    real tables roll it into checkpoints) and raise if the LATEST one
-    demands a minReaderVersion above ours or, at reader version 3, any
-    `readerFeatures` entry this layer does not implement. Tables
-    without a protocol action default to version 1 (always readable)."""
-    import json
-
-    latest: dict | None = None
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".", 1)[0].isdigit()):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line).get("protocol")
-                if act is not None:
-                    latest = act  # later commits supersede
-    if latest is None:
-        return
-    v = latest.get("minReaderVersion", 1)
-    if v > _DELTA_MAX_READER_VERSION:
-        raise ValueError(
-            f"table requires minReaderVersion {v}; this reader implements "
-            f"up to {_DELTA_MAX_READER_VERSION}"
-        )
-    if v >= 3:
-        missing = set(latest.get("readerFeatures") or []) - _DELTA_READER_FEATURES
-        if missing:
-            raise ValueError(
-                "table requires unimplemented reader features "
-                f"{sorted(missing)}; refusing a partial read "
-                f"(implemented: {sorted(_DELTA_READER_FEATURES)})"
-            )
-
-
-def _delta_live_files(spark: SparkSession, log_dir: str) -> DataFrame:
-    """(version, fname) live-file table for EVERY version of a Delta
-    log, by distributed replay: read the JSON commits once with an
-    explicit schema, tag each action with its commit version from the
-    file name, project each action onto every version ≥ its commit via
-    `explode(sequence(u, max_version))`, and keep the LAST action per
-    (version, file) with `max_by(is_add, u)` — a file is live at v iff
-    that action is an add. The version bound comes from
-    [[_delta_max_version]] (one log-dir listing), so the replay is
-    protocol-generic, not fixture-bound. |actions| × |versions|
-    metadata rows, never data."""
-    _delta_check_protocol(log_dir)  # refuse tables we cannot read fully
-    max_v = _delta_max_version(log_dir)
-    actions = (
-        spark.read.schema(_DELTA_ACTION_SCHEMA)
-        .json(os.path.join(log_dir, "*.json"))
-        .withColumn(
-            "u",
-            F.regexp_extract(F.input_file_name(), r"(\d+)\.json", 1).cast(
-                "int"
-            ),
-        )
-        .select(
-            "u",
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-        )
-        .filter(F.col("path").isNotNull())
-    )
-    return (
-        actions.select(
-            "path",
-            "is_add",
-            "u",
-            F.explode(F.sequence("u", F.lit(max_v))).alias("version"),
-        )
-        .groupBy("version", "path")
-        .agg(F.max_by("is_add", "u").alias("live"))
-        .filter("live")
-        .select(
-            "version",
-            "path",  # table-root-relative — UNIQUE even when partition
-            # dirs reuse one write job's part basenames
-            F.element_at(F.split("path", "/"), -1).alias("fname"),
-        )
-    )
-
-
-def _delta_multipart_checkpoint_files(
-    log_dir: str, ckpt_v: int, lc_meta: dict
-) -> list[str]:
-    """Shard paths of a MULTI-PART classic checkpoint
-    (`<v>.checkpoint.<i>.<n>.parquet`, parts numbered 1..n — the form
-    writers switch to when single-file checkpoint production becomes
-    the bottleneck), validated for COMPLETENESS: every file must agree
-    on n, parts 1..n must all be present, and `_last_checkpoint`'s
-    `parts` field (when recorded) must match — a missing shard means
-    the snapshot state is incomplete and must be refused, never
-    half-read (reading a subset silently drops live files). Returns []
-    when no multi-part shard exists for `ckpt_v`."""
-    import re
-
-    pat = re.compile(
-        rf"{ckpt_v:020d}\.checkpoint\.(\d{{10}})\.(\d{{10}})\.parquet"
-    )
-    found: dict[int, tuple[int, str]] = {}
-    for f in os.listdir(log_dir):
-        m = pat.fullmatch(f)
-        if m:
-            found[int(m.group(1))] = (int(m.group(2)), f)
-    if not found:
-        return []
-    totals = {n for n, _ in found.values()}
-    if len(totals) != 1:
-        raise ValueError(
-            f"multi-part checkpoint {ckpt_v} shards disagree on part "
-            f"count: {sorted(totals)}"
-        )
-    (n_total,) = totals
-    declared = lc_meta.get("parts")
-    if declared is not None and int(declared) != n_total:
-        raise ValueError(
-            f"_last_checkpoint declares {declared} parts but shards "
-            f"declare {n_total}"
-        )
-    missing = sorted(set(range(1, n_total + 1)) - set(found))
-    if missing:
-        raise ValueError(
-            f"multi-part checkpoint {ckpt_v} is missing shards "
-            f"{missing} of {n_total}; refusing an incomplete snapshot"
-        )
-    return [os.path.join(log_dir, found[i][1]) for i in range(1, n_total + 1)]
-
-
-def _delta_latest_live_files(spark: SparkSession, root: str) -> set[str]:
-    """File names (basenames) live at the LATEST version of a Delta
-    table — the production single-snapshot read path. Bootstraps from
-    `_last_checkpoint` when present: load the checkpoint parquet's add
-    rows (entering the replay fold as version-`ckpt_v` adds), stack
-    ONLY the post-checkpoint JSON tail, and keep `max_by(is_add, u)`
-    per file — O(live files + tail), never O(history). A checkpoint AT
-    the latest version has an empty tail, which must read as exactly
-    the checkpoint's contents (the degenerate case the adversarial
-    battery pins). Handles ALL THREE checkpoint forms: the classic
-    single `<v>.checkpoint.parquet` file, the sharded classic
-    `<v>.checkpoint.<i>.<n>.parquet` form (completeness-validated —
-    see [[_delta_multipart_checkpoint_files]]), and the v2Checkpoint
-    feature's `<v>.checkpoint.<uniqueStr>.parquet` manifest whose file
-    actions live in `sidecar`-referenced parquet files (read
-    distributed).
-    Without a checkpoint, falls back to full-history replay via
-    [[_delta_live_files]]. Returns a driver-side set: the
-    live-file list is the scheduler-class metadata a scan plan needs
-    (real tables keep it distributed until the final collect of
-    surviving paths, same as src_delta_partition_prune)."""
-    import json
-
-    log_dir = os.path.join(root, "_delta_log")
-    _delta_check_protocol(log_dir)  # refuse tables we cannot read fully
-    max_v = _delta_max_version(log_dir)
-    lc = os.path.join(log_dir, "_last_checkpoint")
-    if not os.path.exists(lc):
-        live = _delta_live_files(spark, log_dir).filter(
-            F.col("version") == max_v
-        )
-        return {r["fname"] for r in live.select("fname").collect()}
-    with open(lc) as fh:
-        lc_meta = json.load(fh)
-    ckpt_v = int(lc_meta["version"])
-    classic = os.path.join(log_dir, f"{ckpt_v:020d}.checkpoint.parquet")
-    multi = _delta_multipart_checkpoint_files(log_dir, ckpt_v, lc_meta)
-    if os.path.exists(classic):
-        ckpt_src = spark.read.parquet(classic)
-    elif multi:
-        # multi-part classic checkpoint: the state is sharded across
-        # `<v>.checkpoint.<i>.<n>.parquet` files — ONE distributed read
-        # over all n shards (completeness already validated: reading a
-        # subset would silently drop live files)
-        ckpt_src = spark.read.parquet(*multi)
-    else:
-        # V2 checkpoint (the checkpoints-with-sidecar-files feature):
-        # the manifest is `<v>.checkpoint.<uniqueStr>.parquet` and its
-        # file actions live in `sidecar`-referenced parquet files under
-        # _delta_log/_sidecars/ — read the manifest (bounded), then ONE
-        # distributed read over every sidecar. Manifests without
-        # sidecars carry their adds directly, so the union covers both.
-        manifests = [
-            f
-            for f in os.listdir(log_dir)
-            if f.startswith(f"{ckpt_v:020d}.checkpoint.")
-            and f.endswith(".parquet")
-        ]
-        if not manifests:
-            raise FileNotFoundError(
-                f"_last_checkpoint names version {ckpt_v} but no classic "
-                "or v2 checkpoint file exists for it"
-            )
-        manifest = spark.read.parquet(
-            *[os.path.join(log_dir, m) for m in sorted(manifests)]
-        )
-        cols = set(manifest.columns)
-        sidecars = []
-        if "sidecar" in cols:
-            sidecars = [
-                r["p"]
-                for r in manifest.select(
-                    F.col("sidecar.path").alias("p")
-                )
-                .filter(F.col("p").isNotNull())
-                .collect()  # bounded: one row per sidecar file
-            ]
-        parts = []
-        if "add" in cols:
-            parts.append(manifest.filter(F.col("add.path").isNotNull()))
-        if sidecars:
-            parts.append(
-                spark.read.parquet(
-                    *[
-                        os.path.join(log_dir, "_sidecars", s)
-                        for s in sorted(sidecars)
-                    ]
-                ).filter(F.col("add.path").isNotNull())
-            )
-        if not parts:
-            raise ValueError(
-                f"v2 checkpoint for version {ckpt_v} carries neither adds "
-                "nor sidecars"
-            )
-        ckpt_src = parts[0].select("add")
-        for p in parts[1:]:
-            ckpt_src = ckpt_src.unionByName(p.select("add"))
-    actions = ckpt_src.select(
-        F.col("add.path").alias("path"),
-        F.lit(True).alias("is_add"),
-        F.lit(ckpt_v).alias("u"),
-    ).filter(
-        # a spec checkpoint carries protocol/metaData (and possibly
-        # remove-tombstone) rows alongside the adds — their null
-        # add.path must not survive as a phantom live file
-        F.col("path").isNotNull()
-    )
-    tail_files = [
-        os.path.join(log_dir, f"{v:020d}.json")
-        for v in range(ckpt_v + 1, max_v + 1)
-    ]
-    if tail_files:  # empty when the checkpoint IS the latest version
-        tail = (
-            spark.read.schema(_DELTA_ACTION_SCHEMA)
-            .json(tail_files)
-            .withColumn(
-                "u",
-                F.regexp_extract(
-                    F.input_file_name(), r"(\d+)\.json", 1
-                ).cast("int"),
-            )
-            .select(
-                F.coalesce(F.col("add.path"), F.col("remove.path")).alias(
-                    "path"
-                ),
-                F.col("add.path").isNotNull().alias("is_add"),
-                "u",
-            )
-            .filter(F.col("path").isNotNull())
-        )
-        actions = actions.unionByName(tail)
-    live = (
-        actions.groupBy("path")
-        .agg(F.max_by("is_add", "u").alias("live"))
-        .filter("live")
-        .select(F.element_at(F.split("path", "/"), -1).alias("fname"))
-    )
-    return {r["fname"] for r in live.collect()}
 
 
 _DELTA_LOG_ORACLE = """
@@ -1608,8 +1264,6 @@ def q_src_delta_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the driver; `_last_checkpoint` is one driver-side JSON read,
     exactly how delta readers bootstrap.
     """
-    import json
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1640,16 +1294,14 @@ def q_src_delta_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]  # repartition(1) → exactly one part
     os.replace(os.path.join(ckpt_tmp, part_file), ckpt_path)
     shutil.rmtree(ckpt_tmp, ignore_errors=True)
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        fh.write(json.dumps({"version": 2}))
+    delta_log.write_last_checkpoint(log_dir, {"version": 2})
 
     # v3: DELETE the odd slice — remove-only commit, dataChange TRUE
     # (a real delete, unlike the staged compaction)
     _delta_commit(log_dir, 3, set(), v1_adds)
 
     # --- reader: bootstrap from _last_checkpoint, never open v0-v2 json
-    with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-        ckpt_v = int(json.load(fh)["version"])
+    ckpt_v = int(delta_log.read_last_checkpoint(log_dir)["version"])
     ckpt_adds = (
         spark.read.parquet(
             os.path.join(log_dir, f"{ckpt_v:020d}.checkpoint.parquet")
@@ -1661,26 +1313,9 @@ def q_src_delta_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     max_v = _delta_max_version(log_dir)  # one listing, not a constant
-    tail_files = [
-        os.path.join(log_dir, f"{v:020d}.json")
-        for v in range(ckpt_v + 1, max_v + 1)
-    ]
-    tail = (
-        spark.read.schema(_DELTA_ACTION_SCHEMA)
-        .json(tail_files)
-        .withColumn(
-            "u",
-            F.regexp_extract(F.input_file_name(), r"(\d+)\.json", 1).cast(
-                "int"
-            ),
-        )
-        .select(
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-            "u",
-        )
-        .filter(F.col("path").isNotNull())
-    )
+    tail = delta_log.file_actions(
+        delta_log.read_log(spark, log_dir, range(ckpt_v + 1, max_v + 1))
+    ).withColumnRenamed("version", "u")
     actions = ckpt_adds.unionByName(tail)
     live = (
         actions.select(
@@ -1767,7 +1402,6 @@ def q_src_delta_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint the action table in parquet and filter it distributed,
     collecting only the matches — identical shape).
     """
-    import json
     import shutil
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1801,35 +1435,13 @@ def q_src_delta_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                         }
                     }
                 )
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write(
-            "\n".join(
-                [json.dumps({"commitInfo": {"operation": "WRITE"}})]
-                + [json.dumps(a) for a in adds]
-            )
-            + "\n"
-        )
+    delta_log.commit(
+        log_dir, 0, [{"commitInfo": {"operation": "WRITE"}}] + adds
+    )
 
     wanted = ("1-URGENT", "2-HIGH")
-    log_schema = T.StructType(
-        [
-            T.StructField(
-                "add",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField(
-                            "partitionValues",
-                            T.MapType(T.StringType(), T.StringType()),
-                        ),
-                    ]
-                ),
-            )
-        ]
-    )
     pruned = (
-        spark.read.schema(log_schema)
-        .json(os.path.join(log_dir, "*.json"))
+        delta_log.read_log(spark, log_dir)
         .select(
             F.col("add.path").alias("path"),
             F.element_at(F.col("add.partitionValues"), "o_orderpriority").alias(

@@ -26,6 +26,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from random_forest_using_hadoop_spark import delta_log
 from random_forest_using_hadoop_spark.helpers import local_rows
 from random_forest_using_hadoop_spark.helpers import dsum, o_dsum
 from random_forest_using_hadoop_spark.registry import register
@@ -813,8 +814,6 @@ def q_stream_delta_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from pyspark.sql import types as T
-
     from random_forest_using_hadoop_spark.operators.scans import (
         _delta_stage_history,
         _tmp,
@@ -828,23 +827,6 @@ def q_stream_delta_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared staging: v0/v1 dataChange true, v2 compaction false
     _delta_stage_history(spark, o, root)
 
-    log_schema = T.StructType(
-        [
-            T.StructField(
-                "add",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("dataChange", T.BooleanType()),
-                    ]
-                ),
-            ),
-            T.StructField(
-                "remove",
-                T.StructType([T.StructField("path", T.StringType())]),
-            ),
-        ]
-    )
     acc: dict[int, list[int]] = {}
     done_batches: set[int] = set()
 
@@ -865,13 +847,7 @@ def q_stream_delta_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         try:
             acts = (
-                batch_df.withColumn(
-                    "version",
-                    F.regexp_extract(
-                        F.input_file_name(), r"(\d+)\.json", 1
-                    ).cast("int"),
-                )
-                .filter(
+                batch_df.filter(
                     F.col("add.path").isNotNull() & F.col("add.dataChange")
                 )
                 .select("version", F.col("add.path").alias("path"))
@@ -888,8 +864,7 @@ def q_stream_delta_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = tempfile.mkdtemp(prefix="delta_cdc_ckpt_")
     query = (
-        spark.readStream.schema(log_schema)
-        .json(log_dir)
+        delta_log.read_log(spark, log_dir, stream=True)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -939,8 +914,6 @@ def q_stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from pyspark.sql import types as T
-
     from random_forest_using_hadoop_spark.operators.delta_ext import (
         _stage_cdf_history,
     )
@@ -953,31 +926,6 @@ def q_stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = os.path.join(root, "_delta_log")
     _stage_cdf_history(spark, o, root)
 
-    log_schema = T.StructType(
-        [
-            T.StructField(
-                "add",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("dataChange", T.BooleanType()),
-                    ]
-                ),
-            ),
-            T.StructField(
-                "remove",
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("dataChange", T.BooleanType()),
-                    ]
-                ),
-            ),
-            T.StructField(
-                "cdc", T.StructType([T.StructField("path", T.StringType())])
-            ),
-        ]
-    )
     # (version, change_type) → [rows, cents]
     acc: dict[tuple[int, str], list[int]] = {}
     done_batches: set[int] = set()
@@ -1017,13 +965,7 @@ def q_stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_id in done_batches:
             return
         acts = (
-            batch_df.withColumn(
-                "version",
-                F.regexp_extract(
-                    F.input_file_name(), r"(\d+)\.json", 1
-                ).cast("int"),
-            )
-            .select("version", "add", "remove", "cdc")
+            batch_df.select("version", "add", "remove", "cdc")
             .collect()  # bounded: action metadata ∝ files per batch
         )
         cdc_vs = {
@@ -1072,8 +1014,7 @@ def q_stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = tempfile.mkdtemp(prefix="delta_stream_cdf_ckpt_")
     query = (
-        spark.readStream.schema(log_schema)
-        .json(log_dir)
+        delta_log.read_log(spark, log_dir, stream=True)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)

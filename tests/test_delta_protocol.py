@@ -19,12 +19,15 @@ import pytest
 from pyspark.sql import functions as F
 
 import random_forest_using_hadoop_spark as engine
-from random_forest_using_hadoop_spark.operators.scans import (
+from random_forest_using_hadoop_spark.delta_log import (
     _delta_commit,
     _delta_latest_live_files,
-    _delta_list_files,
     _delta_live_files,
     _delta_max_version,
+    snapshot,
+)
+from random_forest_using_hadoop_spark.operators.scans import (
+    _delta_list_files,
     _delta_stage_history,
     _tmp,
 )
@@ -454,7 +457,7 @@ def test_protocol_gate_accepts_supported_features(spark):
     """A protocol action within our reader surface (version 3 with
     deletionVectors/columnMapping) must pass; absence of any protocol
     action defaults to version 1 and must also pass."""
-    from random_forest_using_hadoop_spark.operators.scans import (
+    from random_forest_using_hadoop_spark.delta_log import (
         _delta_check_protocol,
     )
 
@@ -492,7 +495,7 @@ def test_protocol_gate_refuses_unimplemented_surface(spark):
     which is exactly the shape the rule exists for.)"""
     import pytest
 
-    from random_forest_using_hadoop_spark.operators.scans import (
+    from random_forest_using_hadoop_spark.delta_log import (
         _delta_check_protocol,
         _delta_live_files,
     )
@@ -729,8 +732,8 @@ def test_in_commit_timestamp_overrides_mtime(spark):
     with open(v1, "w") as fh:
         fh.write("\n".join(lines) + "\n")
     os.utime(v1, (base + 10, base + 10))
-    assert _delta_commit_time(log_dir, f"{0:020d}.json") == base
-    assert _delta_commit_time(log_dir, f"{1:020d}.json") == base + 1000
+    assert _delta_commit_time(log_dir, 0) == base
+    assert _delta_commit_time(log_dir, 1) == base + 1000
     # a request between the fake mtime and the true ICT sees only v0
     assert _delta_resolve_timestamp(log_dir, base + 500) == 0
     assert _delta_resolve_timestamp(log_dir, base + 1000) == 1
@@ -807,7 +810,6 @@ def test_dv_delete_leaves_data_files_byte_identical(spark):
     the sink silently fell back to O(file) cost."""
     from random_forest_using_hadoop_spark.operators.lake_r14 import (
         _delta_delete_to_dv,
-        _dv_snapshot,
     )
 
     o = load_table(spark, SF_DIR, "orders").select(
@@ -838,7 +840,9 @@ def test_dv_delete_leaves_data_files_byte_identical(spark):
     )
     # live snapshot: every file carries a DV whose cardinality equals
     # the file's matching rows for BOTH predicates (merge rule)
-    live = _dv_snapshot(log_dir)
+    live = {
+        p: a.get("deletionVector") for p, a in snapshot(log_dir).live.items()
+    }
     assert set(live) == {f"data/{p}" for p in before}
     total_card = sum(dv["cardinality"] for dv in live.values() if dv)
     expected = (
@@ -857,7 +861,6 @@ def test_dv_delete_merge_is_union_not_replace(spark):
     from random_forest_using_hadoop_spark.delta_format import dv_read
     from random_forest_using_hadoop_spark.operators.lake_r14 import (
         _delta_delete_to_dv,
-        _dv_snapshot,
     )
 
     o = load_table(spark, SF_DIR, "orders").select(
@@ -879,7 +882,9 @@ def test_dv_delete_merge_is_union_not_replace(spark):
         )
     _delta_delete_to_dv(spark, root, F.col("o_orderkey") % 10 == 7)
     pos_first = set(
-        dv_read(_dv_snapshot(log_dir)[f"data/{fname}"], root)
+        dv_read(
+            snapshot(log_dir).live[f"data/{fname}"]["deletionVector"], root
+        )
     )
     # repeat delete: zero new matches → NO new commit version
     v = _delta_delete_to_dv(spark, root, F.col("o_orderkey") % 10 == 7)
@@ -887,7 +892,9 @@ def test_dv_delete_merge_is_union_not_replace(spark):
     # disjoint second delete: union grows, superset of the first
     _delta_delete_to_dv(spark, root, F.col("o_orderkey") % 10 == 4)
     pos_both = set(
-        dv_read(_dv_snapshot(log_dir)[f"data/{fname}"], root)
+        dv_read(
+            snapshot(log_dir).live[f"data/{fname}"]["deletionVector"], root
+        )
     )
     assert pos_first < pos_both
     n7 = o.filter(F.col("o_orderkey") % 10 == 7).count()
@@ -950,9 +957,7 @@ def test_restore_is_metadata_only_and_reversible(spark):
     leaves the rolled-back version time-travel-readable."""
     import hashlib
 
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_live_files,
-    )
+    from random_forest_using_hadoop_spark.delta_log import _delta_live_files
 
     o = load_table(spark, SF_DIR, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -993,9 +998,7 @@ def test_shallow_clone_copies_no_data(spark):
     its v0 adds reference the SOURCE's files by absolute path, the
     clone's data directory holds ONLY its own v1 append, and the
     source's log gains no version from the clone's lifecycle."""
-    from random_forest_using_hadoop_spark.operators.scans import (
-        _delta_max_version,
-    )
+    from random_forest_using_hadoop_spark.delta_log import _delta_max_version
 
     engine.REGISTRY["sink_delta_clone"].fn(spark, SF_DIR).collect()
     src_root = _tmp(SF_DIR, "delta_clone_src")
@@ -1037,7 +1040,6 @@ def test_dv_delete_build_is_distributed_and_wide(spark):
     )
     from random_forest_using_hadoop_spark.operators.lake_r14 import (
         _delta_delete_to_dv,
-        _dv_snapshot,
     )
 
     src = inspect.getsource(_delta_delete_to_dv)
@@ -1068,7 +1070,9 @@ def test_dv_delete_build_is_distributed_and_wide(spark):
         )
     v = _delta_delete_to_dv(spark, root, F.col("o_orderkey") % 2 == 0)
     assert v == 1
-    live = _dv_snapshot(log_dir)
+    live = {
+        p: a.get("deletionVector") for p, a in snapshot(log_dir).live.items()
+    }
     descs = {p: dv for p, dv in live.items() if dv}
     assert len(descs) == 16, "every file holds evens → every file touched"
     # one DV file per touched data file, each written where its group ran
@@ -1180,7 +1184,7 @@ def test_checkpoint_writer_multipart_contract(spark):
     from random_forest_using_hadoop_spark.operators.lake_r15 import (
         delta_write_checkpoint,
     )
-    from random_forest_using_hadoop_spark.operators.scans import (
+    from random_forest_using_hadoop_spark.delta_log import (
         _delta_latest_live_files,
     )
 
@@ -1258,8 +1262,8 @@ def test_in_commit_timestamp_beats_adversarial_mtime(spark):
     ).collect()
     root = _tmp(SF_DIR, "delta_ict")
     log_dir = os.path.join(root, "_delta_log")
-    t0 = _delta_commit_time(log_dir, f"{0:020d}.json")
-    t2 = _delta_commit_time(log_dir, f"{2:020d}.json")
+    t0 = _delta_commit_time(log_dir, 0)
+    t2 = _delta_commit_time(log_dir, 2)
     assert t0 == 1_700_000_000_000 / 1000.0
     assert t2 == (1_700_000_000_000 + 400_000) / 1000.0
     # mtimes are reversed: commit 0's file is NEWER than commit 2's

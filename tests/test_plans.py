@@ -1501,10 +1501,8 @@ def test_delta_log_compaction_minimal_segment(spark):
     import json
     import os
 
+    from random_forest_using_hadoop_spark.delta_log import log_segment
     from random_forest_using_hadoop_spark.operators import delta_ext
-    from random_forest_using_hadoop_spark.operators.delta_ext import (
-        _delta_log_segment,
-    )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
 
     engine.REGISTRY["src_delta_log_compaction"].fn(spark, SF_DIR).collect()
@@ -1529,14 +1527,14 @@ def test_delta_log_compaction_minimal_segment(spark):
                     live.pop(act["remove"]["path"], None)
         return set(live)
 
-    before = _live(_delta_log_segment(log_dir))
+    before = _live(log_segment(log_dir))
     for v in range(4):
         os.remove(os.path.join(log_dir, f"{v:020d}.json"))
-    after = _live(_delta_log_segment(log_dir))
+    after = _live(log_segment(log_dir))
     assert before == after and before, "compacted file must be sufficient"
     # without ANY compaction file the fallback replays raw commits
     os.remove(os.path.join(log_dir, f"{0:020d}.{3:020d}.compacted.json"))
-    assert _delta_log_segment(log_dir) == [f"{4:020d}.json"]
+    assert log_segment(log_dir) == [f"{4:020d}.json"]
 
 
 def test_iceberg_meta_files_reads_zero_data(spark):
