@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from random_forest_using_hadoop_spark.helpers import local_rows
 from random_forest_using_hadoop_spark.helpers import o_dsum
 from random_forest_using_hadoop_spark.registry import register
-from random_forest_using_hadoop_spark.sources import load_table
+from random_forest_using_hadoop_spark.sources import load_table, spread_width
 
 # --- canonical survivor pick per near-dup component ---------------------------
 
@@ -254,7 +254,9 @@ def q_dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, which is why production line-dedup (C4) runs this shape at
     web scale. Per-doc distinct chunks keep the join input minimal.
     """
-    d = load_table(spark, sf_dir, "documents").repartition(64, "doc_id")
+    d = load_table(spark, sf_dir, "documents").repartition(
+        spread_width(sf_dir, "documents"), "doc_id"
+    )
     chunks = F.expr(
         f"array_distinct(transform("
         f" sequence(0, greatest(cast(ceil(size(toks) / {_CHUNK_WORDS}.0) as int), 1) - 1),"

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from random_forest_using_hadoop_spark.registry import register
-from random_forest_using_hadoop_spark.sources import load_table
+from random_forest_using_hadoop_spark.sources import load_table, spread_width
 
 # char-5-gram shingle set; word tokens are useless here (the corpus is
 # word-soup from a tiny vocabulary, so word *sets* barely discriminate)
@@ -58,12 +58,13 @@ def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # testdata is one parquet split, so hash-spread the docs BEFORE the
     # shingling expression runs — substring-exploding every document is
     # the pipeline's most expensive map stage and must not run in one
-    # task (at real scale the file layout provides this parallelism for
-    # free and the repartition would be dropped).
+    # task once there are more than a handful of docs (at real scale
+    # the file layout provides this parallelism for free and the
+    # repartition would be dropped).
     return (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars", "text")
-        .repartition(64, "doc_id")
+        .repartition(spread_width(sf_dir, "documents"), "doc_id")
         .select("doc_id", "n_chars", F.expr(_SHINGLES).alias("shingles"))
     )
 
@@ -1262,7 +1263,9 @@ def q_dedup_substring_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds the df count plus BOTH self-join sides — uncached, the
     # selection would run three times (simhash's `sh` precedent;
     # MEMORY_AND_DISK, released via release_caches).
-    d = load_table(spark, sf_dir, "documents").repartition(64, "doc_id")
+    d = load_table(spark, sf_dir, "documents").repartition(
+        spread_width(sf_dir, "documents"), "doc_id"
+    )
     hs = F.expr(_winnow_hs_expr())
     sel = F.expr(_winnow_sel_expr())
     tok = (

@@ -1,3 +1,7 @@
-from random_forest_using_hadoop_spark.sources.io import load_table, TABLES
+from random_forest_using_hadoop_spark.sources.io import (
+    TABLES,
+    load_table,
+    spread_width,
+)
 
-__all__ = ["load_table", "TABLES"]
+__all__ = ["load_table", "spread_width", "TABLES"]

@@ -62,3 +62,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
         )
     return df
+
+
+def spread_width(
+    sf_dir: str, name: str, cap: int = 64, rows_per_task: int = 64
+) -> int:
+    """Hash-spread width for a table whose per-row work dwarfs its scan
+    (substring-exploding documents): one task per `rows_per_task` rows,
+    at most `cap`, counted from the Parquet footers without a Spark job.
+    A five-row table gets one task instead of `cap` near-empty ones;
+    5,000 documents get the full `cap`. Only the parallelism depends on
+    this, never the rows, so an unreadable footer just means `cap`."""
+    import pyarrow.dataset as ds
+
+    try:
+        n = ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()
+    except (OSError, ValueError):
+        return cap
+    return max(1, min(cap, -(-n // rows_per_task)))

@@ -314,3 +314,23 @@ def test_winnow_shared_run_guarantees_shared_selection(prefix, shared, suffix):
     interior = {min(shared[j : j + g]) for j in range(len(shared) - g + 1)}
     assert interior <= a and interior <= b
     assert len(a & b) >= 2
+
+
+def test_spread_width_follows_the_parquet_row_count(tmp_path):
+    """One task per 64 documents, capped at 64, read from the footers:
+    the benchmark's 5,000 docs keep the full width, a five-doc corpus
+    gets one task, and an unreadable table falls back to the cap."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from random_forest_using_hadoop_spark.sources import spread_width
+
+    for n, want in ((0, 1), (5, 1), (64, 1), (65, 2), (500, 8), (5000, 64)):
+        d = tmp_path / f"n{n}"
+        (d / "documents.parquet").mkdir(parents=True)
+        pq.write_table(
+            pa.table({"doc_id": pa.array(range(n), pa.int64())}),
+            d / "documents.parquet" / "part-0.parquet",
+        )
+        assert spread_width(str(d), "documents") == want, n
+    assert spread_width(str(tmp_path / "missing"), "documents") == 64
