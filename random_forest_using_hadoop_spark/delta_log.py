@@ -8,10 +8,12 @@ writes and parses `_delta_log/` JSON commits.
   neither the `*.json` glob nor Spark's file listing sees it), which
   is then hard-linked to `<version:020d>.json`. The link fails if the
   version exists, so a second writer gets :class:`CommitConflict`
-  instead of silently replacing the first, and a crash mid-write
-  leaves no torn commit visible.
-- Driver-side readers fold [[read_actions]] / [[snapshot]]. A line that
-  is not valid JSON raises a ValueError naming the file and line.
+  instead of silently replacing the first. The temp file is fsynced
+  before the link, so a crash mid-write leaves no torn commit visible
+  (the commit itself may be lost, never half-published).
+- Driver-side readers fold [[read_actions]], [[table_meta]] or
+  [[snapshot]]. A line that is not valid JSON raises a ValueError
+  naming the file and line.
 - Distributed readers use [[read_log]]: every action kind under the one
   [[_DELTA_ACTION_SCHEMA]], a `version` column from the file name, and
   `mode=FAILFAST`, so a damaged commit raises instead of becoming
@@ -20,6 +22,7 @@ writes and parses `_delta_log/` JSON commits.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import json
 import os
@@ -66,17 +69,23 @@ def _delta_max_version(log_dir: str) -> int:
 
 
 def _publish(log_dir: str, name: str, actions: Iterable[dict]) -> str:
-    """Write `actions` as JSON lines to `log_dir/name`, put-if-absent."""
+    """Write `actions` as JSON lines to `log_dir/name`, put-if-absent.
+    The temp file is fsynced before it is linked, so the published name
+    never points at a partly written file; it is removed on every exit,
+    including an action `json.dumps` cannot serialise."""
     target = os.path.join(log_dir, name)
     tmp = os.path.join(log_dir, f".{name}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write("".join(json.dumps(a) + "\n" for a in actions))
     try:
+        with open(tmp, "w") as fh:
+            fh.write("".join(json.dumps(a) + "\n" for a in actions))
+            fh.flush()
+            os.fsync(fh.fileno())
         os.link(tmp, target)
     except FileExistsError:
         raise CommitConflict(f"{target} already exists") from None
     finally:
-        os.remove(tmp)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
     return target
 
 
@@ -136,9 +145,10 @@ def write_last_checkpoint(log_dir: str, meta: dict) -> None:
     """Point `_last_checkpoint` at a checkpoint. The pointer is a hint
     that may move backwards or forwards, so it is replaced atomically
     rather than published put-if-absent."""
+    data = json.dumps(meta)  # fails before any temp file exists
     tmp = os.path.join(log_dir, f"._last_checkpoint.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as fh:
-        fh.write(json.dumps(meta))
+        fh.write(data)
     os.replace(tmp, os.path.join(log_dir, "_last_checkpoint"))
 
 
@@ -202,6 +212,12 @@ def read_segment(log_dir: str) -> Iterator[dict]:
         yield from _parse(os.path.join(log_dir, name))
 
 
+class TableMeta(NamedTuple):
+    version: int
+    protocol: dict
+    metadata: dict
+
+
 class Snapshot(NamedTuple):
     version: int
     protocol: dict
@@ -209,31 +225,47 @@ class Snapshot(NamedTuple):
     live: dict[str, dict]  # table-relative path → its current add action
 
 
-def snapshot(log_dir: str) -> Snapshot:
-    """Replay the whole log driver-side: the latest version, the latest
-    `protocol` and `metaData` actions (`{}` when absent) and the live
-    files. Within a version removes apply before adds, so the DV-rewrite
-    shape remove(path) + add(path, new DV) resolves to the new add.
-    Bounded by live-file count — snapshot state."""
+def _replay(log_dir: str, live: dict[str, dict] | None) -> TableMeta:
+    """The one driver-side fold: the latest version and the latest
+    `protocol` and `metaData` actions (`{}` when absent). When `live`
+    is given it is filled with the live files; within a version removes
+    apply before adds, so the DV-rewrite shape remove(path) +
+    add(path, new DV) resolves to the new add."""
     protocol: dict = {}
     metadata: dict = {}
-    live: dict[str, dict] = {}
     versions = list_versions(log_dir)  # one listing: version and actions agree
     for _, acts in itertools.groupby(
         read_actions(log_dir, versions), lambda t: t[0]
     ):
         adds: dict[str, dict] = {}
         for _, act in acts:
-            if "add" in act:
-                adds[act["add"]["path"]] = act["add"]
-            elif "remove" in act:
-                live.pop(act["remove"]["path"], None)
-            elif "protocol" in act:
+            if "protocol" in act:
                 protocol = act["protocol"]
             elif "metaData" in act:
                 metadata = act["metaData"]
-        live.update(adds)
-    return Snapshot(versions[-1], protocol, metadata, live)
+            elif live is None:
+                continue
+            elif "add" in act:
+                adds[act["add"]["path"]] = act["add"]
+            elif "remove" in act:
+                live.pop(act["remove"]["path"], None)
+        if live is not None:
+            live.update(adds)
+    return TableMeta(versions[-1], protocol, metadata)
+
+
+def table_meta(log_dir: str) -> TableMeta:
+    """The latest version, `protocol` and `metaData` — constant driver
+    memory whatever the live-file count, for writers that never need
+    the file list."""
+    return _replay(log_dir, None)
+
+
+def snapshot(log_dir: str) -> Snapshot:
+    """[[table_meta]] plus the live `{path: add}` map — bounded by
+    live-file count, so only for callers that need per-file state."""
+    live: dict[str, dict] = {}
+    return Snapshot(*_replay(log_dir, live), live)
 
 
 # Reader features this engine's Delta layer actually implements —
@@ -260,9 +292,7 @@ def _delta_check_protocol(log_dir: str) -> None:
     at reader version 3, any `readerFeatures` entry this layer does not
     implement. Tables without a protocol action default to version 1
     (always readable)."""
-    latest: dict = {}
-    for _, act in read_actions(log_dir):
-        latest = act.get("protocol", latest)  # later commits supersede
+    latest = table_meta(log_dir).protocol
     v = latest.get("minReaderVersion", 1)
     if v > _DELTA_MAX_READER_VERSION:
         raise ValueError(
@@ -347,7 +377,11 @@ def read_log(
         _DELTA_ACTION_SCHEMA
     ).option("mode", "FAILFAST")
     if stream:
-        df = reader.json(log_dir)
+        # only `<version>.json` commits, as the batch path lists them —
+        # not checkpoints, compaction files or `_last_checkpoint`
+        df = reader.option("pathGlobFilter", "[0-9]" * 20 + ".json").json(
+            log_dir
+        )
     else:
         vs = list_versions(log_dir) if versions is None else versions
         df = reader.json([commit_path(log_dir, v) for v in vs])

@@ -23,7 +23,10 @@ from pyspark.sql import functions as F
 from random_forest_using_hadoop_spark.helpers import local_rows
 from random_forest_using_hadoop_spark.helpers import o_dsum
 from random_forest_using_hadoop_spark.registry import register
-from random_forest_using_hadoop_spark.sources import load_table, spread_width
+from random_forest_using_hadoop_spark.sources import (
+    docs_spread_width,
+    load_table,
+)
 
 # --- canonical survivor pick per near-dup component ---------------------------
 
@@ -255,7 +258,7 @@ def q_dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     web scale. Per-doc distinct chunks keep the join input minimal.
     """
     d = load_table(spark, sf_dir, "documents").repartition(
-        spread_width(sf_dir, "documents"), "doc_id"
+        docs_spread_width(sf_dir), "doc_id"
     )
     chunks = F.expr(
         f"array_distinct(transform("

@@ -23,7 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from random_forest_using_hadoop_spark.registry import register
-from random_forest_using_hadoop_spark.sources import load_table, spread_width
+from random_forest_using_hadoop_spark.sources import (
+    docs_spread_width,
+    load_table,
+)
 
 # char-5-gram shingle set; word tokens are useless here (the corpus is
 # word-soup from a tiny vocabulary, so word *sets* barely discriminate)
@@ -64,7 +67,7 @@ def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars", "text")
-        .repartition(spread_width(sf_dir, "documents"), "doc_id")
+        .repartition(docs_spread_width(sf_dir), "doc_id")
         .select("doc_id", "n_chars", F.expr(_SHINGLES).alias("shingles"))
     )
 
@@ -1264,7 +1267,7 @@ def q_dedup_substring_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # selection would run three times (simhash's `sh` precedent;
     # MEMORY_AND_DISK, released via release_caches).
     d = load_table(spark, sf_dir, "documents").repartition(
-        spread_width(sf_dir, "documents"), "doc_id"
+        docs_spread_width(sf_dir), "doc_id"
     )
     hs = F.expr(_winnow_hs_expr())
     sel = F.expr(_winnow_sel_expr())

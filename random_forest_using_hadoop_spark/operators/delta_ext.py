@@ -1348,7 +1348,7 @@ def q_src_delta_timestamp_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replay, then a scan under the LOG's declared schema
     live = _delta_latest_live_files(spark, root)
     declared = json.loads(
-        delta_log.snapshot(log_dir).metadata["schemaString"]
+        delta_log.table_meta(log_dir).metadata["schemaString"]
     )
     spark_schema = T.StructType(
         [
@@ -1496,7 +1496,7 @@ def q_src_delta_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     # under the latest declared schema
     live = _delta_latest_live_files(spark, root)
     declared = json.loads(
-        delta_log.snapshot(log_dir).metadata["schemaString"]
+        delta_log.table_meta(log_dir).metadata["schemaString"]
     )
     qty_field = next(
         fld for fld in declared["fields"] if fld["name"] == "qty"
@@ -1645,7 +1645,7 @@ def q_src_delta_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     # schema confirms the variant column; one scan + typed shredding
     live = _delta_latest_live_files(spark, root)
     declared = json.loads(
-        delta_log.snapshot(log_dir).metadata["schemaString"]
+        delta_log.table_meta(log_dir).metadata["schemaString"]
     )
     assert (
         next(

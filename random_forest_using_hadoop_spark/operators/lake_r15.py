@@ -402,7 +402,7 @@ def delta_constrained_append(
     batch raises :class:`DeltaWriteRejected` BEFORE anything is
     staged. Returns the committed version."""
     log_dir = os.path.join(root, "_delta_log")
-    version, protocol, meta, _ = delta_log.snapshot(log_dir)
+    version, protocol, meta = delta_log.table_meta(log_dir)
     demanded = set(protocol.get("writerFeatures") or [])
     if protocol.get("minWriterVersion", 1) >= 7:
         unknown = demanded - _WRITER_FEATURES_OK
@@ -846,7 +846,7 @@ def delta_write_checkpoint(
 
     Returns (checkpoint version, total action rows)."""
     log_dir = os.path.join(root, "_delta_log")
-    v, protocol, meta, _ = delta_log.snapshot(log_dir)
+    v, protocol, meta = delta_log.table_meta(log_dir)
     adds = (
         _delta_live_files(spark, log_dir)
         .filter(F.col("version") == v)

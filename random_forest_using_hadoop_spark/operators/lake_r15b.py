@@ -508,7 +508,7 @@ def _delta_schema_string(fields: list[tuple[str, str]]) -> str:
 def _delta_latest_schema(log_dir: str) -> list[tuple[str, str]]:
     """Latest metaData action's schema as [(name, type)] — one bounded
     log-tail read (real tables serve this from the checkpoint)."""
-    latest = delta_log.snapshot(log_dir).metadata.get("schemaString")
+    latest = delta_log.table_meta(log_dir).metadata.get("schemaString")
     if latest is None:
         raise ValueError("table has no metaData action — not a Delta table")
     return [
@@ -935,8 +935,7 @@ def delta_rename_column(root: str, old: str, new: str) -> None:
     a 100 TB table is one metadata JSON write. Renaming a missing
     column or colliding with an existing logical name is refused."""
     log_dir = os.path.join(root, "_delta_log")
-    snap = delta_log.snapshot(log_dir)
-    latest = snap.metadata
+    version, _, latest = delta_log.table_meta(log_dir)
     if "schemaString" not in latest:
         raise ValueError("not a Delta table (no metaData action)")
     if latest.get("configuration", {}).get(
@@ -959,7 +958,7 @@ def delta_rename_column(root: str, old: str, new: str) -> None:
     new_md["schemaString"] = json.dumps(schema)
     delta_log.commit(
         log_dir,
-        snap.version + 1,
+        version + 1,
         [{"commitInfo": {"operation": "RENAME COLUMN"}}, {"metaData": new_md}],
     )
 

@@ -984,7 +984,7 @@ def delta_identity_append(spark: SparkSession, root: str, batch) -> int:
     from random_forest_using_hadoop_spark.helpers import dist_row_number
 
     log_dir = os.path.join(root, "_delta_log")
-    version, _, meta, _ = delta_log.snapshot(log_dir)
+    version, _, meta = delta_log.table_meta(log_dir)
     schema = json.loads(meta["schemaString"])
     id_col, id_md = _identity_meta(schema["fields"])
     if id_col in batch.columns:
@@ -1123,7 +1123,7 @@ def q_sink_delta_identity_column(
     evens = o.filter(F.col("o_orderkey") % 2 == 0)
     odds = o.filter(F.col("o_orderkey") % 2 == 1)
     v1 = delta_identity_append(spark, root, evens)
-    meta1 = delta_log.snapshot(log_dir).metadata
+    meta1 = delta_log.table_meta(log_dir).metadata
     hwm1 = _identity_meta(json.loads(meta1["schemaString"])["fields"])[1][
         "delta.identity.highWaterMark"
     ]

@@ -1,7 +1,7 @@
 from random_forest_using_hadoop_spark.sources.io import (
     TABLES,
+    docs_spread_width,
     load_table,
-    spread_width,
 )
 
-__all__ = ["load_table", "spread_width", "TABLES"]
+__all__ = ["load_table", "docs_spread_width", "TABLES"]

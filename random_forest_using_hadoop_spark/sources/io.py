@@ -64,19 +64,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread_width(
-    sf_dir: str, name: str, cap: int = 64, rows_per_task: int = 64
-) -> int:
-    """Hash-spread width for a table whose per-row work dwarfs its scan
-    (substring-exploding documents): one task per `rows_per_task` rows,
-    at most `cap`, counted from the Parquet footers without a Spark job.
-    A five-row table gets one task instead of `cap` near-empty ones;
-    5,000 documents get the full `cap`. Only the parallelism depends on
-    this, never the rows, so an unreadable footer just means `cap`."""
+# hash-spread width of the documents table: one task per _DOCS_PER_TASK
+# documents, at most _SPREAD_CAP tasks
+_DOCS_PER_TASK = 64
+_SPREAD_CAP = 64
+
+
+def docs_spread_width(sf_dir: str) -> int:
+    """Hash-spread width for the documents table, whose per-row work
+    (substring-exploding the text) dwarfs its scan, counted from the
+    Parquet footers without a Spark job. A five-doc corpus gets one
+    task instead of 64 near-empty ones; 5,000 documents get all 64.
+    Only the parallelism depends on this, never the rows, so an
+    unreadable footer just means the cap."""
     import pyarrow.dataset as ds
 
     try:
-        n = ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()
+        docs = ds.dataset(f"{sf_dir}/documents.parquet", format="parquet")
+        n = docs.count_rows()
     except (OSError, ValueError):
-        return cap
-    return max(1, min(cap, -(-n // rows_per_task)))
+        return _SPREAD_CAP
+    return max(1, min(_SPREAD_CAP, -(-n // _DOCS_PER_TASK)))

@@ -128,6 +128,15 @@ def test_error_between_data_write_and_commit_keeps_previous_snapshot(
     assert _delta_latest_live_files(spark, root) == before
 
 
+def test_failed_commit_leaves_no_temp_file(tmp_path):
+    """An action that cannot be serialised fails the commit before
+    anything is published, and its temp file is removed too."""
+    log_dir = str(tmp_path)
+    with pytest.raises(TypeError):
+        delta_log.commit(log_dir, 0, [{"commitInfo": {"bad": object()}}])
+    assert os.listdir(log_dir) == []
+
+
 def test_unpublished_temp_file_is_invisible(spark):
     """A crash inside commit leaves at most a hidden temp file: neither
     the driver-side nor the distributed reader counts it as a commit."""
@@ -188,14 +197,79 @@ def test_torn_commit_raises_instead_of_dropping_the_remove(spark):
         query.stop()
 
 
-def test_replay_helpers_agree_on_live_files(spark):
-    """snapshot() (driver fold) and _delta_live_files (distributed fold)
-    are two replays of one log; they must agree at the latest version."""
-    root, log_dir = _fresh_log("delta_log_agree_unit")
+def test_stream_reads_only_commit_files(spark):
+    """The log stream tails `<version>.json` commits only, like the
+    batch reader: a checkpoint parquet and a compaction file in the
+    same directory neither fail the FAILFAST read nor come back as
+    rows without a version."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root, log_dir = _fresh_log("delta_log_stream_unit")
     _delta_commit(log_dir, 0, {"a.parquet", "b.parquet"}, set())
     _delta_commit(log_dir, 1, {"c.parquet"}, {"a.parquet"})
+    pq.write_table(
+        pa.table({"add": [{"path": "data/b.parquet"}]}),
+        os.path.join(log_dir, f"{1:020d}.checkpoint.parquet"),
+    )
+    delta_log.commit_compacted(
+        log_dir, 0, 1, [{"add": {"path": "data/b.parquet"}}]
+    )
+    rows: list = []
+    query = (
+        delta_log.read_log(spark, log_dir, stream=True)
+        .writeStream.foreachBatch(
+            lambda df, _id: rows.extend(delta_log.file_actions(df).collect())
+        )
+        .option("checkpointLocation", str(Path(root) / "_stream_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        query.awaitTermination()
+    finally:
+        query.stop()
+    assert sorted((r["version"], r["path"], r["is_add"]) for r in rows) == [
+        (0, "data/a.parquet", True),
+        (0, "data/b.parquet", True),
+        (1, "data/a.parquet", False),
+        (1, "data/c.parquet", True),
+    ]
+
+
+def test_replay_helpers_agree_on_live_files(spark):
+    """snapshot() (driver fold) and _delta_live_files (distributed fold)
+    are two replays of one log; they must agree at the latest version,
+    and table_meta() must agree with snapshot() on everything but the
+    file list."""
+    root, log_dir = _fresh_log("delta_log_agree_unit")
+    delta_log.commit(
+        log_dir,
+        0,
+        [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {"id": "t0"}},
+            {"add": {"path": "data/a.parquet"}},
+            {"add": {"path": "data/b.parquet"}},
+        ],
+    )
+    delta_log.commit(
+        log_dir,
+        1,
+        [
+            {"metaData": {"id": "t1"}},
+            {"remove": {"path": "data/a.parquet"}},
+            {"add": {"path": "data/c.parquet"}},
+        ],
+    )
     snap = delta_log.snapshot(log_dir)
     assert snap.version == 1
+    assert delta_log.table_meta(log_dir) == (
+        1,
+        {"minReaderVersion": 1, "minWriterVersion": 2},
+        {"id": "t1"},
+    )
+    assert snap[:3] == delta_log.table_meta(log_dir)
     assert set(snap.live) == {"data/b.parquet", "data/c.parquet"}
     dist = {
         r["path"]

@@ -323,7 +323,7 @@ def test_spread_width_follows_the_parquet_row_count(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from random_forest_using_hadoop_spark.sources import spread_width
+    from random_forest_using_hadoop_spark.sources import docs_spread_width
 
     for n, want in ((0, 1), (5, 1), (64, 1), (65, 2), (500, 8), (5000, 64)):
         d = tmp_path / f"n{n}"
@@ -332,5 +332,5 @@ def test_spread_width_follows_the_parquet_row_count(tmp_path):
             pa.table({"doc_id": pa.array(range(n), pa.int64())}),
             d / "documents.parquet" / "part-0.parquet",
         )
-        assert spread_width(str(d), "documents") == want, n
-    assert spread_width(str(tmp_path / "missing"), "documents") == 64
+        assert docs_spread_width(str(d)) == want, n
+    assert docs_spread_width(str(tmp_path / "missing")) == 64
