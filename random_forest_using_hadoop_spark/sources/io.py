@@ -64,8 +64,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# hash-spread width of the documents table: one task per _DOCS_PER_TASK
-# documents, at most _SPREAD_CAP tasks
 _DOCS_PER_TASK = 64
 _SPREAD_CAP = 64
 
