@@ -679,7 +679,7 @@ def q_ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    n_test = art["pred"].count()
+    n_test = art["n_total"] - art["n_train"]
     n_classes = art["model"].numClasses
     bins_ok = all(0 <= r["bin"] <= 9 for r in binned)
     coverage = sum(r["n"] for r in binned) == n_test
