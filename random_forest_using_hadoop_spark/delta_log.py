@@ -68,16 +68,16 @@ def _delta_max_version(log_dir: str) -> int:
 # --- writing ------------------------------------------------------------------
 
 
-def _publish(log_dir: str, name: str, actions: Iterable[dict]) -> str:
-    """Write `actions` as JSON lines to `log_dir/name`, put-if-absent.
-    The temp file is fsynced before it is linked, so the published name
-    never points at a partly written file; it is removed on every exit,
-    including an action `json.dumps` cannot serialise."""
+def _publish(log_dir: str, name: str, text: str) -> str:
+    """Write `text` to `log_dir/name`, put-if-absent — the commit
+    primitive of every lake format here. The temp file is fsynced
+    before it is linked, so the published name never points at a partly
+    written file; it is removed on every exit."""
     target = os.path.join(log_dir, name)
     tmp = os.path.join(log_dir, f".{name}.{uuid.uuid4().hex}.tmp")
     try:
         with open(tmp, "w") as fh:
-            fh.write("".join(json.dumps(a) + "\n" for a in actions))
+            fh.write(text)
             fh.flush()
             os.fsync(fh.fileno())
         os.link(tmp, target)
@@ -89,17 +89,37 @@ def _publish(log_dir: str, name: str, actions: Iterable[dict]) -> str:
     return target
 
 
+def _replace(log_dir: str, name: str, text: str) -> None:
+    """Atomically replace the pointer file `log_dir/name` with `text`
+    (temp file + `os.replace`). For hints that may move either way,
+    never for commits."""
+    tmp = os.path.join(log_dir, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, os.path.join(log_dir, name))
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+
+
+def _lines(actions: Iterable[dict]) -> str:
+    return "".join(json.dumps(a) + "\n" for a in actions)
+
+
 def commit(log_dir: str, version: int, actions: Iterable[dict]) -> str:
     """Publish commit `version` atomically; returns its path. Raises
     :class:`CommitConflict` if the version is already taken."""
-    return _publish(log_dir, f"{version:020d}.json", actions)
+    return _publish(log_dir, f"{version:020d}.json", _lines(actions))
 
 
 def commit_compacted(
     log_dir: str, start: int, end: int, actions: Iterable[dict]
 ) -> str:
     """Publish a `<start>.<end>.compacted.json` log compaction file."""
-    return _publish(log_dir, f"{start:020d}.{end:020d}.compacted.json", actions)
+    return _publish(
+        log_dir, f"{start:020d}.{end:020d}.compacted.json", _lines(actions)
+    )
 
 
 def _delta_commit(
@@ -145,11 +165,7 @@ def write_last_checkpoint(log_dir: str, meta: dict) -> None:
     """Point `_last_checkpoint` at a checkpoint. The pointer is a hint
     that may move backwards or forwards, so it is replaced atomically
     rather than published put-if-absent."""
-    data = json.dumps(meta)  # fails before any temp file exists
-    tmp = os.path.join(log_dir, f"._last_checkpoint.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(data)
-    os.replace(tmp, os.path.join(log_dir, "_last_checkpoint"))
+    _replace(log_dir, "_last_checkpoint", json.dumps(meta))
 
 
 def read_last_checkpoint(log_dir: str) -> dict | None:

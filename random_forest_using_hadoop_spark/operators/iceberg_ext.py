@@ -10,8 +10,8 @@ grade: there is no JSON commit log to replay — each snapshot is
 SELF-CONTAINED, naming one manifest LIST (Avro), which names manifest
 FILES (Avro), whose entries carry per-data-file status
 (EXISTING/ADDED/DELETED), partition values, and stats. Table state
-lives in `metadata/v<N>.metadata.json` (snapshots, schemas, partition
-specs, snapshot-log), discovered via `version-hint.text`.
+lives in versioned table-metadata JSON (snapshots, schemas, partition
+specs, snapshot-log), committed and discovered by iceberg_meta.py.
 
 Each key stages its own spec-layout table from the shipped `orders`
 fixture and grades the READER against a DuckDB oracle over the
@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
@@ -42,7 +41,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark import delta_log, iceberg_meta
 from random_forest_using_hadoop_spark.iceberg_format import ocf_read, ocf_write
 from random_forest_using_hadoop_spark.operators.scans import (
     _norm_file_uri,
@@ -381,9 +380,7 @@ def _iceberg_stage(spark: SparkSession, o: DataFrame, root: str) -> None:
       manifest for one snapshot per spec so incremental consumers see
       them)
 
-    metadata/v1..v3.metadata.json accumulate the snapshots +
-    snapshot-log; version-hint.text names the current metadata version
-    (the HadoopCatalog discovery rule)."""
+    Metadata versions 1..3 accumulate the snapshots + snapshot-log."""
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
     shutil.rmtree(root, ignore_errors=True)
@@ -450,105 +447,84 @@ def _iceberg_stage(spark: SparkSession, o: DataFrame, root: str) -> None:
         (_S2, 2, _T2, l2, "append"),
         (_S3, 3, _T3, l3, "delete"),
     ]
-    schema = {
-        "type": "struct",
-        "schema-id": 0,
-        "fields": [
-            {"id": 1, "name": "o_orderkey", "required": False, "type": "long"},
+    for v in (1, 2, 3):
+        tm = _orders_meta(
+            root, "9f2a7b4e-1d15-4d29-8c3a-iceberg-fixt", snaps[:v]
+        )
+        iceberg_meta.commit(meta_dir, v, tm)
+
+
+def _orders_meta(
+    root: str, table_uuid: str, snaps: list[tuple[int, int, int, str, str]]
+) -> dict:
+    """Table metadata of an orders table (o_orderkey, o_totalprice,
+    o_orderpriority; identity-partitioned by priority) whose history is
+    the given (id, seq, ts, manifest list, operation) snapshots."""
+    return {
+        "format-version": 2,
+        "table-uuid": table_uuid,
+        "location": root,
+        "last-sequence-number": snaps[-1][1],
+        "last-updated-ms": snaps[-1][2],
+        "last-column-id": 3,
+        "schemas": [
             {
-                "id": 2,
-                "name": "o_totalprice",
-                "required": False,
-                "type": "double",
-            },
+                "type": "struct",
+                "schema-id": 0,
+                "fields": [
+                    {
+                        "id": 1,
+                        "name": "o_orderkey",
+                        "required": False,
+                        "type": "long",
+                    },
+                    {
+                        "id": 2,
+                        "name": "o_totalprice",
+                        "required": False,
+                        "type": "double",
+                    },
+                    {
+                        "id": 3,
+                        "name": "o_orderpriority",
+                        "required": False,
+                        "type": "string",
+                    },
+                ],
+            }
+        ],
+        "current-schema-id": 0,
+        "partition-specs": [
             {
-                "id": 3,
-                "name": "o_orderpriority",
-                "required": False,
-                "type": "string",
-            },
+                "spec-id": 0,
+                "fields": [
+                    {
+                        "source-id": 3,
+                        "field-id": 1000,
+                        "name": "o_orderpriority",
+                        "transform": "identity",
+                    }
+                ],
+            }
+        ],
+        "default-spec-id": 0,
+        "current-snapshot-id": snaps[-1][0],
+        "snapshots": [
+            {
+                "snapshot-id": sid,
+                "sequence-number": seq,
+                "timestamp-ms": ts,
+                "manifest-list": ml,
+                "summary": {"operation": op},
+                "schema-id": 0,
+            }
+            for sid, seq, ts, ml, op in snaps
+        ],
+        "snapshot-log": [
+            {"timestamp-ms": ts, "snapshot-id": sid}
+            for sid, _, ts, _, _ in snaps
         ],
     }
-    for v in (1, 2, 3):
-        sub = snaps[:v]
-        meta = {
-            "format-version": 2,
-            "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-iceberg-fixt",
-            "location": root,
-            "last-sequence-number": sub[-1][1],
-            "last-updated-ms": sub[-1][2],
-            "last-column-id": 3,
-            "schemas": [schema],
-            "current-schema-id": 0,
-            "partition-specs": [
-                {
-                    "spec-id": 0,
-                    "fields": [
-                        {
-                            "source-id": 3,
-                            "field-id": 1000,
-                            "name": "o_orderpriority",
-                            "transform": "identity",
-                        }
-                    ],
-                }
-            ],
-            "default-spec-id": 0,
-            "current-snapshot-id": sub[-1][0],
-            "snapshots": [
-                {
-                    "snapshot-id": sid,
-                    "sequence-number": seq,
-                    "timestamp-ms": ts,
-                    "manifest-list": ml,
-                    "summary": {"operation": op},
-                    "schema-id": 0,
-                }
-                for sid, seq, ts, ml, op in sub
-            ],
-            "snapshot-log": [
-                {"timestamp-ms": ts, "snapshot-id": sid}
-                for sid, _, ts, _, _ in sub
-            ],
-        }
-        with open(os.path.join(meta_dir, f"v{v}.metadata.json"), "w") as fh:
-            json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("3")
-
-
-def _iceberg_table_meta(root: str) -> dict:
-    """Load the CURRENT table metadata: version-hint.text names the
-    metadata version (HadoopCatalog rule); fall back to the highest
-    v<N>.metadata.json when the hint is absent. One driver-side JSON of
-    table-metadata size."""
-    meta_dir = os.path.join(root, "metadata")
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            v = int(fh.read().strip())
-    else:
-        # strict filename match — a stray 'vx.metadata.json' (editor
-        # backup, partial upload) must be skipped, not crash discovery
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(meta_dir)
-            if (m := re.fullmatch(r"v(\d+)\.metadata\.json", f))
-        ]
-        if not versions:
-            raise FileNotFoundError(f"no metadata.json under {meta_dir}")
-        v = max(versions)
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
-        meta = json.load(fh)
-    if meta.get("format-version") not in (2, 3):
-        # fail AT OPEN, never mid-read with silently wrong semantics —
-        # the same posture as the Delta reader-features gate
-        raise ValueError(
-            f"unsupported Iceberg format-version "
-            f"{meta.get('format-version')!r}; this reader implements v2 "
-            "and the v3 deletion-vector subset"
-        )
-    return meta
 
 
 def _iceberg_snapshot(
@@ -805,8 +781,8 @@ GROUP BY o_orderpriority
 
 @register("src_iceberg_snapshot", oracle=_SNAP_ORACLE)
 def q_src_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg v2 CURRENT-SNAPSHOT read: version-hint →
-    metadata.json → current snapshot → manifest list (Avro) → manifests
+    """Iceberg v2 CURRENT-SNAPSHOT read: current table metadata
+    → current snapshot → manifest list (Avro) → manifests
     (Avro) → live data files → ONE distributed parquet scan. The staged
     s3 deleted the 1-URGENT partition via a rewrite manifest whose
     urgent entries carry status DELETED — a reader that lists the data
@@ -824,7 +800,7 @@ def q_src_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_snap")
     _iceberg_stage(spark, o, root)
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     files = _iceberg_live_files(_iceberg_snapshot(meta))
     df = _scan_with_partition(spark, files)
     if df is None:
@@ -869,7 +845,7 @@ def q_src_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_tt")
     _iceberg_stage(spark, o, root)
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     # as-of a wall-clock BETWEEN s1 and s2 → must resolve to s1
     s1 = _iceberg_snapshot(meta, as_of_ms=_T1 + 30_000)
     latest = _iceberg_snapshot(meta)
@@ -948,7 +924,7 @@ def q_src_iceberg_partition_prune(
     root = _tmp(sf_dir, "iceberg_prune")
     _iceberg_stage(spark, o, root)
     wanted = {"2-HIGH", "5-LOW"}
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     files = _iceberg_live_files(
         _iceberg_snapshot(meta), partition_pred=lambda v: v in wanted
     )
@@ -1016,7 +992,7 @@ def q_src_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tmp(sf_dir, "iceberg_posdel")
     _iceberg_stage(spark, o, root)
     meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     s3 = _iceberg_snapshot(meta)
     live, _ = _iceberg_files(s3)
 
@@ -1102,29 +1078,13 @@ def q_src_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     l4 = os.path.join(meta_dir, f"snap-{_S4}-1-fixture.avro")
     ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    with open(os.path.join(meta_dir, "v3.metadata.json")) as fh:
-        m3_meta = json.load(fh)
-    m3_meta["snapshots"].append(
-        {
-            "snapshot-id": _S4,
-            "sequence-number": 4,
-            "timestamp-ms": _T4,
-            "manifest-list": l4,
-            "summary": {"operation": "delete"},
-            "schema-id": 0,
-        }
-    )
-    m3_meta["snapshot-log"].append({"timestamp-ms": _T4, "snapshot-id": _S4})
-    m3_meta["current-snapshot-id"] = _S4
-    m3_meta["last-sequence-number"] = 4
-    with open(os.path.join(meta_dir, "v4.metadata.json"), "w") as fh:
-        json.dump(m3_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("4")
+    m3_meta = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(m3_meta, _S4, 4, _T4, l4, "delete")
+    iceberg_meta.commit_next(root, m3_meta)
 
     # --- reader: current snapshot → data + delete files; anti-join on
     # (file, pos) gated by the sequence-number ordering rule
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     data_files, delete_files = _iceberg_files(snap)
     df = _scan_apply_pos_deletes(spark, data_files, delete_files)
@@ -1461,13 +1421,10 @@ def q_src_iceberg_schema_evolution(
         ],
         "snapshot-log": [{"timestamp-ms": _T2, "snapshot-id": _S2}],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     # --- reader: field-id projection through the name mapping
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     df = _scan_with_name_mapping(spark, meta)
     if df is None:
         return local_rows(spark, 
@@ -1517,7 +1474,7 @@ def _stats_surviving_iceberg_files(root: str) -> tuple[list[str], int]:
     table: decode each manifest entry's o_totalprice bounds (field id
     2) and keep files whose [lower, upper] interval intersects
     [_STATS_LO, _STATS_HI] — manifest metadata only, no footer reads."""
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     _, manifests, _ = ocf_read(snap["manifest-list"])
     survivors, total = [], 0
@@ -1646,10 +1603,7 @@ def q_src_iceberg_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     survivors, _ = _stats_surviving_iceberg_files(root)
     if not survivors:
@@ -1810,29 +1764,13 @@ def q_src_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     l4 = os.path.join(meta_dir, f"snap-{_S4}-1-upsert.avro")
     ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    with open(os.path.join(meta_dir, "v3.metadata.json")) as fh:
-        tm = json.load(fh)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": _S4,
-            "sequence-number": 4,
-            "timestamp-ms": _T4,
-            "manifest-list": l4,
-            "summary": {"operation": "overwrite"},
-            "schema-id": 0,
-        }
-    )
-    tm["snapshot-log"].append({"timestamp-ms": _T4, "snapshot-id": _S4})
-    tm["current-snapshot-id"] = _S4
-    tm["last-sequence-number"] = 4
-    with open(os.path.join(meta_dir, "v4.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("4")
+    tm = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
+    iceberg_meta.commit_next(root, tm)
 
     # --- reader: data scans with per-file sequence numbers, equality
     # anti-join gated by the STRICT ordering rule
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     data_files, delete_files = _iceberg_files(snap)
     df = _scan_apply_eq_deletes(spark, data_files, delete_files)
@@ -1893,8 +1831,7 @@ def _iceberg_expire_snapshots(root: str, older_than_ms: int) -> list[str]:
     Scale: pure metadata work (two bounded reachability walks) plus
     storage deletes that are embarrassingly parallel on a real object
     store; no data is read."""
-    meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
     refs = meta.get("refs") or {
         "main": {
@@ -1934,13 +1871,7 @@ def _iceberg_expire_snapshots(root: str, older_than_ms: int) -> list[str]:
     meta["snapshot-log"] = [
         e for e in meta["snapshot-log"] if e["snapshot-id"] in retained_ids
     ]
-    hint = os.path.join(meta_dir, "version-hint.text")
-    with open(hint) as fh:
-        v = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{v + 1}.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(hint, "w") as fh:
-        fh.write(str(v + 1))
+    iceberg_meta.commit_next(root, meta)
     for p in doomed:
         os.remove(p)
     return doomed
@@ -1985,7 +1916,7 @@ def q_sink_iceberg_expire_snapshots(
     )
     root = _tmp(sf_dir, "iceberg_expire")
     _iceberg_stage(spark, o, root)
-    meta0 = _iceberg_table_meta(root)
+    meta0 = iceberg_meta.load(root)
     urgent = {
         p
         for p, v, _, _ in _iceberg_files(
@@ -2001,7 +1932,7 @@ def q_sink_iceberg_expire_snapshots(
     assert set(deleted) & urgent == urgent, (
         "the dropped partition's files must be reclaimed with s1/s2"
     )
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     assert [s["snapshot-id"] for s in meta["snapshots"]] == [_S3]
     live = _iceberg_files(_iceberg_snapshot(meta))[0]
     assert all(os.path.exists(p) for p, _, _, _ in live), (
@@ -2068,7 +1999,7 @@ def q_sink_iceberg_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     _iceberg_stage(spark, o, root)
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     s3_files = _iceberg_files(_iceberg_snapshot(meta))[0]
     _S4, _T4 = _S3 + 1, _T3 + 60_000
 
@@ -2089,25 +2020,10 @@ def q_sink_iceberg_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     m4 = _write_manifest(meta_dir, "m4-compact.avro", entries)
     l4 = _write_manifest_list(meta_dir, _S4, 4, [(m4, _S4)])
-    meta["snapshots"].append(
-        {
-            "snapshot-id": _S4,
-            "sequence-number": 4,
-            "timestamp-ms": _T4,
-            "manifest-list": l4,
-            "summary": {"operation": "replace"},
-            "schema-id": 0,
-        }
-    )
-    meta["snapshot-log"].append({"timestamp-ms": _T4, "snapshot-id": _S4})
-    meta["current-snapshot-id"] = _S4
-    meta["last-sequence-number"] = 4
-    with open(os.path.join(meta_dir, "v4.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("4")
+    iceberg_meta.add_snapshot(meta, _S4, 4, _T4, l4, "replace")
+    iceberg_meta.commit_next(root, meta)
 
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     new_live = _iceberg_files(_iceberg_snapshot(meta))[0]
     assert len(new_live) <= len(s3_files)
     n_per_part: dict[str, int] = {}
@@ -2304,10 +2220,7 @@ def q_src_iceberg_bucket_transform(
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     # --- reader: lookup keys → target buckets (driver-side, 5 hashes)
     # → manifest-pruned scan → exact-key row filter
@@ -2318,7 +2231,7 @@ def q_src_iceberg_bucket_transform(
     targets = {
         iceberg_bucket_long(k, _N_BUCKETS) for k in _BUCKET_LOOKUP_KEYS
     }
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     # look the default spec up BY ID — spec-ids are stable identifiers,
     # not list positions (an evolved table's list is not id-ordered)
     spec = next(
@@ -2388,7 +2301,7 @@ def q_src_iceberg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_incr")
     _iceberg_stage(spark, o, root)
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
     ordered = [e["snapshot-id"] for e in meta["snapshot-log"]]
 
@@ -2574,13 +2487,10 @@ def q_src_iceberg_year_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     targets = set(range(_YEAR_LO - 1970, _YEAR_HI - 1970))
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     assert (
         meta["partition-specs"][0]["fields"][0]["transform"] == "year"
     )
@@ -2634,7 +2544,7 @@ GROUP BY s.seq
 def q_stream_iceberg_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING tail of an Iceberg table's commit history (the
     Iceberg sibling of stream_delta_commits): Structured Streaming
-    watches `metadata/*.metadata.json` (availableNow replay), and each
+    watches the table-metadata versions (availableNow replay), and each
     micro-batch's newly visible SNAPSHOTS are resolved to their
     APPENDED rows via the same manifest walk the batch incremental
     reader uses — O(appended data) per refresh, the only viable
@@ -2651,8 +2561,6 @@ def q_stream_iceberg_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
-    from pyspark.sql import types as T
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -2660,22 +2568,6 @@ def q_stream_iceberg_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     _iceberg_stage(spark, o, root)
     meta_dir = os.path.join(root, "metadata")
 
-    meta_schema = T.StructType(
-        [
-            T.StructField(
-                "snapshots",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("snapshot-id", T.LongType()),
-                            T.StructField("sequence-number", T.LongType()),
-                            T.StructField("manifest-list", T.StringType()),
-                        ]
-                    )
-                ),
-            )
-        ]
-    )
     done_snaps: set[int] = set()
     done_batches: set[int] = set()
     acc: dict[int, list[int]] = {}  # seq -> [n, cents]
@@ -2732,9 +2624,7 @@ def q_stream_iceberg_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = tempfile.mkdtemp(prefix="iceberg_stream_ckpt_")
     query = (
-        spark.readStream.schema(meta_schema)
-        .option("pathGlobFilter", "*.metadata.json")
-        .json(meta_dir)
+        iceberg_meta.stream(spark, meta_dir)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -2942,10 +2832,7 @@ def _iceberg_stage_spec_evo(spark: SparkSession, o: DataFrame, root: str) -> Non
                 for s in snaps[:n_snaps]
             ],
         }
-        with open(os.path.join(meta_dir, f"v{v}.metadata.json"), "w") as fh:
-            json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("2")
+        iceberg_meta.commit(meta_dir, v, meta)
 
 
 @register("src_iceberg_spec_evolution", oracle=_SPEC_EVO_ORACLE)
@@ -2980,7 +2867,7 @@ def q_src_iceberg_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_specevo")
     _iceberg_stage_spec_evo(spark, o, root)
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     specs = {s["spec-id"]: s for s in meta["partition-specs"]}
     default_spec = meta["default-spec-id"]
     wanted = {"2-HIGH", "5-LOW"}
@@ -3123,7 +3010,7 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tmp(sf_dir, "iceberg_v3dv")
     _iceberg_stage(spark, o, root)
     meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     s3 = _iceberg_snapshot(meta)
     live, _ = _iceberg_files(s3)
 
@@ -3239,8 +3126,7 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     l4 = os.path.join(meta_dir, f"snap-{_S4}-1-fixture.avro")
     ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "3"})
-    with open(os.path.join(meta_dir, "v3.metadata.json")) as fh:
-        tm = json.load(fh)
+    tm = iceberg_meta.load(root)
     tm["format-version"] = 3  # v3 commit; prior snapshots remain readable
     # v3 REQUIRES next-row-id (spec §Table Metadata): on upgrade it
     # initializes the row-lineage assignment counter — 0 here because
@@ -3248,28 +3134,12 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage as unavailable); the s4 delete assigns no new rows, so
     # its first-row-id equals the counter and the counter stays put
     tm["next-row-id"] = 0
-    tm["snapshots"].append(
-        {
-            "snapshot-id": _S4,
-            "sequence-number": 4,
-            "timestamp-ms": _T4,
-            "manifest-list": l4,
-            "summary": {"operation": "delete"},
-            "schema-id": 0,
-            "first-row-id": 0,
-        }
-    )
-    tm["snapshot-log"].append({"timestamp-ms": _T4, "snapshot-id": _S4})
-    tm["current-snapshot-id"] = _S4
-    tm["last-sequence-number"] = 4
-    with open(os.path.join(meta_dir, "v4.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("4")
+    iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "delete", first_row_id=0)
+    iceberg_meta.commit_next(root, tm)
 
     # --- reader: data scans with (file, pos) captured at scan level;
     # DV blobs decoded executor-side from manifest coordinates
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     data_files, delete_files = _iceberg_files_full(snap)
     if not data_files:
@@ -3557,13 +3427,10 @@ def q_src_iceberg_v3_row_lineage(
             for sid, _, ts, _ in snaps_meta
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     # --- reader: derive _row_id inside the scan from manifest metadata
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     data_files, _ = _iceberg_files_full(_iceberg_snapshot(meta))
     if not data_files:
         return local_rows(spark, 
@@ -3775,13 +3642,10 @@ def q_src_iceberg_v3_default_values(
             {"timestamp-ms": _T2, "snapshot-id": _S2},
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     # --- reader: per-schema-generation projection with initial-default
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     schema = next(
         s
         for s in meta["schemas"]
@@ -3988,13 +3852,10 @@ def q_src_iceberg_multifield_spec(
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     # --- reader: conjunctive tuple pruning under the declared spec
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     specs = {s["spec-id"]: s for s in meta["partition-specs"]}
     want = ("1-URGENT", "F")
     data, _ = _iceberg_files_full(
@@ -4066,9 +3927,7 @@ def q_src_iceberg_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_refs")
     _iceberg_stage(spark, o, root)
-    meta_dir = os.path.join(root, "metadata")
-    with open(os.path.join(meta_dir, "v3.metadata.json")) as fh:
-        tm = json.load(fh)
+    tm = iceberg_meta.load(root)
     tm["refs"] = {
         "main": {"snapshot-id": _S3, "type": "branch"},
         "audit-tag": {
@@ -4082,12 +3941,9 @@ def q_src_iceberg_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min-snapshots-to-keep": 1,
         },
     }
-    with open(os.path.join(meta_dir, "v4.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("4")
+    iceberg_meta.commit_next(root, tm)
 
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     spine = local_rows(spark, 
         [("audit-tag",), ("wap-branch",), ("main",)], "ref string"
     )
@@ -4223,82 +4079,15 @@ def q_src_lake_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
     l2 = _write_manifest_list(meta_dir, _S2, 2, [(m2, _S2)])
-    meta = {
-        "format-version": 2,
-        "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-lake-unifrm",
-        "location": root,
-        "last-sequence-number": 2,
-        "last-updated-ms": _T2,
-        "last-column-id": 3,
-        "schemas": [
-            {
-                "type": "struct",
-                "schema-id": 0,
-                "fields": [
-                    {
-                        "id": 1,
-                        "name": "o_orderkey",
-                        "required": False,
-                        "type": "long",
-                    },
-                    {
-                        "id": 2,
-                        "name": "o_totalprice",
-                        "required": False,
-                        "type": "double",
-                    },
-                    {
-                        "id": 3,
-                        "name": "o_orderpriority",
-                        "required": False,
-                        "type": "string",
-                    },
-                ],
-            }
-        ],
-        "current-schema-id": 0,
-        "partition-specs": [
-            {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "source-id": 3,
-                        "field-id": 1000,
-                        "name": "o_orderpriority",
-                        "transform": "identity",
-                    }
-                ],
-            }
-        ],
-        "default-spec-id": 0,
-        "current-snapshot-id": _S2,
-        "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            },
-            {
-                "snapshot-id": _S2,
-                "sequence-number": 2,
-                "timestamp-ms": _T2,
-                "manifest-list": l2,
-                "summary": {"operation": "delete"},
-                "schema-id": 0,
-            },
-        ],
-        "snapshot-log": [
-            {"timestamp-ms": _T1, "snapshot-id": _S1},
-            {"timestamp-ms": _T2, "snapshot-id": _S2},
-        ],
-    }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(
+        meta_dir,
+        1,
+        _orders_meta(
+            root,
+            "9f2a7b4e-1d15-4d29-8c3a-lake-unifrm",
+            [(_S1, 1, _T1, l1, "append"), (_S2, 2, _T2, l2, "delete")],
+        ),
+    )
 
     # --- read through BOTH format chains
     delta_log._delta_check_protocol(log_dir)
@@ -4307,7 +4096,7 @@ def q_src_lake_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
         for rel, add in sorted(delta_log.snapshot(log_dir).live.items())
     ]
     ice_files = _iceberg_live_files(
-        _iceberg_snapshot(_iceberg_table_meta(root))
+        _iceberg_snapshot(iceberg_meta.load(root))
     )
     parts = []
     for label, files in (("delta", delta_files), ("iceberg", ice_files)):
@@ -4470,71 +4259,15 @@ def q_src_iceberg_manifest_prune(
         recs,
         metadata={"format-version": "2"},
     )
-    meta = {
-        "format-version": 2,
-        "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-iceberg-mprn",
-        "location": root,
-        "last-sequence-number": 1,
-        "last-updated-ms": _T1,
-        "last-column-id": 3,
-        "schemas": [
-            {
-                "type": "struct",
-                "schema-id": 0,
-                "fields": [
-                    {
-                        "id": 1,
-                        "name": "o_orderkey",
-                        "required": False,
-                        "type": "long",
-                    },
-                    {
-                        "id": 2,
-                        "name": "o_totalprice",
-                        "required": False,
-                        "type": "double",
-                    },
-                    {
-                        "id": 3,
-                        "name": "o_orderpriority",
-                        "required": False,
-                        "type": "string",
-                    },
-                ],
-            }
-        ],
-        "current-schema-id": 0,
-        "partition-specs": [
-            {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "source-id": 3,
-                        "field-id": 1000,
-                        "name": "o_orderpriority",
-                        "transform": "identity",
-                    }
-                ],
-            }
-        ],
-        "default-spec-id": 0,
-        "current-snapshot-id": _S1,
-        "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
-        ],
-        "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
-    }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(
+        meta_dir,
+        1,
+        _orders_meta(
+            root,
+            "9f2a7b4e-1d15-4d29-8c3a-iceberg-mprn",
+            [(_S1, 1, _T1, l1, "append")],
+        ),
+    )
 
     # --- reader: summary test at the LIST level, then entry pruning
     want = "5-LOW"
@@ -4545,7 +4278,7 @@ def q_src_iceberg_manifest_prune(
         hi = (s.get("upper_bound") or b"").decode("utf-8")
         return (not lo or lo <= want) and (not hi or want <= hi)
 
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     data, _ = _iceberg_files_full(
         _iceberg_snapshot(meta),
         partition_pred=lambda v: v == want,
@@ -4608,7 +4341,7 @@ def q_src_iceberg_meta_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_metafiles")
     _iceberg_stage(spark, o, root)
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     files = _iceberg_live_files(_iceberg_snapshot(meta))
     if not files:
         return local_rows(spark, 
@@ -4664,7 +4397,6 @@ def q_sink_iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_rollback")
     _iceberg_stage(spark, o, root)
-    meta_dir = os.path.join(root, "metadata")
 
     def _inventory() -> dict[str, float]:
         out = {}
@@ -4675,20 +4407,16 @@ def q_sink_iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
     before = _inventory()
-    with open(os.path.join(meta_dir, "v3.metadata.json")) as fh:
-        tm = json.load(fh)
+    tm = iceberg_meta.load(root)
     _T4 = _T3 + 60_000
     tm["current-snapshot-id"] = _S1  # the rollback: a pointer flip
     tm["snapshot-log"].append({"timestamp-ms": _T4, "snapshot-id": _S1})
     tm["last-updated-ms"] = _T4
-    with open(os.path.join(meta_dir, "v4.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("4")
+    iceberg_meta.commit_next(root, tm)
     if _inventory() != before:
         raise AssertionError("rollback must not touch data files")
 
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     df = _scan_with_partition(
         spark, _iceberg_live_files(_iceberg_snapshot(meta))
     )

@@ -29,7 +29,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark import delta_log, iceberg_meta
 from random_forest_using_hadoop_spark.delta_log import (
     _delta_commit,
     _delta_latest_live_files,
@@ -57,7 +57,6 @@ from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _iceberg_files,
     _iceberg_snapshot,
     _iceberg_stage,
-    _iceberg_table_meta,
     _maybe_broadcast_deletes,
     _pfiles,
     _write_manifest,
@@ -144,39 +143,6 @@ def _mlrec(mpath: str, content: int, seq: int, added_by: int) -> dict:
     }
 
 
-def _append_snapshot(
-    meta_dir: str,
-    version: int,
-    snap_id: int,
-    seq: int,
-    ts: int,
-    mlist: str,
-    operation: str,
-) -> None:
-    """Commit one snapshot: read v<version-1>.metadata.json, append the
-    snapshot + log entry, write v<version>.metadata.json, bump the
-    hint — one metadata version per commit, the HadoopCatalog rule."""
-    with open(os.path.join(meta_dir, f"v{version - 1}.metadata.json")) as fh:
-        tm = json.load(fh)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": ts,
-            "manifest-list": mlist,
-            "summary": {"operation": operation},
-            "schema-id": 0,
-        }
-    )
-    tm["snapshot-log"].append({"timestamp-ms": ts, "snapshot-id": snap_id})
-    tm["current-snapshot-id"] = snap_id
-    tm["last-sequence-number"] = seq
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
-
-
 def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
     """Stage the 6-snapshot fixture described on _CHANGELOG_ORACLE."""
     import pyarrow as pa
@@ -254,13 +220,15 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         ],
         metadata={"format-version": "2"},
     )
-    _append_snapshot(meta_dir, 4, _S4, 4, _T4, l4, "overwrite")
+    tm = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
+    iceberg_meta.commit_next(root, tm)
 
     # --- s5: position deletes of the % 10 == 3 rows still live after
     # s4 (% 7 == 0 already gone). Positions are per-file ordinals of
     # the CURRENT live files; the collect is ∝ deleted rows — they are
     # the commit payload.
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     live, _ = _iceberg_files(_iceberg_snapshot(meta))
     pval_by_path = {p: v for p, v, _, _ in live}
     hits = (
@@ -313,7 +281,9 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         ],
         metadata={"format-version": "2"},
     )
-    _append_snapshot(meta_dir, 5, _S5, 5, _T5, l5, "delete")
+    tm = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(tm, _S5, 5, _T5, l5, "delete")
+    iceberg_meta.commit_next(root, tm)
 
     # --- s6: compaction (REPLACE) of the s4 shards — per partition the
     # two shards rewrite into one seq-6 file. Safe to rewrite at seq 6
@@ -371,7 +341,9 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         ],
         metadata={"format-version": "2"},
     )
-    _append_snapshot(meta_dir, 6, _S6, 6, _T6, l6, "replace")
+    tm = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(tm, _S6, 6, _T6, l6, "replace")
+    iceberg_meta.commit_next(root, tm)
     return root
 
 
@@ -390,7 +362,7 @@ def _changelog_plan(root: str, from_id: int) -> dict:
     Returns per-path maps (path → ordinal / seq metadata) consumed by
     the distributed side. Replace snapshots (compaction — no logical
     change) are skipped per the spec's changelog rule."""
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
     ordered = [e["snapshot-id"] for e in meta["snapshot-log"]]
     lo = ordered.index(from_id)
@@ -708,7 +680,7 @@ def q_stream_iceberg_changelog(
     matrix (Delta batch `src_delta_cdf` / Delta stream
     `stream_delta_cdf` / Iceberg batch `src_iceberg_changelog` /
     Iceberg stream = THIS): `readStream` tails the table's
-    metadata.json versions (availableNow, the `stream_iceberg_commits`
+    metadata versions (availableNow, the `stream_iceberg_commits`
     transport) and each micro-batch classifies the snapshots it has
     not yet processed through the SAME delete-aware planner and
     row-assembly the batch key grades (`_changelog_plan` +
@@ -726,11 +698,9 @@ def q_stream_iceberg_changelog(
     """
     import tempfile
 
-    from pyspark.sql import types as T
-
     root = _stage_changelog_table(spark, sf_dir)
     meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     ordered = [e["snapshot-id"] for e in meta["snapshot-log"]]
     lo = ordered.index(_S2)
     ordinal_of = {
@@ -738,21 +708,6 @@ def q_stream_iceberg_changelog(
     }
     plan = _changelog_plan(root, from_id=_S2)
 
-    meta_schema = T.StructType(
-        [
-            T.StructField(
-                "snapshots",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("snapshot-id", T.LongType()),
-                            T.StructField("sequence-number", T.LongType()),
-                        ]
-                    )
-                ),
-            )
-        ]
-    )
     done_snaps: set[int] = set()
     done_batches: set[int] = set()
     acc: dict[tuple[int, str], list[int]] = {}
@@ -796,9 +751,7 @@ def q_stream_iceberg_changelog(
 
     ckpt = tempfile.mkdtemp(prefix="iceberg_stream_cl_ckpt_")
     query = (
-        spark.readStream.schema(meta_schema)
-        .option("pathGlobFilter", "*.metadata.json")
-        .json(meta_dir)
+        iceberg_meta.stream(spark, meta_dir)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -1131,7 +1084,6 @@ def _iceberg_upsert_commit(
     snap_id: int,
     seq: int,
     ts: int,
-    version: int,
 ) -> None:
     """Commit one UPSERT batch the way a CDC writer lands it (spec
     §Equality Delete Files): the batch's rows become seq-N data files,
@@ -1188,7 +1140,7 @@ def _iceberg_upsert_commit(
         [_entry(_ST_ADDED, snap_id, seq, eq_path, None,
                 equality_ids=[1], content=2)],
     )
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     prev = _iceberg_snapshot(meta)
     _, carried, _ = ocf_read(prev["manifest-list"])
     recs = [
@@ -1202,7 +1154,8 @@ def _iceberg_upsert_commit(
     recs.append(_mlrec(md, 1, seq, snap_id))
     ml = os.path.join(meta_dir, f"snap-{snap_id}-1-upsert.avro")
     ocf_write(ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    _append_snapshot(meta_dir, version, snap_id, seq, ts, ml, "overwrite")
+    iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "overwrite")
+    iceberg_meta.commit_next(root, meta)
 
 
 @register("sink_iceberg_upsert", oracle=_UPSERT_ORACLE)
@@ -1239,7 +1192,7 @@ def q_sink_iceberg_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         live_src.filter(F.col("o_orderkey") % 5 == 0).withColumn(
             "o_totalprice", F.col("o_totalprice") + F.lit(5.0)
         ),
-        _S4, 4, _T3 + 60_000, 4,
+        _S4, 4, _T3 + 60_000,
     )
     _iceberg_upsert_commit(
         spark,
@@ -1247,13 +1200,13 @@ def q_sink_iceberg_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         live_src.filter(F.col("o_orderkey") % 3 == 0).withColumn(
             "o_totalprice", F.col("o_totalprice") + F.lit(7.0)
         ),
-        _S5, 5, _T3 + 120_000, 5,
+        _S5, 5, _T3 + 120_000,
     )
 
     # --- read back through the strict-sequence eq-delete contract
     # (the shared _scan_apply_eq_deletes path — writer and reader are
     # held to one contract)
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
     df = _scan_apply_eq_deletes(spark, data_files, delete_files)
     if df is None:  # adversarial corpus: all-urgent base, empty batches
@@ -1322,7 +1275,7 @@ def q_sink_iceberg_rewrite_deletes(
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
 
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     cur = _iceberg_snapshot(meta)
     data_files, delete_files = _iceberg_files(cur)
     _S6 = _S3 + 3
@@ -1354,12 +1307,11 @@ def q_sink_iceberg_rewrite_deletes(
             [_mlrec(m6, 0, 6, _S6)],
             metadata={"format-version": "2"},
         )
-        _append_snapshot(
-            meta_dir, 6, _S6, 6, _T3 + 180_000, l6, "replace"
-        )
+        iceberg_meta.add_snapshot(meta, _S6, 6, _T3 + 180_000, l6, "replace")
+        iceberg_meta.commit_next(root, meta)
 
     # --- post-maintenance read: pure scan, no delete application
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
     assert not delete_files, "maintenance left delete files behind"
     if not data_files:
@@ -1551,13 +1503,10 @@ def q_src_iceberg_v3_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"timestamp-ms": _T3 + 60_000, "snapshot-id": _S2},
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, meta)
 
     # --- reader: v3 gate + schema-declared variant field + one scan
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     if meta["format-version"] != 3:
         raise ValueError("variant columns require format-version 3")
     schema = next(
@@ -1836,8 +1785,7 @@ def q_sink_iceberg_publish_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_mlrec(m3, 0, 3, _S3), _mlrec(m4, 0, 4, _S4)],
         metadata={"format-version": "2"},
     )
-    with open(os.path.join(meta_dir, "v3.metadata.json")) as fh:
-        tm = json.load(fh)
+    tm = iceberg_meta.load(root)
     tm["snapshots"].append(
         {
             "snapshot-id": _S4,
@@ -1855,10 +1803,7 @@ def q_sink_iceberg_publish_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "main": {"snapshot-id": _S3, "type": "branch"},
         "audit": {"snapshot-id": _S4, "type": "branch"},
     }
-    with open(os.path.join(meta_dir, "v4.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("4")
+    iceberg_meta.commit_next(root, tm)
 
     def _read_main(meta: dict) -> DataFrame | None:
         snap = _iceberg_snapshot(meta, ref="main")
@@ -1867,22 +1812,18 @@ def q_sink_iceberg_publish_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, [(p, v, n) for p, v, n, _ in files]
         )
 
-    before = _read_main(_iceberg_table_meta(root))
+    before = _read_main(iceberg_meta.load(root))
 
     # PUBLISH: fast-forward main — metadata-only pointer move
-    with open(os.path.join(meta_dir, "v4.metadata.json")) as fh:
-        tm = json.load(fh)
+    tm = iceberg_meta.load(root)
     tm["refs"]["main"]["snapshot-id"] = _S4
     tm["current-snapshot-id"] = _S4
     tm["snapshot-log"].append(
         {"timestamp-ms": _T3 + 120_000, "snapshot-id": _S4}
     )
-    with open(os.path.join(meta_dir, "v5.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("5")
+    iceberg_meta.commit_next(root, tm)
 
-    after = _read_main(_iceberg_table_meta(root))
+    after = _read_main(iceberg_meta.load(root))
 
     def _agg(df: DataFrame | None, section: str) -> DataFrame:
         if df is None:

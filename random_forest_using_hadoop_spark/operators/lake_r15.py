@@ -33,7 +33,6 @@ from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _iceberg_live_files,
     _iceberg_snapshot,
     _iceberg_stage,
-    _iceberg_table_meta,
     _pfiles,
     _scan_apply_pos_deletes,
     _scan_with_name_mapping,
@@ -41,11 +40,8 @@ from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _write_manifest,
     _write_manifest_list,
 )
-from random_forest_using_hadoop_spark.operators.lake_r14 import (
-    _append_snapshot,
-    _mlrec,
-)
-from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark.operators.lake_r14 import _mlrec
+from random_forest_using_hadoop_spark import delta_log, iceberg_meta
 from random_forest_using_hadoop_spark.delta_log import (
     _delta_latest_live_files,
     _delta_live_files,
@@ -57,26 +53,6 @@ from random_forest_using_hadoop_spark.sources import load_table
 from random_forest_using_hadoop_spark.helpers import local_rows
 
 # --- Iceberg ref lifecycle writers ---------------------------------------------
-
-
-def _meta_version(root: str) -> int:
-    with open(
-        os.path.join(root, "metadata", "version-hint.text")
-    ) as fh:
-        return int(fh.read().strip())
-
-
-def _write_meta(root: str, tm: dict) -> int:
-    """Commit one new table-metadata version (HadoopCatalog rule: write
-    v<N+1>.metadata.json, then flip version-hint.text). Metadata-only —
-    the same O(1) commit shape as the WAP publish."""
-    meta_dir = os.path.join(root, "metadata")
-    v = _meta_version(root) + 1
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(v))
-    return v
 
 
 def iceberg_create_ref(
@@ -94,7 +70,7 @@ def iceberg_create_ref(
     a named pin, not an upsert."""
     if kind not in ("tag", "branch"):
         raise ValueError(f"ref type must be tag or branch, got {kind!r}")
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     if snapshot_id not in {s["snapshot-id"] for s in tm["snapshots"]}:
         raise ValueError(f"snapshot {snapshot_id} not in table metadata")
     refs = tm.setdefault(
@@ -116,7 +92,7 @@ def iceberg_create_ref(
             raise ValueError("min-snapshots-to-keep is branch-only")
         entry["min-snapshots-to-keep"] = int(min_snapshots_to_keep)
     refs[name] = entry
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
 
 
 def iceberg_expire_refs(root: str, now_ms: int) -> list[str]:
@@ -127,7 +103,7 @@ def iceberg_expire_refs(root: str, now_ms: int) -> list[str]:
     a tag on an old snapshot ages with that snapshot). Returns the
     expired names; `main` and refs without max-ref-age-ms are kept
     forever."""
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     by_id = {s["snapshot-id"]: s for s in tm["snapshots"]}
     refs = tm.get("refs") or {}
     expired = sorted(
@@ -142,7 +118,7 @@ def iceberg_expire_refs(root: str, now_ms: int) -> list[str]:
     if expired:
         for name in expired:
             del refs[name]
-        _write_meta(root, tm)
+        iceberg_meta.commit_next(root, tm)
     return expired
 
 
@@ -154,9 +130,9 @@ def iceberg_expire_snapshots(
     (ref pins + horizon + min-snapshots-to-keep retention, then
     reachability-driven physical cleanup). Returns counts for the
     lifecycle audit trail."""
-    before = len(_iceberg_table_meta(root)["snapshots"])
+    before = len(iceberg_meta.load(root)["snapshots"])
     deleted = _iceberg_expire_snapshots(root, older_than_ms)
-    after = len(_iceberg_table_meta(root)["snapshots"])
+    after = len(iceberg_meta.load(root)["snapshots"])
     return {
         "expired_snapshots": before - after,
         "deleted_files": len(deleted),
@@ -224,7 +200,7 @@ def _branch_commit(
         [_mlrec(m3, 0, 3, _S3), _mlrec(m, 0, seq, snap_id)],
         metadata={"format-version": "2"},
     )
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     tm["snapshots"].append(
         {
             "snapshot-id": snap_id,
@@ -236,7 +212,7 @@ def _branch_commit(
         }
     )
     tm["last-sequence-number"] = max(tm.get("last-sequence-number", 0), seq)
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
 
 
 @register("sink_iceberg_ref_lifecycle", oracle=_REF_LIFECYCLE_ORACLE)
@@ -320,7 +296,7 @@ def q_sink_iceberg_ref_lifecycle(
     iceberg_expire_snapshots(root, older_than_ms=_T3 + 300_000)
 
     # --- read back through the ref-resolving reader
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     spine = local_rows(spark, 
         [
             ("main",), ("keep-audit",), ("wap-branch",),
@@ -664,7 +640,6 @@ def iceberg_delete_where(
     snap_id: int,
     seq: int,
     ts: int,
-    version: int,
 ) -> int:
     """Execute `DELETE WHERE predicate` by EMITTING POSITION-DELETE
     FILES (spec §Position Delete Files) — the Iceberg twin of
@@ -688,7 +663,7 @@ def iceberg_delete_where(
     Returns the number of delete files committed (0 = no-op, no
     commit)."""
     meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     data_files, delete_files = _iceberg_files(snap)
     rows = _scan_apply_pos_deletes(spark, data_files, delete_files)
@@ -754,7 +729,8 @@ def iceberg_delete_where(
     ocf_write(
         ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"}
     )
-    _append_snapshot(meta_dir, version, snap_id, seq, ts, ml, "delete")
+    iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "delete")
+    iceberg_meta.commit_next(root, meta)
     return len(descs)
 
 
@@ -798,13 +774,13 @@ def q_sink_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     _S4, _S5 = _S3 + 1, _S3 + 2
     iceberg_delete_where(
         spark, root, F.col("o_orderkey") % 10 == 7,
-        _S4, 4, _T3 + 60_000, 4,
+        _S4, 4, _T3 + 60_000,
     )
     iceberg_delete_where(
         spark, root, (F.col("o_orderkey") % 10).isin(7, 4),
-        _S5, 5, _T3 + 120_000, 5,
+        _S5, 5, _T3 + 120_000,
     )
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
     df = _scan_apply_pos_deletes(spark, data_files, delete_files)
     if df is None:
@@ -1188,7 +1164,7 @@ def iceberg_alter_schema(
     unknown field ids, duplicate names, and id reuse — the failure
     modes that silently corrupt projection. Returns the new schema id.
     """
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     cur = next(
         s for s in tm["schemas"] if s["schema-id"] == tm["current-schema-id"]
     )
@@ -1230,7 +1206,7 @@ def iceberg_alter_schema(
     tm.setdefault("properties", {})["schema.name-mapping.default"] = (
         json.dumps(mapping)
     )
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
     return new_id
 
 
@@ -1336,10 +1312,7 @@ def q_sink_iceberg_schema_evolution(
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, tm)
 
     # ALTER TABLE: rename field 2 → price, add o_orderstatus (field 3)
     iceberg_alter_schema(
@@ -1363,25 +1336,14 @@ def q_sink_iceberg_schema_evolution(
     ml2 = _write_manifest_list(
         meta_dir, _S2loc, 2, [(m1, _S1), (m2, _S2loc)]
     )
-    tm = _iceberg_table_meta(root)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": _S2loc,
-            "sequence-number": 2,
-            "timestamp-ms": _T1 + 60_000,
-            "manifest-list": ml2,
-            "summary": {"operation": "append"},
-            "schema-id": tm["current-schema-id"],
-        }
+    tm = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(
+        tm, _S2loc, 2, _T1 + 60_000, ml2, "append",
+        schema_id=tm["current-schema-id"],
     )
-    tm["snapshot-log"].append(
-        {"timestamp-ms": _T1 + 60_000, "snapshot-id": _S2loc}
-    )
-    tm["current-snapshot-id"] = _S2loc
-    tm["last-sequence-number"] = 2
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
 
-    df = _scan_with_name_mapping(spark, _iceberg_table_meta(root))
+    df = _scan_with_name_mapping(spark, iceberg_meta.load(root))
     if df is None:
         return local_rows(spark, 
             [], "order_status string, n_rows long, total_cents long"

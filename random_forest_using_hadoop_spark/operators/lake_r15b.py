@@ -26,13 +26,12 @@ from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _ST_ADDED,
     _T1,
     _entry,
-    _iceberg_table_meta,
     _sv_double,
     _sv_double_de,
     _write_manifest,
     _write_manifest_list,
 )
-from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark import delta_log, iceberg_meta
 from random_forest_using_hadoop_spark.delta_log import (
     _delta_latest_live_files,
     _delta_live_files,
@@ -54,11 +53,7 @@ def iceberg_set_sort_order(root: str, source_id: int) -> int:
     flip `default-sort-order-id`, one metadata-only commit (spec
     §Sort Orders: orders are immutable and additive, like schemas and
     partition specs). O(1) regardless of table size."""
-    from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _write_meta,
-    )
-
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     existing = tm.get("sort-orders") or [{"order-id": 0, "fields": []}]
     field_names = {
         f["id"]: f["name"]
@@ -84,7 +79,7 @@ def iceberg_set_sort_order(root: str, source_id: int) -> int:
         }
     ]
     tm["default-sort-order-id"] = order_id
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
     return order_id
 
 
@@ -193,14 +188,11 @@ def q_sink_iceberg_sort_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "snapshots": [],
         "snapshot-log": [],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, tm)
 
     # ALTER TABLE ... WRITE ORDERED BY o_totalprice (field id 2)
     iceberg_set_sort_order(root, source_id=2)
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     if tm["default-sort-order-id"] != 1:
         raise ValueError("sort-order commit did not take effect")
 
@@ -234,24 +226,8 @@ def q_sink_iceberg_sort_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         entries.append(_entry(_ST_ADDED, _S1, 1, path, None, bounds=bounds))
     m1 = _write_manifest(meta_dir, "m1-sorted.avro", entries)
     l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
-    tm["last-sequence-number"] = 1
-    tm["current-snapshot-id"] = _S1
-    tm["snapshots"] = [
-        {
-            "snapshot-id": _S1,
-            "sequence-number": 1,
-            "timestamp-ms": _T1,
-            "manifest-list": l1,
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        }
-    ]
-    tm["snapshot-log"] = [{"timestamp-ms": _T1, "snapshot-id": _S1}]
-    from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _write_meta,
-    )
-
-    _write_meta(root, tm)
+    iceberg_meta.add_snapshot(tm, _S1, 1, _T1, l1, "append")
+    iceberg_meta.commit_next(root, tm)
 
     # gate 1: pairwise-disjoint file ranges (the sorted-write contract)
     ranges.sort()
@@ -863,13 +839,10 @@ def q_src_iceberg_puffin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(tm, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, tm)
 
     # read path: metadata → statistics entry → footer → blobs → re-estimate
-    tm2 = _iceberg_table_meta(root)
+    tm2 = iceberg_meta.load(root)
     stat = next(
         s for s in tm2["statistics"] if s["snapshot-id"] == _S1
     )
@@ -905,7 +878,7 @@ def iceberg_ndv_map(root: str) -> dict[str, int]:
         puffin_read_footer,
     )
 
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     stats = tm.get("statistics") or []
     if not stats:
         return {}
@@ -1149,7 +1122,7 @@ def q_src_iceberg_partition_stats(
     _iceberg_stage(spark, o, root)
 
     # build the rollup from the CURRENT snapshot's live entries
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     snap = _iceberg_snapshot(tm, None)
     _, mlist, _ = ocf_read(snap["manifest-list"])
     per_part: dict[str, list[int, int]] = {}
@@ -1170,10 +1143,6 @@ def q_src_iceberg_partition_stats(
     ).coalesce(1).write.mode("overwrite").parquet(stats_dir)
 
     # register in table metadata (one metadata-only commit)
-    from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _write_meta,
-    )
-
     tm["partition-statistics"] = [
         {
             "snapshot-id": _S3,
@@ -1185,10 +1154,10 @@ def q_src_iceberg_partition_stats(
             ),
         }
     ]
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
 
     # read path: discovery through the committed metadata only
-    tm2 = _iceberg_table_meta(root)
+    tm2 = iceberg_meta.load(root)
     entry = next(
         s
         for s in tm2["partition-statistics"]
@@ -1258,10 +1227,6 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         _T3,
     )
     from random_forest_using_hadoop_spark.operators.lake_r14 import _mlrec
-    from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _write_meta,
-    )
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -1294,7 +1259,7 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_mlrec(m3, 0, 3, _S3), _mlrec(m4, 0, 4, s4)],
         metadata={"format-version": "2"},
     )
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     tm["snapshots"].append(
         {
             "snapshot-id": s4,
@@ -1310,7 +1275,7 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         "main": {"snapshot-id": _S3, "type": "branch"},
         "feature": {"snapshot-id": s4, "type": "branch"},
     }
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
 
     # s5 lands on MAIN independently: urgent ODDS at +2
     o.filter(
@@ -1333,24 +1298,10 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_mlrec(m3, 0, 3, _S3), _mlrec(m5, 0, 5, s5)],
         metadata={"format-version": "2"},
     )
-    tm = _iceberg_table_meta(root)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": s5,
-            "sequence-number": 5,
-            "timestamp-ms": _T3 + 120_000,
-            "manifest-list": l5,
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        }
-    )
-    tm["last-sequence-number"] = 5
-    tm["current-snapshot-id"] = s5
+    tm = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(tm, s5, 5, _T3 + 120_000, l5, "append")
     tm["refs"]["main"]["snapshot-id"] = s5
-    tm["snapshot-log"].append(
-        {"timestamp-ms": _T3 + 120_000, "snapshot-id": s5}
-    )
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
 
     def _data_inventory() -> dict[str, int]:
         out = {}
@@ -1382,32 +1333,18 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         metadata={"format-version": "2"},
     )
-    tm = _iceberg_table_meta(root)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": s6,
-            "sequence-number": 6,
-            "timestamp-ms": _T3 + 180_000,
-            "manifest-list": l6,
-            "summary": {
-                "operation": "append",
-                "source-snapshot-id": str(s4),
-            },
-            "schema-id": 0,
-        }
+    tm = iceberg_meta.load(root)
+    iceberg_meta.add_snapshot(
+        tm, s6, 6, _T3 + 180_000, l6, "append",
+        summary={"operation": "append", "source-snapshot-id": str(s4)},
     )
-    tm["last-sequence-number"] = 6
-    tm["current-snapshot-id"] = s6
     tm["refs"]["main"]["snapshot-id"] = s6
-    tm["snapshot-log"].append(
-        {"timestamp-ms": _T3 + 180_000, "snapshot-id": s6}
-    )
-    _write_meta(root, tm)
+    iceberg_meta.commit_next(root, tm)
 
     # gates: shared data files, untouched branch, recorded provenance
     if _data_inventory() != inv_before:
         raise ValueError("cherry-pick wrote or changed data files")
-    tm2 = _iceberg_table_meta(root)
+    tm2 = iceberg_meta.load(root)
     if tm2["refs"]["feature"]["snapshot-id"] != s4:
         raise ValueError("cherry-pick moved the source branch")
     s6_meta = next(

@@ -35,7 +35,7 @@ from random_forest_using_hadoop_spark.operators.hudi import (
     _hudi_snapshot_files,
     _hudi_stage,
 )
-from random_forest_using_hadoop_spark import delta_log
+from random_forest_using_hadoop_spark import delta_log, iceberg_meta
 from random_forest_using_hadoop_spark.operators.scans import _tmp
 from random_forest_using_hadoop_spark.registry import register
 from random_forest_using_hadoop_spark.sources import load_table
@@ -487,6 +487,7 @@ def q_sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RWM_N = 6  # one small manifest per append — the metadata small-file problem
 _RWM_SB = 7051729675574597000  # snapshot-id base for the fixture
 _RWM_TB = 1_700_100_000_000    # timestamp base
+_RWM_UUID = "9f2a7b4e-1d15-4d29-8c3a-rwm-fixture0"
 
 _RWM_ORACLE = f"""
 SELECT o_orderpriority,
@@ -499,78 +500,6 @@ FROM orders GROUP BY o_orderpriority
 """
 
 
-def _iceberg_meta_json(
-    root: str, snaps: list[tuple[int, int, int, str, str]]
-) -> dict:
-    """Table-metadata JSON for the given (id, seq, ts, list, op)
-    snapshots — the orders fixture schema shared by iceberg_ext."""
-    return {
-        "format-version": 2,
-        "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-rwm-fixture0",
-        "location": root,
-        "last-sequence-number": snaps[-1][1],
-        "last-updated-ms": snaps[-1][2],
-        "last-column-id": 3,
-        "schemas": [
-            {
-                "type": "struct",
-                "schema-id": 0,
-                "fields": [
-                    {
-                        "id": 1,
-                        "name": "o_orderkey",
-                        "required": False,
-                        "type": "long",
-                    },
-                    {
-                        "id": 2,
-                        "name": "o_totalprice",
-                        "required": False,
-                        "type": "double",
-                    },
-                    {
-                        "id": 3,
-                        "name": "o_orderpriority",
-                        "required": False,
-                        "type": "string",
-                    },
-                ],
-            }
-        ],
-        "current-schema-id": 0,
-        "partition-specs": [
-            {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "source-id": 3,
-                        "field-id": 1000,
-                        "name": "o_orderpriority",
-                        "transform": "identity",
-                    }
-                ],
-            }
-        ],
-        "default-spec-id": 0,
-        "current-snapshot-id": snaps[-1][0],
-        "snapshots": [
-            {
-                "snapshot-id": sid,
-                "sequence-number": seq,
-                "timestamp-ms": ts,
-                "manifest-list": ml,
-                "summary": {"operation": op},
-                "schema-id": 0,
-            }
-            for sid, seq, ts, ml, op in snaps
-        ],
-        "snapshot-log": [
-            {"timestamp-ms": ts, "snapshot-id": sid}
-            for sid, _, ts, _, _ in snaps
-        ],
-    }
-
-
 def _stage_many_appends(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Stage an Iceberg v2 table whose history is _RWM_N small appends
     (slice i = o_orderkey % _RWM_N == i), each committing ONE new
@@ -579,6 +508,7 @@ def _stage_many_appends(spark: SparkSession, sf_dir: str, root: str) -> None:
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _ST_ADDED,
         _entry,
+        _orders_meta,
         _pfiles,
         _write_manifest,
         _write_manifest_list,
@@ -619,12 +549,9 @@ def _stage_many_appends(spark: SparkSession, sf_dir: str, root: str) -> None:
         manifests.append((m, sid))
         ml = _write_manifest_list(meta_dir, sid, seq, list(manifests))
         snaps.append((sid, seq, _RWM_TB + i * 60_000, ml, "append"))
-        with open(
-            os.path.join(meta_dir, f"v{i + 1}.metadata.json"), "w"
-        ) as fh:
-            json.dump(_iceberg_meta_json(root, snaps), fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(_RWM_N))
+        iceberg_meta.commit(
+            meta_dir, i + 1, _orders_meta(root, _RWM_UUID, snaps)
+        )
 
 
 @register("sink_iceberg_rewrite_manifests", oracle=_RWM_ORACLE)
@@ -667,7 +594,7 @@ def q_sink_iceberg_rewrite_manifests(
         _ST_EXISTING,
         _iceberg_files,
         _iceberg_snapshot,
-        _iceberg_table_meta,
+        _orders_meta,
         _scan_with_partition,
         _write_manifest,
         _write_manifest_list,
@@ -676,7 +603,7 @@ def q_sink_iceberg_rewrite_manifests(
     root = _tmp(sf_dir, "iceberg_rwm")
     _stage_many_appends(spark, sf_dir, root)
     meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     _, mlist, _ = ocf_read(snap["manifest-list"])
     if len(mlist) != _RWM_N:
@@ -723,14 +650,10 @@ def q_sink_iceberg_rewrite_manifests(
         )
         for s in meta["snapshots"]
     ] + [(new_sid, new_seq, _RWM_TB + _RWM_N * 60_000, l_new, "replace")]
-    v = _RWM_N + 1
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json"), "w") as fh:
-        json.dump(_iceberg_meta_json(root, snaps), fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(v))
+    iceberg_meta.commit_next(root, _orders_meta(root, _RWM_UUID, snaps))
 
     # gates
-    meta2 = _iceberg_table_meta(root)
+    meta2 = iceberg_meta.load(root)
     snap2 = _iceberg_snapshot(meta2)
     _, mlist2, _ = ocf_read(snap2["manifest-list"])
     if len(mlist2) != 1:
@@ -822,7 +745,6 @@ def q_sink_iceberg_remove_orphans(
         _iceberg_reachable,
         _iceberg_snapshot,
         _iceberg_stage,
-        _iceberg_table_meta,
         _scan_with_partition,
         _ST_ADDED,
         _write_manifest,
@@ -834,7 +756,7 @@ def q_sink_iceberg_remove_orphans(
     root = _tmp(sf_dir, "iceberg_orphan")
     _iceberg_stage(spark, o, root)
     meta_dir = os.path.join(root, "metadata")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     live = _iceberg_files(snap)[0]
 
@@ -870,11 +792,7 @@ def q_sink_iceberg_remove_orphans(
     protected = _iceberg_reachable(
         meta, {s["snapshot-id"] for s in meta["snapshots"]}
     )
-    protected |= {
-        os.path.join(meta_dir, f)
-        for f in os.listdir(meta_dir)
-        if f.endswith(".metadata.json") or f == "version-hint.text"
-    }
+    protected |= iceberg_meta.metadata_files(meta_dir)
     cutoff = now - 3600
     removed = []
     for dirpath, _dirs, files in os.walk(root):
@@ -893,7 +811,7 @@ def q_sink_iceberg_remove_orphans(
         raise ValueError(f"orphan sweep removed the wrong set: {removed}")
     if not os.path.exists(young):
         raise ValueError("age cutoff violated: young file deleted")
-    meta2 = _iceberg_table_meta(root)
+    meta2 = iceberg_meta.load(root)
     after_live = _iceberg_files(_iceberg_snapshot(meta2))[0]
     after = _scan_with_partition(
         spark, [(p, v, n) for p, v, n, _ in after_live]
@@ -1212,9 +1130,9 @@ def q_sink_lake_uniform_append(
     - CONVERGENCE, proven distributed: the full table read through
       the Delta chain `exceptAll` the Iceberg-chain read is empty in
       BOTH directions after the append;
-    - ORDERING: the Iceberg version hint flips only after both
-      format's metadata files are durable (the UniForm commit rule —
-      Delta is the source of truth, Iceberg metadata follows).
+    - ORDERING: the Iceberg metadata commits only after the Delta
+      commit is durable (the UniForm commit rule — Delta is the
+      source of truth, Iceberg metadata follows).
 
     Graded: the identical rollup read through each chain, one row per
     format — the same two-row shape as the read key, now over a table
@@ -1229,7 +1147,7 @@ def q_sink_lake_uniform_append(
         _entry,
         _iceberg_live_files,
         _iceberg_snapshot,
-        _iceberg_table_meta,
+        _orders_meta,
         _pfiles,
         _scan_with_partition,
         _write_manifest,
@@ -1264,10 +1182,7 @@ def q_sink_lake_uniform_append(
             ],
         )
 
-    def _iceberg_meta(snaps) -> dict:
-        m = _iceberg_meta_json(root, snaps)
-        m["table-uuid"] = "9f2a7b4e-1d15-4d29-8c3a-unifrm-wrt0"
-        return m
+    table_uuid = "9f2a7b4e-1d15-4d29-8c3a-unifrm-wrt0"
 
     # base table: even keys, both formats over one copy
     o.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.mode(
@@ -1282,10 +1197,7 @@ def q_sink_lake_uniform_append(
     )
     l1 = _write_manifest_list(meta_dir, _UB_S1, 1, [(m1, _UB_S1)])
     snaps = [(_UB_S1, 1, _UB_T1, l1, "append")]
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(_iceberg_meta(snaps), fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_meta.commit(meta_dir, 1, _orders_meta(root, table_uuid, snaps))
 
     # THE APPEND: odd keys, one data copy, two metadata commits
     o.filter(F.col("o_orderkey") % 2 == 1).coalesce(1).write.mode(
@@ -1302,11 +1214,9 @@ def q_sink_lake_uniform_append(
         meta_dir, _UB_S2, 2, [(m1, _UB_S1), (m2, _UB_S2)]
     )
     snaps.append((_UB_S2, 2, _UB_T2, l2, "append"))
-    with open(os.path.join(meta_dir, "v2.metadata.json"), "w") as fh:
-        json.dump(_iceberg_meta(snaps), fh)
-    # hint flips LAST — both trees are durable before readers see v2
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("2")
+    # the Iceberg commit lands LAST — both trees are durable before
+    # readers see v2
+    iceberg_meta.commit_next(root, _orders_meta(root, table_uuid, snaps))
 
     # --- read back through both chains
     delta_files = [
@@ -1314,7 +1224,7 @@ def q_sink_lake_uniform_append(
         for rel, add in sorted(delta_log.snapshot(log_dir).live.items())
     ]
     ice_files = _iceberg_live_files(
-        _iceberg_snapshot(_iceberg_table_meta(root))
+        _iceberg_snapshot(iceberg_meta.load(root))
     )
     # single-copy gate: both chains name exactly the files on disk
     on_disk = {p for p, _ in _pfiles(root, "data/c0")} | {

@@ -1,0 +1,275 @@
+"""The Iceberg table-metadata module: put-if-absent metadata commits,
+torn-metadata detection, and the guard that keeps every other package
+module from naming or opening Iceberg metadata files itself."""
+
+from __future__ import annotations
+
+import ast
+import os
+import sys
+import threading
+from pathlib import Path
+
+import pytest
+
+import random_forest_using_hadoop_spark as engine
+from random_forest_using_hadoop_spark import iceberg_meta
+from random_forest_using_hadoop_spark.iceberg_meta import CommitConflict
+
+PKG = Path(engine.__file__).parent
+
+
+def _table(tmp_path: Path) -> tuple[str, str]:
+    root = str(tmp_path)
+    meta_dir = os.path.join(root, "metadata")
+    os.makedirs(meta_dir)
+    return root, meta_dir
+
+
+def test_concurrent_commits_of_one_version_exactly_one_wins(tmp_path):
+    """Writers racing for the same metadata version (two, then twice as
+    many as there are cores): exactly one publishes, every other one
+    gets CommitConflict, the winner's metadata is what loads, and no
+    temp file is left behind."""
+    root, meta_dir = _table(tmp_path)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for version in range(1, 11):
+            n_writers = 2 if version <= 5 else 2 * (os.cpu_count() or 4)
+            barrier = threading.Barrier(n_writers)
+            outcome: dict[int, object] = {}
+
+            def writer(i: int) -> None:
+                barrier.wait()
+                try:
+                    iceberg_meta.commit(
+                        meta_dir, version, {"format-version": 2, "w": i}
+                    )
+                    outcome[i] = "won"
+                except CommitConflict as e:
+                    outcome[i] = e
+
+            threads = [
+                threading.Thread(target=writer, args=(i,))
+                for i in range(n_writers)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=30)
+                assert not t.is_alive()
+            winners = [i for i, r in outcome.items() if r == "won"]
+            losers = [
+                r for r in outcome.values() if isinstance(r, CommitConflict)
+            ]
+            assert len(winners) == 1, outcome
+            assert len(losers) == n_writers - 1, outcome
+            assert iceberg_meta.load(root) == {
+                "format-version": 2,
+                "w": winners[0],
+            }
+    finally:
+        sys.setswitchinterval(switch)
+    assert set(os.listdir(meta_dir)) == {
+        os.path.basename(p) for p in iceberg_meta.metadata_files(meta_dir)
+    }, "a temp file was left in the metadata directory"
+    assert iceberg_meta.list_versions(meta_dir) == list(range(1, 11))
+
+
+def test_unserialisable_metadata_leaves_no_file(tmp_path):
+    """A commit whose metadata JSON cannot be serialised raises and
+    leaves neither a version, a hint nor a temp file."""
+    _, meta_dir = _table(tmp_path)
+    with pytest.raises(TypeError):
+        iceberg_meta.commit(meta_dir, 1, {"x": object()})
+    assert os.listdir(meta_dir) == []
+
+
+def test_torn_metadata_raises_in_load_and_stream(spark, tmp_path):
+    """A metadata version cut mid-write must raise — in `load` and in
+    the FAILFAST stream — instead of reading as an all-null row whose
+    snapshots the consumer silently skips. Files that are not strict
+    `v<digits>.metadata.json` versions are never read by the stream."""
+    root, meta_dir = _table(tmp_path)
+    for v in (1, 2):
+        iceberg_meta.commit(
+            meta_dir,
+            v,
+            {
+                "format-version": 2,
+                "snapshots": [
+                    {
+                        "snapshot-id": 10 + s,
+                        "sequence-number": s,
+                        "manifest-list": f"l{s}.avro",
+                    }
+                    for s in range(1, v + 1)
+                ],
+            },
+        )
+    (Path(meta_dir) / "vx.metadata.json").write_text('{"snapsh')
+    (Path(meta_dir) / ".v3.metadata.json.0a1b.tmp").write_text('{"snap')
+
+    def _drain(tag: str) -> list:
+        rows: list = []
+        query = (
+            iceberg_meta.stream(spark, meta_dir)
+            .writeStream.foreachBatch(
+                lambda df, _id: rows.extend(df.collect())
+            )
+            .option("checkpointLocation", str(tmp_path / tag))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            query.awaitTermination()
+        finally:
+            query.stop()
+        return rows
+
+    rows = _drain("ckpt_ok")
+    assert sorted(
+        tuple(
+            (s["snapshot-id"], s["sequence-number"], s["manifest-list"])
+            for s in r["snapshots"]
+        )
+        for r in rows
+    ) == [((11, 1, "l1.avro"),), ((11, 1, "l1.avro"), (12, 2, "l2.avro"))]
+
+    (Path(meta_dir) / "v3.metadata.json").write_text(
+        '{"format-version": 2, "snapshots": [{"snapshot-id": 1'
+    )
+    with pytest.raises(ValueError, match="v3.metadata.json"):
+        iceberg_meta.load(root)
+    with pytest.raises(Exception, match="(?i)malformed"):
+        _drain("ckpt_torn")
+
+
+# --- guard: the metadata format lives in iceberg_meta.py alone ---------------
+
+_SPELLINGS = (".metadata.json", "version-hint.text")
+
+
+def _docstrings(tree: ast.AST) -> set[int]:
+    """ids of the docstring constants of the module, classes and
+    functions — prose, exempt from the guard like comments are."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        ):
+            body = node.body
+            if (
+                body
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+                and isinstance(body[0].value.value, str)
+            ):
+                out.add(id(body[0].value))
+    return out
+
+
+def _is_meta_path(expr: ast.AST, names: set[str]) -> bool:
+    """`expr` names an Iceberg `metadata/` directory or a file under
+    one: a known metadata-path variable, `os.path.join(..., "metadata",
+    ...)`, or `os.path.join(<metadata path>, ...)`."""
+    if isinstance(expr, ast.Name):
+        return expr.id in names
+    if not (
+        isinstance(expr, ast.Call)
+        and ast.unparse(expr.func) == "os.path.join"
+        and expr.args
+    ):
+        return False
+    return _is_meta_path(expr.args[0], names) or any(
+        isinstance(a, ast.Constant) and a.value == "metadata"
+        for a in expr.args
+    )
+
+
+def _meta_names(tree: ast.AST) -> set[str]:
+    """Variables that hold an Iceberg metadata path."""
+    names = {"meta_dir"}
+    assigns = [
+        (t.id, n.value)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Assign)
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    ]
+    while True:
+        grown = {name for name, v in assigns if _is_meta_path(v, names)}
+        if grown <= names:
+            return names
+        names |= grown
+
+
+def _json_opens(tree: ast.AST, names: set[str]) -> list[ast.AST]:
+    """`open(<metadata path>)` calls whose file object goes through
+    `json.load` / `json.dump`: `with open(p) as fh: json.load(fh)` and
+    `json.load(open(p))`."""
+    def is_open(call: ast.AST) -> bool:
+        return (
+            isinstance(call, ast.Call)
+            and ast.unparse(call.func) == "open"
+            and bool(call.args)
+            and _is_meta_path(call.args[0], names)
+        )
+
+    def json_calls(node: ast.AST):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Call) and ast.unparse(n.func) in (
+                "json.load",
+                "json.dump",
+            ):
+                yield n
+
+    hits = [
+        arg
+        for call in json_calls(tree)
+        for arg in call.args
+        if is_open(arg)
+    ]
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.With):
+            continue
+        for item in node.items:
+            if not (is_open(item.context_expr) and item.optional_vars):
+                continue
+            fh = ast.unparse(item.optional_vars)
+            if any(
+                ast.unparse(a) == fh
+                for n in node.body
+                for call in json_calls(n)
+                for a in call.args
+            ):
+                hits.append(item.context_expr)
+    return hits
+
+
+def test_only_iceberg_meta_names_or_opens_metadata_files():
+    """No package module other than iceberg_meta.py spells a metadata
+    file name or the version hint in code, or opens a file under an
+    Iceberg `metadata/` directory for JSON — every commit and metadata
+    read goes through the one module."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "iceberg_meta.py":
+            continue
+        tree = ast.parse(path.read_text())
+        rel = path.relative_to(PKG.parent)
+        prose = _docstrings(tree)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in prose
+                and any(s in node.value for s in _SPELLINGS)
+            ):
+                offenders.append(f"{rel}:{node.lineno}: {node.value!r}")
+        for call in _json_opens(tree, _meta_names(tree)):
+            offenders.append(f"{rel}:{call.lineno}: {ast.unparse(call)}")
+    assert not offenders, "\n".join(offenders)
+

@@ -12,11 +12,11 @@ import os
 import pytest
 
 import random_forest_using_hadoop_spark as engine  # noqa: F401  (registry)
+from random_forest_using_hadoop_spark import iceberg_meta
 from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _iceberg_live_files,
     _iceberg_snapshot,
     _iceberg_stage,
-    _iceberg_table_meta,
     _S1,
     _S2,
     _S3,
@@ -38,21 +38,30 @@ def staged(spark):
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
     _iceberg_stage(spark, o, root)
-    return root, _iceberg_table_meta(root)
+    return root, iceberg_meta.load(root)
 
 
 def test_version_hint_and_fallback(staged):
     root, meta = staged
     assert meta["current-snapshot-id"] == _S3
     assert len(meta["snapshots"]) == 3
-    # fallback path: remove the hint → highest vN.metadata.json wins
+    # fallback path: remove the hint → highest vN.metadata.json wins;
+    # so does a torn (empty) or garbage hint, and a stale hint is
+    # walked forward to the last committed version
     hint = os.path.join(root, "metadata", "version-hint.text")
     os.rename(hint, hint + ".bak")
     try:
-        again = _iceberg_table_meta(root)
+        again = iceberg_meta.load(root)
         assert again["current-snapshot-id"] == _S3
+        for text in ("", "\n", "v3", "garbage"):
+            with open(hint, "w") as fh:
+                fh.write(text)
+            assert iceberg_meta.load(root)["current-snapshot-id"] == _S3
+        with open(hint, "w") as fh:
+            fh.write("1")
+        assert iceberg_meta.load(root)["current-snapshot-id"] == _S3
     finally:
-        os.rename(hint + ".bak", hint)
+        os.replace(hint + ".bak", hint)
 
 
 def test_snapshot_self_containment(staged):
@@ -112,7 +121,7 @@ def test_position_delete_files_partitioned_from_data(spark):
 
     REGISTRY["src_iceberg_pos_delete"].fn(spark, SF_DIR).collect()
     root = _tmp(SF_DIR, "iceberg_posdel")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     data, deletes = _iceberg_files(snap)
     assert data and deletes
@@ -159,7 +168,7 @@ def test_position_delete_sequence_rule(spark):
     ocf_write(mpath, schema, entries)
     # read the edited table directly (re-running the key would restage
     # over the edit)
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _iceberg_files,
@@ -193,7 +202,7 @@ def test_format_version_gate(staged, tmp_path):
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
         fh.write("1")
     with pytest.raises(ValueError, match="format-version"):
-        _iceberg_table_meta(str(tmp_path))
+        iceberg_meta.load(str(tmp_path))
 
 
 def test_partition_value_resolves_by_spec_field_names():
@@ -229,10 +238,6 @@ def test_metadata_discovery_skips_stray_version_files(tmp_path):
     not crash hint-less discovery; the highest REAL version wins."""
     import json
 
-    from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _iceberg_table_meta,
-    )
-
     meta_dir = tmp_path / "metadata"
     meta_dir.mkdir()
     for v in (1, 2):
@@ -241,7 +246,16 @@ def test_metadata_discovery_skips_stray_version_files(tmp_path):
         )
     (meta_dir / "vx.metadata.json").write_text("{}")
     (meta_dir / "v3.metadata.json.bak").write_text("{}")
-    assert _iceberg_table_meta(str(tmp_path))["v"] == 2
+    assert iceberg_meta.load(str(tmp_path))["v"] == 2
+    # a stale hint (a crash between the commit and the hint update) is
+    # walked forward: v2 stays visible and the next commit takes v3
+    # instead of conflicting on v2
+    (meta_dir / "version-hint.text").write_text("1")
+    assert iceberg_meta.load(str(tmp_path))["v"] == 2
+    root = str(tmp_path)
+    assert iceberg_meta.commit_next(root, {"format-version": 2, "v": 3}) == 3
+    assert iceberg_meta.load(root)["v"] == 3
+    assert (meta_dir / "version-hint.text").read_text() == "3"
 
 
 def test_format_version_gate_refuses_unknown(tmp_path):
@@ -252,10 +266,6 @@ def test_format_version_gate_refuses_unknown(tmp_path):
 
     import pytest
 
-    from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _iceberg_table_meta,
-    )
-
     meta_dir = tmp_path / "metadata"
     meta_dir.mkdir()
     (meta_dir / "version-hint.text").write_text("1")
@@ -263,12 +273,12 @@ def test_format_version_gate_refuses_unknown(tmp_path):
         (meta_dir / "v1.metadata.json").write_text(
             json.dumps({"format-version": ok})
         )
-        assert _iceberg_table_meta(str(tmp_path))["format-version"] == ok
+        assert iceberg_meta.load(str(tmp_path))["format-version"] == ok
     (meta_dir / "v1.metadata.json").write_text(
         json.dumps({"format-version": 4})
     )
     with pytest.raises(ValueError, match="format-version"):
-        _iceberg_table_meta(str(tmp_path))
+        iceberg_meta.load(str(tmp_path))
 
 
 def test_avro_int_range_gate():
@@ -382,7 +392,6 @@ def test_ref_lifecycle_expiry_is_reachability_driven(spark):
         _S2,
         _S3,
         _T3,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.lake_r15 import (
         iceberg_create_ref,
@@ -391,7 +400,7 @@ def test_ref_lifecycle_expiry_is_reachability_driven(spark):
 
     engine.REGISTRY["sink_iceberg_ref_lifecycle"].fn(spark, SF_DIR).collect()
     root = _tmp(SF_DIR, "iceberg_ref_lifecycle")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     assert set(meta["refs"]) == {"main", "keep-audit", "wap-branch"}
     ids = {s["snapshot-id"] for s in meta["snapshots"]}
     assert ids == {_S2, _S3, _S3 + 1}
@@ -445,10 +454,8 @@ def test_pos_delete_writer_applies_current_deletes_first(spark):
         _T3,
         _iceberg_files,
         _iceberg_snapshot,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _meta_version,
         iceberg_delete_where,
     )
 
@@ -465,7 +472,7 @@ def test_pos_delete_writer_applies_current_deletes_first(spark):
 
     engine.REGISTRY["sink_iceberg_pos_delete"].fn(spark, SF_DIR).collect()
     root = _tmp(SF_DIR, "iceberg_posdel_write")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
     assert {d["seq"] for d in delete_files} == {4, 5}
     # s5 files: every position's row is % 10 == 4 (never a re-emitted 7)
@@ -485,13 +492,16 @@ def test_pos_delete_writer_applies_current_deletes_first(spark):
                 f"{keyed[fp][pos]}"
             )
     # re-running the same DELETE: zero files, zero commits
-    before = (_digests(live_paths), _meta_version(root))
+    meta_dir = os.path.join(root, "metadata")
+    before = (_digests(live_paths), iceberg_meta.current_version(meta_dir))
     n = iceberg_delete_where(
         spark, root, (F.col("o_orderkey") % 10).isin(7, 4),
-        _S3 + 3, 6, _T3 + 180_000, 6,
+        _S3 + 3, 6, _T3 + 180_000,
     )
     assert n == 0
-    assert (_digests(live_paths), _meta_version(root)) == before
+    assert (
+        _digests(live_paths), iceberg_meta.current_version(meta_dir)
+    ) == before
 
 
 def test_alter_schema_writer_refusals_and_mapping(spark):
@@ -500,11 +510,7 @@ def test_alter_schema_writer_refusals_and_mapping(spark):
     advances last-column-id monotonically and never reuses an id;
     unknown field ids and duplicate names are refused with the
     metadata untouched."""
-    from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _iceberg_table_meta,
-    )
     from random_forest_using_hadoop_spark.operators.lake_r15 import (
-        _meta_version,
         iceberg_alter_schema,
     )
 
@@ -512,7 +518,7 @@ def test_alter_schema_writer_refusals_and_mapping(spark):
         spark, SF_DIR
     ).collect()
     root = _tmp(SF_DIR, "iceberg_evo_write")
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     cur = next(
         s for s in tm["schemas"] if s["schema-id"] == tm["current-schema-id"]
     )
@@ -529,17 +535,20 @@ def test_alter_schema_writer_refusals_and_mapping(spark):
     assert mapping[2] == ["o_totalprice", "price"], (
         "historical physical name must stay resolvable"
     )
-    v_before = _meta_version(root)
+    meta_dir = os.path.join(root, "metadata")
+    v_before = iceberg_meta.current_version(meta_dir)
     with pytest.raises(ValueError, match="no field with id"):
         iceberg_alter_schema(root, rename={42: "ghost"})
     with pytest.raises(ValueError, match="already in use"):
         iceberg_alter_schema(root, add=[("price", "double")])
     with pytest.raises(ValueError, match="already in use"):
         iceberg_alter_schema(root, rename={1: "price"})
-    assert _meta_version(root) == v_before, "refusals must not commit"
+    assert iceberg_meta.current_version(meta_dir) == v_before, (
+        "refusals must not commit"
+    )
     # a further add must not reuse id 3
     iceberg_alter_schema(root, add=[("note", "string")])
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     cur = next(
         s for s in tm["schemas"] if s["schema-id"] == tm["current-schema-id"]
     )
@@ -564,7 +573,7 @@ def test_sort_order_writer_contract(spark):
     eng.load_all()
     eng.REGISTRY["sink_iceberg_sort_order"].fn(spark, SF_DIR).collect()
     root = _tmp(SF_DIR, "iceberg_sort_order")
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     assert [o["order-id"] for o in tm["sort-orders"]] == [0, 1]
     assert tm["default-sort-order-id"] == 1
     assert tm["sort-orders"][1]["fields"][0]["source-id"] == 2
@@ -610,7 +619,7 @@ def test_puffin_stats_drive_broadcast_decision(spark):
     assert ndv["o_orderpriority"] == 5
     assert ndv["o_orderkey"] > 100  # KMV estimate of a high-card key
 
-    tm = _iceberg_table_meta(root)
+    tm = iceberg_meta.load(root)
     footer = puffin_read_footer(tm["statistics"][0]["statistics-path"])
     assert len(footer["blobs"]) == 2
     assert all(

@@ -14,6 +14,7 @@ import re
 import pytest
 
 import random_forest_using_hadoop_spark as engine
+from random_forest_using_hadoop_spark import iceberg_meta
 from tests.conftest import BENCH_SF_DIR, SF_DIR
 
 engine.load_all()
@@ -1555,12 +1556,11 @@ def test_iceberg_rollback_keeps_history_reachable(spark):
         _S3,
         _iceberg_live_files,
         _iceberg_snapshot,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
 
     engine.REGISTRY["sink_iceberg_rollback"].fn(spark, SF_DIR).collect()
-    meta = _iceberg_table_meta(_tmp(SF_DIR, "iceberg_rollback"))
+    meta = iceberg_meta.load(_tmp(SF_DIR, "iceberg_rollback"))
     assert meta["current-snapshot-id"] == _S1
     f1 = _iceberg_live_files(_iceberg_snapshot(meta))
     f2 = _iceberg_live_files(_iceberg_snapshot(meta, snapshot_id=_S2))
@@ -1741,7 +1741,6 @@ def test_iceberg_upsert_commit_is_o_batch(spark):
     from random_forest_using_hadoop_spark.iceberg_format import ocf_read
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _iceberg_snapshot,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
 
@@ -1762,7 +1761,7 @@ def test_iceberg_upsert_commit_is_o_batch(spark):
 
     base_digests = _digests()
     assert base_digests, "base data files missing"
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     _, manifests, _ = ocf_read(snap["manifest-list"])
     # the base rewrite manifest (m3) must be carried by PATH in the
@@ -1825,7 +1824,6 @@ def test_rewrite_deletes_leaves_pure_scans(spark):
     from random_forest_using_hadoop_spark.iceberg_format import ocf_read
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _iceberg_snapshot,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
 
@@ -1833,7 +1831,7 @@ def test_rewrite_deletes_leaves_pure_scans(spark):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftAnti" not in plan, plan
     root = _tmp(SF_DIR, "iceberg_upsert")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     assert snap["summary"]["operation"] == "replace"
     _, manifests, _ = ocf_read(snap["manifest-list"])
@@ -1927,7 +1925,6 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
     )
     from random_forest_using_hadoop_spark.operators.lake_r14 import (
         _ST_ADDED,
-        _append_snapshot,
         _changelog_plan,
         _changelog_rows,
         _mlrec,
@@ -1954,6 +1951,10 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
     ]  # odds not %5: {1,3,7,9,11,13,17,19}
     _S4, _S5, _S6 = _S3 + 1, _S3 + 2, _S3 + 3
 
+    def _append_snapshot(*snap) -> None:
+        tm = iceberg_meta.load(root)
+        iceberg_meta.commit_next(root, iceberg_meta.add_snapshot(tm, *snap))
+
     def _eqdel(name: str, keys: list[int]) -> str:
         path = os.path.join(meta_dir, name)
         pq.write_table(
@@ -1974,7 +1975,7 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
         [_mlrec(m3, 0, 3, _S3), _mlrec(m4d, 1, 4, _S4)],
         metadata={"format-version": "2"},
     )
-    _append_snapshot(meta_dir, 4, _S4, 4, _T3 + 60_000, l4, "overwrite")
+    _append_snapshot(_S4, 4, _T3 + 60_000, l4, "overwrite")
 
     # ordinal 2 (S5): REMOVE x_even (rewrite-style manifest)
     m5 = _write_manifest(
@@ -1991,7 +1992,7 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
         [_mlrec(m5, 0, 5, _S5), _mlrec(m4d, 1, 4, _S4)],
         metadata={"format-version": "2"},
     )
-    _append_snapshot(meta_dir, 5, _S5, 5, _T3 + 120_000, l5, "delete")
+    _append_snapshot(_S5, 5, _T3 + 120_000, l5, "delete")
 
     # ordinal 3 (S6): eq-delete keys {8 (only ever in x_even), 9 (odd)}
     m6d = _write_manifest(
@@ -2007,7 +2008,7 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
          _mlrec(m6d, 1, 6, _S6)],
         metadata={"format-version": "2"},
     )
-    _append_snapshot(meta_dir, 6, _S6, 6, _T3 + 180_000, l6, "overwrite")
+    _append_snapshot(_S6, 6, _T3 + 180_000, l6, "overwrite")
 
     plan = _changelog_plan(root, from_id=_S3)
     # the removed file is marked with its removal ordinal in base

@@ -6,6 +6,7 @@ accounting identities."""
 from __future__ import annotations
 
 import random_forest_using_hadoop_spark as engine
+from random_forest_using_hadoop_spark import iceberg_meta
 from tests.conftest import SF_DIR, assert_parity
 
 engine.load_all()
@@ -188,7 +189,6 @@ def test_rewrite_manifests_preserves_inheritance(spark, duck):
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _ST_EXISTING,
         _iceberg_snapshot,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.lake_r15c import (
         _RWM_N,
@@ -198,7 +198,7 @@ def test_rewrite_manifests_preserves_inheritance(spark, duck):
 
     _parity("sink_iceberg_rewrite_manifests", spark, duck)
     root = _tmp(SF_DIR, "iceberg_rwm")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     assert len(meta["snapshots"]) == _RWM_N + 1
     assert meta["snapshots"][-1]["summary"]["operation"] == "replace"
     _, mlist, _ = ocf_read(_iceberg_snapshot(meta)["manifest-list"])
@@ -224,13 +224,12 @@ def test_remove_orphans_age_cutoff_and_reachability(spark, duck):
 
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _iceberg_reachable,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
 
     _parity("sink_iceberg_remove_orphans", spark, duck)
     root = _tmp(SF_DIR, "iceberg_orphan")
-    meta = _iceberg_table_meta(root)
+    meta = iceberg_meta.load(root)
     reach = _iceberg_reachable(
         meta, {s["snapshot-id"] for s in meta["snapshots"]}
     )
@@ -343,7 +342,6 @@ def test_uniform_append_single_copy(spark, duck):
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _iceberg_live_files,
         _iceberg_snapshot,
-        _iceberg_table_meta,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
 
@@ -358,7 +356,7 @@ def test_uniform_append_single_copy(spark, duck):
     ice = sorted(
         p
         for p, _, _ in _iceberg_live_files(
-            _iceberg_snapshot(_iceberg_table_meta(root))
+            _iceberg_snapshot(iceberg_meta.load(root))
         )
     )
     assert ice == on_disk
