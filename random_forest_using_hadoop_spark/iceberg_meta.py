@@ -2,12 +2,16 @@
 the one module that names, writes and parses `metadata/v<N>.metadata.json`
 and `version-hint.text`.
 
-- Writers call [[commit]] or [[commit_next]]. A metadata version lands
-  put-if-absent through the Delta log's commit primitive (fsynced
-  hidden temp file, then `os.link`), so a second writer of the same
-  version gets :class:`CommitConflict` instead of silently replacing
-  the first — the atomic metadata swap the spec requires. The hint is
-  then replaced atomically, best-effort: it is only a hint.
+- Writers edit the metadata inside `with` [[update]]: it loads the
+  current version `b` and commits the edited metadata at `b + 1`. A
+  metadata version lands put-if-absent through the Delta log's commit
+  primitive (fsynced hidden temp file, then `os.link`), so of two
+  writers that loaded the same base, the second gets
+  :class:`CommitConflict` instead of silently replacing the first —
+  the spec's rule that a commit lands only if its base is still
+  current. [[commit]] publishes an explicit version, for writers that
+  create a table or stage its history. The hint is then replaced
+  atomically, best-effort: it is only a hint.
 - Readers call [[load]] (or [[current_version]]). The current version is
   the hint's, or the highest strict `v<digits>.metadata.json` when the
   hint is missing or unparsable, walked forward while `v<N+1>` exists
@@ -21,9 +25,11 @@ and `version-hint.text`.
 from __future__ import annotations
 
 import contextlib
+import copy
 import json
 import os
 import re
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -96,7 +102,11 @@ def load(root: str) -> dict:
     """The CURRENT table metadata, refused at open unless its
     format-version is one this reader implements."""
     md = _dir(root)
-    path = os.path.join(md, _name(current_version(md)))
+    return _read(md, current_version(md))
+
+
+def _read(meta_dir: str, version: int) -> dict:
+    path = os.path.join(meta_dir, _name(version))
     with open(path) as fh:
         try:
             meta = json.load(fh)
@@ -127,12 +137,20 @@ def commit(meta_dir: str, version: int, tm: dict) -> str:
     return path
 
 
-def commit_next(root: str, tm: dict) -> int:
-    """Commit `tm` as the version after the current one; returns it."""
+@contextlib.contextmanager
+def update(root: str) -> Iterator[dict]:
+    """Yield the current metadata (version `b`) for editing and commit
+    it at `b + 1` when the block exits normally. An exception, or a
+    block that leaves the metadata unchanged, commits nothing; a
+    writer that committed `b + 1` meanwhile makes this one raise
+    :class:`CommitConflict`."""
     md = _dir(root)
-    v = current_version(md) + 1
-    commit(md, v, tm)
-    return v
+    base = current_version(md)
+    tm = _read(md, base)
+    loaded = copy.deepcopy(tm)
+    yield tm
+    if tm != loaded:
+        commit(md, base + 1, tm)
 
 
 def add_snapshot(
@@ -142,11 +160,16 @@ def add_snapshot(
     ts: int,
     manifest_list: str,
     operation: str,
+    branch: str | None = "main",
     **extra,
 ) -> dict:
-    """Append a snapshot and its snapshot-log entry to `tm` and make it
-    current. `extra` adds snapshot fields, `_` spelling the spec's `-`
-    (`first_row_id=0` adds `first-row-id`)."""
+    """Append a snapshot to `tm` and advance `branch` to it. On `main`
+    the snapshot is logged and made current (and `refs.main` moves when
+    a refs map exists). On another branch only that branch's ref moves
+    (the refs map is created with `main` first if needed).
+    `branch=None` stages the snapshot: appended, referenced by nothing
+    until a ref is created for it. `extra` adds snapshot fields, `_`
+    spelling the spec's `-` (`first_row_id=0` adds `first-row-id`)."""
     tm["snapshots"].append(
         {
             "snapshot-id": snapshot_id,
@@ -158,11 +181,26 @@ def add_snapshot(
             **{k.replace("_", "-"): v for k, v in extra.items()},
         }
     )
-    tm["snapshot-log"].append(
-        {"timestamp-ms": ts, "snapshot-id": snapshot_id}
-    )
-    tm["current-snapshot-id"] = snapshot_id
+    if branch == "main":
+        tm["snapshot-log"].append(
+            {"timestamp-ms": ts, "snapshot-id": snapshot_id}
+        )
+        tm["current-snapshot-id"] = snapshot_id
     tm["last-sequence-number"] = seq
+    if branch is not None and (branch != "main" or "refs" in tm):
+        refs = tm.setdefault(
+            "refs",
+            {
+                "main": {
+                    "snapshot-id": tm["current-snapshot-id"],
+                    "type": "branch",
+                }
+            },
+        )
+        ref = refs.setdefault(
+            branch, {"snapshot-id": snapshot_id, "type": "branch"}
+        )
+        ref["snapshot-id"] = snapshot_id
     return tm
 
 

@@ -839,15 +839,18 @@ GROUP BY o_orderkey % 4
 """
 
 
-def _delta_txn_version(log_dir: str, app_id: str) -> int:
-    """Highest committed `txn` version for ``app_id`` in the log, or -1
-    — the protocol's idempotence primitive: a writer that cannot know
-    whether its last commit landed (crash after the PUT) re-reads this
-    and skips versions it has already committed. Driver-side scan of
-    the bounded JSON tail (checkpoints carry txn state forward for long
-    histories, same replay rule)."""
+def _delta_txn_version(
+    log_dir: str, app_id: str, versions: list[int] | None = None
+) -> int:
+    """Highest committed `txn` version for ``app_id`` in the given
+    commits (default: the whole log), or -1 — the protocol's
+    idempotence primitive: a writer that cannot know whether its last
+    commit landed (crash after the PUT) re-reads this and skips
+    versions it has already committed. Driver-side scan of the bounded
+    JSON tail (checkpoints carry txn state forward for long histories,
+    same replay rule)."""
     best = -1
-    for _, act in delta_log.read_actions(log_dir):
+    for _, act in delta_log.read_actions(log_dir, versions):
         txn = act.get("txn")
         if txn is not None and txn.get("appId") == app_id:
             best = max(best, int(txn["version"]))
@@ -893,8 +896,11 @@ def q_sink_delta_txn_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _write_batch(df: DataFrame, txn_version: int) -> bool:
         """The idempotence guard every restart runs: commit data files +
         txn action (atomic via the single commit json) only if this txn
-        version is not already in the log. Returns True if written."""
-        if txn_version <= _delta_txn_version(log_dir, app_id):
+        version is not already in the log. Returns True if written. The
+        commit lands at the version after the log it checked, so a
+        writer that committed meanwhile makes this one conflict."""
+        versions = delta_log.list_versions(log_dir)
+        if txn_version <= _delta_txn_version(log_dir, app_id, versions):
             return False  # already committed — crash was AFTER the PUT
         before = _delta_list_files(data_dir)
         df.coalesce(1).write.mode("append").parquet(data_dir)
@@ -902,7 +908,7 @@ def q_sink_delta_txn_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn = {"appId": app_id, "version": txn_version, "lastUpdated": 0}
         delta_log.commit(
             log_dir,
-            _delta_max_version(log_dir) + 1,
+            versions[-1] + 1,
             [{"txn": txn}]
             + [
                 {"add": {"path": f"data/{p}", "dataChange": True}}

@@ -1078,9 +1078,8 @@ def q_src_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     l4 = os.path.join(meta_dir, f"snap-{_S4}-1-fixture.avro")
     ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    m3_meta = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(m3_meta, _S4, 4, _T4, l4, "delete")
-    iceberg_meta.commit_next(root, m3_meta)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "delete")
 
     # --- reader: current snapshot → data + delete files; anti-join on
     # (file, pos) gated by the sequence-number ordering rule
@@ -1764,9 +1763,8 @@ def q_src_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     l4 = os.path.join(meta_dir, f"snap-{_S4}-1-upsert.avro")
     ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    tm = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
 
     # --- reader: data scans with per-file sequence numbers, equality
     # anti-join gated by the STRICT ordering rule
@@ -1831,47 +1829,49 @@ def _iceberg_expire_snapshots(root: str, older_than_ms: int) -> list[str]:
     Scale: pure metadata work (two bounded reachability walks) plus
     storage deletes that are embarrassingly parallel on a real object
     store; no data is read."""
-    meta = iceberg_meta.load(root)
-    by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-    refs = meta.get("refs") or {
-        "main": {
-            "snapshot-id": meta["current-snapshot-id"],
-            "type": "branch",
+    with iceberg_meta.update(root) as meta:
+        by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
+        refs = meta.get("refs") or {
+            "main": {
+                "snapshot-id": meta["current-snapshot-id"],
+                "type": "branch",
+            }
         }
-    }
-    pinned = {
-        r["snapshot-id"] for r in refs.values() if r["snapshot-id"] in by_id
-    }
-    pinned.add(meta["current-snapshot-id"])
-    # branch history retention over the snapshot-log (main's lineage)
-    log_ids = [e["snapshot-id"] for e in meta.get("snapshot-log", [])]
-    for r in refs.values():
-        keep_n = r.get("min-snapshots-to-keep")
-        if r["type"] == "branch" and keep_n and r["snapshot-id"] in log_ids:
-            upto = log_ids.index(r["snapshot-id"]) + 1
-            pinned |= set(log_ids[max(0, upto - keep_n) : upto])
-    retained, expired = [], []
-    for s in meta["snapshots"]:
-        if (
-            s["snapshot-id"] in pinned
-            or s["timestamp-ms"] >= older_than_ms
-        ):
-            retained.append(s)
-        else:
-            expired.append(s)
-    if not expired:
-        return []
-    keep = _iceberg_reachable(
-        meta, {s["snapshot-id"] for s in retained}, readable_only=True
-    )
-    drop = _iceberg_reachable(meta, {s["snapshot-id"] for s in expired})
-    doomed = sorted(drop - keep)
-    retained_ids = {s["snapshot-id"] for s in retained}
-    meta["snapshots"] = retained
-    meta["snapshot-log"] = [
-        e for e in meta["snapshot-log"] if e["snapshot-id"] in retained_ids
-    ]
-    iceberg_meta.commit_next(root, meta)
+        pinned = {
+            r["snapshot-id"]
+            for r in refs.values()
+            if r["snapshot-id"] in by_id
+        }
+        pinned.add(meta["current-snapshot-id"])
+        # branch history retention over the snapshot-log (main's lineage)
+        log_ids = [e["snapshot-id"] for e in meta.get("snapshot-log", [])]
+        for r in refs.values():
+            keep_n = r.get("min-snapshots-to-keep")
+            head = r["snapshot-id"]
+            if r["type"] == "branch" and keep_n and head in log_ids:
+                upto = log_ids.index(head) + 1
+                pinned |= set(log_ids[max(0, upto - keep_n) : upto])
+        retained, expired = [], []
+        for s in meta["snapshots"]:
+            if (
+                s["snapshot-id"] in pinned
+                or s["timestamp-ms"] >= older_than_ms
+            ):
+                retained.append(s)
+            else:
+                expired.append(s)
+        if not expired:
+            return []
+        keep = _iceberg_reachable(
+            meta, {s["snapshot-id"] for s in retained}, readable_only=True
+        )
+        drop = _iceberg_reachable(meta, {s["snapshot-id"] for s in expired})
+        doomed = sorted(drop - keep)
+        retained_ids = {s["snapshot-id"] for s in retained}
+        meta["snapshots"] = retained
+        meta["snapshot-log"] = [
+            e for e in meta["snapshot-log"] if e["snapshot-id"] in retained_ids
+        ]
     for p in doomed:
         os.remove(p)
     return doomed
@@ -1999,29 +1999,28 @@ def q_sink_iceberg_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     _iceberg_stage(spark, o, root)
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
-    meta = iceberg_meta.load(root)
-    s3_files = _iceberg_files(_iceberg_snapshot(meta))[0]
-    _S4, _T4 = _S3 + 1, _T3 + 60_000
+    with iceberg_meta.update(root) as meta:
+        s3_files = _iceberg_files(_iceberg_snapshot(meta))[0]
+        _S4, _T4 = _S3 + 1, _T3 + 60_000
 
-    # rewrite: ONE distributed job reads exactly the live set and
-    # writes one file per partition (the partition column is restored
-    # from metadata, as everywhere in this layer)
-    src = _scan_with_partition(
-        spark, [(p, v, n) for p, v, n, _ in s3_files]
-    )
-    src.coalesce(1).write.mode("overwrite").partitionBy(
-        "o_orderpriority"
-    ).parquet(os.path.join(data_dir, "s4"))
-    compacted = _pfiles(data_dir, "s4")
-    entries = [
-        _entry(_ST_ADDED, _S4, 4, p, v) for p, v in compacted
-    ] + [
-        _entry(_ST_DELETED, _S4, s, p, v) for p, v, _, s in s3_files
-    ]
-    m4 = _write_manifest(meta_dir, "m4-compact.avro", entries)
-    l4 = _write_manifest_list(meta_dir, _S4, 4, [(m4, _S4)])
-    iceberg_meta.add_snapshot(meta, _S4, 4, _T4, l4, "replace")
-    iceberg_meta.commit_next(root, meta)
+        # rewrite: ONE distributed job reads exactly the live set and
+        # writes one file per partition (the partition column is restored
+        # from metadata, as everywhere in this layer)
+        src = _scan_with_partition(
+            spark, [(p, v, n) for p, v, n, _ in s3_files]
+        )
+        src.coalesce(1).write.mode("overwrite").partitionBy(
+            "o_orderpriority"
+        ).parquet(os.path.join(data_dir, "s4"))
+        compacted = _pfiles(data_dir, "s4")
+        entries = [
+            _entry(_ST_ADDED, _S4, 4, p, v) for p, v in compacted
+        ] + [
+            _entry(_ST_DELETED, _S4, s, p, v) for p, v, _, s in s3_files
+        ]
+        m4 = _write_manifest(meta_dir, "m4-compact.avro", entries)
+        l4 = _write_manifest_list(meta_dir, _S4, 4, [(m4, _S4)])
+        iceberg_meta.add_snapshot(meta, _S4, 4, _T4, l4, "replace")
 
     meta = iceberg_meta.load(root)
     new_live = _iceberg_files(_iceberg_snapshot(meta))[0]
@@ -2623,15 +2622,18 @@ def q_stream_iceberg_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         done_batches.add(batch_id)
 
     ckpt = tempfile.mkdtemp(prefix="iceberg_stream_ckpt_")
-    query = (
-        iceberg_meta.stream(spark, meta_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
+    try:
+        query = (
+            iceberg_meta.stream(spark, meta_dir)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        query.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     rows = [
         (int(seq), int(n), int(c)) for seq, (n, c) in sorted(acc.items())
     ]
@@ -3126,16 +3128,17 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     l4 = os.path.join(meta_dir, f"snap-{_S4}-1-fixture.avro")
     ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "3"})
-    tm = iceberg_meta.load(root)
-    tm["format-version"] = 3  # v3 commit; prior snapshots remain readable
-    # v3 REQUIRES next-row-id (spec §Table Metadata): on upgrade it
-    # initializes the row-lineage assignment counter — 0 here because
-    # no pre-upgrade file carries a first_row_id (readers treat their
-    # lineage as unavailable); the s4 delete assigns no new rows, so
-    # its first-row-id equals the counter and the counter stays put
-    tm["next-row-id"] = 0
-    iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "delete", first_row_id=0)
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        tm["format-version"] = 3  # v3 commit; prior snapshots stay readable
+        # v3 REQUIRES next-row-id (spec §Table Metadata): on upgrade it
+        # initializes the row-lineage assignment counter — 0 here because
+        # no pre-upgrade file carries a first_row_id (readers treat their
+        # lineage as unavailable); the s4 delete assigns no new rows, so
+        # its first-row-id equals the counter and the counter stays put
+        tm["next-row-id"] = 0
+        iceberg_meta.add_snapshot(
+            tm, _S4, 4, _T4, l4, "delete", first_row_id=0
+        )
 
     # --- reader: data scans with (file, pos) captured at scan level;
     # DV blobs decoded executor-side from manifest coordinates
@@ -3927,21 +3930,20 @@ def q_src_iceberg_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "iceberg_refs")
     _iceberg_stage(spark, o, root)
-    tm = iceberg_meta.load(root)
-    tm["refs"] = {
-        "main": {"snapshot-id": _S3, "type": "branch"},
-        "audit-tag": {
-            "snapshot-id": _S1,
-            "type": "tag",
-            "max-ref-age-ms": 9_000_000_000_000,
-        },
-        "wap-branch": {
-            "snapshot-id": _S2,
-            "type": "branch",
-            "min-snapshots-to-keep": 1,
-        },
-    }
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        tm["refs"] = {
+            "main": {"snapshot-id": _S3, "type": "branch"},
+            "audit-tag": {
+                "snapshot-id": _S1,
+                "type": "tag",
+                "max-ref-age-ms": 9_000_000_000_000,
+            },
+            "wap-branch": {
+                "snapshot-id": _S2,
+                "type": "branch",
+                "min-snapshots-to-keep": 1,
+            },
+        }
 
     meta = iceberg_meta.load(root)
     spine = local_rows(spark, 
@@ -4407,12 +4409,11 @@ def q_sink_iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
     before = _inventory()
-    tm = iceberg_meta.load(root)
     _T4 = _T3 + 60_000
-    tm["current-snapshot-id"] = _S1  # the rollback: a pointer flip
-    tm["snapshot-log"].append({"timestamp-ms": _T4, "snapshot-id": _S1})
-    tm["last-updated-ms"] = _T4
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        tm["current-snapshot-id"] = _S1  # the rollback: a pointer flip
+        tm["snapshot-log"].append({"timestamp-ms": _T4, "snapshot-id": _S1})
+        tm["last-updated-ms"] = _T4
     if _inventory() != before:
         raise AssertionError("rollback must not touch data files")
 

@@ -220,9 +220,8 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         ],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
 
     # --- s5: position deletes of the % 10 == 3 rows still live after
     # s4 (% 7 == 0 already gone). Positions are per-file ordinals of
@@ -281,9 +280,8 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         ],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(tm, _S5, 5, _T5, l5, "delete")
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(tm, _S5, 5, _T5, l5, "delete")
 
     # --- s6: compaction (REPLACE) of the s4 shards — per partition the
     # two shards rewrite into one seq-6 file. Safe to rewrite at seq 6
@@ -341,9 +339,8 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         ],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(tm, _S6, 6, _T6, l6, "replace")
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(tm, _S6, 6, _T6, l6, "replace")
     return root
 
 
@@ -750,16 +747,18 @@ def q_stream_iceberg_changelog(
         done_batches.add(batch_id)
 
     ckpt = tempfile.mkdtemp(prefix="iceberg_stream_cl_ckpt_")
-    query = (
-        iceberg_meta.stream(spark, meta_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        query = (
+            iceberg_meta.stream(spark, meta_dir)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        query.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     rows = [
         (o, t, n, c) for (o, t), (n, c) in sorted(acc.items()) if n
     ]
@@ -1140,22 +1139,23 @@ def _iceberg_upsert_commit(
         [_entry(_ST_ADDED, snap_id, seq, eq_path, None,
                 equality_ids=[1], content=2)],
     )
-    meta = iceberg_meta.load(root)
-    prev = _iceberg_snapshot(meta)
-    _, carried, _ = ocf_read(prev["manifest-list"])
-    recs = [
-        _mlrec(
-            m["manifest_path"], m["content"], m["sequence_number"],
-            m["added_snapshot_id"],
+    with iceberg_meta.update(root) as meta:
+        prev = _iceberg_snapshot(meta)
+        _, carried, _ = ocf_read(prev["manifest-list"])
+        recs = [
+            _mlrec(
+                m["manifest_path"], m["content"], m["sequence_number"],
+                m["added_snapshot_id"],
+            )
+            for m in carried
+        ]
+        recs.append(_mlrec(mi, 0, seq, snap_id))
+        recs.append(_mlrec(md, 1, seq, snap_id))
+        ml = os.path.join(meta_dir, f"snap-{snap_id}-1-upsert.avro")
+        ocf_write(
+            ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"}
         )
-        for m in carried
-    ]
-    recs.append(_mlrec(mi, 0, seq, snap_id))
-    recs.append(_mlrec(md, 1, seq, snap_id))
-    ml = os.path.join(meta_dir, f"snap-{snap_id}-1-upsert.avro")
-    ocf_write(ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "overwrite")
-    iceberg_meta.commit_next(root, meta)
+        iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "overwrite")
 
 
 @register("sink_iceberg_upsert", oracle=_UPSERT_ORACLE)
@@ -1275,40 +1275,41 @@ def q_sink_iceberg_rewrite_deletes(
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
 
-    meta = iceberg_meta.load(root)
-    cur = _iceberg_snapshot(meta)
-    data_files, delete_files = _iceberg_files(cur)
-    _S6 = _S3 + 3
-    if data_files:
-        # live state WITH deletes applied — the normal (shared) read path
-        df = _scan_apply_eq_deletes(spark, data_files, delete_files)
-        # rewrite: one file per partition at seq 6, deletes materialized
-        df.select(
-            "o_orderkey", "o_totalprice", "o_orderpriority"
-        ).coalesce(1).write.mode("overwrite").partitionBy(
-            "o_orderpriority"
-        ).parquet(os.path.join(data_dir, "s6"))
-        entries = [
-            _entry(_ST_ADDED, _S6, 6, p, v)
-            for p, v in _pfiles(data_dir, "s6")
-        ]
-        # prior data files leave as DELETED (visible one snapshot for
-        # incremental consumers, per spec); delete files are DROPPED —
-        # materialized, they must not survive into the new list
-        entries += [
-            _entry(_ST_DELETED, _S6, s, p, v)
-            for p, v, _, s in sorted(data_files)
-        ]
-        m6 = _write_manifest(meta_dir, "m6-rewrite-deletes.avro", entries)
-        l6 = os.path.join(meta_dir, f"snap-{_S6}-1-rewrite.avro")
-        ocf_write(
-            l6,
-            _MANIFEST_FILE_SCHEMA,
-            [_mlrec(m6, 0, 6, _S6)],
-            metadata={"format-version": "2"},
-        )
-        iceberg_meta.add_snapshot(meta, _S6, 6, _T3 + 180_000, l6, "replace")
-        iceberg_meta.commit_next(root, meta)
+    with iceberg_meta.update(root) as meta:
+        cur = _iceberg_snapshot(meta)
+        data_files, delete_files = _iceberg_files(cur)
+        _S6 = _S3 + 3
+        if data_files:
+            # live state WITH deletes applied — the normal (shared) read path
+            df = _scan_apply_eq_deletes(spark, data_files, delete_files)
+            # rewrite: one file per partition at seq 6, deletes materialized
+            df.select(
+                "o_orderkey", "o_totalprice", "o_orderpriority"
+            ).coalesce(1).write.mode("overwrite").partitionBy(
+                "o_orderpriority"
+            ).parquet(os.path.join(data_dir, "s6"))
+            entries = [
+                _entry(_ST_ADDED, _S6, 6, p, v)
+                for p, v in _pfiles(data_dir, "s6")
+            ]
+            # prior data files leave as DELETED (visible one snapshot for
+            # incremental consumers, per spec); delete files are DROPPED —
+            # materialized, they must not survive into the new list
+            entries += [
+                _entry(_ST_DELETED, _S6, s, p, v)
+                for p, v, _, s in sorted(data_files)
+            ]
+            m6 = _write_manifest(meta_dir, "m6-rewrite-deletes.avro", entries)
+            l6 = os.path.join(meta_dir, f"snap-{_S6}-1-rewrite.avro")
+            ocf_write(
+                l6,
+                _MANIFEST_FILE_SCHEMA,
+                [_mlrec(m6, 0, 6, _S6)],
+                metadata={"format-version": "2"},
+            )
+            iceberg_meta.add_snapshot(
+                meta, _S6, 6, _T3 + 180_000, l6, "replace"
+            )
 
     # --- post-maintenance read: pure scan, no delete application
     meta = iceberg_meta.load(root)
@@ -1785,25 +1786,13 @@ def q_sink_iceberg_publish_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_mlrec(m3, 0, 3, _S3), _mlrec(m4, 0, 4, _S4)],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": _S4,
-            "sequence-number": 4,
-            "timestamp-ms": _T3 + 60_000,
-            "manifest-list": l4,
-            "summary": {"operation": "append", "wap.id": "audit-1"},
-            "schema-id": 0,
-        }
-    )
-    tm["last-sequence-number"] = 4
-    # branch ref only — main and current-snapshot-id stay at s3: the
-    # write is INVISIBLE to main's readers until publish
-    tm["refs"] = {
-        "main": {"snapshot-id": _S3, "type": "branch"},
-        "audit": {"snapshot-id": _S4, "type": "branch"},
-    }
-    iceberg_meta.commit_next(root, tm)
+    # branch `audit` only — main and current-snapshot-id stay at s3:
+    # the write is INVISIBLE to main's readers until publish
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(
+            tm, _S4, 4, _T3 + 60_000, l4, "append", branch="audit",
+            summary={"operation": "append", "wap.id": "audit-1"},
+        )
 
     def _read_main(meta: dict) -> DataFrame | None:
         snap = _iceberg_snapshot(meta, ref="main")
@@ -1815,13 +1804,12 @@ def q_sink_iceberg_publish_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     before = _read_main(iceberg_meta.load(root))
 
     # PUBLISH: fast-forward main — metadata-only pointer move
-    tm = iceberg_meta.load(root)
-    tm["refs"]["main"]["snapshot-id"] = _S4
-    tm["current-snapshot-id"] = _S4
-    tm["snapshot-log"].append(
-        {"timestamp-ms": _T3 + 120_000, "snapshot-id": _S4}
-    )
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        tm["refs"]["main"]["snapshot-id"] = _S4
+        tm["current-snapshot-id"] = _S4
+        tm["snapshot-log"].append(
+            {"timestamp-ms": _T3 + 120_000, "snapshot-id": _S4}
+        )
 
     after = _read_main(iceberg_meta.load(root))
 

@@ -70,29 +70,28 @@ def iceberg_create_ref(
     a named pin, not an upsert."""
     if kind not in ("tag", "branch"):
         raise ValueError(f"ref type must be tag or branch, got {kind!r}")
-    tm = iceberg_meta.load(root)
-    if snapshot_id not in {s["snapshot-id"] for s in tm["snapshots"]}:
-        raise ValueError(f"snapshot {snapshot_id} not in table metadata")
-    refs = tm.setdefault(
-        "refs",
-        {
-            "main": {
-                "snapshot-id": tm["current-snapshot-id"],
-                "type": "branch",
-            }
-        },
-    )
-    if name in refs:
-        raise ValueError(f"ref {name!r} already exists")
-    entry: dict = {"snapshot-id": snapshot_id, "type": kind}
-    if max_ref_age_ms is not None:
-        entry["max-ref-age-ms"] = int(max_ref_age_ms)
-    if min_snapshots_to_keep is not None:
-        if kind != "branch":
-            raise ValueError("min-snapshots-to-keep is branch-only")
-        entry["min-snapshots-to-keep"] = int(min_snapshots_to_keep)
-    refs[name] = entry
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        if snapshot_id not in {s["snapshot-id"] for s in tm["snapshots"]}:
+            raise ValueError(f"snapshot {snapshot_id} not in table metadata")
+        refs = tm.setdefault(
+            "refs",
+            {
+                "main": {
+                    "snapshot-id": tm["current-snapshot-id"],
+                    "type": "branch",
+                }
+            },
+        )
+        if name in refs:
+            raise ValueError(f"ref {name!r} already exists")
+        entry: dict = {"snapshot-id": snapshot_id, "type": kind}
+        if max_ref_age_ms is not None:
+            entry["max-ref-age-ms"] = int(max_ref_age_ms)
+        if min_snapshots_to_keep is not None:
+            if kind != "branch":
+                raise ValueError("min-snapshots-to-keep is branch-only")
+            entry["min-snapshots-to-keep"] = int(min_snapshots_to_keep)
+        refs[name] = entry
 
 
 def iceberg_expire_refs(root: str, now_ms: int) -> list[str]:
@@ -103,22 +102,20 @@ def iceberg_expire_refs(root: str, now_ms: int) -> list[str]:
     a tag on an old snapshot ages with that snapshot). Returns the
     expired names; `main` and refs without max-ref-age-ms are kept
     forever."""
-    tm = iceberg_meta.load(root)
-    by_id = {s["snapshot-id"]: s for s in tm["snapshots"]}
-    refs = tm.get("refs") or {}
-    expired = sorted(
-        name
-        for name, r in refs.items()
-        if name != "main"
-        and r.get("max-ref-age-ms") is not None
-        and r["snapshot-id"] in by_id
-        and now_ms - by_id[r["snapshot-id"]]["timestamp-ms"]
-        > r["max-ref-age-ms"]
-    )
-    if expired:
+    with iceberg_meta.update(root) as tm:
+        by_id = {s["snapshot-id"]: s for s in tm["snapshots"]}
+        refs = tm.get("refs") or {}
+        expired = sorted(
+            name
+            for name, r in refs.items()
+            if name != "main"
+            and r.get("max-ref-age-ms") is not None
+            and r["snapshot-id"] in by_id
+            and now_ms - by_id[r["snapshot-id"]]["timestamp-ms"]
+            > r["max-ref-age-ms"]
+        )
         for name in expired:
             del refs[name]
-        iceberg_meta.commit_next(root, tm)
     return expired
 
 
@@ -175,8 +172,9 @@ def _branch_commit(
     data_written: bool = False,
 ) -> None:
     """One branch-only APPEND: new data files + manifest, manifest list
-    = the s3 base manifest + the new one, snapshot appended WITHOUT
-    moving main or current-snapshot-id (the WAP write shape).
+    = the s3 base manifest + the new one, snapshot STAGED: appended
+    without moving main or current-snapshot-id, and without a ref until
+    the caller creates one (the WAP write shape).
     ``data_written`` skips the data write when the caller already
     landed the slice (so independent branch payloads can be written as
     concurrent jobs before their metadata commits apply in order)."""
@@ -200,19 +198,10 @@ def _branch_commit(
         [_mlrec(m3, 0, 3, _S3), _mlrec(m, 0, seq, snap_id)],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": ts,
-            "manifest-list": ml,
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        }
-    )
-    tm["last-sequence-number"] = max(tm.get("last-sequence-number", 0), seq)
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(
+            tm, snap_id, seq, ts, ml, "append", branch=None
+        )
 
 
 @register("sink_iceberg_ref_lifecycle", oracle=_REF_LIFECYCLE_ORACLE)
@@ -663,74 +652,73 @@ def iceberg_delete_where(
     Returns the number of delete files committed (0 = no-op, no
     commit)."""
     meta_dir = os.path.join(root, "metadata")
-    meta = iceberg_meta.load(root)
-    snap = _iceberg_snapshot(meta)
-    data_files, delete_files = _iceberg_files(snap)
-    rows = _scan_apply_pos_deletes(spark, data_files, delete_files)
-    if rows is None:
-        return 0
-    hits = rows.filter(predicate).select("o_orderpriority", "_fp", "_pos")
-    _meta_dir, _seq = meta_dir, seq
+    with iceberg_meta.update(root) as meta:
+        snap = _iceberg_snapshot(meta)
+        data_files, delete_files = _iceberg_files(snap)
+        rows = _scan_apply_pos_deletes(spark, data_files, delete_files)
+        if rows is None:
+            return 0
+        hits = rows.filter(predicate).select("o_orderpriority", "_fp", "_pos")
+        _meta_dir, _seq = meta_dir, seq
 
-    def _write_posdel(pdf):
-        import os as _os
+        def _write_posdel(pdf):
+            import os as _os
 
-        import pandas as _pd
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
+            import pandas as _pd
+            import pyarrow as _pa
+            import pyarrow.parquet as _pq
 
-        pval = pdf["o_orderpriority"].iloc[0]
-        pairs = sorted(
-            zip(pdf["_fp"], (int(x) for x in pdf["_pos"]))
-        )  # spec: delete files sort by (file_path, pos)
-        path = _os.path.join(
-            _meta_dir,
-            f"posdel-{str(pval).replace(' ', '_')}-s{_seq}.parquet",
+            pval = pdf["o_orderpriority"].iloc[0]
+            pairs = sorted(
+                zip(pdf["_fp"], (int(x) for x in pdf["_pos"]))
+            )  # spec: delete files sort by (file_path, pos)
+            path = _os.path.join(
+                _meta_dir,
+                f"posdel-{str(pval).replace(' ', '_')}-s{_seq}.parquet",
+            )
+            _pq.write_table(
+                _pa.table(
+                    {
+                        "file_path": _pa.array(
+                            [p for p, _ in pairs], _pa.string()
+                        ),
+                        "pos": _pa.array([x for _, x in pairs], _pa.int64()),
+                    }
+                ),
+                path,
+            )
+            return _pd.DataFrame({"pval": [str(pval)], "path": [path]})
+
+        descs = sorted(
+            (r["pval"], r["path"])
+            for r in hits.groupBy("o_orderpriority")
+            .applyInPandas(_write_posdel, schema="pval string, path string")
+            .collect()  # O(touched partitions): the commit's delete files
         )
-        _pq.write_table(
-            _pa.table(
-                {
-                    "file_path": _pa.array(
-                        [p for p, _ in pairs], _pa.string()
-                    ),
-                    "pos": _pa.array([x for _, x in pairs], _pa.int64()),
-                }
-            ),
-            path,
+        if not descs:
+            return 0
+        m_del = _write_manifest(
+            meta_dir,
+            f"m{seq}-delete-where.avro",
+            [
+                _entry(_ST_ADDED, snap_id, seq, path, pval, content=1)
+                for pval, path in descs
+            ],
         )
-        return _pd.DataFrame({"pval": [str(pval)], "path": [path]})
-
-    descs = sorted(
-        (r["pval"], r["path"])
-        for r in hits.groupBy("o_orderpriority")
-        .applyInPandas(_write_posdel, schema="pval string, path string")
-        .collect()  # O(touched partitions): the commit's delete files
-    )
-    if not descs:
-        return 0
-    m_del = _write_manifest(
-        meta_dir,
-        f"m{seq}-delete-where.avro",
-        [
-            _entry(_ST_ADDED, snap_id, seq, path, pval, content=1)
-            for pval, path in descs
-        ],
-    )
-    _, carried, _ = ocf_read(snap["manifest-list"])
-    recs = [
-        _mlrec(
-            m["manifest_path"], m["content"], m["sequence_number"],
-            m["added_snapshot_id"],
+        _, carried, _ = ocf_read(snap["manifest-list"])
+        recs = [
+            _mlrec(
+                m["manifest_path"], m["content"], m["sequence_number"],
+                m["added_snapshot_id"],
+            )
+            for m in carried
+        ]
+        recs.append(_mlrec(m_del, 1, seq, snap_id))
+        ml = os.path.join(meta_dir, f"snap-{snap_id}-1-delete-where.avro")
+        ocf_write(
+            ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"}
         )
-        for m in carried
-    ]
-    recs.append(_mlrec(m_del, 1, seq, snap_id))
-    ml = os.path.join(meta_dir, f"snap-{snap_id}-1-delete-where.avro")
-    ocf_write(
-        ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"}
-    )
-    iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "delete")
-    iceberg_meta.commit_next(root, meta)
+        iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "delete")
     return len(descs)
 
 
@@ -1164,49 +1152,50 @@ def iceberg_alter_schema(
     unknown field ids, duplicate names, and id reuse — the failure
     modes that silently corrupt projection. Returns the new schema id.
     """
-    tm = iceberg_meta.load(root)
-    cur = next(
-        s for s in tm["schemas"] if s["schema-id"] == tm["current-schema-id"]
-    )
-    fields = [dict(f) for f in cur["fields"]]
-    names = {f["name"] for f in fields}
-    last_id = tm.get("last-column-id", max(f["id"] for f in fields))
-    mapping = json.loads(
-        (tm.get("properties") or {}).get(
-            "schema.name-mapping.default", "null"
+    with iceberg_meta.update(root) as tm:
+        cur = next(
+            s
+            for s in tm["schemas"]
+            if s["schema-id"] == tm["current-schema-id"]
         )
-    ) or [{"field-id": f["id"], "names": [f["name"]]} for f in fields]
-    by_id = {m["field-id"]: m for m in mapping}
-    for fid, new_name in sorted((rename or {}).items()):
-        fld = next((f for f in fields if f["id"] == fid), None)
-        if fld is None:
-            raise ValueError(f"no field with id {fid} in current schema")
-        if new_name in names:
-            raise ValueError(f"column name {new_name!r} already in use")
-        names.discard(fld["name"])
-        fld["name"] = new_name
-        names.add(new_name)
-        if new_name not in by_id[fid]["names"]:
-            by_id[fid]["names"].append(new_name)
-    for name, typ in add or []:
-        if name in names:
-            raise ValueError(f"column name {name!r} already in use")
-        last_id += 1
-        fields.append(
-            {"id": last_id, "name": name, "required": False, "type": typ}
+        fields = [dict(f) for f in cur["fields"]]
+        names = {f["name"] for f in fields}
+        last_id = tm.get("last-column-id", max(f["id"] for f in fields))
+        mapping = json.loads(
+            (tm.get("properties") or {}).get(
+                "schema.name-mapping.default", "null"
+            )
+        ) or [{"field-id": f["id"], "names": [f["name"]]} for f in fields]
+        by_id = {m["field-id"]: m for m in mapping}
+        for fid, new_name in sorted((rename or {}).items()):
+            fld = next((f for f in fields if f["id"] == fid), None)
+            if fld is None:
+                raise ValueError(f"no field with id {fid} in current schema")
+            if new_name in names:
+                raise ValueError(f"column name {new_name!r} already in use")
+            names.discard(fld["name"])
+            fld["name"] = new_name
+            names.add(new_name)
+            if new_name not in by_id[fid]["names"]:
+                by_id[fid]["names"].append(new_name)
+        for name, typ in add or []:
+            if name in names:
+                raise ValueError(f"column name {name!r} already in use")
+            last_id += 1
+            fields.append(
+                {"id": last_id, "name": name, "required": False, "type": typ}
+            )
+            names.add(name)
+            mapping.append({"field-id": last_id, "names": [name]})
+        new_id = max(s["schema-id"] for s in tm["schemas"]) + 1
+        tm["schemas"].append(
+            {"type": "struct", "schema-id": new_id, "fields": fields}
         )
-        names.add(name)
-        mapping.append({"field-id": last_id, "names": [name]})
-    new_id = max(s["schema-id"] for s in tm["schemas"]) + 1
-    tm["schemas"].append(
-        {"type": "struct", "schema-id": new_id, "fields": fields}
-    )
-    tm["current-schema-id"] = new_id
-    tm["last-column-id"] = last_id
-    tm.setdefault("properties", {})["schema.name-mapping.default"] = (
-        json.dumps(mapping)
-    )
-    iceberg_meta.commit_next(root, tm)
+        tm["current-schema-id"] = new_id
+        tm["last-column-id"] = last_id
+        tm.setdefault("properties", {})["schema.name-mapping.default"] = (
+            json.dumps(mapping)
+        )
     return new_id
 
 
@@ -1336,12 +1325,11 @@ def q_sink_iceberg_schema_evolution(
     ml2 = _write_manifest_list(
         meta_dir, _S2loc, 2, [(m1, _S1), (m2, _S2loc)]
     )
-    tm = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(
-        tm, _S2loc, 2, _T1 + 60_000, ml2, "append",
-        schema_id=tm["current-schema-id"],
-    )
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(
+            tm, _S2loc, 2, _T1 + 60_000, ml2, "append",
+            schema_id=tm["current-schema-id"],
+        )
 
     df = _scan_with_name_mapping(spark, iceberg_meta.load(root))
     if df is None:

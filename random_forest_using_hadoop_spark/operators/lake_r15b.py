@@ -53,33 +53,32 @@ def iceberg_set_sort_order(root: str, source_id: int) -> int:
     flip `default-sort-order-id`, one metadata-only commit (spec
     §Sort Orders: orders are immutable and additive, like schemas and
     partition specs). O(1) regardless of table size."""
-    tm = iceberg_meta.load(root)
-    existing = tm.get("sort-orders") or [{"order-id": 0, "fields": []}]
-    field_names = {
-        f["id"]: f["name"]
-        for s in tm["schemas"]
-        for f in s["fields"]
-    }
-    if source_id not in field_names:
-        raise ValueError(
-            f"WRITE ORDERED BY references unknown field id {source_id}"
-        )
-    order_id = max(o["order-id"] for o in existing) + 1
-    tm["sort-orders"] = existing + [
-        {
-            "order-id": order_id,
-            "fields": [
-                {
-                    "transform": "identity",
-                    "source-id": source_id,
-                    "direction": "asc",
-                    "null-order": "nulls-first",
-                }
-            ],
+    with iceberg_meta.update(root) as tm:
+        existing = tm.get("sort-orders") or [{"order-id": 0, "fields": []}]
+        field_names = {
+            f["id"]: f["name"]
+            for s in tm["schemas"]
+            for f in s["fields"]
         }
-    ]
-    tm["default-sort-order-id"] = order_id
-    iceberg_meta.commit_next(root, tm)
+        if source_id not in field_names:
+            raise ValueError(
+                f"WRITE ORDERED BY references unknown field id {source_id}"
+            )
+        order_id = max(o["order-id"] for o in existing) + 1
+        tm["sort-orders"] = existing + [
+            {
+                "order-id": order_id,
+                "fields": [
+                    {
+                        "transform": "identity",
+                        "source-id": source_id,
+                        "direction": "asc",
+                        "null-order": "nulls-first",
+                    }
+                ],
+            }
+        ]
+        tm["default-sort-order-id"] = order_id
     return order_id
 
 
@@ -192,42 +191,44 @@ def q_sink_iceberg_sort_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ALTER TABLE ... WRITE ORDERED BY o_totalprice (field id 2)
     iceberg_set_sort_order(root, source_id=2)
-    tm = iceberg_meta.load(root)
-    if tm["default-sort-order-id"] != 1:
-        raise ValueError("sort-order commit did not take effect")
+    with iceberg_meta.update(root) as tm:
+        if tm["default-sort-order-id"] != 1:
+            raise ValueError("sort-order commit did not take effect")
 
-    # sorted write planned FROM the declared order, then commit with bounds
-    _sorted_write_plan(tm, o, 8).write.mode("overwrite").parquet(
-        os.path.join(data_dir, "s1")
-    )
-    import pyarrow.parquet as pq
-
-    base = os.path.join(data_dir, "s1")
-    entries, ranges = [], []
-    for f in sorted(os.listdir(base)):
-        if not f.endswith(".parquet"):
-            continue
-        path = os.path.join(base, f)
-        md = pq.ParquetFile(path).metadata
-        if md.num_rows == 0:
-            continue
-        idx = md.schema.to_arrow_schema().names.index("o_totalprice")
-        stats = [
-            md.row_group(rg).column(idx).statistics
-            for rg in range(md.num_row_groups)
-        ]
-        lo = min(s.min for s in stats)
-        hi = max(s.max for s in stats)
-        ranges.append((lo, hi, path))
-        bounds = (
-            [{"key": 2, "value": _sv_double(lo)}],
-            [{"key": 2, "value": _sv_double(hi)}],
+        # sorted write planned FROM the declared order, then commit with
+        # bounds
+        _sorted_write_plan(tm, o, 8).write.mode("overwrite").parquet(
+            os.path.join(data_dir, "s1")
         )
-        entries.append(_entry(_ST_ADDED, _S1, 1, path, None, bounds=bounds))
-    m1 = _write_manifest(meta_dir, "m1-sorted.avro", entries)
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
-    iceberg_meta.add_snapshot(tm, _S1, 1, _T1, l1, "append")
-    iceberg_meta.commit_next(root, tm)
+        import pyarrow.parquet as pq
+
+        base = os.path.join(data_dir, "s1")
+        entries, ranges = [], []
+        for f in sorted(os.listdir(base)):
+            if not f.endswith(".parquet"):
+                continue
+            path = os.path.join(base, f)
+            md = pq.ParquetFile(path).metadata
+            if md.num_rows == 0:
+                continue
+            idx = md.schema.to_arrow_schema().names.index("o_totalprice")
+            stats = [
+                md.row_group(rg).column(idx).statistics
+                for rg in range(md.num_row_groups)
+            ]
+            lo = min(s.min for s in stats)
+            hi = max(s.max for s in stats)
+            ranges.append((lo, hi, path))
+            bounds = (
+                [{"key": 2, "value": _sv_double(lo)}],
+                [{"key": 2, "value": _sv_double(hi)}],
+            )
+            entries.append(
+                _entry(_ST_ADDED, _S1, 1, path, None, bounds=bounds)
+            )
+        m1 = _write_manifest(meta_dir, "m1-sorted.avro", entries)
+        l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+        iceberg_meta.add_snapshot(tm, _S1, 1, _T1, l1, "append")
 
     # gate 1: pairwise-disjoint file ranges (the sorted-write contract)
     ranges.sort()
@@ -1122,39 +1123,38 @@ def q_src_iceberg_partition_stats(
     _iceberg_stage(spark, o, root)
 
     # build the rollup from the CURRENT snapshot's live entries
-    tm = iceberg_meta.load(root)
-    snap = _iceberg_snapshot(tm, None)
-    _, mlist, _ = ocf_read(snap["manifest-list"])
-    per_part: dict[str, list[int, int]] = {}
-    for m in mlist:
-        _, entries, _ = ocf_read(m["manifest_path"])
-        for e in entries:
-            if e["status"] == 2:  # DELETED: not live
-                continue
-            pval = next(iter(e["data_file"]["partition"].values()))
-            agg = per_part.setdefault(pval, [0, 0])
-            agg[0] += 1
-            agg[1] += e["data_file"]["record_count"]
-    stats_dir = os.path.join(root, "metadata", "partition-stats-s3")
-    local_rows(spark, 
-        [(p, c[0], c[1]) for p, c in sorted(per_part.items())],
-        "partition_value string, data_file_count bigint, "
-        "data_record_count bigint",
-    ).coalesce(1).write.mode("overwrite").parquet(stats_dir)
+    with iceberg_meta.update(root) as tm:
+        snap = _iceberg_snapshot(tm, None)
+        _, mlist, _ = ocf_read(snap["manifest-list"])
+        per_part: dict[str, list[int, int]] = {}
+        for m in mlist:
+            _, entries, _ = ocf_read(m["manifest_path"])
+            for e in entries:
+                if e["status"] == 2:  # DELETED: not live
+                    continue
+                pval = next(iter(e["data_file"]["partition"].values()))
+                agg = per_part.setdefault(pval, [0, 0])
+                agg[0] += 1
+                agg[1] += e["data_file"]["record_count"]
+        stats_dir = os.path.join(root, "metadata", "partition-stats-s3")
+        local_rows(spark, 
+            [(p, c[0], c[1]) for p, c in sorted(per_part.items())],
+            "partition_value string, data_file_count bigint, "
+            "data_record_count bigint",
+        ).coalesce(1).write.mode("overwrite").parquet(stats_dir)
 
-    # register in table metadata (one metadata-only commit)
-    tm["partition-statistics"] = [
-        {
-            "snapshot-id": _S3,
-            "statistics-path": stats_dir,
-            "file-size-in-bytes": sum(
-                os.path.getsize(os.path.join(stats_dir, f))
-                for f in os.listdir(stats_dir)
-                if f.endswith(".parquet")
-            ),
-        }
-    ]
-    iceberg_meta.commit_next(root, tm)
+        # register in table metadata (one metadata-only commit)
+        tm["partition-statistics"] = [
+            {
+                "snapshot-id": _S3,
+                "statistics-path": stats_dir,
+                "file-size-in-bytes": sum(
+                    os.path.getsize(os.path.join(stats_dir, f))
+                    for f in os.listdir(stats_dir)
+                    if f.endswith(".parquet")
+                ),
+            }
+        ]
 
     # read path: discovery through the committed metadata only
     tm2 = iceberg_meta.load(root)
@@ -1259,23 +1259,10 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_mlrec(m3, 0, 3, _S3), _mlrec(m4, 0, 4, s4)],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    tm["snapshots"].append(
-        {
-            "snapshot-id": s4,
-            "sequence-number": 4,
-            "timestamp-ms": _T3 + 60_000,
-            "manifest-list": l4,
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        }
-    )
-    tm["last-sequence-number"] = 4
-    tm["refs"] = {
-        "main": {"snapshot-id": _S3, "type": "branch"},
-        "feature": {"snapshot-id": s4, "type": "branch"},
-    }
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(
+            tm, s4, 4, _T3 + 60_000, l4, "append", branch="feature"
+        )
 
     # s5 lands on MAIN independently: urgent ODDS at +2
     o.filter(
@@ -1298,10 +1285,8 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_mlrec(m3, 0, 3, _S3), _mlrec(m5, 0, 5, s5)],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(tm, s5, 5, _T3 + 120_000, l5, "append")
-    tm["refs"]["main"]["snapshot-id"] = s5
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(tm, s5, 5, _T3 + 120_000, l5, "append")
 
     def _data_inventory() -> dict[str, int]:
         out = {}
@@ -1333,13 +1318,11 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         metadata={"format-version": "2"},
     )
-    tm = iceberg_meta.load(root)
-    iceberg_meta.add_snapshot(
-        tm, s6, 6, _T3 + 180_000, l6, "append",
-        summary={"operation": "append", "source-snapshot-id": str(s4)},
-    )
-    tm["refs"]["main"]["snapshot-id"] = s6
-    iceberg_meta.commit_next(root, tm)
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(
+            tm, s6, 6, _T3 + 180_000, l6, "append",
+            summary={"operation": "append", "source-snapshot-id": str(s4)},
+        )
 
     # gates: shared data files, untouched branch, recorded provenance
     if _data_inventory() != inv_before:

@@ -30,12 +30,15 @@ from random_forest_using_hadoop_spark.helpers import (
 )
 
 from random_forest_using_hadoop_spark.operators.hudi import (
-    _hudi_base_files,
-    _hudi_completed_commits,
+    _ORDERS,
     _hudi_snapshot_files,
     _hudi_stage,
 )
-from random_forest_using_hadoop_spark import delta_log, iceberg_meta
+from random_forest_using_hadoop_spark import (
+    delta_log,
+    hudi_timeline,
+    iceberg_meta,
+)
 from random_forest_using_hadoop_spark.operators.scans import _tmp
 from random_forest_using_hadoop_spark.registry import register
 from random_forest_using_hadoop_spark.sources import load_table
@@ -102,9 +105,9 @@ def q_sink_hudi_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
 
     # plan: per file group, completed slices older than the latest one
-    completed = set(_hudi_completed_commits(root))
+    completed = set(hudi_timeline.completed(root))
     latest: dict[tuple[str, str], str] = {}
-    for bf in _hudi_base_files(root):
+    for bf in hudi_timeline.base_files(root):
         if bf["instant"] not in completed:
             continue
         key = (bf["partition"], bf["file_id"])
@@ -112,7 +115,7 @@ def q_sink_hudi_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
             latest[key] = bf["instant"]
     to_clean = [
         bf
-        for bf in _hudi_base_files(root)
+        for bf in hudi_timeline.base_files(root)
         if bf["instant"] in completed
         and bf["instant"] < latest[(bf["partition"], bf["file_id"])]
     ]
@@ -127,39 +130,35 @@ def q_sink_hudi_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned_groups = {(b["partition"], b["file_id"]) for b in to_clean}
     c1_groups_before = {
         (bf["partition"], bf["file_id"])
-        for bf in _hudi_base_files(root)
+        for bf in hudi_timeline.base_files(root)
         if bf["instant"] == c1
     }
 
     # execute + commit the .clean action
     c4 = "20240104000000"
-    hdir = os.path.join(root, ".hoodie")
+    hudi_timeline.begin(root, c4, "clean")
     per_part: dict[str, list[str]] = {}
     for bf in to_clean:
         os.remove(bf["path"])
         per_part.setdefault(bf["partition"], []).append(
             os.path.basename(bf["path"])
         )
-    for suffix in (".clean.requested", ".clean.inflight", ".clean"):
-        with open(os.path.join(hdir, f"{c4}{suffix}"), "w") as fh:
-            if suffix == ".clean":
-                json.dump(
-                    {
-                        "policy": "KEEP_LATEST_FILE_VERSIONS",
-                        "retained": 1,
-                        "partitionMetadata": {
-                            p: {"deletePathPatterns": fs}
-                            for p, fs in per_part.items()
-                        },
-                    },
-                    fh,
-                )
-            else:
-                fh.write("")
+    hudi_timeline.complete(
+        root,
+        c4,
+        "clean",
+        {
+            "policy": "KEEP_LATEST_FILE_VERSIONS",
+            "retained": 1,
+            "partitionMetadata": {
+                p: {"deletePathPatterns": fs} for p, fs in per_part.items()
+            },
+        },
+    )
 
     # gate: poison (incomplete c3) survived; latest snapshot unchanged
     poison = [
-        bf for bf in _hudi_base_files(root) if bf["instant"] == c3
+        bf for bf in hudi_timeline.base_files(root) if bf["instant"] == c3
     ]
     if not poison:
         raise ValueError("cleaner reclaimed an incomplete instant's file")
@@ -226,37 +225,22 @@ def _snapshot_files_replace_aware(
     replacecommit ≤ the horizon. Time travel BELOW a replace instant
     still serves the replaced groups — that is the whole point of
     keeping them on disk until the cleaner's retention expires."""
-    completed = set(_hudi_completed_commits(root))
-    tdir = os.path.join(root, ".hoodie")
-    horizon = as_of or max(
-        list(completed)
-        + [
-            f.split(".")[0]
-            for f in os.listdir(tdir)
-            if f.endswith(".replacecommit")
-        ]
-    )
-    dead: set[tuple[str, str]] = set()
-    for f in sorted(os.listdir(tdir)):
-        if not f.endswith(".replacecommit"):
-            continue
-        instant = f.split(".")[0]
-        if instant > horizon:
-            continue
-        with open(os.path.join(tdir, f)) as fh:
-            meta = json.load(fh)
-        for part, fids in meta.get("partitionToReplaceFileIds", {}).items():
-            dead.update((part, fid) for fid in fids)
     # replacecommits are completed commits for slice visibility too:
     # their own new files must be readable at >= their instant
-    rc = {
-        f.split(".")[0]
-        for f in os.listdir(tdir)
-        if f.endswith(".replacecommit")
-    }
+    completed = set(
+        hudi_timeline.completed(root, ("commit", "replacecommit"))
+    )
+    horizon = as_of or max(completed)
+    dead: set[tuple[str, str]] = set()
+    for instant in hudi_timeline.completed(root, ("replacecommit",)):
+        if instant > horizon:
+            continue
+        meta = hudi_timeline.read(root, instant, "replacecommit")
+        for part, fids in meta.get("partitionToReplaceFileIds", {}).items():
+            dead.update((part, fid) for fid in fids)
     best: dict[tuple[str, str], dict] = {}
-    for bf in _hudi_base_files(root):
-        if bf["instant"] not in (completed | rc) or bf["instant"] > horizon:
+    for bf in hudi_timeline.base_files(root):
+        if bf["instant"] not in completed or bf["instant"] > horizon:
             continue
         key = (bf["partition"], bf["file_id"])
         if key in dead:
@@ -299,60 +283,28 @@ def q_sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "hudi_cluster")
     shutil.rmtree(root, ignore_errors=True)
-    hdir = os.path.join(root, ".hoodie")
-    os.makedirs(hdir, exist_ok=True)
-    with open(os.path.join(hdir, "hoodie.properties"), "w") as fh:
-        fh.write(
-            "hoodie.table.name=orders_clustered\n"
-            "hoodie.table.type=COPY_ON_WRITE\n"
-            "hoodie.table.version=6\n"
-            "hoodie.table.recordkey.fields=o_orderkey\n"
-            "hoodie.table.partition.fields=o_orderpriority\n"
-        )
+    hudi_timeline.create(root, "orders_clustered", "COPY_ON_WRITE", **_ORDERS)
     c1, c2 = "20240101000000", "20240102000000"
     urgent = "1-URGENT"
 
     # c1: one distributed write fans the hot partition into _N_SMALL
     # groups (o_orderkey % _N_SMALL) and every other partition into one
-    scratch = os.path.join(root, "_scratch_c1")
-    o.withColumn(
-        "pp",
+    prio = F.col("o_orderpriority")
+    hudi_timeline.begin(root, c1, "commit")
+    hudi_timeline.write_slices(
+        o,
+        root,
+        c1,
+        prio,
         F.when(
-            F.col("o_orderpriority") == urgent,
+            prio == urgent,
             F.concat(
-                F.lit(f"{urgent}--"),
+                F.lit(f"fg-{urgent}-"),
                 (F.col("o_orderkey") % _N_SMALL).cast("string"),
             ),
-        ).otherwise(F.col("o_orderpriority")),
-    ).repartition("pp").write.partitionBy("pp").mode("overwrite").parquet(
-        scratch
+        ).otherwise(F.concat(F.lit("fg-"), prio)),
     )
-    for d in os.listdir(scratch):
-        if not d.startswith("pp="):
-            continue
-        token = d[3:]
-        if token.startswith(f"{urgent}--"):
-            part, sub = urgent, token[len(urgent) + 2 :]
-            fid = f"fg-{part}-{sub}"
-        else:
-            part, fid = token, f"fg-{token}"
-        pdir = os.path.join(root, part)
-        os.makedirs(pdir, exist_ok=True)
-        parts = [
-            f
-            for f in os.listdir(os.path.join(scratch, d))
-            if f.endswith(".parquet")
-        ]
-        if len(parts) != 1:
-            raise ValueError(f"expected 1 file per group, got {parts}")
-        os.rename(
-            os.path.join(scratch, d, parts[0]),
-            os.path.join(pdir, f"{fid}_0-1-0_{c1}.parquet"),
-        )
-    shutil.rmtree(scratch, ignore_errors=True)
-    for suffix in (".commit.requested", ".inflight", ".commit"):
-        with open(os.path.join(hdir, f"{c1}{suffix}"), "w") as fh:
-            fh.write("{}" if suffix == ".commit" else "")
+    hudi_timeline.complete(root, c1, "commit", {})
 
     before_files = _snapshot_files_replace_aware(root)
     n_before_urgent = sum(
@@ -382,46 +334,31 @@ def q_sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .sortWithinPartitions("o_orderkey")
     )
-    scratch = os.path.join(root, "_scratch_c2")
-    shutil.rmtree(scratch, ignore_errors=True)
-    clustered.write.mode("overwrite").parquet(scratch)
-    src = [f for f in os.listdir(scratch) if f.endswith(".parquet")]
-    if len(src) != 1:
-        raise ValueError(f"clustered write produced {len(src)} files")
-    new_name = f"fg-{urgent}-clustered_0-1-0_{c2}.parquet"
-    os.rename(
-        os.path.join(scratch, src[0]),
-        os.path.join(root, urgent, new_name),
+    hudi_timeline.begin(root, c2, "replacecommit")
+    (new_file,) = hudi_timeline.write_slices(
+        clustered, root, c2, urgent, f"fg-{urgent}-clustered"
     )
-    shutil.rmtree(scratch, ignore_errors=True)
     replaced = sorted(
         os.path.basename(f).split("_")[0] for f in before_files
         if f"/{urgent}/" in f
     )
-    for suffix in (
-        ".replacecommit.requested",
-        ".replacecommit.inflight",
-        ".replacecommit",
-    ):
-        with open(os.path.join(hdir, f"{c2}{suffix}"), "w") as fh:
-            if suffix == ".replacecommit":
-                json.dump(
-                    {
-                        "operationType": "CLUSTER",
-                        "partitionToReplaceFileIds": {urgent: replaced},
-                        "partitionToWriteStats": {
-                            urgent: {"fileId": f"fg-{urgent}-clustered"}
-                        },
-                    },
-                    fh,
-                )
-            else:
-                fh.write("")
+    hudi_timeline.complete(
+        root,
+        c2,
+        "replacecommit",
+        {
+            "operationType": "CLUSTER",
+            "partitionToReplaceFileIds": {urgent: replaced},
+            "partitionToWriteStats": {
+                urgent: {"fileId": f"fg-{urgent}-clustered"}
+            },
+        },
+    )
 
     # gates
     after_files = _snapshot_files_replace_aware(root)
     urgent_after = [f for f in after_files if f"/{urgent}/" in f]
-    if urgent_after != [os.path.join(root, urgent, new_name)]:
+    if urgent_after != [new_file]:
         raise ValueError(f"replace resolution wrong: {urgent_after}")
     tt_files = _snapshot_files_replace_aware(root, as_of=c1)
     if sum(1 for f in tt_files if f"/{urgent}/" in f) != n_before_urgent:
@@ -450,7 +387,7 @@ def q_sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield _pd.DataFrame({"bad": _pd.Series([bad], dtype="int64")})
 
     viol = (
-        spark.read.parquet(os.path.join(root, urgent, new_name))
+        spark.read.parquet(new_file)
         .select("o_orderkey")
         .coalesce(1)
         .mapInPandas(_mono, schema="bad long")
@@ -594,7 +531,6 @@ def q_sink_iceberg_rewrite_manifests(
         _ST_EXISTING,
         _iceberg_files,
         _iceberg_snapshot,
-        _orders_meta,
         _scan_with_partition,
         _write_manifest,
         _write_manifest_list,
@@ -603,54 +539,50 @@ def q_sink_iceberg_rewrite_manifests(
     root = _tmp(sf_dir, "iceberg_rwm")
     _stage_many_appends(spark, sf_dir, root)
     meta_dir = os.path.join(root, "metadata")
-    meta = iceberg_meta.load(root)
-    snap = _iceberg_snapshot(meta)
-    _, mlist, _ = ocf_read(snap["manifest-list"])
-    if len(mlist) != _RWM_N:
-        raise ValueError(f"fixture staged {len(mlist)} manifests")
+    with iceberg_meta.update(root) as meta:
+        snap = _iceberg_snapshot(meta)
+        _, mlist, _ = ocf_read(snap["manifest-list"])
+        if len(mlist) != _RWM_N:
+            raise ValueError(f"fixture staged {len(mlist)} manifests")
 
-    def _data_md5s() -> dict[str, str]:
-        out = {}
-        for p, _, _, _ in _iceberg_files(snap)[0]:
-            with open(p, "rb") as fh:
-                out[p] = hashlib.md5(fh.read()).hexdigest()
-        return out
+        def _data_md5s() -> dict[str, str]:
+            out = {}
+            for p, _, _, _ in _iceberg_files(snap)[0]:
+                with open(p, "rb") as fh:
+                    out[p] = hashlib.md5(fh.read()).hexdigest()
+            return out
 
-    before_md5 = _data_md5s()
-    before = _scan_with_partition(
-        spark, [(p, v, n) for p, v, n, _ in _iceberg_files(snap)[0]]
-    ).localCheckpoint()
+        before_md5 = _data_md5s()
+        before = _scan_with_partition(
+            spark, [(p, v, n) for p, v, n, _ in _iceberg_files(snap)[0]]
+        ).localCheckpoint()
 
-    # fold every live entry into one manifest, inheritance preserved
-    want_seq: dict[str, tuple[int, int]] = {}
-    folded = []
-    for m in mlist:
-        _, entries, _ = ocf_read(m["manifest_path"])
-        for e in entries:
-            if e["status"] == _ST_DELETED:
-                continue
-            e2 = dict(e)
-            e2["status"] = _ST_EXISTING
-            folded.append(e2)
-            want_seq[e["data_file"]["file_path"]] = (
-                e["sequence_number"],
-                e["snapshot_id"],
-            )
-    new_sid = _RWM_SB + _RWM_N
-    new_seq = meta["last-sequence-number"] + 1
-    m_new = _write_manifest(meta_dir, "m-rewritten.avro", folded)
-    l_new = _write_manifest_list(meta_dir, new_sid, new_seq, [(m_new, new_sid)])
-    snaps = [
-        (
-            s["snapshot-id"],
-            s["sequence-number"],
-            s["timestamp-ms"],
-            s["manifest-list"],
-            s["summary"]["operation"],
+        # fold every live entry into one manifest, inheritance preserved
+        want_seq: dict[str, tuple[int, int]] = {}
+        folded = []
+        for m in mlist:
+            _, entries, _ = ocf_read(m["manifest_path"])
+            for e in entries:
+                if e["status"] == _ST_DELETED:
+                    continue
+                e2 = dict(e)
+                e2["status"] = _ST_EXISTING
+                folded.append(e2)
+                want_seq[e["data_file"]["file_path"]] = (
+                    e["sequence_number"],
+                    e["snapshot_id"],
+                )
+        new_sid = _RWM_SB + _RWM_N
+        new_seq = meta["last-sequence-number"] + 1
+        m_new = _write_manifest(meta_dir, "m-rewritten.avro", folded)
+        l_new = _write_manifest_list(
+            meta_dir, new_sid, new_seq, [(m_new, new_sid)]
         )
-        for s in meta["snapshots"]
-    ] + [(new_sid, new_seq, _RWM_TB + _RWM_N * 60_000, l_new, "replace")]
-    iceberg_meta.commit_next(root, _orders_meta(root, _RWM_UUID, snaps))
+        new_ts = _RWM_TB + _RWM_N * 60_000
+        iceberg_meta.add_snapshot(
+            meta, new_sid, new_seq, new_ts, l_new, "replace"
+        )
+        meta["last-updated-ms"] = new_ts
 
     # gates
     meta2 = iceberg_meta.load(root)
@@ -1196,8 +1128,11 @@ def q_sink_lake_uniform_append(
         [_entry(_ST_ADDED, _UB_S1, 1, p, v) for p, v in base_files],
     )
     l1 = _write_manifest_list(meta_dir, _UB_S1, 1, [(m1, _UB_S1)])
-    snaps = [(_UB_S1, 1, _UB_T1, l1, "append")]
-    iceberg_meta.commit(meta_dir, 1, _orders_meta(root, table_uuid, snaps))
+    iceberg_meta.commit(
+        meta_dir,
+        1,
+        _orders_meta(root, table_uuid, [(_UB_S1, 1, _UB_T1, l1, "append")]),
+    )
 
     # THE APPEND: odd keys, one data copy, two metadata commits
     o.filter(F.col("o_orderkey") % 2 == 1).coalesce(1).write.mode(
@@ -1213,10 +1148,11 @@ def q_sink_lake_uniform_append(
     l2 = _write_manifest_list(
         meta_dir, _UB_S2, 2, [(m1, _UB_S1), (m2, _UB_S2)]
     )
-    snaps.append((_UB_S2, 2, _UB_T2, l2, "append"))
     # the Iceberg commit lands LAST — both trees are durable before
     # readers see v2
-    iceberg_meta.commit_next(root, _orders_meta(root, table_uuid, snaps))
+    with iceberg_meta.update(root) as tm:
+        iceberg_meta.add_snapshot(tm, _UB_S2, 2, _UB_T2, l2, "append")
+        tm["last-updated-ms"] = _UB_T2
 
     # --- read back through both chains
     delta_files = [
@@ -1333,46 +1269,22 @@ def q_src_hudi_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = _tmp(sf_dir, "hudi_cdc")
     shutil.rmtree(root, ignore_errors=True)
-    hdir = os.path.join(root, ".hoodie")
-    os.makedirs(hdir, exist_ok=True)
-    with open(os.path.join(hdir, "hoodie.properties"), "w") as fh:
-        fh.write(
-            "hoodie.table.name=orders_cdc\n"
-            "hoodie.table.type=COPY_ON_WRITE\n"
-            "hoodie.table.version=6\n"
-            "hoodie.table.cdc.enabled=true\n"
-            "hoodie.table.recordkey.fields=o_orderkey\n"
-            "hoodie.table.partition.fields=o_orderpriority\n"
-        )
+    hudi_timeline.create(
+        root, "orders_cdc", "COPY_ON_WRITE", cdc_enabled="true", **_ORDERS
+    )
     c1, c2 = "20240101000000", "20240102000000"
     urgent = "1-URGENT"
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
 
     # c1: per-priority base file groups, one distributed write
-    evens = o.filter(F.col("o_orderkey") % 2 == 0)
-    scratch = os.path.join(root, "_scratch_c1")
-    evens.withColumn("pp", F.col("o_orderpriority")).repartition(
-        "pp"
-    ).write.partitionBy("pp").mode("overwrite").parquet(scratch)
-    for d in os.listdir(scratch):
-        if not d.startswith("pp="):
-            continue
-        p = d[3:]
-        pdir = os.path.join(root, p)
-        os.makedirs(pdir, exist_ok=True)
-        fs = [
-            f
-            for f in os.listdir(os.path.join(scratch, d))
-            if f.endswith(".parquet")
-        ]
-        os.rename(
-            os.path.join(scratch, d, fs[0]),
-            os.path.join(pdir, f"fg-{p}_0-1-0_{c1}.parquet"),
-        )
-    shutil.rmtree(scratch, ignore_errors=True)
-    for suffix in (".commit.requested", ".inflight", ".commit"):
-        with open(os.path.join(hdir, f"{c1}{suffix}"), "w") as fh:
-            fh.write("{}" if suffix == ".commit" else "")
+    hudi_timeline.begin(root, c1, "commit")
+    hudi_timeline.write_slices(
+        o.filter(F.col("o_orderkey") % 2 == 0),
+        root,
+        c1,
+        F.col("o_orderpriority"),
+    )
+    hudi_timeline.complete(root, c1, "commit", {})
 
     # c2: upsert the urgent group — new base slice + the CDC log
     u = F.col("o_orderpriority") == urgent
@@ -1408,18 +1320,6 @@ def q_src_hudi_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc_name = f".fg-{urgent}_{c2}-cdc.log.1_0-1-0"
     cdc_schema = _CDC_SCHEMA
 
-    def _write_slice_c2() -> None:
-        scratch = os.path.join(root, "_scratch_c2")
-        merged.coalesce(1).write.mode("overwrite").parquet(scratch)
-        src = next(
-            f for f in os.listdir(scratch) if f.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(scratch, src),
-            os.path.join(root, urgent, f"fg-{urgent}_0-1-0_{c2}.parquet"),
-        )
-        shutil.rmtree(scratch, ignore_errors=True)
-
     def _write_cdc(it):
         import os as _os
 
@@ -1446,25 +1346,24 @@ def q_src_hudi_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield _pd.DataFrame({"n": _pd.Series([len(recs)], dtype="int64")})
 
     # the new base slice and the cdc log are independent jobs into
-    # disjoint files: overlap them — the commit markers land after
+    # disjoint files: overlap them, then complete the instant
     os.makedirs(cdc_dir, exist_ok=True)
+    hudi_timeline.begin(root, c2, "commit")
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_slice = pool.submit(_write_slice_c2)
+        f_slice = pool.submit(
+            hudi_timeline.write_slices, merged, root, c2, urgent
+        )
         f_cdc = pool.submit(
             lambda: changes.coalesce(1)
             .mapInPandas(_write_cdc, schema="n long")
             .agg(F.sum("n"))
             .first()[0]
         )
-        f_slice.result()
+        (c2_file,) = f_slice.result()
         n_cdc = f_cdc.result()
-    for suffix in (".commit.requested", ".inflight", ".commit"):
-        with open(os.path.join(hdir, f"{c2}{suffix}"), "w") as fh:
-            fh.write(
-                json.dumps({"operationType": "UPSERT", "cdc": True})
-                if suffix == ".commit"
-                else ""
-            )
+    hudi_timeline.complete(
+        root, c2, "commit", {"operationType": "UPSERT", "cdc": True}
+    )
 
     # --- CDC read: instant range (c1, c2], executor-side decode
     cdc_paths = sorted(
@@ -1502,11 +1401,11 @@ def q_src_hudi_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # honesty gate: cdc ≡ the distributed snapshot diff
     before_snap = spark.read.parquet(
-        os.path.join(root, urgent, f"fg-{urgent}_0-1-0_{c1}.parquet")
+        hudi_timeline.slice_path(root, urgent, f"fg-{urgent}", c1)
     ).select("o_orderkey", cents.alias("b"))
-    after_snap = spark.read.parquet(
-        os.path.join(root, urgent, f"fg-{urgent}_0-1-0_{c2}.parquet")
-    ).select("o_orderkey", cents.alias("a"))
+    after_snap = spark.read.parquet(c2_file).select(
+        "o_orderkey", cents.alias("a")
+    )
     diff = (
         before_snap.join(after_snap, "o_orderkey", "full_outer")
         .select(
@@ -1591,34 +1490,30 @@ def q_sink_hudi_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     before = spark.read.parquet(*_hudi_snapshot_files(root)).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     ).localCheckpoint()
-    hdir = os.path.join(root, ".hoodie")
 
     def _rollback(instant: str, rb_instant: str) -> dict[str, list[str]]:
-        completed = set(_hudi_completed_commits(root))
+        completed = set(hudi_timeline.completed(root))
         if instant in completed:
             raise ValueError("refusing to roll back a completed commit")
         per_part: dict[str, list[str]] = {}
-        for bf in _hudi_base_files(root):
+        for bf in hudi_timeline.base_files(root):
             if bf["instant"] == instant:
                 os.remove(bf["path"])
                 per_part.setdefault(bf["partition"], []).append(
                     os.path.basename(bf["path"])
                 )
-        for suffix in (".commit.requested", ".inflight"):
-            marker = os.path.join(hdir, f"{instant}{suffix}")
-            if os.path.exists(marker):
-                os.remove(marker)
-        with open(os.path.join(hdir, f"{rb_instant}.rollback"), "w") as fh:
-            json.dump(
-                {
-                    "instantToRollback": instant,
-                    "partitionMetadata": {
-                        p: {"deletedFiles": fs}
-                        for p, fs in per_part.items()
-                    },
+        hudi_timeline.discard(root, instant, "commit")
+        hudi_timeline.complete(
+            root,
+            rb_instant,
+            "rollback",
+            {
+                "instantToRollback": instant,
+                "partitionMetadata": {
+                    p: {"deletedFiles": fs} for p, fs in per_part.items()
                 },
-                fh,
-            )
+            },
+        )
         return per_part
 
     removed = _rollback(c3, "20240104000000")
@@ -1629,12 +1524,11 @@ def q_sink_hudi_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError("rollback is not idempotent")
 
     # gates: timeline cleaned, completed slices intact, snapshot equal
-    for suffix in (".commit.requested", ".inflight"):
-        if os.path.exists(os.path.join(hdir, f"{c3}{suffix}")):
-            raise ValueError("rollback left the failed instant's markers")
-    if any(bf["instant"] == c3 for bf in _hudi_base_files(root)):
+    if hudi_timeline.is_pending(root, c3, "commit"):
+        raise ValueError("rollback left the failed instant's markers")
+    if any(bf["instant"] == c3 for bf in hudi_timeline.base_files(root)):
         raise ValueError("rollback left the failed instant's data")
-    if _hudi_completed_commits(root) != [c1, c2]:
+    if hudi_timeline.completed(root) != [c1, c2]:
         raise ValueError("rollback damaged completed commits")
     after = spark.read.parquet(*_hudi_snapshot_files(root)).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"

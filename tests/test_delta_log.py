@@ -5,6 +5,7 @@ module from naming or opening `_delta_log/` files itself."""
 from __future__ import annotations
 
 import ast
+import multiprocessing
 import os
 import shutil
 import sys
@@ -22,6 +23,7 @@ from random_forest_using_hadoop_spark.delta_log import (
     _delta_live_files,
 )
 from random_forest_using_hadoop_spark.operators.scans import _tmp
+from tests import _race_worker
 from tests.conftest import SF_DIR
 
 PKG = Path(engine.__file__).parent
@@ -44,8 +46,10 @@ def _write_parquet(path: str, k: int) -> None:
 
 
 def test_concurrent_commits_of_one_version_exactly_one_wins(tmp_path):
-    """Writers racing for the same version (two, then more than there
-    are cores): exactly one publishes, every other one gets
+    """Writers racing for the same version (two threads, then more
+    threads than there are cores, then twice as many processes as
+    cores — `os.link` is the cross-process primitive every lake format
+    here commits through): exactly one publishes, every other one gets
     CommitConflict, the winner's actions survive intact and no temp
     file is left behind."""
     log_dir = str(tmp_path)
@@ -88,8 +92,31 @@ def test_concurrent_commits_of_one_version_exactly_one_wins(tmp_path):
             assert action == {"commitInfo": {"writer": winners[0]}}
     finally:
         sys.setswitchinterval(switch)
+
+    ctx = multiprocessing.get_context("spawn")
+    n_writers = 2 * (os.cpu_count() or 4)
+    for version in range(20, 23):
+        barrier = ctx.Barrier(n_writers)
+        procs = [
+            ctx.Process(
+                target=_race_worker.publish,
+                args=(barrier, log_dir, version, i),
+            )
+            for i in range(n_writers)
+        ]
+        for p in procs:
+            p.start()
+        for p in procs:
+            p.join(timeout=120)
+            assert not p.is_alive()
+        codes = [p.exitcode for p in procs]
+        assert sorted(codes) == [0] + [3] * (n_writers - 1), codes
+        (action,) = [
+            a for _, a in delta_log.read_actions(log_dir, [version])
+        ]
+        assert action == {"commitInfo": {"writer": codes.index(0)}}
     assert sorted(os.listdir(log_dir)) == [
-        f"{v:020d}.json" for v in range(20)
+        f"{v:020d}.json" for v in range(23)
     ], "a temp file or stray commit was left in the log"
 
 
@@ -340,4 +367,44 @@ def test_only_delta_log_names_or_opens_log_files():
                 if _is_log_path(node.args[0], names):
                     arg = ast.unparse(node.args[0])
                     offenders.append(f"{rel}:{node.lineno}: open({arg})")
+    assert not offenders, "\n".join(offenders)
+
+
+# --- guard: every writer commits at its base + 1 -----------------------------
+
+_COMMITS = {"commit", "_delta_commit", "complete"}
+_LISTINGS = {"_delta_max_version", "list_versions", "current_version"}
+
+
+def _callee(func: ast.AST) -> str:
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return func.id if isinstance(func, ast.Name) else ""
+
+
+def test_no_commit_version_comes_from_a_listing_at_commit_time():
+    """The version (or instant) a writer publishes must be one past the
+    base it read its state from. A version computed inside the commit
+    call from a fresh listing (`_delta_max_version(...) + 1`) lets a
+    writer that planned from an older base land on top of a newer
+    commit without a CommitConflict — the lost-update hole."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and _callee(node.func) in _COMMITS
+                and len(node.args) > 1
+            ):
+                continue
+            for sub in ast.walk(node.args[1]):
+                if (
+                    isinstance(sub, ast.Call)
+                    and _callee(sub.func) in _LISTINGS
+                ):
+                    offenders.append(
+                        f"{path.relative_to(PKG.parent)}:{node.lineno}: "
+                        f"{ast.unparse(node.args[1])}"
+                    )
     assert not offenders, "\n".join(offenders)

@@ -28,30 +28,38 @@ def _table(tmp_path: Path) -> tuple[str, str]:
 
 def test_concurrent_commits_of_one_version_exactly_one_wins(tmp_path):
     """Writers racing for the same metadata version (two, then twice as
-    many as there are cores): exactly one publishes, every other one
-    gets CommitConflict, the winner's metadata is what loads, and no
-    temp file is left behind."""
+    many as there are cores; from version 11 on, writers that all
+    loaded the same base inside `update`): exactly one publishes, every
+    other one gets CommitConflict, the winner's metadata is what loads,
+    and no temp file is left behind."""
     root, meta_dir = _table(tmp_path)
     switch = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        for version in range(1, 11):
+        for version in range(1, 16):
             n_writers = 2 if version <= 5 else 2 * (os.cpu_count() or 4)
             barrier = threading.Barrier(n_writers)
             outcome: dict[int, object] = {}
 
             def writer(i: int) -> None:
-                barrier.wait()
                 try:
-                    iceberg_meta.commit(
-                        meta_dir, version, {"format-version": 2, "w": i}
-                    )
+                    if version <= 10:
+                        barrier.wait()
+                        iceberg_meta.commit(
+                            meta_dir, version, {"format-version": 2, "w": i}
+                        )
+                    else:
+                        with iceberg_meta.update(root) as tm:
+                            barrier.wait()  # every writer holds one base
+                            tm["w"] = i
                     outcome[i] = "won"
                 except CommitConflict as e:
                     outcome[i] = e
 
+            # writer ids are unique across versions, so every `update`
+            # winner changes the metadata it loaded
             threads = [
-                threading.Thread(target=writer, args=(i,))
+                threading.Thread(target=writer, args=(100 * version + i,))
                 for i in range(n_writers)
             ]
             for t in threads:
@@ -74,7 +82,93 @@ def test_concurrent_commits_of_one_version_exactly_one_wins(tmp_path):
     assert set(os.listdir(meta_dir)) == {
         os.path.basename(p) for p in iceberg_meta.metadata_files(meta_dir)
     }, "a temp file was left in the metadata directory"
-    assert iceberg_meta.list_versions(meta_dir) == list(range(1, 11))
+    assert iceberg_meta.list_versions(meta_dir) == list(range(1, 16))
+
+
+def test_two_writers_of_one_base_conflict_instead_of_losing_a_snapshot(
+    tmp_path,
+):
+    """Two writers load v1 and each add a snapshot. The first commits
+    v2; the second, built on v1, must get CommitConflict rather than
+    publish v3 and silently drop the first writer's snapshot."""
+    root, meta_dir = _table(tmp_path)
+    iceberg_meta.commit(
+        meta_dir,
+        1,
+        {
+            "format-version": 2,
+            "current-snapshot-id": -1,
+            "last-sequence-number": 0,
+            "snapshots": [],
+            "snapshot-log": [],
+        },
+    )
+    first, second = iceberg_meta.update(root), iceberg_meta.update(root)
+    tm1, tm2 = first.__enter__(), second.__enter__()
+    iceberg_meta.add_snapshot(tm1, 11, 1, 1000, "l11.avro", "append")
+    iceberg_meta.add_snapshot(tm2, 22, 1, 2000, "l22.avro", "append")
+    first.__exit__(None, None, None)
+    with pytest.raises(CommitConflict):
+        second.__exit__(None, None, None)
+    meta = iceberg_meta.load(root)
+    assert iceberg_meta.list_versions(meta_dir) == [1, 2]
+    assert [s["snapshot-id"] for s in meta["snapshots"]] == [11]
+    assert meta["current-snapshot-id"] == 11
+
+
+def test_update_commits_nothing_on_error_or_without_a_change(tmp_path):
+    """An exception inside `update`, or a block that leaves the
+    metadata as loaded, publishes no version."""
+    root, meta_dir = _table(tmp_path)
+    iceberg_meta.commit(meta_dir, 1, {"format-version": 2, "v": 1})
+    with pytest.raises(RuntimeError):
+        with iceberg_meta.update(root) as tm:
+            tm["v"] = 2
+            raise RuntimeError("writer died before its commit")
+    with iceberg_meta.update(root) as tm:
+        tm["v"] = 1
+    assert iceberg_meta.list_versions(meta_dir) == [1]
+    with iceberg_meta.update(root) as tm:
+        tm["v"] = 2
+    assert iceberg_meta.list_versions(meta_dir) == [1, 2]
+
+
+def test_add_snapshot_moves_only_its_branch():
+    """On `main` a snapshot is logged, made current and moves
+    `refs.main` when refs exist; on another branch only that branch's
+    ref moves (the refs map is created with `main` first); a staged
+    snapshot (`branch=None`) is referenced by nothing."""
+    def table() -> dict:
+        return {
+            "current-snapshot-id": 1,
+            "last-sequence-number": 1,
+            "snapshots": [{"snapshot-id": 1}],
+            "snapshot-log": [{"timestamp-ms": 0, "snapshot-id": 1}],
+        }
+
+    tm = iceberg_meta.add_snapshot(table(), 2, 2, 10, "l2", "append")
+    assert (tm["current-snapshot-id"], len(tm["snapshot-log"])) == (2, 2)
+    assert "refs" not in tm
+
+    tm = iceberg_meta.add_snapshot(
+        table(), 2, 2, 10, "l2", "append", branch="audit"
+    )
+    assert (tm["current-snapshot-id"], len(tm["snapshot-log"])) == (1, 1)
+    assert tm["last-sequence-number"] == 2
+    assert tm["refs"] == {
+        "main": {"snapshot-id": 1, "type": "branch"},
+        "audit": {"snapshot-id": 2, "type": "branch"},
+    }
+    iceberg_meta.add_snapshot(tm, 3, 3, 20, "l3", "append")
+    assert tm["refs"]["main"] == {"snapshot-id": 3, "type": "branch"}
+    assert tm["refs"]["audit"]["snapshot-id"] == 2
+
+    tm = iceberg_meta.add_snapshot(
+        table(), 2, 2, 10, "l2", "append", branch=None
+    )
+    assert [s["snapshot-id"] for s in tm["snapshots"]] == [1, 2]
+    assert (tm["current-snapshot-id"], len(tm["snapshot-log"])) == (1, 1)
+    assert "refs" not in tm
 
 
 def test_unserialisable_metadata_leaves_no_file(tmp_path):

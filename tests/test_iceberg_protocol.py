@@ -253,7 +253,9 @@ def test_metadata_discovery_skips_stray_version_files(tmp_path):
     (meta_dir / "version-hint.text").write_text("1")
     assert iceberg_meta.load(str(tmp_path))["v"] == 2
     root = str(tmp_path)
-    assert iceberg_meta.commit_next(root, {"format-version": 2, "v": 3}) == 3
+    with iceberg_meta.update(root) as tm:
+        tm["v"] = 3
+    assert iceberg_meta.current_version(str(meta_dir)) == 3
     assert iceberg_meta.load(root)["v"] == 3
     assert (meta_dir / "version-hint.text").read_text() == "3"
 

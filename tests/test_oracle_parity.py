@@ -4,6 +4,10 @@ names, row count, and (order-insensitive) values."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import pytest
 
 import random_forest_using_hadoop_spark as engine
@@ -15,10 +19,19 @@ SQL_KEYS = sorted(k for k, s in engine.REGISTRY.items() if s.oracle)
 ROWS_ONLY_KEYS = sorted(k for k, s in engine.REGISTRY.items() if not s.oracle)
 
 
+def _stream_checkpoints() -> set[str]:
+    return set(
+        glob.glob(os.path.join(tempfile.gettempdir(), "*_stream_ckpt_*"))
+    )
+
+
 @pytest.mark.parametrize("key", SQL_KEYS)
 def test_sql_oracle_parity(key, spark, duck):
     spec = engine.REGISTRY[key]
+    before = _stream_checkpoints()
     assert_parity(spec.fn(spark, SF_DIR), spec.oracle, duck)
+    # a streaming key removes its checkpoint dir, even on failure
+    assert _stream_checkpoints() <= before, "stream checkpoint dir left"
 
 
 @pytest.mark.parametrize("key", ROWS_ONLY_KEYS)

@@ -1952,8 +1952,8 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
     _S4, _S5, _S6 = _S3 + 1, _S3 + 2, _S3 + 3
 
     def _append_snapshot(*snap) -> None:
-        tm = iceberg_meta.load(root)
-        iceberg_meta.commit_next(root, iceberg_meta.add_snapshot(tm, *snap))
+        with iceberg_meta.update(root) as tm:
+            iceberg_meta.add_snapshot(tm, *snap)
 
     def _eqdel(name: str, keys: list[int]) -> str:
         path = os.path.join(meta_dir, name)
