@@ -1,6 +1,6 @@
 """The Hudi timeline (hudi.apache.org/tech-specs §Timeline, §File
-Layout): the one module that names, writes and parses `.hoodie/` files
-and base-file slice names.
+Layout): the one module that names, writes and parses `.hoodie/` files,
+base-file slice names and log-file names.
 
 - [[create]] writes `hoodie.properties`.
 - A writer [[begin]]s an instant (requested and inflight markers),
@@ -14,6 +14,10 @@ and base-file slice names.
   and resolve [[base_files]]. Streams tail the completed commits with
   [[stream]]: strict `<14 digits>.commit` names and `mode=FAILFAST`,
   so a torn completed instant raises instead of becoming a null row.
+- A file group's log files are named by [[log_name]]
+  (`.<file_id>_<base instant>.log.1_0-1-0`, `-cdc.log` for the
+  change-data log) and listed by [[log_files]]; [[file_id]] parses a
+  base file's group.
 """
 
 from __future__ import annotations
@@ -34,6 +38,10 @@ _HOODIE = ".hoodie"
 _TOKEN = "0-1-0"  # the write token of every slice this engine writes
 _BASE = re.compile(
     r"(?P<file_id>.+)_(?P<token>\d+-\d+-\d+)_(?P<instant>\d{14})\.parquet"
+)
+_LOG = re.compile(
+    r"\..+_(?P<instant>\d{14})(?P<cdc>-cdc)?"
+    r"\.log\.\d+_\d+-\d+-\d+"
 )
 # the inflight marker per action; requested is `.<action>.requested`
 _INFLIGHT = {"commit": ".inflight", "deltacommit": ".inflight"}
@@ -94,6 +102,13 @@ def slice_path(root: str, part: str, file_id: str, instant: str) -> str:
     """Path of the base file of `file_id`'s slice at `instant`."""
     name = f"{file_id}_{_TOKEN}_{instant}.parquet"
     return os.path.join(root, part, name)
+
+
+def log_name(file_id: str, base_instant: str, cdc: bool = False) -> str:
+    """Name of the first log file of `file_id`'s group on its slice at
+    `base_instant`; `cdc` names the group's change-data log."""
+    kind = "-cdc.log" if cdc else ".log"
+    return f".{file_id}_{base_instant}{kind}.1_{_TOKEN}"
 
 
 def write_slices(
@@ -203,6 +218,34 @@ def base_files(root: str) -> list[dict]:
                         "path": os.path.join(pdir, f),
                     }
                 )
+    return out
+
+
+def file_id(path: str) -> str:
+    """The file group of a base file, parsed from its slice name."""
+    return _BASE.fullmatch(os.path.basename(path)).group("file_id")
+
+
+def log_files(root: str, part: str, upto: str | None = None) -> list[dict]:
+    """`part`'s log files, sorted by path, with the base instant and
+    the change-data flag their names carry — only those whose base
+    instant is at or before `upto` when it is given. Log files are
+    dot-prefixed, so Spark's file sources skip them; readers list them
+    here."""
+    pdir = os.path.join(root, part)
+    if not os.path.isdir(pdir):
+        return []
+    out = []
+    for f in sorted(os.listdir(pdir)):
+        m = _LOG.fullmatch(f)
+        if m and (upto is None or m.group("instant") <= upto):
+            out.append(
+                {
+                    "path": os.path.join(pdir, f),
+                    "instant": m.group("instant"),
+                    "cdc": m.group("cdc") is not None,
+                }
+            )
     return out
 
 

@@ -599,7 +599,7 @@ def _hudi_stage_mor(
         "o_orderpriority",
     )
     log_dir = os.path.join(root, urgent)
-    log_name = f".fg-{urgent}_{c1}.log.1_0-1-0"
+    log_name = hudi_timeline.log_name(f"fg-{urgent}", c1)
     log_schema = _MOR_LOG_SCHEMA
 
     def _write_log(it):
@@ -663,14 +663,11 @@ def _hudi_group_logs(root: str, part: str, base_instant: str) -> list[str]:
     whose instant is embedded in its name. After compaction writes a
     newer base slice, these logs simply stop applying (their base
     instant is older than the group's latest slice)."""
-    pdir = os.path.join(root, part)
-    if not os.path.isdir(pdir):
-        return []
-    return sorted(
-        os.path.join(pdir, f)
-        for f in os.listdir(pdir)
-        if f"_{base_instant}.log." in f
-    )
+    return [
+        lf["path"]
+        for lf in hudi_timeline.log_files(root, part)
+        if lf["instant"] == base_instant and not lf["cdc"]
+    ]
 
 
 def _hudi_mor_merged(
@@ -686,7 +683,6 @@ def _hudi_mor_merged(
 
     cloudpickle.register_pickle_by_value(_icefmt)
     _ocf_read_bytes = _icefmt.ocf_read_bytes
-    log_dir = os.path.join(root, urgent)
 
     base_files = [
         bf["path"]
@@ -702,11 +698,7 @@ def _hudi_mor_merged(
     # So: list the log paths driver-side (bounded metadata, like any
     # file-slice listing) and fan the DECODE out over executors that
     # open their assigned paths themselves.
-    log_paths = sorted(
-        os.path.join(log_dir, f)
-        for f in os.listdir(log_dir)
-        if ".log." in f
-    )
+    log_paths = [lf["path"] for lf in hudi_timeline.log_files(root, urgent)]
     if not log_paths:
         raise ValueError("MOR fixture staged no log files")
 

@@ -42,7 +42,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from random_forest_using_hadoop_spark import delta_log, iceberg_meta
-from random_forest_using_hadoop_spark.iceberg_format import ocf_read, ocf_write
+from random_forest_using_hadoop_spark.iceberg_meta import (
+    ADDED,
+    DELETED,
+    EXISTING,
+    entry,
+    list_record,
+    write_manifest,
+    write_manifest_list,
+)
 from random_forest_using_hadoop_spark.operators.scans import (
     _norm_file_uri,
     _tmp,
@@ -50,9 +58,6 @@ from random_forest_using_hadoop_spark.operators.scans import (
 from random_forest_using_hadoop_spark.registry import register
 from random_forest_using_hadoop_spark.sources import load_table
 from random_forest_using_hadoop_spark.helpers import local_rows
-
-# entry statuses per the spec (§Manifests)
-_ST_EXISTING, _ST_ADDED, _ST_DELETED = 0, 1, 2
 
 # Broadcast gate for delete-application anti-joins: manifests record
 # each delete file's record_count, so the planner can decide broadcast
@@ -68,112 +73,6 @@ def _maybe_broadcast_deletes(df: DataFrame, n_rows: int) -> DataFrame:
     cardinality says the set is broadcast-sized."""
     return F.broadcast(df) if n_rows <= _DELETE_BROADCAST_MAX_ROWS else df
 
-
-
-# Avro schemas for the metadata this layer stages/reads — the spec's
-# field names and ids (field-id keys ride along as inert annotations;
-# the codec is schema-driven and ignores unknown keys).
-_MANIFEST_ENTRY_SCHEMA = {
-    "type": "record",
-    "name": "manifest_entry",
-    "fields": [
-        {"name": "status", "type": "int", "field-id": 0},
-        {"name": "snapshot_id", "type": ["null", "long"], "field-id": 1},
-        {"name": "sequence_number", "type": ["null", "long"], "field-id": 3},
-        {
-            "name": "file_sequence_number",
-            "type": ["null", "long"],
-            "field-id": 4,
-        },
-        {
-            "name": "data_file",
-            "field-id": 2,
-            "type": {
-                "type": "record",
-                "name": "r2",
-                "fields": [
-                    {"name": "content", "type": "int", "field-id": 134},
-                    {"name": "file_path", "type": "string", "field-id": 100},
-                    {"name": "file_format", "type": "string", "field-id": 101},
-                    {
-                        "name": "partition",
-                        "field-id": 102,
-                        "type": {
-                            "type": "record",
-                            "name": "r102",
-                            "fields": [
-                                {
-                                    "name": "o_orderpriority",
-                                    "type": ["null", "string"],
-                                    "field-id": 1000,
-                                }
-                            ],
-                        },
-                    },
-                    {"name": "record_count", "type": "long", "field-id": 103},
-                    {
-                        "name": "file_size_in_bytes",
-                        "type": "long",
-                        "field-id": 104,
-                    },
-                    # per-column value bounds (spec: map<field id, bytes>
-                    # with single-value binary serialization) — Avro maps
-                    # key on strings, so Iceberg models these as arrays
-                    # of key/value records
-                    {
-                        "name": "lower_bounds",
-                        "field-id": 125,
-                        "type": [
-                            "null",
-                            {
-                                "type": "array",
-                                "items": {
-                                    "type": "record",
-                                    "name": "k126_v127",
-                                    "fields": [
-                                        {"name": "key", "type": "int"},
-                                        {"name": "value", "type": "bytes"},
-                                    ],
-                                },
-                            },
-                        ],
-                    },
-                    {
-                        "name": "upper_bounds",
-                        "field-id": 128,
-                        "type": ["null", {"type": "array", "items": "k126_v127"}],
-                    },
-                    # equality-delete key columns (content=2 files only)
-                    {
-                        "name": "equality_ids",
-                        "field-id": 135,
-                        "type": ["null", {"type": "array", "items": "int"}],
-                    },
-                ],
-            },
-        },
-    ],
-}
-
-_MANIFEST_FILE_SCHEMA = {
-    "type": "record",
-    "name": "manifest_file",
-    "fields": [
-        {"name": "manifest_path", "type": "string", "field-id": 500},
-        {"name": "manifest_length", "type": "long", "field-id": 501},
-        {"name": "partition_spec_id", "type": "int", "field-id": 502},
-        {"name": "content", "type": "int", "field-id": 517},
-        {"name": "sequence_number", "type": "long", "field-id": 515},
-        {"name": "min_sequence_number", "type": "long", "field-id": 516},
-        {"name": "added_snapshot_id", "type": "long", "field-id": 503},
-        {"name": "added_files_count", "type": "int", "field-id": 504},
-        {"name": "existing_files_count", "type": "int", "field-id": 505},
-        {"name": "deleted_files_count", "type": "int", "field-id": 506},
-        {"name": "added_rows_count", "type": "long", "field-id": 512},
-        {"name": "existing_rows_count", "type": "long", "field-id": 513},
-        {"name": "deleted_rows_count", "type": "long", "field-id": 514},
-    ],
-}
 
 # deterministic staged snapshot ids / timestamps (ms)
 _S1, _S2, _S3 = 3051729675574597004, 3051729675574597005, 3051729675574597006
@@ -198,171 +97,6 @@ def _pfiles(
             if f.endswith(".parquet"):
                 out.append((os.path.join(pdir, f), pval))
     return out
-
-
-def _entry(
-    status: int,
-    snap_id: int,
-    seq: int,
-    path: str,
-    pval: str,
-    bounds: tuple[list, list] | None = None,
-    equality_ids: list[int] | None = None,
-    content: int = 0,
-    partition: dict | None = None,
-    record_count: int | None = None,
-) -> dict:
-    """One manifest_entry record; record_count/file_size come from the
-    parquet footer / filesystem — driver-side, bounded by file count
-    (the stats a real writer records at commit time). `bounds` is
-    (lower, upper) lists of {key, value} single-value-serialized pairs;
-    `equality_ids` marks an equality-delete file's key columns;
-    `partition` overrides the default single-field priority tuple for
-    entries written under a different partition spec."""
-    import pyarrow.parquet as pq
-
-    return {
-        "status": status,
-        "snapshot_id": snap_id,
-        "sequence_number": seq,
-        "file_sequence_number": seq,
-        "data_file": {
-            "content": content,
-            "file_path": path,
-            "file_format": "PARQUET",
-            "partition": (
-                partition
-                if partition is not None
-                else {"o_orderpriority": pval}
-            ),
-            "record_count": (
-                record_count
-                if record_count is not None  # non-parquet (e.g. Puffin DV)
-                else pq.ParquetFile(path).metadata.num_rows
-            ),
-            "file_size_in_bytes": os.path.getsize(path),
-            "lower_bounds": bounds[0] if bounds else None,
-            "upper_bounds": bounds[1] if bounds else None,
-            "equality_ids": equality_ids,
-        },
-    }
-
-
-def _write_manifest(
-    meta_dir: str,
-    name: str,
-    entries: list[dict],
-    schema: dict | None = None,
-    spec_id: int = 0,
-) -> str:
-    path = os.path.join(meta_dir, name)
-    ocf_write(
-        path,
-        schema or _MANIFEST_ENTRY_SCHEMA,
-        entries,
-        metadata={
-            "format-version": "2",
-            "content": "data",
-            "partition-spec-id": str(spec_id),
-        },
-    )
-    return path
-
-
-def _entry_schema_for(partition_fields: list[tuple[str, int]]) -> dict:
-    """Manifest-entry Avro schema whose partition record carries the
-    given (name, field-id) string fields — each spec's manifests
-    serialize their OWN partition tuple shape (spec §Manifests: the
-    partition struct follows the manifest's declared spec)."""
-    import copy
-
-    schema = copy.deepcopy(_MANIFEST_ENTRY_SCHEMA)
-    df_fields = next(
-        f for f in schema["fields"] if f["name"] == "data_file"
-    )["type"]["fields"]
-    part = next(f for f in df_fields if f["name"] == "partition")
-    part["type"]["fields"] = [
-        {"name": n, "type": ["null", "string"], "field-id": fid}
-        for n, fid in partition_fields
-    ]
-    return schema
-
-
-def _write_manifest_list(
-    meta_dir: str, snap_id: int, seq: int, manifests: list[tuple[str, int]]
-) -> str:
-    """Manifest list for one snapshot: (manifest path, added_snapshot_id)
-    per manifest. Counts are filled from the manifests themselves.
-
-    A carried-over manifest keeps the sequence number it was COMMITTED
-    under (spec §Manifest Lists) — re-stamping it with the referencing
-    snapshot's seq was the r13 advice finding; derive each manifest's
-    own seq from its ADDED/DELETED entries (the ones its committing
-    snapshot stamped). A carried manifest holding ONLY EXISTING
-    entries (every original add compacted away) has no such stamp; its
-    EXISTING entries keep their ORIGINAL sequence numbers, so the min
-    over ALL entries is a faithful lower bound — falling back to the
-    referencing list's seq would re-introduce the exact re-stamping
-    bug. Only a fully entry-less manifest takes the list's seq."""
-    recs = []
-    for mpath, added_by in manifests:
-        _, entries, _ = ocf_read(mpath)
-        own_seq = max(
-            (
-                e["sequence_number"]
-                for e in entries
-                if e["status"] in (_ST_ADDED, _ST_DELETED)
-                and e["sequence_number"] is not None
-            ),
-            default=None,
-        )
-        if own_seq is None:
-            own_seq = min(
-                (
-                    e["sequence_number"]
-                    for e in entries
-                    if e["sequence_number"] is not None
-                ),
-                default=seq,
-            )
-        recs.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": 0,  # data manifests
-                "sequence_number": own_seq,
-                "min_sequence_number": 1,
-                "added_snapshot_id": added_by,
-                "added_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_ADDED
-                ),
-                "existing_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_EXISTING
-                ),
-                "deleted_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_DELETED
-                ),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_ADDED
-                ),
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_EXISTING
-                ),
-                "deleted_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_DELETED
-                ),
-            }
-        )
-    path = os.path.join(meta_dir, f"snap-{snap_id}-1-fixture.avro")
-    ocf_write(path, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    return path
 
 
 def _iceberg_stage(spark: SparkSession, o: DataFrame, root: str) -> None:
@@ -407,40 +141,36 @@ def _iceberg_stage(spark: SparkSession, o: DataFrame, root: str) -> None:
     evens = _pfiles(data_dir, "s1")
     odds = _pfiles(data_dir, "s2")
 
-    m1 = _write_manifest(
-        meta_dir,
-        "m1-fixture.avro",
-        [_entry(_ST_ADDED, _S1, 1, p, v) for p, v in evens],
-    )
-    m2 = _write_manifest(
-        meta_dir,
-        "m2-fixture.avro",
-        [_entry(_ST_ADDED, _S2, 2, p, v) for p, v in odds],
-    )
+    e1 = [entry(ADDED, _S1, 1, p, v) for p, v in evens]
+    e2 = [entry(ADDED, _S2, 2, p, v) for p, v in odds]
     # rewrite manifest: DELETED entries are stamped by the deleting
     # snapshot; EXISTING entries keep their ORIGINAL snapshot id and
     # data sequence number (spec §Manifests — inheritance is what lets
     # incremental consumers distinguish carried-over files from new
     # ones, and sequence-gated deletes stay correct across rewrites)
-    m3 = _write_manifest(
-        meta_dir,
-        "m3-fixture.avro",
-        [
-            _entry(_ST_DELETED, _S3, 3, p, v)
-            if v == "1-URGENT"
-            else _entry(
-                _ST_EXISTING,
-                _S1 if (p, v) in set(evens) else _S2,
-                1 if (p, v) in set(evens) else 2,
-                p,
-                v,
-            )
-            for p, v in evens + odds
-        ],
+    e3 = [
+        entry(DELETED, _S3, 3, p, v)
+        if v == "1-URGENT"
+        else entry(
+            EXISTING,
+            _S1 if (p, v) in set(evens) else _S2,
+            1 if (p, v) in set(evens) else 2,
+            p,
+            v,
+        )
+        for p, v in evens + odds
+    ]
+    r1, r2, r3 = (
+        list_record(write_manifest(meta_dir, name, es), es, sid, seq)
+        for name, es, sid, seq in (
+            ("m1-fixture.avro", e1, _S1, 1),
+            ("m2-fixture.avro", e2, _S2, 2),
+            ("m3-fixture.avro", e3, _S3, 3),
+        )
     )
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
-    l2 = _write_manifest_list(meta_dir, _S2, 2, [(m1, _S1), (m2, _S2)])
-    l3 = _write_manifest_list(meta_dir, _S3, 3, [(m3, _S3)])
+    l1 = write_manifest_list(meta_dir, _S1, [r1])
+    l2 = write_manifest_list(meta_dir, _S2, [r1, r2])
+    l3 = write_manifest_list(meta_dir, _S3, [r3])
 
     snaps = [
         (_S1, 1, _T1, l1, "append"),
@@ -510,14 +240,7 @@ def _orders_meta(
         "default-spec-id": 0,
         "current-snapshot-id": snaps[-1][0],
         "snapshots": [
-            {
-                "snapshot-id": sid,
-                "sequence-number": seq,
-                "timestamp-ms": ts,
-                "manifest-list": ml,
-                "summary": {"operation": op},
-                "schema-id": 0,
-            }
+            iceberg_meta.snapshot_record(sid, seq, ts, ml, op)
             for sid, seq, ts, ml, op in snaps
         ],
         "snapshot-log": [
@@ -562,184 +285,22 @@ def _iceberg_snapshot(
     return snaps[snapshot_id]
 
 
-def _partition_value(part: dict | None, spec: dict | None):
-    """Interpret one manifest entry's partition tuple UNDER A SPEC: an
-    unpartitioned spec yields None, a single-field spec the field's
-    value BY NAME, a multi-field spec the name-ordered value tuple.
-    Without a spec (single-spec fixtures), fall back to first-value
-    positional — exact there because the Avro writer schema preserves
-    field order and every such table has one partition field."""
-    part = part or {}
-    if spec is None:
-        return next(iter(part.values()), None)
-    fields = spec.get("fields", [])
-    if not fields:
-        return None
-    if len(fields) == 1:
-        return part.get(fields[0]["name"])
-    return tuple(part.get(f["name"]) for f in fields)
-
-
-# ScanReport-style planning metrics for the LAST _iceberg_files_full
-# call (mirrors iceberg-core's ScanReport: skipped-manifest counts are
-# the planner's own telemetry) — read by plan gates, never by queries.
-_LAST_SCAN_REPORT: dict = {}
-
-
-def _iceberg_files_full(
-    snapshot: dict,
-    partition_pred=None,
-    specs: dict[int, dict] | None = None,
-    pred_spec_id: int | None = None,
-    manifest_pred=None,
-) -> tuple[list[tuple], list[dict]]:
-    """(data files, delete files) LIVE in a snapshot — data items are
-    (file path, partition value, record count, data sequence number,
-    partition spec id). Read the manifest list, then each manifest;
-    keep entries whose status is not DELETED; data manifests (content
-    0) contribute data files, delete manifests (content 1) contribute
-    delete files (content 1 = position, 2 = equality deletes).
-
-    SPEC EVOLUTION (spec §Partition Evolution): each manifest carries
-    the `partition_spec_id` it was written under, and its entries'
-    partition tuples are meaningful ONLY under that spec — a table that
-    evolved from partition-by-status to partition-by-priority has
-    manifests of both, and interpreting a spec-0 tuple under spec-1
-    names mis-prunes real files. Pass `specs` ({spec-id: spec}) to
-    resolve each manifest's tuple by ITS spec's field names, and
-    `pred_spec_id` to scope `partition_pred` to manifests of that spec
-    alone — files written under other specs are never pruned by a
-    predicate that doesn't speak their partitioning (they scan + row
-    filter instead, exactly what iceberg-core plans).
-
-    `partition_pred(pval) -> bool` prunes BOTH lists on manifest
-    metadata alone — an excluded partition's files (and its
-    partition-scoped delete files) are never handed to a scan, the
-    planner behavior that makes a partition query O(selected) at
-    100 TB. Driver-side and bounded: one row per manifest, one per
-    file — the planner's working set.
-
-    MANIFEST-LEVEL pruning (spec §Manifest Lists, field 507): a
-    manifest-list entry may carry per-partition-field SUMMARIES
-    (contains_null + lower/upper bounds). `manifest_pred(summaries) ->
-    bool` is evaluated on that row alone — a False skips the WHOLE
-    manifest without ever opening it, shrinking planning cost from
-    O(files) to O(matching manifests) + O(files in them): the second
-    pruning tier a million-file table needs. Entries without summaries
-    are conservatively read. Skips are recorded in _LAST_SCAN_REPORT
-    (manifests_total / manifests_skipped / skipped_paths), mirroring
-    iceberg-core's ScanReport metrics."""
-    _, manifests, _ = ocf_read(snapshot["manifest-list"])
-    data, deletes = [], []
-    report = {
-        "manifests_total": len(manifests),
-        "manifests_skipped": 0,
-        "skipped_paths": [],
-    }
-    _LAST_SCAN_REPORT.clear()
-    _LAST_SCAN_REPORT.update(report)
-    for m in manifests:
-        spec_id = m.get("partition_spec_id", 0)
-        spec = specs.get(spec_id) if specs is not None else None
-        prunable = pred_spec_id is None or spec_id == pred_spec_id
-        summaries = m.get("partitions")
-        if (
-            manifest_pred is not None
-            and prunable
-            and summaries
-            and not manifest_pred(summaries)
-        ):
-            report["manifests_skipped"] += 1
-            report["skipped_paths"].append(m["manifest_path"])
-            _LAST_SCAN_REPORT.update(report)
-            continue  # whole manifest skipped, never opened
-        _, entries, _ = ocf_read(m["manifest_path"])
-        for e in entries:
-            if e["status"] == _ST_DELETED:
-                continue
-            df = e["data_file"]
-            pval = _partition_value(df["partition"], spec)
-            # delete files with a NULL partition tuple are global (an
-            # unpartitioned-spec write) — never pruned away
-            if (
-                partition_pred is not None
-                and prunable
-                and pval is not None
-                and not partition_pred(pval)
-            ):
-                continue
-            if m["content"] == 0 and df["content"] == 0:
-                data.append(
-                    {
-                        "path": df["file_path"],
-                        "pval": pval,
-                        "n": df["record_count"],
-                        "seq": e["sequence_number"],
-                        "spec_id": spec_id,
-                        # v3 row-lineage coordinate (absent pre-v3)
-                        "first_row_id": df.get("first_row_id"),
-                    }
-                )
-            elif m["content"] == 1 and df["content"] in (1, 2):
-                deletes.append(
-                    {
-                        "path": df["file_path"],
-                        "pval": pval,
-                        "n": df["record_count"],
-                        "seq": e["sequence_number"],
-                        "content": df["content"],
-                        "equality_ids": df.get("equality_ids"),
-                        "spec_id": spec_id,
-                        # v3 deletion-vector coordinates (absent pre-v3)
-                        "format": df.get("file_format", "PARQUET"),
-                        "referenced_data_file": df.get(
-                            "referenced_data_file"
-                        ),
-                        "content_offset": df.get("content_offset"),
-                        "content_size_in_bytes": df.get(
-                            "content_size_in_bytes"
-                        ),
-                    }
-                )
-    return data, deletes
-
-
-def _iceberg_files(
-    snapshot: dict, partition_pred=None
-) -> tuple[list[tuple], list[dict]]:
-    """Single-spec view of [[_iceberg_files_full]]: data items as
-    (file path, partition value, record count, data sequence number)."""
-    data, deletes = _iceberg_files_full(snapshot, partition_pred)
-    return [
-        (d["path"], d["pval"], d["n"], d["seq"]) for d in data
-    ], deletes
-
-
-def _iceberg_live_files(
-    snapshot: dict, partition_pred=None
-) -> list[tuple[str, str, int]]:
-    """Back-compat view of [[_iceberg_files]]: the live DATA files as
-    (file path, partition value, record count)."""
-    data, _ = _iceberg_files(snapshot, partition_pred)
-    return [(p, v, n) for p, v, n, _ in data]
-
-
 def _scan_with_partition(
-    spark: SparkSession, files: list[tuple[str, str, int]]
+    spark: SparkSession, files: list[dict]
 ) -> DataFrame | None:
-    """ONE distributed scan over ALL selected files with the identity
-    partition column restored from MANIFEST metadata (per spec the
-    partition column is not stored in the data files) via a broadcast
-    path→value map — plan size is O(1) in both files and partition
-    values (the r14 shape planned one relation per value and unioned
-    them). The data schema comes from one driver-side pyarrow footer
-    read, so Spark never runs its footer-inference pass."""
+    """ONE distributed scan over ALL selected files (planned data-file
+    records: `path`, `pval`) with the identity partition column
+    restored from MANIFEST metadata (per spec the partition column is
+    not stored in the data files) via a broadcast path→value map — plan
+    size is O(1) in both files and partition values. The data schema
+    comes from one driver-side pyarrow footer read, so Spark never runs
+    its footer-inference pass."""
     if not files:
         return None
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    paths = sorted({p for p, _, _ in files})
+    paths = sorted({d["path"] for d in files})
     schema = from_arrow_schema(pq.read_schema(paths[0]))
     df = (
         spark.read.schema(schema)
@@ -748,7 +309,7 @@ def _scan_with_partition(
     )
     pmap = local_rows(spark, 
         sorted(
-            {(p, v) for p, v, _ in files},
+            {(d["path"], d["pval"]) for d in files},
             # None-safe: unpartitioned entries carry a None value
             key=lambda t: (t[0], t[1] is None, t[1] or ""),
         ),
@@ -801,7 +362,7 @@ def q_src_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tmp(sf_dir, "iceberg_snap")
     _iceberg_stage(spark, o, root)
     meta = iceberg_meta.load(root)
-    files = _iceberg_live_files(_iceberg_snapshot(meta))
+    files = iceberg_meta.plan(_iceberg_snapshot(meta))[0]
     df = _scan_with_partition(spark, files)
     if df is None:
         return local_rows(spark, 
@@ -851,7 +412,7 @@ def q_src_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest = _iceberg_snapshot(meta)
     parts = []
     for label, snap in (("as_of_s1", s1), ("latest", latest)):
-        df = _scan_with_partition(spark, _iceberg_live_files(snap))
+        df = _scan_with_partition(spark, iceberg_meta.plan(snap)[0])
         if df is not None:
             parts.append(df.withColumn("snapshot", F.lit(label)))
     spine = local_rows(spark, 
@@ -925,9 +486,9 @@ def q_src_iceberg_partition_prune(
     _iceberg_stage(spark, o, root)
     wanted = {"2-HIGH", "5-LOW"}
     meta = iceberg_meta.load(root)
-    files = _iceberg_live_files(
+    files = iceberg_meta.plan(
         _iceberg_snapshot(meta), partition_pred=lambda v: v in wanted
-    )
+    )[0]
     df = _scan_with_partition(spark, files)
     if df is None:
         return local_rows(spark, 
@@ -994,7 +555,7 @@ def q_src_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta_dir = os.path.join(root, "metadata")
     meta = iceberg_meta.load(root)
     s3 = _iceberg_snapshot(meta)
-    live, _ = _iceberg_files(s3)
+    live, _ = iceberg_meta.plan(s3)
 
     # s4 staging: positions of o_orderkey % 10 == 3 across ALL live
     # files in ONE job (collect ∝ deleted rows — they are the commit
@@ -1002,7 +563,7 @@ def q_src_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from urllib.parse import unquote
 
     _S4, _T4 = _S3 + 1, _T3 + 60_000
-    pval_by_path = {p: v for p, v, _, _ in live}
+    pval_by_path = {d["path"]: d["pval"] for d in live}
     hit_rows = (
         spark.read.parquet(*sorted(pval_by_path))
         .select(
@@ -1033,51 +594,16 @@ def q_src_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             dpath,
         )
         del_entries.append(
-            _entry(_ST_ADDED, _S4, 4, dpath, pval, content=1)
+            entry(ADDED, _S4, 4, dpath, pval, content=1)
         )
-    m4 = _write_manifest(meta_dir, "m4-deletes.avro", del_entries)
-    # the delete manifest's content field must say 1; patch the list
-    m3 = os.path.join(meta_dir, "m3-fixture.avro")
-    recs = []
-    for mpath, content, mseq in ((m3, 0, 3), (m4, 1, 4)):
-        _, entries, _ = ocf_read(mpath)
-        recs.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": content,
-                "sequence_number": mseq,
-                "min_sequence_number": 1,
-                "added_snapshot_id": _S4 if content == 1 else _S3,
-                "added_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_ADDED
-                ),
-                "existing_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_EXISTING
-                ),
-                "deleted_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_DELETED
-                ),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_ADDED
-                ),
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_EXISTING
-                ),
-                "deleted_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_DELETED
-                ),
-            }
-        )
-    l4 = os.path.join(meta_dir, f"snap-{_S4}-1-fixture.avro")
-    ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
+    m4 = write_manifest(meta_dir, "m4-deletes.avro", del_entries)
+    # s4's list: s3's data manifest carried, plus the delete manifest
+    l4 = write_manifest_list(
+        meta_dir,
+        _S4,
+        iceberg_meta.manifests(s3)
+        + [list_record(m4, del_entries, _S4, 4, content=1)],
+    )
     with iceberg_meta.update(root) as tm:
         iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "delete")
 
@@ -1085,7 +611,7 @@ def q_src_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (file, pos) gated by the sequence-number ordering rule
     meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
-    data_files, delete_files = _iceberg_files(snap)
+    data_files, delete_files = iceberg_meta.plan(snap)
     df = _scan_apply_pos_deletes(spark, data_files, delete_files)
     if df is None:
         return local_rows(spark, 
@@ -1115,7 +641,7 @@ def _scan_apply_pos_deletes(
         return None
     df = (
         spark.read.schema("o_orderkey long, o_totalprice double")
-        .parquet(*sorted({p for p, _, _, _ in data_files}))
+        .parquet(*sorted({d["path"] for d in data_files}))
         .select(
             "o_orderkey",
             "o_totalprice",
@@ -1130,7 +656,7 @@ def _scan_apply_pos_deletes(
     # ONE broadcast path map restores the identity-partition value and
     # carries the data sequence number — both manifest metadata
     fmap = local_rows(spark, 
-        [(p, v, s) for p, v, _, s in data_files],
+        [(d["path"], d["pval"], d["seq"]) for d in data_files],
         "file_path string, o_orderpriority string, data_seq long",
     )
     df = df.join(F.broadcast(fmap), df["_fp"] == fmap["file_path"]).drop(
@@ -1190,7 +716,7 @@ def _scan_apply_eq_deletes(
         return None
     df = (
         spark.read.schema("o_orderkey long, o_totalprice double")
-        .parquet(*sorted({p for p, _, _, _ in data_files}))
+        .parquet(*sorted({d["path"] for d in data_files}))
         .select(
             "o_orderkey",
             "o_totalprice",
@@ -1198,7 +724,7 @@ def _scan_apply_eq_deletes(
         )
     )
     fmap = local_rows(spark, 
-        [(p, v, s) for p, v, _, s in data_files],
+        [(d["path"], d["pval"], d["seq"]) for d in data_files],
         "file_path string, o_orderpriority string, data_seq long",
     )
     df = df.join(F.broadcast(fmap), df["_fp"] == fmap["file_path"]).drop(
@@ -1255,11 +781,11 @@ def _scan_with_name_mapping(
     mapping = json.loads(meta["properties"]["schema.name-mapping.default"])
     names_by_id = {m["field-id"]: set(m["names"]) for m in mapping}
     spark_types = {"long": "bigint", "double": "double", "string": "string"}
-    files = _iceberg_live_files(_iceberg_snapshot(meta))
+    files = iceberg_meta.plan(_iceberg_snapshot(meta))[0]
     groups: dict[tuple, list[str]] = {}
-    for path, _, _ in files:
-        cols = tuple(pq.read_schema(path).names)
-        groups.setdefault(cols, []).append(path)
+    for d in files:
+        cols = tuple(pq.read_schema(d["path"]).names)
+        groups.setdefault(cols, []).append(d["path"])
     parts = []
     for cols, paths in sorted(groups.items()):
         raw = spark.read.parquet(*sorted(paths))
@@ -1350,17 +876,15 @@ def q_src_iceberg_schema_evolution(
             if f.endswith(".parquet")
         ]
 
-    m1 = _write_manifest(
+    e1 = [entry(ADDED, _S1, 1, p, None) for p in _flat("s1")]
+    e2 = [entry(ADDED, _S2, 2, p, None) for p in _flat("s2")]
+    m1 = write_manifest(meta_dir, "m1-evo.avro", e1)
+    m2 = write_manifest(meta_dir, "m2-evo.avro", e2)
+    l2 = write_manifest_list(
         meta_dir,
-        "m1-evo.avro",
-        [_entry(_ST_ADDED, _S1, 1, p, None) for p in _flat("s1")],
+        _S2,
+        [list_record(m1, e1, _S1, 2), list_record(m2, e2, _S2, 2)],
     )
-    m2 = _write_manifest(
-        meta_dir,
-        "m2-evo.avro",
-        [_entry(_ST_ADDED, _S2, 2, p, None) for p in _flat("s2")],
-    )
-    l2 = _write_manifest_list(meta_dir, _S2, 2, [(m1, _S1), (m2, _S2)])
     schema_v0 = {
         "type": "struct",
         "schema-id": 0,
@@ -1409,14 +933,9 @@ def q_src_iceberg_schema_evolution(
         },
         "current-snapshot-id": _S2,
         "snapshots": [
-            {
-                "snapshot-id": _S2,
-                "sequence-number": 2,
-                "timestamp-ms": _T2,
-                "manifest-list": l2,
-                "summary": {"operation": "append"},
-                "schema-id": 1,
-            }
+            iceberg_meta.snapshot_record(
+                _S2, 2, _T2, l2, "append", schema_id=1
+            )
         ],
         "snapshot-log": [{"timestamp-ms": _T2, "snapshot-id": _S2}],
     }
@@ -1470,30 +989,20 @@ def _sv_double_de(b: bytes) -> float:
 
 def _stats_surviving_iceberg_files(root: str) -> tuple[list[str], int]:
     """(surviving file paths, total file count) for the staged stats
-    table: decode each manifest entry's o_totalprice bounds (field id
-    2) and keep files whose [lower, upper] interval intersects
+    table: decode each planned data file's o_totalprice bounds (field
+    id 2) and keep files whose [lower, upper] interval intersects
     [_STATS_LO, _STATS_HI] — manifest metadata only, no footer reads."""
-    meta = iceberg_meta.load(root)
-    snap = _iceberg_snapshot(meta)
-    _, manifests, _ = ocf_read(snap["manifest-list"])
-    survivors, total = [], 0
-    for m in manifests:
-        if m["content"] != 0:
+    data, _ = iceberg_meta.plan(_iceberg_snapshot(iceberg_meta.load(root)))
+    survivors = []
+    for d in data:
+        lo = {p["key"]: p["value"] for p in d["lower_bounds"] or []}
+        hi = {p["key"]: p["value"] for p in d["upper_bounds"] or []}
+        if 2 in lo and _sv_double_de(lo[2]) > _STATS_HI:
             continue
-        _, entries, _ = ocf_read(m["manifest_path"])
-        for e in entries:
-            if e["status"] == _ST_DELETED:
-                continue
-            df = e["data_file"]
-            total += 1
-            lo = {p["key"]: p["value"] for p in df["lower_bounds"] or []}
-            hi = {p["key"]: p["value"] for p in df["upper_bounds"] or []}
-            if 2 in lo and _sv_double_de(lo[2]) > _STATS_HI:
-                continue
-            if 2 in hi and _sv_double_de(hi[2]) < _STATS_LO:
-                continue
-            survivors.append(df["file_path"])
-    return survivors, total
+        if 2 in hi and _sv_double_de(hi[2]) < _STATS_LO:
+            continue
+        survivors.append(d["path"])
+    return survivors, len(data)
 
 
 @register("src_iceberg_stats_prune", oracle=_STATS_ICE_ORACLE)
@@ -1556,9 +1065,9 @@ def q_src_iceberg_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [{"key": 2, "value": _sv_double(min(mins))}],
                 [{"key": 2, "value": _sv_double(max(maxs))}],
             )
-        entries.append(_entry(_ST_ADDED, _S1, 1, path, None, bounds=bounds))
-    m1 = _write_manifest(meta_dir, "m1-stats.avro", entries)
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+        entries.append(entry(ADDED, _S1, 1, path, None, bounds=bounds))
+    m1 = write_manifest(meta_dir, "m1-stats.avro", entries)
+    l1 = write_manifest_list(meta_dir, _S1, [list_record(m1, entries, _S1, 1)])
     meta = {
         "format-version": 2,
         "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-iceberg-stat",
@@ -1591,14 +1100,7 @@ def q_src_iceberg_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "default-spec-id": 0,
         "current-snapshot-id": _S1,
         "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
+            iceberg_meta.snapshot_record(_S1, 1, _T1, l1, "append")
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
@@ -1695,7 +1197,7 @@ def q_src_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority"
     ).parquet(os.path.join(data_dir, "s4"))
     ins_entries = [
-        _entry(_ST_ADDED, _S4, 4, p, v) for p, v in _pfiles(data_dir, "s4")
+        entry(ADDED, _S4, 4, p, v) for p, v in _pfiles(data_dir, "s4")
     ]
     # (b) the global equality-delete file (key values only, one job)
     eq_dir = os.path.join(meta_dir, "eqdel")
@@ -1713,64 +1215,31 @@ def q_src_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         if f.endswith(".parquet")
     ]
     del_entries = [
-        _entry(_ST_ADDED, _S4, 4, p, None, equality_ids=[1], content=2)
+        entry(ADDED, _S4, 4, p, None, equality_ids=[1], content=2)
         for p in eq_files
     ]
-    m4i = _write_manifest(meta_dir, "m4-upsert-data.avro", ins_entries)
-    m4d = _write_manifest(meta_dir, "m4-upsert-deletes.avro", del_entries)
-    m3 = os.path.join(meta_dir, "m3-fixture.avro")
-    recs = []
-    for mpath, content, added_by, mseq in (
-        (m3, 0, _S3, 3),  # carried manifests keep their COMMIT seq
-        (m4i, 0, _S4, 4),
-        (m4d, 1, _S4, 4),
-    ):
-        _, entries, _ = ocf_read(mpath)
-        recs.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": content,
-                "sequence_number": mseq,
-                "min_sequence_number": 1,
-                "added_snapshot_id": added_by,
-                "added_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_ADDED
-                ),
-                "existing_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_EXISTING
-                ),
-                "deleted_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_DELETED
-                ),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_ADDED
-                ),
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_EXISTING
-                ),
-                "deleted_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_DELETED
-                ),
-            }
-        )
-    l4 = os.path.join(meta_dir, f"snap-{_S4}-1-upsert.avro")
-    ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
+    m4i = write_manifest(meta_dir, "m4-upsert-data.avro", ins_entries)
+    m4d = write_manifest(meta_dir, "m4-upsert-deletes.avro", del_entries)
     with iceberg_meta.update(root) as tm:
+        # s3's manifest is carried; the upsert adds a data and a delete
+        # manifest
+        l4 = write_manifest_list(
+            meta_dir,
+            _S4,
+            iceberg_meta.manifests(_iceberg_snapshot(tm))
+            + [
+                list_record(m4i, ins_entries, _S4, 4),
+                list_record(m4d, del_entries, _S4, 4, content=1),
+            ],
+            tag="1-upsert",
+        )
         iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
 
     # --- reader: data scans with per-file sequence numbers, equality
     # anti-join gated by the STRICT ordering rule
     meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
-    data_files, delete_files = _iceberg_files(snap)
+    data_files, delete_files = iceberg_meta.plan(snap)
     df = _scan_apply_eq_deletes(spark, data_files, delete_files)
     if df is None:
         return local_rows(spark, 
@@ -1796,13 +1265,10 @@ def _iceberg_reachable(
     for s in meta["snapshots"]:
         if s["snapshot-id"] not in snapshot_ids:
             continue
-        out.add(s["manifest-list"])
-        _, manifests, _ = ocf_read(s["manifest-list"])
-        for m in manifests:
-            out.add(m["manifest_path"])
-            _, entries, _ = ocf_read(m["manifest_path"])
-            for e in entries:
-                if readable_only and e["status"] == _ST_DELETED:
+        out.update(iceberg_meta.metadata_paths(s))
+        for m in iceberg_meta.manifests(s):
+            for e in iceberg_meta.entries(m):
+                if readable_only and e["status"] == DELETED:
                     continue
                 out.add(e["data_file"]["file_path"])
     return out
@@ -1918,11 +1384,11 @@ def q_sink_iceberg_expire_snapshots(
     _iceberg_stage(spark, o, root)
     meta0 = iceberg_meta.load(root)
     urgent = {
-        p
-        for p, v, _, _ in _iceberg_files(
+        d["path"]
+        for d in iceberg_meta.plan(
             _iceberg_snapshot(meta0, snapshot_id=_S2)
         )[0]
-        if v == "1-URGENT"
+        if d["pval"] == "1-URGENT"
     }
 
     assert _iceberg_expire_snapshots(root, _T1 - 1) == [], (
@@ -1934,8 +1400,8 @@ def q_sink_iceberg_expire_snapshots(
     )
     meta = iceberg_meta.load(root)
     assert [s["snapshot-id"] for s in meta["snapshots"]] == [_S3]
-    live = _iceberg_files(_iceberg_snapshot(meta))[0]
-    assert all(os.path.exists(p) for p, _, _, _ in live), (
+    live = iceberg_meta.plan(_iceberg_snapshot(meta))[0]
+    assert all(os.path.exists(d["path"]) for d in live), (
         "expiry must never touch a retained snapshot's files"
     )
     try:
@@ -1944,7 +1410,7 @@ def q_sink_iceberg_expire_snapshots(
     except ValueError:
         pass
 
-    df = _scan_with_partition(spark, [(p, v, n) for p, v, n, _ in live])
+    df = _scan_with_partition(spark, live)
     if df is None:
         return local_rows(spark, 
             [], "parity bigint, n_rows long, total_cents long"
@@ -2000,43 +1466,44 @@ def q_sink_iceberg_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
     with iceberg_meta.update(root) as meta:
-        s3_files = _iceberg_files(_iceberg_snapshot(meta))[0]
+        s3_files = iceberg_meta.plan(_iceberg_snapshot(meta))[0]
         _S4, _T4 = _S3 + 1, _T3 + 60_000
 
         # rewrite: ONE distributed job reads exactly the live set and
         # writes one file per partition (the partition column is restored
         # from metadata, as everywhere in this layer)
-        src = _scan_with_partition(
-            spark, [(p, v, n) for p, v, n, _ in s3_files]
-        )
+        src = _scan_with_partition(spark, s3_files)
         src.coalesce(1).write.mode("overwrite").partitionBy(
             "o_orderpriority"
         ).parquet(os.path.join(data_dir, "s4"))
         compacted = _pfiles(data_dir, "s4")
         entries = [
-            _entry(_ST_ADDED, _S4, 4, p, v) for p, v in compacted
+            entry(ADDED, _S4, 4, p, v) for p, v in compacted
         ] + [
-            _entry(_ST_DELETED, _S4, s, p, v) for p, v, _, s in s3_files
+            entry(DELETED, _S4, d["seq"], d["path"], d["pval"])
+            for d in s3_files
         ]
-        m4 = _write_manifest(meta_dir, "m4-compact.avro", entries)
-        l4 = _write_manifest_list(meta_dir, _S4, 4, [(m4, _S4)])
+        m4 = write_manifest(meta_dir, "m4-compact.avro", entries)
+        l4 = write_manifest_list(
+            meta_dir, _S4, [list_record(m4, entries, _S4, 4)]
+        )
         iceberg_meta.add_snapshot(meta, _S4, 4, _T4, l4, "replace")
 
     meta = iceberg_meta.load(root)
-    new_live = _iceberg_files(_iceberg_snapshot(meta))[0]
+    new_live = iceberg_meta.plan(_iceberg_snapshot(meta))[0]
     assert len(new_live) <= len(s3_files)
     n_per_part: dict[str, int] = {}
-    for _, v, _, _ in s3_files:
-        n_per_part[v] = n_per_part.get(v, 0) + 1
+    for d in s3_files:
+        n_per_part[d["pval"]] = n_per_part.get(d["pval"], 0) + 1
     if any(n > 1 for n in n_per_part.values()):  # something to compact
         assert len(new_live) < len(s3_files), (
             "compaction must shrink a fragmented partition's file count"
         )
-    old_live = _iceberg_files(_iceberg_snapshot(meta, snapshot_id=_S3))[0]
-    assert {p for p, _, _, _ in old_live} == {p for p, _, _, _ in s3_files}, (
+    old_live = iceberg_meta.plan(_iceberg_snapshot(meta, snapshot_id=_S3))[0]
+    assert {d["path"] for d in old_live} == {d["path"] for d in s3_files}, (
         "the pre-compaction snapshot must still read the old layout"
     )
-    df = _scan_with_partition(spark, [(p, v, n) for p, v, n, _ in new_live])
+    df = _scan_with_partition(spark, new_live)
     if df is None:
         return local_rows(spark, 
             [], "o_orderpriority string, n_rows long, total_cents long"
@@ -2058,18 +1525,6 @@ FROM orders
 WHERE o_orderkey IN {_BUCKET_LOOKUP_KEYS}
 GROUP BY o_orderkey
 """
-
-# the bucket table's partition record (one int field, spec-style name)
-_BUCKET_ENTRY_SCHEMA = json.loads(
-    json.dumps(_MANIFEST_ENTRY_SCHEMA)
-    .replace('"name": "r2"', '"name": "r2b"')
-    .replace('"name": "r102"', '"name": "r102b"')
-    .replace('"name": "k126_v127"', '"name": "k126_v127b"')
-    .replace(
-        '{"name": "o_orderpriority", "type": ["null", "string"], "field-id": 1000}',
-        '{"name": "o_orderkey_bucket", "type": ["null", "int"], "field-id": 1000}',
-    )
-)
 
 
 @register("src_iceberg_bucket_transform", oracle=_BUCKET_ORACLE)
@@ -2155,15 +1610,19 @@ def q_src_iceberg_bucket_transform(
         bval = int(d.split("=", 1)[1])
         for f in sorted(os.listdir(pdir)):
             if f.endswith(".parquet"):
-                e = _entry(
-                    _ST_ADDED, _S1, 1, os.path.join(pdir, f), None
+                e = entry(
+                    ADDED, _S1, 1, os.path.join(pdir, f), None
                 )
                 e["data_file"]["partition"] = {"o_orderkey_bucket": bval}
                 entries.append(e)
-    m1 = _write_manifest(
-        meta_dir, "m1-bucket.avro", entries, schema=_BUCKET_ENTRY_SCHEMA
+    m1 = write_manifest(
+        meta_dir,
+        "m1-bucket.avro",
+        entries,
+        partition=[("o_orderkey_bucket", "int", 1000)],
+        tag="b",
     )
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+    l1 = write_manifest_list(meta_dir, _S1, [list_record(m1, entries, _S1, 1)])
     meta = {
         "format-version": 2,
         "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-iceberg-bckt",
@@ -2208,14 +1667,7 @@ def q_src_iceberg_bucket_transform(
         "default-spec-id": 0,
         "current-snapshot-id": _S1,
         "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
+            iceberg_meta.snapshot_record(_S1, 1, _T1, l1, "append")
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
@@ -2239,15 +1691,15 @@ def q_src_iceberg_bucket_transform(
         if s["spec-id"] == meta["default-spec-id"]
     )
     assert spec["fields"][0]["transform"] == f"bucket[{_N_BUCKETS}]"
-    files = _iceberg_live_files(
+    files = iceberg_meta.plan(
         _iceberg_snapshot(meta), partition_pred=lambda b: b in targets
-    )
+    )[0]
     if not files:
         return local_rows(spark, 
             [], "o_orderkey long, n_rows long, total_cents long"
         )
     return (
-        spark.read.parquet(*sorted(p for p, _, _ in files))
+        spark.read.parquet(*sorted(d["path"] for d in files))
         .filter(F.col("o_orderkey").isin(*_BUCKET_LOOKUP_KEYS))
         .groupBy("o_orderkey")
         .agg(
@@ -2308,15 +1760,13 @@ def q_src_iceberg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo, hi = ordered.index(from_id), ordered.index(to_id)
         paths: list[str] = []
         for sid in ordered[lo + 1 : hi + 1]:
-            _, manifests, _ = ocf_read(by_id[sid]["manifest-list"])
-            for m in manifests:
+            for m in iceberg_meta.manifests(by_id[sid]):
                 if m["content"] != 0 or m["added_snapshot_id"] != sid:
                     continue  # carried-over manifests add nothing here
-                _, entries, _ = ocf_read(m["manifest_path"])
                 paths.extend(
                     e["data_file"]["file_path"]
-                    for e in entries
-                    if e["status"] == _ST_ADDED and e["snapshot_id"] == sid
+                    for e in iceberg_meta.entries(m)
+                    if e["status"] == ADDED and e["snapshot_id"] == sid
                 )
         return paths
 
@@ -2376,17 +1826,6 @@ WHERE o_orderdate >= TIMESTAMP '{_YEAR_LO}-01-01'
 GROUP BY 1
 """
 
-_YEAR_ENTRY_SCHEMA = json.loads(
-    json.dumps(_MANIFEST_ENTRY_SCHEMA)
-    .replace('"name": "r2"', '"name": "r2y"')
-    .replace('"name": "r102"', '"name": "r102y"')
-    .replace('"name": "k126_v127"', '"name": "k126_v127y"')
-    .replace(
-        '{"name": "o_orderpriority", "type": ["null", "string"], "field-id": 1000}',
-        '{"name": "o_orderdate_year", "type": ["null", "int"], "field-id": 1000}',
-    )
-)
-
 
 @register("src_iceberg_year_transform", oracle=_YEAR_ORACLE)
 def q_src_iceberg_year_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2433,13 +1872,17 @@ def q_src_iceberg_year_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         yval = int(d.split("=", 1)[1])
         for f in sorted(os.listdir(pdir)):
             if f.endswith(".parquet"):
-                e = _entry(_ST_ADDED, _S1, 1, os.path.join(pdir, f), None)
+                e = entry(ADDED, _S1, 1, os.path.join(pdir, f), None)
                 e["data_file"]["partition"] = {"o_orderdate_year": yval}
                 entries.append(e)
-    m1 = _write_manifest(
-        meta_dir, "m1-year.avro", entries, schema=_YEAR_ENTRY_SCHEMA
+    m1 = write_manifest(
+        meta_dir,
+        "m1-year.avro",
+        entries,
+        partition=[("o_orderdate_year", "int", 1000)],
+        tag="y",
     )
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+    l1 = write_manifest_list(meta_dir, _S1, [list_record(m1, entries, _S1, 1)])
     meta = {
         "format-version": 2,
         "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-iceberg-year",
@@ -2475,14 +1918,7 @@ def q_src_iceberg_year_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         "default-spec-id": 0,
         "current-snapshot-id": _S1,
         "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
+            iceberg_meta.snapshot_record(_S1, 1, _T1, l1, "append")
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
@@ -2493,15 +1929,15 @@ def q_src_iceberg_year_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert (
         meta["partition-specs"][0]["fields"][0]["transform"] == "year"
     )
-    files = _iceberg_live_files(
+    files = iceberg_meta.plan(
         _iceberg_snapshot(meta), partition_pred=lambda y: y in targets
-    )
+    )[0]
     if not files:
         return local_rows(spark, 
             [], "order_year bigint, n_rows long, total_cents long"
         )
     return (
-        spark.read.parquet(*sorted(p for p, _, _ in files))
+        spark.read.parquet(*sorted(d["path"] for d in files))
         .filter(
             (
                 F.col("o_orderdate")
@@ -2585,16 +2021,14 @@ def q_stream_iceberg_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_results: dict[int, list[int]] = {}
         for sid in todo:
             s = snaps[sid]
-            _, manifests, _ = ocf_read(s["manifest-list"])
             paths = []
-            for m in manifests:
+            for m in iceberg_meta.manifests(s):
                 if m["content"] != 0 or m["added_snapshot_id"] != sid:
                     continue
-                _, entries, _ = ocf_read(m["manifest_path"])
                 paths.extend(
                     e["data_file"]["file_path"]
-                    for e in entries
-                    if e["status"] == _ST_ADDED and e["snapshot_id"] == sid
+                    for e in iceberg_meta.entries(m)
+                    if e["status"] == ADDED and e["snapshot_id"] == sid
                 )
             seq = int(s["sequence-number"])
             if not paths:
@@ -2695,56 +2129,33 @@ def _iceberg_stage_spec_evo(spark: SparkSession, o: DataFrame, root: str) -> Non
         "overwrite"
     ).partitionBy("o_orderpriority").parquet(os.path.join(data_dir, "s2"))
 
-    m1 = _write_manifest(
+    e1 = [
+        entry(ADDED, _S1, 1, p, v, partition={"o_orderstatus": v})
+        for p, v in _pfiles(data_dir, "s1", col="o_orderstatus")
+    ]
+    e2 = [entry(ADDED, _S2, 2, p, v) for p, v in _pfiles(data_dir, "s2")]
+    m1 = write_manifest(
         meta_dir,
         "m1-spec0-status.avro",
-        [
-            _entry(_ST_ADDED, _S1, 1, p, v, partition={"o_orderstatus": v})
-            for p, v in _pfiles(data_dir, "s1", col="o_orderstatus")
-        ],
-        schema=_entry_schema_for([("o_orderstatus", 1000)]),
+        e1,
         spec_id=0,
+        partition=[("o_orderstatus", "string", 1000)],
     )
-    m2 = _write_manifest(
+    m2 = write_manifest(
         meta_dir,
         "m2-spec1-priority.avro",
-        [
-            _entry(_ST_ADDED, _S2, 2, p, v)
-            for p, v in _pfiles(data_dir, "s2")
-        ],
-        schema=_entry_schema_for([("o_orderpriority", 1001)]),
+        e2,
         spec_id=1,
+        partition=[("o_orderpriority", "string", 1001)],
     )
-
     # manifest list for s2: both manifests, each under ITS spec-id
-    recs = []
-    for mpath, added_by, spec_id, seq in (
-        (m1, _S1, 0, 1),
-        (m2, _S2, 1, 2),
-    ):
-        _, entries, _ = ocf_read(mpath)
-        recs.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": added_by,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    l2 = os.path.join(meta_dir, f"snap-{_S2}-1-fixture.avro")
-    ocf_write(l2, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"})
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+    r1 = list_record(m1, e1, _S1, 1)
+    l1 = write_manifest_list(meta_dir, _S1, [r1])
+    l2 = write_manifest_list(
+        meta_dir,
+        _S2,
+        [r1, list_record(m2, e2, _S2, 2, spec_id=1, min_seq=2)],
+    )
 
     schema = {
         "type": "struct",
@@ -2794,22 +2205,8 @@ def _iceberg_stage_spec_evo(spark: SparkSession, o: DataFrame, root: str) -> Non
         ],
     }
     snaps = [
-        {
-            "snapshot-id": _S1,
-            "sequence-number": 1,
-            "timestamp-ms": _T1,
-            "manifest-list": l1,
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        },
-        {
-            "snapshot-id": _S2,
-            "sequence-number": 2,
-            "timestamp-ms": _T2,
-            "manifest-list": l2,
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        },
+        iceberg_meta.snapshot_record(_S1, 1, _T1, l1, "append"),
+        iceberg_meta.snapshot_record(_S2, 2, _T2, l2, "append"),
     ]
     for v, n_snaps, specs, default in (
         (1, 1, [spec0], 0),
@@ -2861,7 +2258,7 @@ def q_src_iceberg_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     speaks (O(selected) scan there); legacy-spec files degrade to
     scan + pushed filter, never to wrong answers — iceberg-core's
     planning rule. One distributed scan per spec family, one union.
-    Cites: _iceberg_files_full (per-manifest spec resolution),
+    Cites: iceberg_meta.plan (per-manifest spec resolution),
     VERDICT r12 'What's missing' item 1.
     """
     o = load_table(spark, sf_dir, "orders").select(
@@ -2873,7 +2270,7 @@ def q_src_iceberg_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     specs = {s["spec-id"]: s for s in meta["partition-specs"]}
     default_spec = meta["default-spec-id"]
     wanted = {"2-HIGH", "5-LOW"}
-    data, _ = _iceberg_files_full(
+    data, _ = iceberg_meta.plan(
         _iceberg_snapshot(meta),
         partition_pred=lambda v: v in wanted,
         specs=specs,
@@ -2922,38 +2319,6 @@ FROM orders
 WHERE o_orderpriority <> '1-URGENT' AND o_orderkey % 10 <> 7
 GROUP BY o_orderpriority
 """
-
-
-def _entry_schema_v3dv() -> dict:
-    """Manifest-entry schema + the v3 deletion-vector coordinates
-    (table spec v3 §data_file fields): referenced_data_file (143),
-    content_offset (144), content_size_in_bytes (145)."""
-    import copy
-
-    schema = copy.deepcopy(_MANIFEST_ENTRY_SCHEMA)
-    df_fields = next(
-        f for f in schema["fields"] if f["name"] == "data_file"
-    )["type"]["fields"]
-    df_fields.extend(
-        [
-            {
-                "name": "referenced_data_file",
-                "type": ["null", "string"],
-                "field-id": 143,
-            },
-            {
-                "name": "content_offset",
-                "type": ["null", "long"],
-                "field-id": 144,
-            },
-            {
-                "name": "content_size_in_bytes",
-                "type": ["null", "long"],
-                "field-id": 145,
-            },
-        ]
-    )
-    return schema
 
 
 @register("src_iceberg_v3_dv", oracle=_V3DV_ORACLE)
@@ -3014,7 +2379,7 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta_dir = os.path.join(root, "metadata")
     meta = iceberg_meta.load(root)
     s3 = _iceberg_snapshot(meta)
-    live, _ = _iceberg_files(s3)
+    live, _ = iceberg_meta.plan(s3)
 
     # --- s4 staging: deleted positions per live file in ONE job
     # (collect ∝ deleted rows — the commit payload), then one Puffin
@@ -3022,7 +2387,7 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from urllib.parse import unquote
 
     _S4, _T4 = _S3 + 1, _T3 + 60_000
-    pval_by_path = {p: v for p, v, _, _ in live}
+    pval_by_path = {d["path"]: d["pval"] for d in live}
     hit_rows = (
         spark.read.parquet(*sorted(pval_by_path))
         .select(
@@ -3057,11 +2422,10 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             for p in ordered
         ],
     )
-    schema_v3 = _entry_schema_v3dv()
     dv_entries = []
     for p, be in zip(ordered, blob_entries):
-        ent = _entry(
-            _ST_ADDED,
+        ent = entry(
+            ADDED,
             _S4,
             4,
             puffin_path,
@@ -3078,56 +2442,15 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
         dv_entries.append(ent)
-    m4 = _write_manifest(
-        meta_dir, "m4-dv-deletes.avro", dv_entries, schema=schema_v3
+    m4 = write_manifest(meta_dir, "m4-dv-deletes.avro", dv_entries, v3="dv")
+    # manifest list: s3's data manifest (carried) + m4 (DV deletes)
+    l4 = write_manifest_list(
+        meta_dir,
+        _S4,
+        iceberg_meta.manifests(s3)
+        + [list_record(m4, dv_entries, _S4, 4, content=1)],
+        format_version=3,
     )
-    # manifest list: m3 (data, re-referenced) + m4 (DV deletes)
-    m3 = s3["manifest-list"]
-    _, m3_manifests, _ = ocf_read(m3)
-    (m3_data,) = [m["manifest_path"] for m in m3_manifests]
-    recs = []
-    for mpath, content, added_by, mseq in (
-        (m3_data, 0, _S3, 3),  # carried manifest keeps its COMMIT seq
-        (m4, 1, _S4, 4),
-    ):
-        _, entries, _ = ocf_read(mpath)
-        recs.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": content,
-                "sequence_number": mseq,
-                "min_sequence_number": 1,
-                "added_snapshot_id": added_by,
-                "added_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_ADDED
-                ),
-                "existing_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_EXISTING
-                ),
-                "deleted_files_count": sum(
-                    1 for e in entries if e["status"] == _ST_DELETED
-                ),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_ADDED
-                ),
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_EXISTING
-                ),
-                "deleted_rows_count": sum(
-                    e["data_file"]["record_count"]
-                    for e in entries
-                    if e["status"] == _ST_DELETED
-                ),
-            }
-        )
-    l4 = os.path.join(meta_dir, f"snap-{_S4}-1-fixture.avro")
-    ocf_write(l4, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "3"})
     with iceberg_meta.update(root) as tm:
         tm["format-version"] = 3  # v3 commit; prior snapshots stay readable
         # v3 REQUIRES next-row-id (spec §Table Metadata): on upgrade it
@@ -3144,7 +2467,7 @@ def q_src_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DV blobs decoded executor-side from manifest coordinates
     meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
-    data_files, delete_files = _iceberg_files_full(snap)
+    data_files, delete_files = iceberg_meta.plan(snap)
     if not data_files:
         return local_rows(spark, 
             [], "o_orderpriority string, n_rows long, total_cents long"
@@ -3239,21 +2562,6 @@ GROUP BY o_orderpriority
 """
 
 
-def _entry_schema_v3lineage() -> dict:
-    """Manifest-entry schema + the v3 row-lineage coordinate
-    (table spec v3 §Row Lineage): first_row_id (field id 142)."""
-    import copy
-
-    schema = copy.deepcopy(_MANIFEST_ENTRY_SCHEMA)
-    df_fields = next(
-        f for f in schema["fields"] if f["name"] == "data_file"
-    )["type"]["fields"]
-    df_fields.append(
-        {"name": "first_row_id", "type": ["null", "long"], "field-id": 142}
-    )
-    return schema
-
-
 @register("src_iceberg_v3_row_lineage", oracle=_LINEAGE_ORACLE)
 def q_src_iceberg_v3_row_lineage(
     spark: SparkSession, sf_dir: str
@@ -3299,9 +2607,8 @@ def q_src_iceberg_v3_row_lineage(
     # sorted by o_orderkey so the derived ids are deterministic
     import pyarrow.parquet as pq
 
-    schema_v3 = _entry_schema_v3lineage()
     next_row_id = 0
-    manifests = []  # (manifest path, snapshot id, seq)
+    recs = []  # one manifest-list record per append
     snaps_meta = []  # (sid, seq, ts, first-row-id)
     for seq, (sid, ts, parity, sub) in enumerate(
         (
@@ -3332,48 +2639,22 @@ def q_src_iceberg_v3_row_lineage(
         first_row_id = next_row_id
         entries = []
         for lo, p, n in sorted(stats):
-            ent = _entry(_ST_ADDED, sid, seq, p, None)
+            ent = entry(ADDED, sid, seq, p, None)
             ent["data_file"]["partition"] = {"o_orderpriority": None}
             ent["data_file"]["first_row_id"] = next_row_id
             entries.append(ent)
             next_row_id += n
-        m = _write_manifest(
-            meta_dir, f"m-{sub}-lineage.avro", entries, schema=schema_v3
+        m = write_manifest(
+            meta_dir, f"m-{sub}-lineage.avro", entries, v3="lineage"
         )
-        manifests.append((m, sid, seq))
+        recs.append(list_record(m, entries, sid, seq, min_seq=seq))
         snaps_meta.append((sid, seq, ts, first_row_id))
 
     # manifest lists: s1 = [m1]; s2 = [m1, m2] (immutable, re-referenced)
-    lists = {}
-    for upto in (1, 2):
-        recs = []
-        for m, sid, seq in manifests[:upto]:
-            _, entries, _ = ocf_read(m)
-            recs.append(
-                {
-                    "manifest_path": m,
-                    "manifest_length": os.path.getsize(m),
-                    "partition_spec_id": 0,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        e["data_file"]["record_count"] for e in entries
-                    ),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
-        sid = manifests[upto - 1][1]
-        lp = os.path.join(meta_dir, f"snap-{sid}-1-fixture.avro")
-        ocf_write(
-            lp, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "3"}
-        )
-        lists[upto] = lp
+    lists = {
+        seq: write_manifest_list(meta_dir, sid, recs[:seq], format_version=3)
+        for sid, seq, _, _ in snaps_meta
+    }
 
     meta = {
         "format-version": 3,
@@ -3414,16 +2695,17 @@ def q_src_iceberg_v3_row_lineage(
         "default-spec-id": 0,
         "current-snapshot-id": _S2,
         "snapshots": [
-            {
-                "snapshot-id": sid,
-                "sequence-number": seq,
-                "timestamp-ms": ts,
-                "manifest-list": lists[seq],
+            {  # this table records first-row-id ahead of the summary
+                **dict(list(rec.items())[:4]),
                 "first-row-id": frid,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
+                **rec,
             }
             for sid, seq, ts, frid in snaps_meta
+            for rec in (
+                iceberg_meta.snapshot_record(
+                    sid, seq, ts, lists[seq], "append"
+                ),
+            )
         ],
         "snapshot-log": [
             {"timestamp-ms": ts, "snapshot-id": sid}
@@ -3434,7 +2716,7 @@ def q_src_iceberg_v3_row_lineage(
 
     # --- reader: derive _row_id inside the scan from manifest metadata
     meta = iceberg_meta.load(root)
-    data_files, _ = _iceberg_files_full(_iceberg_snapshot(meta))
+    data_files, _ = iceberg_meta.plan(_iceberg_snapshot(meta))
     if not data_files:
         return local_rows(spark, 
             [],
@@ -3531,51 +2813,20 @@ def q_src_iceberg_v3_default_values(
             if f.endswith(".parquet")
         )
 
-    ms = []
+    recs = []
     for sub, sid, seq in (("s1", _S1, 1), ("s2", _S2, 2)):
         entries = []
         for p in _files(sub):
-            ent = _entry(_ST_ADDED, sid, seq, p, None)
+            ent = entry(ADDED, sid, seq, p, None)
             ent["data_file"]["partition"] = {"o_orderpriority": None}
             entries.append(ent)
-        ms.append(
-            (
-                _write_manifest(meta_dir, f"m-{sub}-defval.avro", entries),
-                sid,
-                seq,
-            )
-        )
-    recs = []
-    for m, sid, seq in ms:
-        _, entries, _ = ocf_read(m)
-        recs.append(
-            {
-                "manifest_path": m,
-                "manifest_length": os.path.getsize(m),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": sid,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
+        m = write_manifest(meta_dir, f"m-{sub}-defval.avro", entries)
+        recs.append(list_record(m, entries, sid, seq, min_seq=seq))
     # one manifest list PER SNAPSHOT: s1's list holds only the s1
     # manifest (a time-travel or ref read of s1 must not see s2's
-    # rows — the r13 advice finding), s2's holds both
-    l1 = os.path.join(meta_dir, f"snap-{_S1}-1-fixture.avro")
-    ocf_write(
-        l1, _MANIFEST_FILE_SCHEMA, recs[:1], metadata={"format-version": "3"}
-    )
-    l2 = os.path.join(meta_dir, f"snap-{_S2}-1-fixture.avro")
-    ocf_write(l2, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "3"})
+    # rows), s2's holds both
+    l1 = write_manifest_list(meta_dir, _S1, recs[:1], format_version=3)
+    l2 = write_manifest_list(meta_dir, _S2, recs, format_version=3)
     rows_s1 = recs[0]["added_rows_count"]
     rows_s2 = recs[1]["added_rows_count"]
     meta = {
@@ -3621,24 +2872,12 @@ def q_src_iceberg_v3_default_values(
         "default-spec-id": 0,
         "current-snapshot-id": _S2,
         "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-                "first-row-id": 0,
-            },
-            {
-                "snapshot-id": _S2,
-                "sequence-number": 2,
-                "timestamp-ms": _T2,
-                "manifest-list": l2,
-                "summary": {"operation": "append"},
-                "schema-id": 1,
-                "first-row-id": rows_s1,
-            },
+            iceberg_meta.snapshot_record(
+                _S1, 1, _T1, l1, "append", first_row_id=0
+            ),
+            iceberg_meta.snapshot_record(
+                _S2, 2, _T2, l2, "append", schema_id=1, first_row_id=rows_s1
+            ),
         ],
         "snapshot-log": [
             {"timestamp-ms": _T1, "snapshot-id": _S1},
@@ -3656,7 +2895,7 @@ def q_src_iceberg_v3_default_values(
     )
     flag_field = next(f for f in schema["fields"] if f["id"] == 4)
     initial_default = flag_field.get("initial-default")
-    data_files, _ = _iceberg_files_full(_iceberg_snapshot(meta))
+    data_files, _ = iceberg_meta.plan(_iceberg_snapshot(meta))
     if not data_files:
         return local_rows(spark, 
             [], "flag string, n_rows long, total_cents long"
@@ -3761,8 +3000,8 @@ def q_src_iceberg_multifield_spec(
             for f in sorted(os.listdir(os.path.join(base, d1, d2))):
                 if f.endswith(".parquet"):
                     entries.append(
-                        _entry(
-                            _ST_ADDED,
+                        entry(
+                            ADDED,
                             _S1,
                             1,
                             os.path.join(base, d1, d2, f),
@@ -3773,15 +3012,16 @@ def q_src_iceberg_multifield_spec(
                             },
                         )
                     )
-    m1 = _write_manifest(
+    m1 = write_manifest(
         meta_dir,
         "m1-multispec.avro",
         entries,
-        schema=_entry_schema_for(
-            [("o_orderpriority", 1000), ("o_orderstatus", 1001)]
-        ),
+        partition=[
+            ("o_orderpriority", "string", 1000),
+            ("o_orderstatus", "string", 1001),
+        ],
     )
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+    l1 = write_manifest_list(meta_dir, _S1, [list_record(m1, entries, _S1, 1)])
     meta = {
         "format-version": 2,
         "table-uuid": "9f2a7b4e-1d15-4d29-8c3a-iceberg-mspc",
@@ -3844,14 +3084,7 @@ def q_src_iceberg_multifield_spec(
         "default-spec-id": 0,
         "current-snapshot-id": _S1,
         "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
+            iceberg_meta.snapshot_record(_S1, 1, _T1, l1, "append")
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
@@ -3861,7 +3094,7 @@ def q_src_iceberg_multifield_spec(
     meta = iceberg_meta.load(root)
     specs = {s["spec-id"]: s for s in meta["partition-specs"]}
     want = ("1-URGENT", "F")
-    data, _ = _iceberg_files_full(
+    data, _ = iceberg_meta.plan(
         _iceberg_snapshot(meta),
         partition_pred=lambda t: t == want,
         specs=specs,
@@ -3952,7 +3185,7 @@ def q_src_iceberg_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for label in ("audit-tag", "wap-branch", "main"):
         snap = _iceberg_snapshot(meta, ref=label)
-        df = _scan_with_partition(spark, _iceberg_live_files(snap))
+        df = _scan_with_partition(spark, iceberg_meta.plan(snap)[0])
         if df is not None:
             parts.append(df.withColumn("ref", F.lit(label)))
     if not parts:
@@ -4060,27 +3293,15 @@ def q_src_lake_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- Iceberg metadata over the SAME files
-    m1 = _write_manifest(
-        meta_dir,
-        "m1-uniform.avro",
-        [_entry(_ST_ADDED, _S1, 1, p, v) for p, v in pfiles],
-    )
-    m2 = _write_manifest(
-        meta_dir,
-        "m2-uniform-rewrite.avro",
-        [
-            _entry(
-                _ST_DELETED if v == "1-URGENT" else _ST_EXISTING,
-                _S2,
-                2,
-                p,
-                v,
-            )
-            for p, v in pfiles
-        ],
-    )
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
-    l2 = _write_manifest_list(meta_dir, _S2, 2, [(m2, _S2)])
+    e1 = [entry(ADDED, _S1, 1, p, v) for p, v in pfiles]
+    e2 = [
+        entry(DELETED if v == "1-URGENT" else EXISTING, _S2, 2, p, v)
+        for p, v in pfiles
+    ]
+    m1 = write_manifest(meta_dir, "m1-uniform.avro", e1)
+    m2 = write_manifest(meta_dir, "m2-uniform-rewrite.avro", e2)
+    l1 = write_manifest_list(meta_dir, _S1, [list_record(m1, e1, _S1, 1)])
+    l2 = write_manifest_list(meta_dir, _S2, [list_record(m2, e2, _S2, 2)])
     iceberg_meta.commit(
         meta_dir,
         1,
@@ -4094,15 +3315,18 @@ def q_src_lake_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- read through BOTH format chains
     delta_log._delta_check_protocol(log_dir)
     delta_files = [
-        (os.path.join(root, rel), add["partitionValues"]["o_orderpriority"], 0)
+        {
+            "path": os.path.join(root, rel),
+            "pval": add["partitionValues"]["o_orderpriority"],
+        }
         for rel, add in sorted(delta_log.snapshot(log_dir).live.items())
     ]
-    ice_files = _iceberg_live_files(
+    ice_files = iceberg_meta.plan(
         _iceberg_snapshot(iceberg_meta.load(root))
-    )
+    )[0]
     parts = []
     for label, files in (("delta", delta_files), ("iceberg", ice_files)):
-        df = _scan_with_partition(spark, [(p, v, n) for p, v, n in files])
+        df = _scan_with_partition(spark, files)
         if df is not None:
             parts.append(df.withColumn("format", F.lit(label)))
     if not parts:
@@ -4131,49 +3355,6 @@ FROM orders
 WHERE o_orderpriority = '5-LOW'
 GROUP BY o_orderpriority
 """
-
-
-def _manifest_file_schema_with_summaries() -> dict:
-    """Manifest-list schema + the spec's `partitions` field summaries
-    (field 507: per-partition-field contains_null(509) and
-    lower/upper bounds(510/511) as single-value-serialized bytes)."""
-    import copy
-
-    schema = copy.deepcopy(_MANIFEST_FILE_SCHEMA)
-    schema["fields"].append(
-        {
-            "name": "partitions",
-            "field-id": 507,
-            "type": [
-                "null",
-                {
-                    "type": "array",
-                    "items": {
-                        "type": "record",
-                        "name": "r508",
-                        "fields": [
-                            {
-                                "name": "contains_null",
-                                "type": "boolean",
-                                "field-id": 509,
-                            },
-                            {
-                                "name": "lower_bound",
-                                "type": ["null", "bytes"],
-                                "field-id": 510,
-                            },
-                            {
-                                "name": "upper_bound",
-                                "type": ["null", "bytes"],
-                                "field-id": 511,
-                            },
-                        ],
-                    },
-                },
-            ],
-        }
-    )
-    return schema
 
 
 @register("src_iceberg_manifest_prune", oracle=_MANIFEST_PRUNE_ORACLE)
@@ -4218,49 +3399,25 @@ def q_src_iceberg_manifest_prune(
     high = [(p, v) for p, v in pfiles if v not in ("1-URGENT", "2-HIGH")]
 
     recs = []
-    manifests = []
     for name, group in (("m-low.avro", low), ("m-high.avro", high)):
-        mpath = _write_manifest(
-            meta_dir,
-            name,
-            [_entry(_ST_ADDED, _S1, 1, p, v) for p, v in group],
-        )
-        manifests.append(mpath)
+        entries = [entry(ADDED, _S1, 1, p, v) for p, v in group]
         vals = sorted(v for _, v in group)
-        _, entries, _ = ocf_read(mpath)
         recs.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": 1,
-                "min_sequence_number": 1,
-                "added_snapshot_id": _S1,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": [
+            list_record(
+                write_manifest(meta_dir, name, entries),
+                entries,
+                _S1,
+                1,
+                partitions=[
                     {
                         "contains_null": False,
                         "lower_bound": vals[0].encode("utf-8"),
                         "upper_bound": vals[-1].encode("utf-8"),
                     }
                 ],
-            }
+            )
         )
-    l1 = os.path.join(meta_dir, f"snap-{_S1}-1-fixture.avro")
-    ocf_write(
-        l1,
-        _manifest_file_schema_with_summaries(),
-        recs,
-        metadata={"format-version": "2"},
-    )
+    l1 = write_manifest_list(meta_dir, _S1, recs)
     iceberg_meta.commit(
         meta_dir,
         1,
@@ -4281,7 +3438,7 @@ def q_src_iceberg_manifest_prune(
         return (not lo or lo <= want) and (not hi or want <= hi)
 
     meta = iceberg_meta.load(root)
-    data, _ = _iceberg_files_full(
+    data, _ = iceberg_meta.plan(
         _iceberg_snapshot(meta),
         partition_pred=lambda v: v == want,
         manifest_pred=_summary_may_match,
@@ -4344,14 +3501,14 @@ def q_src_iceberg_meta_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tmp(sf_dir, "iceberg_metafiles")
     _iceberg_stage(spark, o, root)
     meta = iceberg_meta.load(root)
-    files = _iceberg_live_files(_iceberg_snapshot(meta))
+    files = iceberg_meta.plan(_iceberg_snapshot(meta))[0]
     if not files:
         return local_rows(spark, 
             [],
             "partition_value string, file_count long, record_count long",
         )
     fdf = local_rows(spark, 
-        [(v, n) for _, v, n in files],
+        [(d["pval"], d["n"]) for d in files],
         "partition_value string, record_count long",
     )
     return fdf.groupBy("partition_value").agg(
@@ -4419,7 +3576,7 @@ def q_sink_iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     meta = iceberg_meta.load(root)
     df = _scan_with_partition(
-        spark, _iceberg_live_files(_iceberg_snapshot(meta))
+        spark, iceberg_meta.plan(_iceberg_snapshot(meta))[0]
     )
     if df is None:
         return local_rows(spark, 

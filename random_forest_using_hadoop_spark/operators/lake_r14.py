@@ -41,25 +41,26 @@ from random_forest_using_hadoop_spark.delta_format import (
     dv_on_disk_descriptors,
     dv_read,
 )
-from random_forest_using_hadoop_spark.iceberg_format import ocf_read, ocf_write
+from random_forest_using_hadoop_spark.iceberg_meta import (
+    ADDED,
+    DELETED,
+    EXISTING,
+    entry,
+    list_record,
+    write_manifest,
+    write_manifest_list,
+)
 from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _scan_apply_eq_deletes,
     _scan_with_partition,
-    _MANIFEST_FILE_SCHEMA,
-    _ST_ADDED,
-    _ST_DELETED,
-    _ST_EXISTING,
     _S1,
     _S2,
     _S3,
     _T3,
-    _entry,
-    _iceberg_files,
     _iceberg_snapshot,
     _iceberg_stage,
     _maybe_broadcast_deletes,
     _pfiles,
-    _write_manifest,
 )
 from random_forest_using_hadoop_spark.operators.scans import (
     _delta_list_files,
@@ -109,40 +110,6 @@ SELECT * FROM (
 """
 
 
-def _mlrec(mpath: str, content: int, seq: int, added_by: int) -> dict:
-    """One manifest-list record with counts derived from the manifest
-    itself. `seq` is the manifest's ORIGINAL commit sequence number —
-    a carried-over manifest keeps the sequence it was added under
-    (spec §Manifest Lists), never the re-referencing snapshot's."""
-    _, entries, _ = ocf_read(mpath)
-
-    def _cnt(st):
-        return sum(1 for e in entries if e["status"] == st)
-
-    def _rows(st):
-        return sum(
-            e["data_file"]["record_count"]
-            for e in entries
-            if e["status"] == st
-        )
-
-    return {
-        "manifest_path": mpath,
-        "manifest_length": os.path.getsize(mpath),
-        "partition_spec_id": 0,
-        "content": content,
-        "sequence_number": seq,
-        "min_sequence_number": 1,
-        "added_snapshot_id": added_by,
-        "added_files_count": _cnt(_ST_ADDED),
-        "existing_files_count": _cnt(_ST_EXISTING),
-        "deleted_files_count": _cnt(_ST_DELETED),
-        "added_rows_count": _rows(_ST_ADDED),
-        "existing_rows_count": _rows(_ST_EXISTING),
-        "deleted_rows_count": _rows(_ST_DELETED),
-    }
-
-
 def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
     """Stage the 6-snapshot fixture described on _CHANGELOG_ORACLE."""
     import pyarrow as pa
@@ -155,7 +122,8 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
     _iceberg_stage(spark, o, root)
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
-    m3 = os.path.join(meta_dir, "m3-fixture.avro")
+    # s3's one manifest (m3), carried into the s4 and s5 lists
+    (r3,) = iceberg_meta.manifests(_iceberg_snapshot(iceberg_meta.load(root)))
     _S4, _S5, _S6 = _S3 + 1, _S3 + 2, _S3 + 3
     _T4, _T5, _T6 = _T3 + 60_000, _T3 + 120_000, _T3 + 180_000
 
@@ -191,35 +159,31 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         f2 = pool.submit(_write_s4_eqdel)
         f1.result(), f2.result()
     ins_entries = [
-        _entry(_ST_ADDED, _S4, 4, p, v) for p, v in _pfiles(data_dir, "s4")
+        entry(ADDED, _S4, 4, p, v) for p, v in _pfiles(data_dir, "s4")
     ]
     eq_files = [
         os.path.join(eq_dir, f)
         for f in sorted(os.listdir(eq_dir))
         if f.endswith(".parquet")
     ]
-    m4i = _write_manifest(
-        meta_dir, "m4-upsert-data.avro", ins_entries
+    del_entries = [
+        entry(ADDED, _S4, 4, p, None, equality_ids=[1], content=2)
+        for p in eq_files
+    ]
+    r4i = list_record(
+        write_manifest(meta_dir, "m4-upsert-data.avro", ins_entries),
+        ins_entries,
+        _S4,
+        4,
     )
-    m4d = _write_manifest(
-        meta_dir,
-        "m4-upsert-deletes.avro",
-        [
-            _entry(_ST_ADDED, _S4, 4, p, None, equality_ids=[1], content=2)
-            for p in eq_files
-        ],
+    r4d = list_record(
+        write_manifest(meta_dir, "m4-upsert-deletes.avro", del_entries),
+        del_entries,
+        _S4,
+        4,
+        content=1,
     )
-    l4 = os.path.join(meta_dir, f"snap-{_S4}-1-upsert.avro")
-    ocf_write(
-        l4,
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _mlrec(m3, 0, 3, _S3),
-            _mlrec(m4i, 0, 4, _S4),
-            _mlrec(m4d, 1, 4, _S4),
-        ],
-        metadata={"format-version": "2"},
-    )
+    l4 = write_manifest_list(meta_dir, _S4, [r3, r4i, r4d], tag="1-upsert")
     with iceberg_meta.update(root) as tm:
         iceberg_meta.add_snapshot(tm, _S4, 4, _T4, l4, "overwrite")
 
@@ -228,8 +192,8 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
     # the CURRENT live files; the collect is ∝ deleted rows — they are
     # the commit payload.
     meta = iceberg_meta.load(root)
-    live, _ = _iceberg_files(_iceberg_snapshot(meta))
-    pval_by_path = {p: v for p, v, _, _ in live}
+    live, _ = iceberg_meta.plan(_iceberg_snapshot(meta))
+    pval_by_path = {d["path"]: d["pval"] for d in live}
     hits = (
         # explicit schema: skips the driver-side footer-inference job
         # every bare read.parquet pays (guide §1 — don't compute what
@@ -266,19 +230,16 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
             ),
             dpath,
         )
-        pos_entries.append(_entry(_ST_ADDED, _S5, 5, dpath, pval, content=1))
-    m5d = _write_manifest(meta_dir, "m5-posdel.avro", pos_entries)
-    l5 = os.path.join(meta_dir, f"snap-{_S5}-1-posdel.avro")
-    ocf_write(
-        l5,
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _mlrec(m3, 0, 3, _S3),
-            _mlrec(m4i, 0, 4, _S4),
-            _mlrec(m4d, 1, 4, _S4),
-            _mlrec(m5d, 1, 5, _S5),
-        ],
-        metadata={"format-version": "2"},
+        pos_entries.append(entry(ADDED, _S5, 5, dpath, pval, content=1))
+    r5d = list_record(
+        write_manifest(meta_dir, "m5-posdel.avro", pos_entries),
+        pos_entries,
+        _S5,
+        5,
+        content=1,
+    )
+    l5 = write_manifest_list(
+        meta_dir, _S5, [r3, r4i, r4d, r5d], tag="1-posdel"
     )
     with iceberg_meta.update(root) as tm:
         iceberg_meta.add_snapshot(tm, _S5, 5, _T5, l5, "delete")
@@ -316,28 +277,23 @@ def _stage_changelog_table(spark: SparkSession, sf_dir: str) -> str:
         for v, paths, new_file in pool.map(
             _compact, sorted(s4_by_part.items())
         ):
-            compact_entries.append(_entry(_ST_ADDED, _S6, 6, new_file, v))
+            compact_entries.append(entry(ADDED, _S6, 6, new_file, v))
             compact_entries.extend(
-                _entry(_ST_DELETED, _S6, 4, p, v) for p in sorted(paths)
+                entry(DELETED, _S6, 4, p, v) for p in sorted(paths)
             )
     # survivors of m3 carry over EXISTING with their original ids
-    for e in ocf_read(m3)[1]:
-        if e["status"] == _ST_DELETED:
+    for e in iceberg_meta.entries(r3):
+        if e["status"] == DELETED:
             continue
         compact_entries.append(
-            {**e, "status": _ST_EXISTING}
+            {**e, "status": EXISTING}
         )
-    m6 = _write_manifest(meta_dir, "m6-compact.avro", compact_entries)
-    l6 = os.path.join(meta_dir, f"snap-{_S6}-1-compact.avro")
-    ocf_write(
-        l6,
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _mlrec(m6, 0, 6, _S6),
-            _mlrec(m4d, 1, 4, _S4),
-            _mlrec(m5d, 1, 5, _S5),
-        ],
-        metadata={"format-version": "2"},
+    m6 = write_manifest(meta_dir, "m6-compact.avro", compact_entries)
+    l6 = write_manifest_list(
+        meta_dir,
+        _S6,
+        [list_record(m6, compact_entries, _S6, 6), r4d, r5d],
+        tag="1-compact",
     )
     with iceberg_meta.update(root) as tm:
         iceberg_meta.add_snapshot(tm, _S6, 6, _T6, l6, "replace")
@@ -379,28 +335,26 @@ def _changelog_plan(root: str, from_id: int) -> dict:
         snap = by_id[sid]
         if snap["summary"]["operation"] == "replace":
             continue  # rearrangement only — no logical change
-        _, manifests, _ = ocf_read(snap["manifest-list"])
         has_deletes = False
-        for m in manifests:
-            _, entries, _ = ocf_read(m["manifest_path"])
-            for e in entries:
+        for m in iceberg_meta.manifests(snap):
+            for e in iceberg_meta.entries(m):
                 df = e["data_file"]
                 pval = next(iter((df["partition"] or {}).values()), None)
                 if m["content"] == 0 and df["content"] == 0:
                     if (
-                        e["status"] == _ST_ADDED
+                        e["status"] == ADDED
                         and e["snapshot_id"] == sid
                     ):
                         inserted.append((df["file_path"], pval, ordinal))
                     elif (
-                        e["status"] == _ST_DELETED
+                        e["status"] == DELETED
                         and e["snapshot_id"] == sid
                     ):
                         removed.append((df["file_path"], pval, ordinal))
                         removed_at.setdefault(df["file_path"], ordinal)
                 elif (
                     m["content"] == 1
-                    and e["status"] == _ST_ADDED
+                    and e["status"] == ADDED
                     and e["snapshot_id"] == sid
                 ):
                     rec = {
@@ -425,10 +379,10 @@ def _changelog_plan(root: str, from_id: int) -> dict:
             # candidate targets: data files live at the PREDECESSOR
             # snapshot — what this commit's deletes can reach
             prev = ordered[ordered.index(sid) - 1]
-            for p, v, _, seq in _iceberg_files(_iceberg_snapshot(
-                meta, snapshot_id=prev
-            ))[0]:
-                base.setdefault(p, (v, seq))
+            for d in iceberg_meta.plan(
+                _iceberg_snapshot(meta, snapshot_id=prev)
+            )[0]:
+                base.setdefault(d["path"], (d["pval"], d["seq"]))
     return {
         "inserted": inserted,
         "removed": removed,
@@ -1123,7 +1077,7 @@ def _iceberg_upsert_commit(
         fd, fk = pool.submit(_write_data), pool.submit(_write_keys)
         fd.result(), fk.result()
     ins = [
-        _entry(_ST_ADDED, snap_id, seq, p, v)
+        entry(ADDED, snap_id, seq, p, v)
         for p, v in _pfiles(data_dir, f"s{seq}")
     ]
     (part,) = [
@@ -1132,28 +1086,21 @@ def _iceberg_upsert_commit(
     eq_path = os.path.join(meta_dir, f"eqdel-s{seq}.parquet")
     os.replace(os.path.join(eq_stage, part), eq_path)
     shutil.rmtree(eq_stage, ignore_errors=True)
-    mi = _write_manifest(meta_dir, f"m{seq}-upsert-data.avro", ins)
-    md = _write_manifest(
-        meta_dir,
-        f"m{seq}-upsert-del.avro",
-        [_entry(_ST_ADDED, snap_id, seq, eq_path, None,
-                equality_ids=[1], content=2)],
-    )
+    dels = [
+        entry(ADDED, snap_id, seq, eq_path, None, equality_ids=[1], content=2)
+    ]
+    mi = write_manifest(meta_dir, f"m{seq}-upsert-data.avro", ins)
+    md = write_manifest(meta_dir, f"m{seq}-upsert-del.avro", dels)
     with iceberg_meta.update(root) as meta:
-        prev = _iceberg_snapshot(meta)
-        _, carried, _ = ocf_read(prev["manifest-list"])
-        recs = [
-            _mlrec(
-                m["manifest_path"], m["content"], m["sequence_number"],
-                m["added_snapshot_id"],
-            )
-            for m in carried
-        ]
-        recs.append(_mlrec(mi, 0, seq, snap_id))
-        recs.append(_mlrec(md, 1, seq, snap_id))
-        ml = os.path.join(meta_dir, f"snap-{snap_id}-1-upsert.avro")
-        ocf_write(
-            ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"}
+        ml = write_manifest_list(
+            meta_dir,
+            snap_id,
+            iceberg_meta.manifests(_iceberg_snapshot(meta))
+            + [
+                list_record(mi, ins, snap_id, seq),
+                list_record(md, dels, snap_id, seq, content=1),
+            ],
+            tag="1-upsert",
         )
         iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "overwrite")
 
@@ -1207,7 +1154,7 @@ def q_sink_iceberg_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the shared _scan_apply_eq_deletes path — writer and reader are
     # held to one contract)
     meta = iceberg_meta.load(root)
-    data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
+    data_files, delete_files = iceberg_meta.plan(_iceberg_snapshot(meta))
     df = _scan_apply_eq_deletes(spark, data_files, delete_files)
     if df is None:  # adversarial corpus: all-urgent base, empty batches
         return local_rows(spark, 
@@ -1277,7 +1224,7 @@ def q_sink_iceberg_rewrite_deletes(
 
     with iceberg_meta.update(root) as meta:
         cur = _iceberg_snapshot(meta)
-        data_files, delete_files = _iceberg_files(cur)
+        data_files, delete_files = iceberg_meta.plan(cur)
         _S6 = _S3 + 3
         if data_files:
             # live state WITH deletes applied — the normal (shared) read path
@@ -1289,23 +1236,22 @@ def q_sink_iceberg_rewrite_deletes(
                 "o_orderpriority"
             ).parquet(os.path.join(data_dir, "s6"))
             entries = [
-                _entry(_ST_ADDED, _S6, 6, p, v)
+                entry(ADDED, _S6, 6, p, v)
                 for p, v in _pfiles(data_dir, "s6")
             ]
             # prior data files leave as DELETED (visible one snapshot for
             # incremental consumers, per spec); delete files are DROPPED —
             # materialized, they must not survive into the new list
             entries += [
-                _entry(_ST_DELETED, _S6, s, p, v)
-                for p, v, _, s in sorted(data_files)
+                entry(DELETED, _S6, d["seq"], d["path"], d["pval"])
+                for d in sorted(data_files, key=lambda d: d["path"])
             ]
-            m6 = _write_manifest(meta_dir, "m6-rewrite-deletes.avro", entries)
-            l6 = os.path.join(meta_dir, f"snap-{_S6}-1-rewrite.avro")
-            ocf_write(
-                l6,
-                _MANIFEST_FILE_SCHEMA,
-                [_mlrec(m6, 0, 6, _S6)],
-                metadata={"format-version": "2"},
+            m6 = write_manifest(meta_dir, "m6-rewrite-deletes.avro", entries)
+            l6 = write_manifest_list(
+                meta_dir,
+                _S6,
+                [list_record(m6, entries, _S6, 6)],
+                tag="1-rewrite",
             )
             iceberg_meta.add_snapshot(
                 meta, _S6, 6, _T3 + 180_000, l6, "replace"
@@ -1313,15 +1259,13 @@ def q_sink_iceberg_rewrite_deletes(
 
     # --- post-maintenance read: pure scan, no delete application
     meta = iceberg_meta.load(root)
-    data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
+    data_files, delete_files = iceberg_meta.plan(_iceberg_snapshot(meta))
     assert not delete_files, "maintenance left delete files behind"
     if not data_files:
         return local_rows(spark, 
             [], "o_orderpriority string, n_rows long, total_cents long"
         )
-    out = _scan_with_partition(
-        spark, [(p, v, n) for p, v, n, _ in data_files]
-    )
+    out = _scan_with_partition(spark, data_files)
     return out.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(
@@ -1410,36 +1354,34 @@ def q_src_iceberg_v3_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _uentry(
         status: int, sid: int, seq: int, path: str, n: int
     ) -> dict:
-        ent = _entry(status, sid, seq, path, None, record_count=n)
+        ent = entry(status, sid, seq, path, None, record_count=n)
         ent["data_file"]["partition"] = {"o_orderpriority": None}
         return ent
 
-    m1 = _write_manifest(
+    e1 = [
+        _uentry(ADDED, _S1, 1, evens, n_even),
+        _uentry(ADDED, _S1, 1, decoy, n_even),
+    ]
+    e2 = [
+        _uentry(EXISTING, _S1, 1, evens, n_even),
+        _uentry(DELETED, _S2, 1, decoy, n_even),
+        _uentry(ADDED, _S2, 2, odds, n_odd),
+    ]
+    m1 = write_manifest(meta_dir, "m1-variant.avro", e1)
+    m2 = write_manifest(meta_dir, "m2-variant.avro", e2)
+    l1 = write_manifest_list(
         meta_dir,
-        "m1-variant.avro",
-        [
-            _uentry(_ST_ADDED, _S1, 1, evens, n_even),
-            _uentry(_ST_ADDED, _S1, 1, decoy, n_even),
-        ],
+        _S1,
+        [list_record(m1, e1, _S1, 1)],
+        tag="1-variant",
+        format_version=3,
     )
-    m2 = _write_manifest(
+    l2 = write_manifest_list(
         meta_dir,
-        "m2-variant.avro",
-        [
-            _uentry(_ST_EXISTING, _S1, 1, evens, n_even),
-            _uentry(_ST_DELETED, _S2, 1, decoy, n_even),
-            _uentry(_ST_ADDED, _S2, 2, odds, n_odd),
-        ],
-    )
-    l1 = os.path.join(meta_dir, f"snap-{_S1}-1-variant.avro")
-    ocf_write(
-        l1, _MANIFEST_FILE_SCHEMA, [_mlrec(m1, 0, 1, _S1)],
-        metadata={"format-version": "3"},
-    )
-    l2 = os.path.join(meta_dir, f"snap-{_S2}-1-variant.avro")
-    ocf_write(
-        l2, _MANIFEST_FILE_SCHEMA, [_mlrec(m2, 0, 2, _S2)],
-        metadata={"format-version": "3"},
+        _S2,
+        [list_record(m2, e2, _S2, 2)],
+        tag="1-variant",
+        format_version=3,
     )
     meta = {
         "format-version": 3,
@@ -1480,24 +1422,12 @@ def q_src_iceberg_v3_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
         "default-spec-id": 0,
         "current-snapshot-id": _S2,
         "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T3,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-                "first-row-id": 0,
-            },
-            {
-                "snapshot-id": _S2,
-                "sequence-number": 2,
-                "timestamp-ms": _T3 + 60_000,
-                "manifest-list": l2,
-                "summary": {"operation": "overwrite"},
-                "schema-id": 0,
-                "first-row-id": n_even,
-            },
+            iceberg_meta.snapshot_record(
+                _S1, 1, _T3, l1, "append", first_row_id=0
+            ),
+            iceberg_meta.snapshot_record(
+                _S2, 2, _T3 + 60_000, l2, "overwrite", first_row_id=n_even
+            ),
         ],
         "snapshot-log": [
             {"timestamp-ms": _T3, "snapshot-id": _S1},
@@ -1519,13 +1449,13 @@ def q_src_iceberg_v3_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert var_fields and var_fields[0]["name"] == "payload", (
         "table schema must declare the variant column"
     )
-    data_files, _ = _iceberg_files(_iceberg_snapshot(meta))
+    data_files, _ = iceberg_meta.plan(_iceberg_snapshot(meta))
     if not data_files:
         return local_rows(spark, 
             [], "event_type string, n_rows long, sum_value double, "
             "n_users long"
         )
-    data = spark.read.parquet(*sorted(p for p, _, _, _ in data_files))
+    data = spark.read.parquet(*sorted(d["path"] for d in data_files))
     assert dict(data.dtypes)["payload"] == "variant"
     return data.select(
         "event_type",
@@ -1773,22 +1703,19 @@ def q_sink_iceberg_publish_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).coalesce(1).write.mode("overwrite").partitionBy(
         "o_orderpriority"
     ).parquet(os.path.join(data_dir, "s4"))
-    m4 = _write_manifest(
-        meta_dir,
-        "m4-wap.avro",
-        [_entry(_ST_ADDED, _S4, 4, p, v) for p, v in _pfiles(data_dir, "s4")],
-    )
-    m3 = os.path.join(meta_dir, "m3-fixture.avro")
-    l4 = os.path.join(meta_dir, f"snap-{_S4}-1-wap.avro")
-    ocf_write(
-        l4,
-        _MANIFEST_FILE_SCHEMA,
-        [_mlrec(m3, 0, 3, _S3), _mlrec(m4, 0, 4, _S4)],
-        metadata={"format-version": "2"},
-    )
+    e4 = [entry(ADDED, _S4, 4, p, v) for p, v in _pfiles(data_dir, "s4")]
+    m4 = write_manifest(meta_dir, "m4-wap.avro", e4)
     # branch `audit` only — main and current-snapshot-id stay at s3:
     # the write is INVISIBLE to main's readers until publish
     with iceberg_meta.update(root) as tm:
+        # the list carries s3's manifest and adds m4
+        l4 = write_manifest_list(
+            meta_dir,
+            _S4,
+            iceberg_meta.manifests(_iceberg_snapshot(tm))
+            + [list_record(m4, e4, _S4, 4)],
+            tag="1-wap",
+        )
         iceberg_meta.add_snapshot(
             tm, _S4, 4, _T3 + 60_000, l4, "append", branch="audit",
             summary={"operation": "append", "wap.id": "audit-1"},
@@ -1796,10 +1723,7 @@ def q_sink_iceberg_publish_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _read_main(meta: dict) -> DataFrame | None:
         snap = _iceberg_snapshot(meta, ref="main")
-        files, _ = _iceberg_files(snap)
-        return _scan_with_partition(
-            spark, [(p, v, n) for p, v, n, _ in files]
-        )
+        return _scan_with_partition(spark, iceberg_meta.plan(snap)[0])
 
     before = _read_main(iceberg_meta.load(root))
 

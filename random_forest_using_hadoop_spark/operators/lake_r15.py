@@ -18,29 +18,27 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from random_forest_using_hadoop_spark.iceberg_format import ocf_read, ocf_write
+from random_forest_using_hadoop_spark.iceberg_meta import (
+    ADDED,
+    entry,
+    list_record,
+    write_manifest,
+    write_manifest_list,
+)
 from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-    _MANIFEST_FILE_SCHEMA,
     _S1,
     _S2,
     _S3,
-    _ST_ADDED,
     _T1,
     _T3,
-    _entry,
     _iceberg_expire_snapshots,
-    _iceberg_files,
-    _iceberg_live_files,
     _iceberg_snapshot,
     _iceberg_stage,
     _pfiles,
     _scan_apply_pos_deletes,
     _scan_with_name_mapping,
     _scan_with_partition,
-    _write_manifest,
-    _write_manifest_list,
 )
-from random_forest_using_hadoop_spark.operators.lake_r14 import _mlrec
 from random_forest_using_hadoop_spark import delta_log, iceberg_meta
 from random_forest_using_hadoop_spark.delta_log import (
     _delta_latest_live_files,
@@ -182,23 +180,18 @@ def _branch_commit(
     meta_dir = os.path.join(root, "metadata")
     if not data_written:
         _branch_write_data(src, root, tag)
-    m = _write_manifest(
-        meta_dir,
-        f"m-{tag}.avro",
-        [
-            _entry(_ST_ADDED, snap_id, seq, p, v)
-            for p, v in _pfiles(data_dir, tag)
-        ],
-    )
-    m3 = os.path.join(meta_dir, "m3-fixture.avro")
-    ml = os.path.join(meta_dir, f"snap-{snap_id}-1-{tag}.avro")
-    ocf_write(
-        ml,
-        _MANIFEST_FILE_SCHEMA,
-        [_mlrec(m3, 0, 3, _S3), _mlrec(m, 0, seq, snap_id)],
-        metadata={"format-version": "2"},
-    )
+    entries = [
+        entry(ADDED, snap_id, seq, p, v) for p, v in _pfiles(data_dir, tag)
+    ]
+    m = write_manifest(meta_dir, f"m-{tag}.avro", entries)
     with iceberg_meta.update(root) as tm:
+        ml = write_manifest_list(
+            meta_dir,
+            snap_id,
+            iceberg_meta.manifests(_iceberg_snapshot(tm, snapshot_id=_S3))
+            + [list_record(m, entries, snap_id, seq)],
+            tag=f"1-{tag}",
+        )
         iceberg_meta.add_snapshot(
             tm, snap_id, seq, ts, ml, "append", branch=None
         )
@@ -296,7 +289,7 @@ def q_sink_iceberg_ref_lifecycle(
     parts = []
     for name in sorted(meta.get("refs") or {}):
         snap = _iceberg_snapshot(meta, ref=name)
-        df = _scan_with_partition(spark, _iceberg_live_files(snap))
+        df = _scan_with_partition(spark, iceberg_meta.plan(snap)[0])
         if df is not None:
             parts.append(df.withColumn("ref", F.lit(name)))
     if not parts:
@@ -654,7 +647,7 @@ def iceberg_delete_where(
     meta_dir = os.path.join(root, "metadata")
     with iceberg_meta.update(root) as meta:
         snap = _iceberg_snapshot(meta)
-        data_files, delete_files = _iceberg_files(snap)
+        data_files, delete_files = iceberg_meta.plan(snap)
         rows = _scan_apply_pos_deletes(spark, data_files, delete_files)
         if rows is None:
             return 0
@@ -697,26 +690,18 @@ def iceberg_delete_where(
         )
         if not descs:
             return 0
-        m_del = _write_manifest(
-            meta_dir,
-            f"m{seq}-delete-where.avro",
-            [
-                _entry(_ST_ADDED, snap_id, seq, path, pval, content=1)
-                for pval, path in descs
-            ],
-        )
-        _, carried, _ = ocf_read(snap["manifest-list"])
-        recs = [
-            _mlrec(
-                m["manifest_path"], m["content"], m["sequence_number"],
-                m["added_snapshot_id"],
-            )
-            for m in carried
+        dels = [
+            entry(ADDED, snap_id, seq, path, pval, content=1)
+            for pval, path in descs
         ]
-        recs.append(_mlrec(m_del, 1, seq, snap_id))
-        ml = os.path.join(meta_dir, f"snap-{snap_id}-1-delete-where.avro")
-        ocf_write(
-            ml, _MANIFEST_FILE_SCHEMA, recs, metadata={"format-version": "2"}
+        m_del = write_manifest(meta_dir, f"m{seq}-delete-where.avro", dels)
+        # every prior manifest carried unchanged, plus the delete manifest
+        ml = write_manifest_list(
+            meta_dir,
+            snap_id,
+            iceberg_meta.manifests(snap)
+            + [list_record(m_del, dels, snap_id, seq, content=1)],
+            tag="1-delete-where",
         )
         iceberg_meta.add_snapshot(meta, snap_id, seq, ts, ml, "delete")
     return len(descs)
@@ -769,7 +754,7 @@ def q_sink_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         _S5, 5, _T3 + 120_000,
     )
     meta = iceberg_meta.load(root)
-    data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
+    data_files, delete_files = iceberg_meta.plan(_iceberg_snapshot(meta))
     df = _scan_apply_pos_deletes(spark, data_files, delete_files)
     if df is None:
         return local_rows(spark, 
@@ -1260,12 +1245,9 @@ def q_sink_iceberg_schema_evolution(
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(data_dir, "s1")
     )
-    m1 = _write_manifest(
-        meta_dir,
-        "m1-evo.avro",
-        [_entry(_ST_ADDED, _S1, 1, p, None) for p in _flat("s1")],
-    )
-    l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+    e1 = [entry(ADDED, _S1, 1, p, None) for p in _flat("s1")]
+    r1 = list_record(write_manifest(meta_dir, "m1-evo.avro", e1), e1, _S1, 1)
+    l1 = write_manifest_list(meta_dir, _S1, [r1])
     schema_v0 = {
         "type": "struct",
         "schema-id": 0,
@@ -1290,14 +1272,7 @@ def q_sink_iceberg_schema_evolution(
         "properties": {},
         "current-snapshot-id": _S1,
         "snapshots": [
-            {
-                "snapshot-id": _S1,
-                "sequence-number": 1,
-                "timestamp-ms": _T1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
+            iceberg_meta.snapshot_record(_S1, 1, _T1, l1, "append")
         ],
         "snapshot-log": [{"timestamp-ms": _T1, "snapshot-id": _S1}],
     }
@@ -1317,13 +1292,10 @@ def q_sink_iceberg_schema_evolution(
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(data_dir, "s2")
     )
-    m2 = _write_manifest(
-        meta_dir,
-        "m2-evo.avro",
-        [_entry(_ST_ADDED, _S2loc, 2, p, None) for p in _flat("s2")],
-    )
-    ml2 = _write_manifest_list(
-        meta_dir, _S2loc, 2, [(m1, _S1), (m2, _S2loc)]
+    e2 = [entry(ADDED, _S2loc, 2, p, None) for p in _flat("s2")]
+    m2 = write_manifest(meta_dir, "m2-evo.avro", e2)
+    ml2 = write_manifest_list(
+        meta_dir, _S2loc, [r1, list_record(m2, e2, _S2loc, 2)]
     )
     with iceberg_meta.update(root) as tm:
         iceberg_meta.add_snapshot(

@@ -21,15 +21,20 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from random_forest_using_hadoop_spark.iceberg_meta import (
+    ADDED,
+    DELETED,
+    entry,
+    list_record,
+    write_manifest,
+    write_manifest_list,
+)
 from random_forest_using_hadoop_spark.operators.iceberg_ext import (
     _S1,
-    _ST_ADDED,
     _T1,
-    _entry,
+    _iceberg_snapshot,
     _sv_double,
     _sv_double_de,
-    _write_manifest,
-    _write_manifest_list,
 )
 from random_forest_using_hadoop_spark import delta_log, iceberg_meta
 from random_forest_using_hadoop_spark.delta_log import (
@@ -224,10 +229,12 @@ def q_sink_iceberg_sort_order(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [{"key": 2, "value": _sv_double(hi)}],
             )
             entries.append(
-                _entry(_ST_ADDED, _S1, 1, path, None, bounds=bounds)
+                entry(ADDED, _S1, 1, path, None, bounds=bounds)
             )
-        m1 = _write_manifest(meta_dir, "m1-sorted.avro", entries)
-        l1 = _write_manifest_list(meta_dir, _S1, 1, [(m1, _S1)])
+        m1 = write_manifest(meta_dir, "m1-sorted.avro", entries)
+        l1 = write_manifest_list(
+            meta_dir, _S1, [list_record(m1, entries, _S1, 1)]
+        )
         iceberg_meta.add_snapshot(tm, _S1, 1, _T1, l1, "append")
 
     # gate 1: pairwise-disjoint file ranges (the sorted-write contract)
@@ -239,35 +246,32 @@ def q_sink_iceberg_sort_order(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"[{lo_a},{hi_a}] {pa} vs [{lo_b},{hi_b}] {pb}"
             )
 
-    # gate 2: bounds-planned pruning — decode the COMMITTED manifest's
+    # gate 2: bounds-planned pruning — decode the COMMITTED plan's
     # bounds and plan a narrow range query; it must open a proper subset
-    from random_forest_using_hadoop_spark.iceberg_format import ocf_read
-
-    _, m_entries, _ = ocf_read(m1)
+    planned, _ = iceberg_meta.plan(_iceberg_snapshot(iceberg_meta.load(root)))
     if len(ranges) < 2:
         raise ValueError("sorted write produced fewer than 2 files")
     anchor = ranges[min(2, len(ranges) - 1)][0]
     q_lo, q_hi = anchor, anchor + 1000.0  # inside one file
     survivors = []
-    for e in m_entries:
-        df_rec = e["data_file"]
-        lo_map = {p["key"]: p["value"] for p in df_rec["lower_bounds"] or []}
-        hi_map = {p["key"]: p["value"] for p in df_rec["upper_bounds"] or []}
+    for d in planned:
+        lo_map = {p["key"]: p["value"] for p in d["lower_bounds"] or []}
+        hi_map = {p["key"]: p["value"] for p in d["upper_bounds"] or []}
         if 2 not in lo_map or 2 not in hi_map:
-            survivors.append(df_rec["file_path"])  # stats-less: keep
+            survivors.append(d["path"])  # stats-less: keep
             continue
         if _sv_double_de(hi_map[2]) >= q_lo and _sv_double_de(
             lo_map[2]
         ) <= q_hi:
-            survivors.append(df_rec["file_path"])
-    if not survivors or len(survivors) >= len(m_entries):
+            survivors.append(d["path"])
+    if not survivors or len(survivors) >= len(planned):
         raise ValueError(
-            f"bounds pruning opened {len(survivors)}/{len(m_entries)} "
+            f"bounds pruning opened {len(survivors)}/{len(planned)} "
             "files for a sub-file range — sorted-write clustering lost"
         )
 
     # graded read-back through the committed chain (all files)
-    files = [e["data_file"]["file_path"] for e in m_entries]
+    files = [d["path"] for d in planned]
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     return (
         spark.read.parquet(*sorted(files))
@@ -1109,9 +1113,7 @@ def q_src_iceberg_partition_stats(
     driver-side lists, same class as every manifest walk in this
     layer).
     """
-    from random_forest_using_hadoop_spark.iceberg_format import ocf_read
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _iceberg_snapshot,
         _iceberg_stage,
         _S3,
     )
@@ -1125,12 +1127,10 @@ def q_src_iceberg_partition_stats(
     # build the rollup from the CURRENT snapshot's live entries
     with iceberg_meta.update(root) as tm:
         snap = _iceberg_snapshot(tm, None)
-        _, mlist, _ = ocf_read(snap["manifest-list"])
         per_part: dict[str, list[int, int]] = {}
-        for m in mlist:
-            _, entries, _ = ocf_read(m["manifest_path"])
-            for e in entries:
-                if e["status"] == 2:  # DELETED: not live
+        for m in iceberg_meta.manifests(snap):
+            for e in iceberg_meta.entries(m):
+                if e["status"] == DELETED:  # not live
                     continue
                 pval = next(iter(e["data_file"]["partition"].values()))
                 agg = per_part.setdefault(pval, [0, 0])
@@ -1216,17 +1216,12 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pick is O(picked manifests) metadata; main readers see
     one atomic new snapshot.
     """
-    from random_forest_using_hadoop_spark.iceberg_format import ocf_write
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _MANIFEST_FILE_SCHEMA,
         _S3,
-        _iceberg_files,
-        _iceberg_snapshot,
         _iceberg_stage,
         _pfiles,
         _T3,
     )
-    from random_forest_using_hadoop_spark.operators.lake_r14 import _mlrec
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -1246,20 +1241,23 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).coalesce(1).write.mode("overwrite").partitionBy(
         "o_orderpriority"
     ).parquet(os.path.join(data_dir, "s4"))
-    m4 = _write_manifest(
-        meta_dir,
-        "m4-cherry.avro",
-        [_entry(_ST_ADDED, s4, 4, p, v) for p, v in _pfiles(data_dir, "s4")],
-    )
-    m3 = os.path.join(meta_dir, "m3-fixture.avro")
-    l4 = os.path.join(meta_dir, f"snap-{s4}-cherry.avro")
-    ocf_write(
-        l4,
-        _MANIFEST_FILE_SCHEMA,
-        [_mlrec(m3, 0, 3, _S3), _mlrec(m4, 0, 4, s4)],
-        metadata={"format-version": "2"},
-    )
+    def _append_list(tm: dict, sid: int, seq: int, name: str, files) -> str:
+        """The manifest list of an append on top of main's head: main's
+        manifests carried, plus one new manifest of `files`."""
+        entries = [entry(ADDED, sid, seq, p, v) for p, v in files]
+        m = write_manifest(meta_dir, name, entries)
+        return write_manifest_list(
+            meta_dir,
+            sid,
+            iceberg_meta.manifests(_iceberg_snapshot(tm))
+            + [list_record(m, entries, sid, seq)],
+            tag="cherry",
+        )
+
     with iceberg_meta.update(root) as tm:
+        l4 = _append_list(
+            tm, s4, 4, "m4-cherry.avro", _pfiles(data_dir, "s4")
+        )
         iceberg_meta.add_snapshot(
             tm, s4, 4, _T3 + 60_000, l4, "append", branch="feature"
         )
@@ -1273,19 +1271,10 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).coalesce(1).write.mode("overwrite").partitionBy(
         "o_orderpriority"
     ).parquet(os.path.join(data_dir, "s5"))
-    m5 = _write_manifest(
-        meta_dir,
-        "m5-cherry.avro",
-        [_entry(_ST_ADDED, s5, 5, p, v) for p, v in _pfiles(data_dir, "s5")],
-    )
-    l5 = os.path.join(meta_dir, f"snap-{s5}-cherry.avro")
-    ocf_write(
-        l5,
-        _MANIFEST_FILE_SCHEMA,
-        [_mlrec(m3, 0, 3, _S3), _mlrec(m5, 0, 5, s5)],
-        metadata={"format-version": "2"},
-    )
     with iceberg_meta.update(root) as tm:
+        l5 = _append_list(
+            tm, s5, 5, "m5-cherry.avro", _pfiles(data_dir, "s5")
+        )
         iceberg_meta.add_snapshot(tm, s5, 5, _T3 + 120_000, l5, "append")
 
     def _data_inventory() -> dict[str, int]:
@@ -1301,24 +1290,10 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # CHERRY-PICK s4 onto main → s6: s5's manifests + a fresh manifest
     # of s4's added files stamped by the new snapshot
-    picked_files = _pfiles(data_dir, "s4")
-    m6 = _write_manifest(
-        meta_dir,
-        "m6-cherrypicked.avro",
-        [_entry(_ST_ADDED, s6, 6, p, v) for p, v in picked_files],
-    )
-    l6 = os.path.join(meta_dir, f"snap-{s6}-cherry.avro")
-    ocf_write(
-        l6,
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _mlrec(m3, 0, 3, _S3),
-            _mlrec(m5, 0, 5, s5),
-            _mlrec(m6, 0, 6, s6),
-        ],
-        metadata={"format-version": "2"},
-    )
     with iceberg_meta.update(root) as tm:
+        l6 = _append_list(
+            tm, s6, 6, "m6-cherrypicked.avro", _pfiles(data_dir, "s4")
+        )
         iceberg_meta.add_snapshot(
             tm, s6, 6, _T3 + 180_000, l6, "append",
             summary={"operation": "append", "source-snapshot-id": str(s4)},
@@ -1338,10 +1313,10 @@ def q_sink_iceberg_cherrypick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # read main after the pick
     snap = _iceberg_snapshot(tm2, ref="main")
-    files, _ = _iceberg_files(snap)
+    files, _ = iceberg_meta.plan(snap)
     by_val: dict[str, list[str]] = {}
-    for p, v, _, _ in files:
-        by_val.setdefault(v, []).append(p)
+    for d in files:
+        by_val.setdefault(d["pval"], []).append(d["path"])
     scans = [
         spark.read.parquet(*sorted(paths)).select(
             "o_orderkey",

@@ -39,6 +39,15 @@ from random_forest_using_hadoop_spark import (
     hudi_timeline,
     iceberg_meta,
 )
+from random_forest_using_hadoop_spark.iceberg_meta import (
+    ADDED,
+    DELETED,
+    EXISTING,
+    entry,
+    list_record,
+    write_manifest,
+    write_manifest_list,
+)
 from random_forest_using_hadoop_spark.operators.scans import _tmp
 from random_forest_using_hadoop_spark.registry import register
 from random_forest_using_hadoop_spark.sources import load_table
@@ -172,7 +181,7 @@ def q_sink_hudi_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1_groups_after = {
         (
             os.path.dirname(f).rsplit(os.sep, 1)[-1],
-            os.path.basename(f).split("_")[0],
+            hudi_timeline.file_id(f),
         )
         for f in _hudi_snapshot_files(root, as_of=c1)
     }
@@ -339,7 +348,7 @@ def q_sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         clustered, root, c2, urgent, f"fg-{urgent}-clustered"
     )
     replaced = sorted(
-        os.path.basename(f).split("_")[0] for f in before_files
+        hudi_timeline.file_id(f) for f in before_files
         if f"/{urgent}/" in f
     )
     hudi_timeline.complete(
@@ -443,12 +452,8 @@ def _stage_many_appends(spark: SparkSession, sf_dir: str, root: str) -> None:
     manifest; the current manifest list carries all _RWM_N of them —
     the metadata small-file problem rewrite_manifests exists to fix."""
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _ST_ADDED,
-        _entry,
         _orders_meta,
         _pfiles,
-        _write_manifest,
-        _write_manifest_list,
     )
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -458,7 +463,7 @@ def _stage_many_appends(spark: SparkSession, sf_dir: str, root: str) -> None:
     meta_dir = os.path.join(root, "metadata")
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(meta_dir, exist_ok=True)
-    manifests: list[tuple[str, int]] = []
+    recs: list[dict] = []  # every append's manifest-list record
     snaps: list[tuple[int, int, int, str, str]] = []
     # the _RWM_N slice writes are independent jobs into disjoint
     # subdirs: run them concurrently (guide-§2.6 back-fill) — the
@@ -478,13 +483,10 @@ def _stage_many_appends(spark: SparkSession, sf_dir: str, root: str) -> None:
     for i in range(_RWM_N):
         files = _pfiles(data_dir, f"s{i + 1}")
         sid, seq = _RWM_SB + i, i + 1
-        m = _write_manifest(
-            meta_dir,
-            f"m{i + 1}-rwm.avro",
-            [_entry(_ST_ADDED, sid, seq, p, v) for p, v in files],
-        )
-        manifests.append((m, sid))
-        ml = _write_manifest_list(meta_dir, sid, seq, list(manifests))
+        entries = [entry(ADDED, sid, seq, p, v) for p, v in files]
+        m = write_manifest(meta_dir, f"m{i + 1}-rwm.avro", entries)
+        recs.append(list_record(m, entries, sid, seq))
+        ml = write_manifest_list(meta_dir, sid, recs)
         snaps.append((sid, seq, _RWM_TB + i * 60_000, ml, "append"))
         iceberg_meta.commit(
             meta_dir, i + 1, _orders_meta(root, _RWM_UUID, snaps)
@@ -525,15 +527,9 @@ def q_sink_iceberg_rewrite_manifests(
     """.format(n=_RWM_N)
     import hashlib
 
-    from random_forest_using_hadoop_spark.iceberg_format import ocf_read
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _ST_DELETED,
-        _ST_EXISTING,
-        _iceberg_files,
         _iceberg_snapshot,
         _scan_with_partition,
-        _write_manifest,
-        _write_manifest_list,
     )
 
     root = _tmp(sf_dir, "iceberg_rwm")
@@ -541,32 +537,31 @@ def q_sink_iceberg_rewrite_manifests(
     meta_dir = os.path.join(root, "metadata")
     with iceberg_meta.update(root) as meta:
         snap = _iceberg_snapshot(meta)
-        _, mlist, _ = ocf_read(snap["manifest-list"])
+        mlist = iceberg_meta.manifests(snap)
         if len(mlist) != _RWM_N:
             raise ValueError(f"fixture staged {len(mlist)} manifests")
 
         def _data_md5s() -> dict[str, str]:
             out = {}
-            for p, _, _, _ in _iceberg_files(snap)[0]:
-                with open(p, "rb") as fh:
-                    out[p] = hashlib.md5(fh.read()).hexdigest()
+            for d in iceberg_meta.plan(snap)[0]:
+                with open(d["path"], "rb") as fh:
+                    out[d["path"]] = hashlib.md5(fh.read()).hexdigest()
             return out
 
         before_md5 = _data_md5s()
         before = _scan_with_partition(
-            spark, [(p, v, n) for p, v, n, _ in _iceberg_files(snap)[0]]
+            spark, iceberg_meta.plan(snap)[0]
         ).localCheckpoint()
 
         # fold every live entry into one manifest, inheritance preserved
         want_seq: dict[str, tuple[int, int]] = {}
         folded = []
         for m in mlist:
-            _, entries, _ = ocf_read(m["manifest_path"])
-            for e in entries:
-                if e["status"] == _ST_DELETED:
+            for e in iceberg_meta.entries(m):
+                if e["status"] == DELETED:
                     continue
                 e2 = dict(e)
-                e2["status"] = _ST_EXISTING
+                e2["status"] = EXISTING
                 folded.append(e2)
                 want_seq[e["data_file"]["file_path"]] = (
                     e["sequence_number"],
@@ -574,9 +569,9 @@ def q_sink_iceberg_rewrite_manifests(
                 )
         new_sid = _RWM_SB + _RWM_N
         new_seq = meta["last-sequence-number"] + 1
-        m_new = _write_manifest(meta_dir, "m-rewritten.avro", folded)
-        l_new = _write_manifest_list(
-            meta_dir, new_sid, new_seq, [(m_new, new_sid)]
+        m_new = write_manifest(meta_dir, "m-rewritten.avro", folded)
+        l_new = write_manifest_list(
+            meta_dir, new_sid, [list_record(m_new, folded, new_sid, new_seq)]
         )
         new_ts = _RWM_TB + _RWM_N * 60_000
         iceberg_meta.add_snapshot(
@@ -587,12 +582,11 @@ def q_sink_iceberg_rewrite_manifests(
     # gates
     meta2 = iceberg_meta.load(root)
     snap2 = _iceberg_snapshot(meta2)
-    _, mlist2, _ = ocf_read(snap2["manifest-list"])
+    mlist2 = iceberg_meta.manifests(snap2)
     if len(mlist2) != 1:
         raise ValueError(f"rewrite left {len(mlist2)} manifests")
-    _, entries2, _ = ocf_read(mlist2[0]["manifest_path"])
-    for e in entries2:
-        if e["status"] != _ST_EXISTING:
+    for e in iceberg_meta.entries(mlist2[0]):
+        if e["status"] != EXISTING:
             raise ValueError("folded entry lost EXISTING status")
         path = e["data_file"]["file_path"]
         if (e["sequence_number"], e["snapshot_id"]) != want_seq[path]:
@@ -601,12 +595,9 @@ def q_sink_iceberg_rewrite_manifests(
         raise ValueError("rewrite touched data files")
     # prior snapshot still time-travels
     prev = _iceberg_snapshot(meta2, snapshot_id=_RWM_SB + _RWM_N - 1)
-    _, prev_list, _ = ocf_read(prev["manifest-list"])
-    if len(prev_list) != _RWM_N:
+    if len(iceberg_meta.manifests(prev)) != _RWM_N:
         raise ValueError("pre-rewrite snapshot lost its manifests")
-    after = _scan_with_partition(
-        spark, [(p, v_, n) for p, v_, n, _ in _iceberg_files(snap2)[0]]
-    )
+    after = _scan_with_partition(spark, iceberg_meta.plan(snap2)[0])
     assert_multiset_equal(after, before, "rewrite changed rows")
 
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
@@ -672,14 +663,10 @@ def q_sink_iceberg_remove_orphans(
 
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _S1,
-        _entry,
-        _iceberg_files,
         _iceberg_reachable,
         _iceberg_snapshot,
         _iceberg_stage,
         _scan_with_partition,
-        _ST_ADDED,
-        _write_manifest,
     )
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -690,31 +677,29 @@ def q_sink_iceberg_remove_orphans(
     meta_dir = os.path.join(root, "metadata")
     meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
-    live = _iceberg_files(snap)[0]
+    live = iceberg_meta.plan(snap)[0]
 
     # plant orphans: two OLD (reclaimable), one YOUNG (protected)
     now = time.time()
     old = now - 7 * 86400
-    donor = live[0][0]
+    donor = live[0]["path"]
     donor_dir = os.path.dirname(donor)
     orphan_data = os.path.join(donor_dir, "orphan-aborted-write.parquet")
     shutil.copyfile(donor, orphan_data)
     os.utime(orphan_data, (old, old))
-    orphan_manifest = _write_manifest(
+    orphan_manifest = write_manifest(
         meta_dir,
         "m-orphan-aborted.avro",
-        [_entry(_ST_ADDED, 999, 99, donor, live[0][1])],
+        [entry(ADDED, 999, 99, donor, live[0]["pval"])],
     )
     os.utime(orphan_manifest, (old, old))
     young = os.path.join(donor_dir, "orphan-young-inflight.parquet")
     shutil.copyfile(donor, young)
 
-    before = _scan_with_partition(
-        spark, [(p, v, n) for p, v, n, _ in live]
-    ).localCheckpoint()
+    before = _scan_with_partition(spark, live).localCheckpoint()
     s1_files_before = sorted(
-        p
-        for p, _, _, _ in _iceberg_files(
+        d["path"]
+        for d in iceberg_meta.plan(
             _iceberg_snapshot(meta, snapshot_id=_S1)
         )[0]
     )
@@ -744,14 +729,12 @@ def q_sink_iceberg_remove_orphans(
     if not os.path.exists(young):
         raise ValueError("age cutoff violated: young file deleted")
     meta2 = iceberg_meta.load(root)
-    after_live = _iceberg_files(_iceberg_snapshot(meta2))[0]
-    after = _scan_with_partition(
-        spark, [(p, v, n) for p, v, n, _ in after_live]
-    )
+    after_live = iceberg_meta.plan(_iceberg_snapshot(meta2))[0]
+    after = _scan_with_partition(spark, after_live)
     assert_multiset_equal(after, before, "orphan sweep changed rows")
     s1_files_after = sorted(
-        p
-        for p, _, _, _ in _iceberg_files(
+        d["path"]
+        for d in iceberg_meta.plan(
             _iceberg_snapshot(meta2, snapshot_id=_S1)
         )[0]
     )
@@ -1075,15 +1058,10 @@ def q_sink_lake_uniform_append(
     between engines stays a zero-copy operation.
     """
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _ST_ADDED,
-        _entry,
-        _iceberg_live_files,
         _iceberg_snapshot,
         _orders_meta,
         _pfiles,
         _scan_with_partition,
-        _write_manifest,
-        _write_manifest_list,
     )
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1122,12 +1100,11 @@ def q_sink_lake_uniform_append(
     ).partitionBy("o_orderpriority").parquet(os.path.join(data_dir, "c0"))
     base_files = _pfiles(root, "data/c0")
     _delta_append(0, base_files)
-    m1 = _write_manifest(
-        meta_dir,
-        "m1-uw.avro",
-        [_entry(_ST_ADDED, _UB_S1, 1, p, v) for p, v in base_files],
+    e1 = [entry(ADDED, _UB_S1, 1, p, v) for p, v in base_files]
+    r1 = list_record(
+        write_manifest(meta_dir, "m1-uw.avro", e1), e1, _UB_S1, 1
     )
-    l1 = _write_manifest_list(meta_dir, _UB_S1, 1, [(m1, _UB_S1)])
+    l1 = write_manifest_list(meta_dir, _UB_S1, [r1])
     iceberg_meta.commit(
         meta_dir,
         1,
@@ -1140,13 +1117,10 @@ def q_sink_lake_uniform_append(
     ).partitionBy("o_orderpriority").parquet(os.path.join(data_dir, "c1"))
     new_files = _pfiles(root, "data/c1")
     _delta_append(1, new_files)
-    m2 = _write_manifest(
-        meta_dir,
-        "m2-uw.avro",
-        [_entry(_ST_ADDED, _UB_S2, 2, p, v) for p, v in new_files],
-    )
-    l2 = _write_manifest_list(
-        meta_dir, _UB_S2, 2, [(m1, _UB_S1), (m2, _UB_S2)]
+    e2 = [entry(ADDED, _UB_S2, 2, p, v) for p, v in new_files]
+    m2 = write_manifest(meta_dir, "m2-uw.avro", e2)
+    l2 = write_manifest_list(
+        meta_dir, _UB_S2, [r1, list_record(m2, e2, _UB_S2, 2)]
     )
     # the Iceberg commit lands LAST — both trees are durable before
     # readers see v2
@@ -1156,23 +1130,26 @@ def q_sink_lake_uniform_append(
 
     # --- read back through both chains
     delta_files = [
-        (os.path.join(root, rel), add["partitionValues"]["o_orderpriority"], 0)
+        {
+            "path": os.path.join(root, rel),
+            "pval": add["partitionValues"]["o_orderpriority"],
+        }
         for rel, add in sorted(delta_log.snapshot(log_dir).live.items())
     ]
-    ice_files = _iceberg_live_files(
+    ice_files = iceberg_meta.plan(
         _iceberg_snapshot(iceberg_meta.load(root))
-    )
+    )[0]
     # single-copy gate: both chains name exactly the files on disk
     on_disk = {p for p, _ in _pfiles(root, "data/c0")} | {
         p for p, _ in _pfiles(root, "data/c1")
     }
-    if {p for p, _, _ in delta_files} != on_disk:
+    if {d["path"] for d in delta_files} != on_disk:
         raise ValueError("delta chain diverges from the on-disk copy")
-    if {p for p, _, _ in ice_files} != on_disk:
+    if {d["path"] for d in ice_files} != on_disk:
         raise ValueError("iceberg chain diverges from the on-disk copy")
 
     ddf = _scan_with_partition(spark, delta_files)
-    idf = _scan_with_partition(spark, [(p, v, n) for p, v, n in ice_files])
+    idf = _scan_with_partition(spark, ice_files)
     assert_multiset_equal(ddf, idf, "delta and iceberg chains diverge")
 
     both = ddf.withColumn("format", F.lit("delta")).unionByName(
@@ -1317,7 +1294,7 @@ def q_src_hudi_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(o.filter((F.col("o_orderkey") % 2 == 1) & u))
     )
     cdc_dir = os.path.join(root, urgent)
-    cdc_name = f".fg-{urgent}_{c2}-cdc.log.1_0-1-0"
+    cdc_name = hudi_timeline.log_name(f"fg-{urgent}", c2, cdc=True)
     cdc_schema = _CDC_SCHEMA
 
     def _write_cdc(it):
@@ -1366,11 +1343,11 @@ def q_src_hudi_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- CDC read: instant range (c1, c2], executor-side decode
-    cdc_paths = sorted(
-        os.path.join(root, urgent, f)
-        for f in os.listdir(os.path.join(root, urgent))
-        if "-cdc.log." in f and f.split("_")[1].split("-")[0] <= c2
-    )
+    cdc_paths = [
+        lf["path"]
+        for lf in hudi_timeline.log_files(root, urgent, upto=c2)
+        if lf["cdc"]
+    ]
     if not cdc_paths:
         raise ValueError("no cdc files for the instant range")
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from random_forest_using_hadoop_spark.helpers import dsum, o_dsum
+from random_forest_using_hadoop_spark.operators.scans import _tmp
 from random_forest_using_hadoop_spark.registry import register
 from random_forest_using_hadoop_spark.sources import load_table
 
@@ -369,8 +370,6 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back filter must reach the parquet reader (gated in
     test_plans).
     """
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -378,7 +377,7 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date")
     ).cast("bigint")
     z = _zvalue(F.col("o_custkey").cast("bigint"), days)
-    path = tempfile.mkdtemp(prefix="zorder_") + "/orders_z"
+    path = _tmp(sf_dir, "zorder")
     (
         o.withColumn("zval", z)
         .repartitionByRange(16, "zval")

@@ -187,7 +187,14 @@ def test_torn_instant_raises_and_temp_files_stay_hidden(spark, tmp_path):
 
 # --- guard: the timeline format lives in hudi_timeline.py alone --------------
 
-_SPELLINGS = (".hoodie", "_0-1-0_", ".commit.requested", ".inflight")
+_SPELLINGS = (
+    ".hoodie",
+    "_0-1-0_",
+    ".commit.requested",
+    ".inflight",
+    ".log.",
+    "-cdc.log",
+)
 
 
 def _docstrings(tree: ast.AST) -> set[int]:
@@ -212,9 +219,9 @@ def _docstrings(tree: ast.AST) -> set[int]:
 def test_only_hudi_timeline_names_or_opens_timeline_files():
     """No package module other than hudi_timeline.py spells `.hoodie`
     (so none can open or list a timeline path), the slice write token
-    `_0-1-0_`, or an instant's `.commit.requested` / `.inflight`
-    marker in code — every timeline write, read and slice name goes
-    through the one module."""
+    `_0-1-0_`, an instant's `.commit.requested` / `.inflight` marker
+    or a log-file name (`.log.`, `-cdc.log`) in code — every timeline
+    write, read, slice name and log name goes through the one module."""
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         if path.name == "hudi_timeline.py":

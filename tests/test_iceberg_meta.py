@@ -1,11 +1,13 @@
 """The Iceberg table-metadata module: put-if-absent metadata commits,
-torn-metadata detection, and the guard that keeps every other package
-module from naming or opening Iceberg metadata files itself."""
+torn-metadata detection, the manifest-list record rules, and the
+guards that keep every other package module from naming or opening
+Iceberg metadata files, manifests or manifest lists itself."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 import sys
 import threading
 from pathlib import Path
@@ -240,6 +242,56 @@ def test_torn_metadata_raises_in_load_and_stream(spark, tmp_path):
         _drain("ckpt_torn")
 
 
+def test_list_record_rules(tmp_path):
+    """One manifest-list record per manifest: counts split by entry
+    status; a carried manifest keeps the sequence number it was
+    committed under (its ADDED/DELETED entries'), an EXISTING-only
+    manifest takes the minimum entry sequence number, and an
+    entry-less manifest takes the list's. Written records and entries
+    read back unchanged through `manifests` and `entries`."""
+    meta_dir = str(tmp_path)
+
+    def _entries(*specs: tuple[int, int, int]) -> list[dict]:
+        out = []
+        for i, (status, seq, n) in enumerate(specs):
+            path = os.path.join(meta_dir, f"f{len(specs)}-{i}-{seq}.bin")
+            Path(path).write_bytes(b"x" * (i + 1))
+            out.append(
+                iceberg_meta.entry(status, 7, seq, path, "2-HIGH",
+                                   record_count=n)
+            )
+        return out
+
+    A, E, D = iceberg_meta.ADDED, iceberg_meta.EXISTING, iceberg_meta.DELETED
+    cases = [
+        # (entries (status, seq, rows), list seq, record seq, counts)
+        ([(A, 2, 3), (A, 2, 4), (E, 1, 5), (D, 2, 7)], 2, 2,
+         (2, 1, 1, 7, 5, 7)),
+        ([(A, 2, 3)], 5, 2, (1, 0, 0, 3, 0, 0)),  # carried into seq 5
+        ([(E, 1, 1), (D, 3, 2)], 5, 3, (0, 1, 1, 0, 1, 2)),
+        ([(E, 4, 1), (E, 2, 1)], 5, 2, (0, 2, 0, 0, 2, 0)),  # EXISTING-only
+        ([], 6, 6, (0, 0, 0, 0, 0, 0)),  # entry-less
+    ]
+    records = []
+    for i, (specs, list_seq, want_seq, counts) in enumerate(cases):
+        entries = _entries(*specs)
+        path = iceberg_meta.write_manifest(meta_dir, f"m{i}.avro", entries)
+        rec = iceberg_meta.list_record(path, entries, 7, list_seq)
+        assert rec["sequence_number"] == want_seq, i
+        assert rec["min_sequence_number"] == 1
+        assert rec["manifest_length"] == os.path.getsize(path)
+        assert tuple(
+            rec[f"{k}_{u}_count"]
+            for u in ("files", "rows")
+            for k in ("added", "existing", "deleted")
+        ) == counts, i
+        assert iceberg_meta.entries(rec) == entries
+        records.append(rec)
+    listed = iceberg_meta.write_manifest_list(meta_dir, 7, records)
+    snapshot = iceberg_meta.snapshot_record(7, 6, 0, listed, "append")
+    assert iceberg_meta.manifests(snapshot) == records
+
+
 # --- guard: the metadata format lives in iceberg_meta.py alone ---------------
 
 _SPELLINGS = (".metadata.json", "version-hint.text")
@@ -367,3 +419,51 @@ def test_only_iceberg_meta_names_or_opens_metadata_files():
             offenders.append(f"{rel}:{call.lineno}: {ast.unparse(call)}")
     assert not offenders, "\n".join(offenders)
 
+
+
+# --- guard: manifests and manifest lists live in iceberg_meta.py alone -------
+
+_MANIFEST_SPELLINGS = ("manifest-list", "manifest_path")
+_SCHEMA_NAME = re.compile(r"MANIFEST\w*SCHEMA|ENTRY_SCHEMA|entry_schema")
+
+
+def test_only_iceberg_meta_writes_or_walks_manifests():
+    """No package module other than iceberg_meta.py calls the Avro path
+    reader `ocf_read`, names a manifest or manifest-list schema, or
+    spells `manifest-list` / `manifest_path` in code — every manifest
+    write, list-record build, walk and scan plan goes through the one
+    module. The executor-side `ocf_read_bytes` / `ocf_write` of Hudi
+    logs and Avro sources are not manifests and stay."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "iceberg_meta.py":
+            continue
+        tree = ast.parse(path.read_text())
+        rel = path.relative_to(PKG.parent)
+        prose = _docstrings(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and ast.unparse(node.func).split(
+                "."
+            )[-1] == "ocf_read":
+                offenders.append(f"{rel}:{node.lineno}: ocf_read call")
+            names = (
+                [node.id] if isinstance(node, ast.Name)
+                else [node.attr] if isinstance(node, ast.Attribute)
+                else [a.asname or a.name for a in node.names]
+                if isinstance(node, (ast.Import, ast.ImportFrom))
+                else [node.name] if isinstance(node, ast.FunctionDef)
+                else []
+            )
+            offenders += [
+                f"{rel}:{node.lineno}: schema name {n}"
+                for n in names
+                if _SCHEMA_NAME.search(n)
+            ]
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in prose
+                and any(s in node.value for s in _MANIFEST_SPELLINGS)
+            ):
+                offenders.append(f"{rel}:{node.lineno}: {node.value!r}")
+    assert not offenders, "\n".join(offenders)

@@ -14,7 +14,6 @@ import pytest
 import random_forest_using_hadoop_spark as engine  # noqa: F401  (registry)
 from random_forest_using_hadoop_spark import iceberg_meta
 from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-    _iceberg_live_files,
     _iceberg_snapshot,
     _iceberg_stage,
     _S1,
@@ -69,19 +68,20 @@ def test_snapshot_self_containment(staged):
     only, s2 = both parities, s3 drops the 1-URGENT partition even
     though its files still exist on disk."""
     root, meta = staged
-    f1 = _iceberg_live_files(_iceberg_snapshot(meta, snapshot_id=_S1))
-    f2 = _iceberg_live_files(_iceberg_snapshot(meta, snapshot_id=_S2))
-    f3 = _iceberg_live_files(_iceberg_snapshot(meta, snapshot_id=_S3))
-    assert {p for p, _, _ in f1} < {p for p, _, _ in f2}
-    assert all("/s1/" in p for p, _, _ in f1)
-    vals3 = {v for _, v, _ in f3}
+    f1, f2, f3 = (
+        iceberg_meta.plan(_iceberg_snapshot(meta, snapshot_id=sid))[0]
+        for sid in (_S1, _S2, _S3)
+    )
+    assert {d["path"] for d in f1} < {d["path"] for d in f2}
+    assert all("/s1/" in d["path"] for d in f1)
+    vals3 = {d["pval"] for d in f3}
     assert "1-URGENT" not in vals3
     # the deleted partition's files are still on disk (no vacuum ran)
-    gone = [p for p, v, _ in f2 if v == "1-URGENT"]
+    gone = [d["path"] for d in f2 if d["pval"] == "1-URGENT"]
     assert gone and all(os.path.exists(p) for p in gone)
     # record counts in manifests match the snapshot algebra
-    assert sum(n for _, _, n in f3) == sum(
-        n for _, v, n in f2 if v != "1-URGENT"
+    assert sum(d["n"] for d in f3) == sum(
+        d["n"] for d in f2 if d["pval"] != "1-URGENT"
     )
 
 
@@ -100,14 +100,14 @@ def test_time_travel_resolution_rules(staged):
 def test_partition_pred_prunes_metadata_only(staged):
     _, meta = staged
     snap = _iceberg_snapshot(meta)
-    pruned = _iceberg_live_files(snap, partition_pred=lambda v: v == "2-HIGH")
-    assert pruned and all(v == "2-HIGH" for _, v, _ in pruned)
-    allf = _iceberg_live_files(snap)
+    pruned = iceberg_meta.plan(snap, partition_pred=lambda v: v == "2-HIGH")[0]
+    assert pruned and all(d["pval"] == "2-HIGH" for d in pruned)
+    allf = iceberg_meta.plan(snap)[0]
     assert len(pruned) < len(allf)
 
 
 def test_position_delete_files_partitioned_from_data(spark):
-    """After the registered pos-delete key stages s4, _iceberg_files
+    """After the registered pos-delete key stages s4, the planner
     must split data vs delete files, the delete files must carry the
     spec's (file_path, pos) schema, and every referenced file_path must
     be a LIVE data file of the snapshot (delete files are
@@ -115,19 +115,16 @@ def test_position_delete_files_partitioned_from_data(spark):
     import pyarrow.parquet as pq
 
     from random_forest_using_hadoop_spark import REGISTRY
-    from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _iceberg_files,
-    )
 
     REGISTRY["src_iceberg_pos_delete"].fn(spark, SF_DIR).collect()
     root = _tmp(SF_DIR, "iceberg_posdel")
     meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
-    data, deletes = _iceberg_files(snap)
+    data, deletes = iceberg_meta.plan(snap)
     assert data and deletes
     assert snap["summary"]["operation"] == "delete"
-    data_paths = {p for p, _, _, _ in data}
-    data_pvals = {v for _, v, _, _ in data}
+    data_paths = {d["path"] for d in data}
+    data_pvals = {d["pval"] for d in data}
     assert "1-URGENT" not in data_pvals  # dropped at s3, before s4
     for d in deletes:
         assert d["seq"] == 4 and d["content"] == 1
@@ -171,17 +168,14 @@ def test_position_delete_sequence_rule(spark):
     meta = iceberg_meta.load(root)
     snap = _iceberg_snapshot(meta)
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _iceberg_files,
         _scan_with_partition,
     )
 
-    data, deletes = _iceberg_files(snap)
+    data, deletes = iceberg_meta.plan(snap)
     assert all(d["seq"] == 0 for d in deletes)
     # every data file has seq ≥ 1 > 0 → no delete applies; the naive
     # row count equals the full snapshot
-    full = _scan_with_partition(
-        spark, [(p, v, n) for p, v, n, _ in data]
-    ).count()
+    full = _scan_with_partition(spark, data).count()
     # with correctly-applied seq-0 deletes nothing is dropped, so the
     # key's earlier result must be strictly smaller than the full scan
     assert with_deletes < full
@@ -210,7 +204,7 @@ def test_partition_value_resolves_by_spec_field_names():
     (never first-value positional), None for an unpartitioned spec,
     name-ordered tuple for a multi-field spec, positional fallback only
     when no spec is supplied."""
-    from random_forest_using_hadoop_spark.operators.iceberg_ext import (
+    from random_forest_using_hadoop_spark.iceberg_meta import (
         _partition_value,
     )
 
@@ -454,7 +448,6 @@ def test_pos_delete_writer_applies_current_deletes_first(spark):
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
         _S3,
         _T3,
-        _iceberg_files,
         _iceberg_snapshot,
     )
     from random_forest_using_hadoop_spark.operators.lake_r15 import (
@@ -475,10 +468,10 @@ def test_pos_delete_writer_applies_current_deletes_first(spark):
     engine.REGISTRY["sink_iceberg_pos_delete"].fn(spark, SF_DIR).collect()
     root = _tmp(SF_DIR, "iceberg_posdel_write")
     meta = iceberg_meta.load(root)
-    data_files, delete_files = _iceberg_files(_iceberg_snapshot(meta))
+    data_files, delete_files = iceberg_meta.plan(_iceberg_snapshot(meta))
     assert {d["seq"] for d in delete_files} == {4, 5}
     # s5 files: every position's row is % 10 == 4 (never a re-emitted 7)
-    live_paths = {p for p, _, _, _ in data_files}
+    live_paths = {d["path"] for d in data_files}
     keyed = {}
     for p in live_paths:
         keyed[p] = pq.read_table(p).column("o_orderkey").to_pylist()

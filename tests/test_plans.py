@@ -404,8 +404,18 @@ def test_binned_range_join_is_equi_join(spark):
 def test_zorder_readback_pushes_both_dims(spark):
     """sink_zorder: BOTH slice predicates must reach the parquet reader
     of the z-clustered copy — two-dimensional footer pruning is the
-    operator's reason to exist."""
+    operator's reason to exist. The copy is staged under the engine's
+    staging root: no new `zorder_*` temp dir is left behind."""
+    import os
+    import tempfile
+
+    def _zorder_dirs() -> set[str]:
+        tmp = tempfile.gettempdir()
+        return {d for d in os.listdir(tmp) if d.startswith("zorder_")}
+
+    before = _zorder_dirs()
     plan = _formatted_plan(spark, "sink_zorder")
+    assert _zorder_dirs() <= before, "sink_zorder leaked a temp dir"
     assert "GreaterThanOrEqual(o_custkey,100)" in plan
     assert "LessThanOrEqual(o_custkey,500)" in plan
     assert "GreaterThanOrEqual(o_orderdate" in plan
@@ -1474,10 +1484,8 @@ def test_iceberg_manifest_prune_skips_whole_manifest(spark):
     and the scan must open only the 5-LOW partition's files."""
     import os
 
-    from random_forest_using_hadoop_spark.operators import iceberg_ext
-
     df = engine.REGISTRY["src_iceberg_manifest_prune"].fn(spark, SF_DIR)
-    rep = dict(iceberg_ext._LAST_SCAN_REPORT)
+    rep = dict(iceberg_meta._LAST_SCAN_REPORT)
     assert rep["manifests_total"] == 2, rep
     assert rep["manifests_skipped"] == 1, rep
     assert [os.path.basename(p) for p in rep["skipped_paths"]] == [
@@ -1554,7 +1562,6 @@ def test_iceberg_rollback_keeps_history_reachable(spark):
         _S1,
         _S2,
         _S3,
-        _iceberg_live_files,
         _iceberg_snapshot,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
@@ -1562,12 +1569,15 @@ def test_iceberg_rollback_keeps_history_reachable(spark):
     engine.REGISTRY["sink_iceberg_rollback"].fn(spark, SF_DIR).collect()
     meta = iceberg_meta.load(_tmp(SF_DIR, "iceberg_rollback"))
     assert meta["current-snapshot-id"] == _S1
-    f1 = _iceberg_live_files(_iceberg_snapshot(meta))
-    f2 = _iceberg_live_files(_iceberg_snapshot(meta, snapshot_id=_S2))
-    f3 = _iceberg_live_files(_iceberg_snapshot(meta, snapshot_id=_S3))
-    assert {p for p, _, _ in f1} < {p for p, _, _ in f2}
+    f1, f2, f3 = (
+        iceberg_meta.plan(_iceberg_snapshot(meta, snapshot_id=sid))[0]
+        for sid in (None, _S2, _S3)
+    )
+    assert {d["path"] for d in f1} < {d["path"] for d in f2}
     # s3 dropped the urgent partition; s2 still carries it
-    assert {v for _, v, _ in f2} - {v for _, v, _ in f3} == {"1-URGENT"}
+    assert {d["pval"] for d in f2} - {d["pval"] for d in f3} == {
+        "1-URGENT"
+    }
 
 
 # --- r14: Iceberg changelog scan gates ------------------------------------------
@@ -1910,24 +1920,25 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from random_forest_using_hadoop_spark.iceberg_format import ocf_write
+    from random_forest_using_hadoop_spark.iceberg_meta import (
+        ADDED,
+        DELETED,
+        EXISTING,
+        entry,
+        list_record,
+        write_manifest,
+        write_manifest_list,
+    )
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _MANIFEST_FILE_SCHEMA,
         _S2,
         _S3,
-        _ST_DELETED,
-        _ST_EXISTING,
         _T3,
-        _entry,
         _iceberg_stage,
         _pfiles,
-        _write_manifest,
     )
     from random_forest_using_hadoop_spark.operators.lake_r14 import (
-        _ST_ADDED,
         _changelog_plan,
         _changelog_rows,
-        _mlrec,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
 
@@ -1942,7 +1953,8 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
     _iceberg_stage(spark, o, root)
     data_dir = os.path.join(root, "data")
     meta_dir = os.path.join(root, "metadata")
-    m3 = os.path.join(meta_dir, "m3-fixture.avro")
+    # s3's one manifest, carried into the rmtest lists
+    (r3,) = iceberg_meta.manifests(iceberg_meta.load(root)["snapshots"][-1])
     (x_even,) = [
         p for p, v in _pfiles(data_dir, "s1") if v == "3-MEDIUM"
     ]  # evens not %5: {2,4,6,8,12,14,16,18}
@@ -1963,50 +1975,35 @@ def test_changelog_removed_file_not_retargeted_by_later_deletes(spark):
         return path
 
     # ordinal 1 (S4): eq-delete key 3 (lives in the surviving odd file)
-    m4d = _write_manifest(
-        meta_dir,
-        "m4-rmtest-del.avro",
-        [_entry(_ST_ADDED, _S4, 4, _eqdel("eq-s4.parquet", [3]), None,
-                equality_ids=[1], content=2)],
+    e4 = [entry(ADDED, _S4, 4, _eqdel("eq-s4.parquet", [3]), None,
+                equality_ids=[1], content=2)]
+    r4d = list_record(
+        write_manifest(meta_dir, "m4-rmtest-del.avro", e4),
+        e4, _S4, 4, content=1,
     )
-    l4 = os.path.join(meta_dir, f"snap-{_S4}-1-rmtest.avro")
-    ocf_write(
-        l4, _MANIFEST_FILE_SCHEMA,
-        [_mlrec(m3, 0, 3, _S3), _mlrec(m4d, 1, 4, _S4)],
-        metadata={"format-version": "2"},
-    )
+    l4 = write_manifest_list(meta_dir, _S4, [r3, r4d], tag="1-rmtest")
     _append_snapshot(_S4, 4, _T3 + 60_000, l4, "overwrite")
 
     # ordinal 2 (S5): REMOVE x_even (rewrite-style manifest)
-    m5 = _write_manifest(
-        meta_dir,
-        "m5-rmtest-rm.avro",
-        [
-            _entry(_ST_DELETED, _S5, 5, x_even, "3-MEDIUM"),
-            _entry(_ST_EXISTING, _S2, 2, x_odd, "3-MEDIUM"),
-        ],
+    e5 = [
+        entry(DELETED, _S5, 5, x_even, "3-MEDIUM"),
+        entry(EXISTING, _S2, 2, x_odd, "3-MEDIUM"),
+    ]
+    r5 = list_record(
+        write_manifest(meta_dir, "m5-rmtest-rm.avro", e5), e5, _S5, 5
     )
-    l5 = os.path.join(meta_dir, f"snap-{_S5}-1-rmtest.avro")
-    ocf_write(
-        l5, _MANIFEST_FILE_SCHEMA,
-        [_mlrec(m5, 0, 5, _S5), _mlrec(m4d, 1, 4, _S4)],
-        metadata={"format-version": "2"},
-    )
+    l5 = write_manifest_list(meta_dir, _S5, [r5, r4d], tag="1-rmtest")
     _append_snapshot(_S5, 5, _T3 + 120_000, l5, "delete")
 
     # ordinal 3 (S6): eq-delete keys {8 (only ever in x_even), 9 (odd)}
-    m6d = _write_manifest(
-        meta_dir,
-        "m6-rmtest-del.avro",
-        [_entry(_ST_ADDED, _S6, 6, _eqdel("eq-s6.parquet", [8, 9]), None,
-                equality_ids=[1], content=2)],
+    e6 = [entry(ADDED, _S6, 6, _eqdel("eq-s6.parquet", [8, 9]), None,
+                equality_ids=[1], content=2)]
+    r6d = list_record(
+        write_manifest(meta_dir, "m6-rmtest-del.avro", e6),
+        e6, _S6, 6, content=1,
     )
-    l6 = os.path.join(meta_dir, f"snap-{_S6}-1-rmtest.avro")
-    ocf_write(
-        l6, _MANIFEST_FILE_SCHEMA,
-        [_mlrec(m5, 0, 5, _S5), _mlrec(m4d, 1, 4, _S4),
-         _mlrec(m6d, 1, 6, _S6)],
-        metadata={"format-version": "2"},
+    l6 = write_manifest_list(
+        meta_dir, _S6, [r5, r4d, r6d], tag="1-rmtest"
     )
     _append_snapshot(_S6, 6, _T3 + 180_000, l6, "overwrite")
 

@@ -186,8 +186,8 @@ def test_rewrite_manifests_preserves_inheritance(spark, duck):
     import os
 
     from random_forest_using_hadoop_spark.iceberg_format import ocf_read
+    from random_forest_using_hadoop_spark.iceberg_meta import EXISTING
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _ST_EXISTING,
         _iceberg_snapshot,
     )
     from random_forest_using_hadoop_spark.operators.lake_r15c import (
@@ -204,7 +204,7 @@ def test_rewrite_manifests_preserves_inheritance(spark, duck):
     _, mlist, _ = ocf_read(_iceberg_snapshot(meta)["manifest-list"])
     assert len(mlist) == 1
     _, entries, _ = ocf_read(mlist[0]["manifest_path"])
-    assert entries and all(e["status"] == _ST_EXISTING for e in entries)
+    assert entries and all(e["status"] == EXISTING for e in entries)
     seqs = {e["sequence_number"] for e in entries}
     assert seqs == set(range(1, _RWM_N + 1)), seqs
     assert {e["snapshot_id"] for e in entries} == {
@@ -340,7 +340,6 @@ def test_uniform_append_single_copy(spark, duck):
     import os
 
     from random_forest_using_hadoop_spark.operators.iceberg_ext import (
-        _iceberg_live_files,
         _iceberg_snapshot,
     )
     from random_forest_using_hadoop_spark.operators.scans import _tmp
@@ -354,10 +353,10 @@ def test_uniform_append_single_copy(spark, duck):
         if f.endswith(".parquet")
     )
     ice = sorted(
-        p
-        for p, _, _ in _iceberg_live_files(
+        d["path"]
+        for d in iceberg_meta.plan(
             _iceberg_snapshot(iceberg_meta.load(root))
-        )
+        )[0]
     )
     assert ice == on_disk
 
